@@ -1773,6 +1773,7 @@ def q_ocr_reconstruct(spark, sf_dir):
     # (mapInPandas, zero shuffle) -> positioned blocks -> line banding ->
     # running-head/folio strip -> document text, against fixture PDFs
     # whose intended text the oracle states as literals.
+    from textractssmlprocessor_spark.materialize import cut
     from textractssmlprocessor_spark.operators.ocr import reconstruct_documents
     from textractssmlprocessor_spark.operators.pdf import pdf_blocks
 
@@ -1783,7 +1784,8 @@ def q_ocr_reconstruct(spark, sf_dir):
     )
     rows, _ = _pdf_fixtures()
     pdfs = spark.createDataFrame(rows, "url string, payload binary")
-    pdf_rec = reconstruct_documents(pdf_blocks(pdfs), materialize=True).select(
+    # the parsed blocks feed three line-table consumers: parse PDFs once
+    pdf_rec = reconstruct_documents(cut(pdf_blocks(pdfs))).select(
         F.lit("pdf").alias("variant"),
         "url",
         F.col("text").alias("reconstructed_text"),
@@ -1831,20 +1833,22 @@ def q_split_ssml(spark, sf_dir):
 
 
 def q_validate_corpus(spark, sf_dir):
+    from textractssmlprocessor_spark.materialize import cut
     from textractssmlprocessor_spark.operators.extract import extract_chunks
     from textractssmlprocessor_spark.operators.validate import validate
 
-    # 10 rule branches read the chunk table: materialize the UDF pipeline
-    # once instead of re-running it per branch
-    chunks = extract_chunks(_pages(spark, sf_dir), num_partitions=32).localCheckpoint()
+    # 10 rule branches read the chunk table: cut the UDF pipeline once
+    # instead of re-running it per branch
+    chunks = cut(extract_chunks(_pages(spark, sf_dir), num_partitions=32))
     return validate(chunks)
 
 
 def q_srt_generate(spark, sf_dir):
+    from textractssmlprocessor_spark.materialize import cut
     from textractssmlprocessor_spark.operators.align import generate_srt
     from textractssmlprocessor_spark.operators.extract import extract_chunks
 
-    chunks = extract_chunks(_pages(spark, sf_dir), num_partitions=32).localCheckpoint()
+    chunks = cut(extract_chunks(_pages(spark, sf_dir), num_partitions=32))
     manifest = chunks.select(
         "url",
         F.col("chunk_number").alias("part_no"),
@@ -1856,10 +1860,11 @@ def q_srt_generate(spark, sf_dir):
 def q_srt_variants(spark, sf_dir):
     # K4 4-file layout as one row per project (english/latin x
     # original/shorter); golden-oracle checked
+    from textractssmlprocessor_spark.materialize import cut
     from textractssmlprocessor_spark.operators.align import srt_variants
     from textractssmlprocessor_spark.operators.extract import extract_chunks
 
-    chunks = extract_chunks(_pages(spark, sf_dir), num_partitions=32).localCheckpoint()
+    chunks = cut(extract_chunks(_pages(spark, sf_dir), num_partitions=32))
     manifest = chunks.select(
         "url",
         F.col("chunk_number").alias("part_no"),

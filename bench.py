@@ -24,20 +24,6 @@ def run_noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def drop_leaked_persists(spark) -> None:
-    """Unpersist EVERY registered RDD — the blocks left by queries that
-    localCheckpoint their intermediates (validate_corpus, srt_generate,
-    dedup_minhash_lsh) accumulate in one shared session, pressure executor
-    storage memory, and make LATER query timings order-dependent (observed
-    1.5s -> 11s on dedup_minhash_lsh by bench position). NOTE: DataFrame
-    .cache() RDDs are ALSO in this registry and do NOT re-persist after
-    unpersist (verified empirically), so any corpus meant to stay cached
-    must be cached AFTER the last call (flagship timing uses
-    cleanup=False for exactly this reason)."""
-    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-        rdd.unpersist()
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -45,6 +31,7 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
     from textractssmlprocessor_spark.corpus import pages_from_documents
+    from textractssmlprocessor_spark.materialize import cut, scope
     from textractssmlprocessor_spark.operators.extract import extract_chunks
     from textractssmlprocessor_spark.session import get_spark
 
@@ -57,20 +44,21 @@ def main() -> None:
     # warmup: spin up python workers + JIT before timing
     run_noop(extract_chunks(pages, num_partitions=cores * 2).limit(200))
 
-    def best_of(fn, runs: int = 3, cleanup: bool = True) -> float:
+    def best_of(fn, runs: int = 3) -> float:
         # shared-VM timing noise is 2-4x AND intermittent: identical
         # back-to-back passes measured 2.45s vs 10.16s at steady steal
         # (BENCH/BASELINE.md round-3 note), so report the best of `runs`
         # passes — three draws make a recorded bad window unlikely.
-        # Leaked localCheckpoint blocks are dropped before each pass so a
-        # query's timing never depends on its position in the bench order.
+        # Each pass runs in its own scope, so the blocks its cuts stored
+        # are released before the next pass and a query's timing never
+        # depends on its position in the bench order (observed 1.5s ->
+        # 11s on dedup_minhash_lsh when they leaked).
         best = None
         for _ in range(runs):
-            if cleanup:
-                drop_leaked_persists(spark)
-            t0 = time.time()
-            fn()
-            dt = time.time() - t0
+            with scope(spark):
+                t0 = time.time()
+                fn()
+                dt = time.time() - t0
             best = dt if best is None or dt < best else best
         return round(best, 3)
 
@@ -125,30 +113,30 @@ def main() -> None:
     # SRT assembly benched NET of its extract_chunks upstream (rounds 1-2
     # re-ran the full extraction UDF inside the srt timings, which inflated
     # the srt lines 2-4x and muddied round-over-round comparison). The chunk
-    # table is materialized ONCE outside the timer; cleanup=False so the
-    # timed passes can't unpersist the localCheckpoint blocks they read.
+    # table is cut and stored ONCE outside the timer, in a scope enclosing
+    # the timed passes' own scopes.
     from textractssmlprocessor_spark.operators.align import (
         generate_srt,
         srt_variants,
     )
     from pyspark.sql import functions as F
 
-    drop_leaked_persists(spark)
-    chunks = extract_chunks(pages, num_partitions=cores * 2).localCheckpoint()
-    manifest = chunks.select(
-        "url",
-        F.col("chunk_number").alias("part_no"),
-        (F.length("extracted_text") * 0.06).alias("duration"),
-    )
-    timings["srt_generate"] = best_of(
-        lambda: run_noop(
-            generate_srt(chunks, manifest, "english", use_shorter_subtitles=True)
-        ),
-        cleanup=False,
-    )
-    timings_extra["srt_variants"] = best_of(
-        lambda: run_noop(srt_variants(chunks, manifest)), cleanup=False
-    )
+    with scope(spark):
+        chunks = cut(extract_chunks(pages, num_partitions=cores * 2))
+        chunks.count()
+        manifest = chunks.select(
+            "url",
+            F.col("chunk_number").alias("part_no"),
+            (F.length("extracted_text") * 0.06).alias("duration"),
+        )
+        timings["srt_generate"] = best_of(
+            lambda: run_noop(
+                generate_srt(chunks, manifest, "english", use_shorter_subtitles=True)
+            )
+        )
+        timings_extra["srt_variants"] = best_of(
+            lambda: run_noop(srt_variants(chunks, manifest))
+        )
 
     # Flagship throughput on a corpus large enough to amortize fixed
     # overhead (the sf tables hold only ~5k docs at sf0.1, which measures
@@ -159,9 +147,6 @@ def main() -> None:
     # timings; materialized before its own timing starts.
     from textractssmlprocessor_spark.corpus import synthesize_pages
 
-    # final cleanup BEFORE caching the flagship corpus; the timed passes
-    # must not unpersist it (cleanup=False below)
-    drop_leaked_persists(spark)
     big = synthesize_pages(spark, 100000).cache()
     n_big = big.count()
     # `cores` partitions: the dense skew tail balances at 1x after url-hash
@@ -169,7 +154,6 @@ def main() -> None:
     flagship_sec = best_of(
         lambda: run_noop(extract_chunks(big, num_partitions=cores)),
         runs=4,
-        cleanup=False,
     )
     total = round(sum(timings.values()), 3)
     docs_per_sec = round(n_big / flagship_sec, 2)

@@ -244,7 +244,7 @@ def test_build_manifest_history_gates(spark):
 def test_build_manifest_plan_truncated_across_stages(spark):
     """All five optional stages enabled: the carried manifest is
     referenced twice per stage (keepers join + apply_drops join), so an
-    uncut logical plan grows ~2^stages. The per-stage _truncate must keep
+    uncut logical plan grows ~2^stages. The per-stage cut must keep
     the final analyzed plan LINEAR — a leaf (checkpointed RDD) plus one
     stage's worth of joins — and the composed verdicts total."""
     from pyspark.sql import functions as F
@@ -283,6 +283,47 @@ def test_build_manifest_plan_truncated_across_stages(spark):
     rows = {r["id"]: r for r in m.collect()}
     assert len(rows) == 10
     assert rows[0]["drop_reason"] == "seen_exact"
+
+
+def test_build_manifest_same_with_checkpoint_dir(spark, tmp_path):
+    """The cluster mode is a checkpoint dir on the session (spark-submit
+    --conf spark.checkpoint.dir=...): every cut becomes a reliable
+    checkpoint, and the manifest must equal the local-checkpoint one."""
+    from conftest import checkpoint_dir_set
+
+    from textractssmlprocessor_spark.jobs.curate_job import build_manifest
+    from textractssmlprocessor_spark.materialize import scope
+
+    sentences = " ".join(
+        f"Sentence {k} is about the cat and the dog of the house with us."
+        for k in range(6)
+    )
+    rows = [
+        (i, f"{sentences} Unique marker number {i} is here.", "en",
+         f"https://h{i % 2}.example.org/p/{i}")
+        for i in range(24)
+    ]
+    # near copies of 0 and 1 on a third host: dropped by the CC stage
+    rows += [(100 + i, rows[i][1] + " Tail.", "en",
+              f"https://h2.example.org/p/{i}") for i in (0, 1)]
+    docs = spark.createDataFrame(
+        rows, "doc_id bigint, text string, lang string, url string"
+    )
+
+    def manifest():
+        with scope(spark):
+            return sorted(tuple(r) for r in build_manifest(
+                docs, languages=["en"], c4=True, url_col="url",
+                max_per_host=8, near_dup=True, threshold=0.5,
+            ).collect())
+
+    local = manifest()
+    with checkpoint_dir_set(spark, str(tmp_path / "ckpt")):
+        reliable = manifest()
+    assert reliable == local
+    reasons = {r[2] for r in local}
+    assert {"host_cap", "near_duplicate"} <= reasons, reasons
+    assert spark.sparkContext.getCheckpointDir() is None
 
 
 def test_build_manifest_c4_and_langid_stages(spark):

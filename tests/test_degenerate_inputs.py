@@ -129,9 +129,23 @@ def test_contract_query_on_empty_corpus(spark, empty_sf_dir, name, fn):
 @pytest.mark.parametrize(
     "name,fn", _query_items(), ids=[n for n, _ in _query_items()]
 )
-def test_contract_query_on_null_payload_corpus(spark, null_text_sf_dir, name, fn):
-    n = fn(spark, null_text_sf_dir).count()
+def test_contract_query_on_null_payload_corpus(
+    spark, null_text_sf_dir, persistent_rdds, name, fn
+):
+    """Also the leak gate: a query run inside one materialize.scope leaves
+    no cached or checkpointed block behind (a bare localCheckpoint in any
+    operator would)."""
+    from textractssmlprocessor_spark.materialize import scope
+
+    before = persistent_rdds()
+    with scope(spark):
+        out = fn(spark, null_text_sf_dir)
+        n = out.count()
     assert n >= 0
+    # compared as "nothing added" (driver GC may clean blocks an earlier
+    # test leaked); `out` stays referenced, so GC cannot clean a block
+    # leaked into its plan before this check
+    assert persistent_rdds() - before == set()
 
 
 def test_flagship_extraction_on_hostile_deep_page(spark):

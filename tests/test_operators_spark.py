@@ -671,11 +671,11 @@ def test_minhash_max_bucket_skips_only_degenerate_bucket(spark):
     assert {(r["id_a"], r["id_b"]) for r in capped} == {(100, 101)}
 
 
-@pytest.mark.parametrize("materialize", [True, "persist", False])
-def test_minhash_materialize_modes_identical(spark, materialize):
-    """materialize=True (localCheckpoint), 'persist' (replicated DISK_ONLY,
-    the executor-loss-recoverable cluster path), and False (recompute) must
-    produce identical pairs."""
+@pytest.mark.parametrize("checkpoint_dir", [True, False], indirect=True)
+def test_minhash_materialize_modes_identical(spark, checkpoint_dir):
+    """The signature cut's two storage paths — a reliable checkpoint (a
+    checkpoint dir is set: the executor-loss-recoverable cluster path) and
+    a local checkpoint (no dir) — must produce identical pairs."""
     from textractssmlprocessor_spark.operators.dedup import minhash_lsh_pairs
 
     docs = spark.createDataFrame(
@@ -685,7 +685,7 @@ def test_minhash_materialize_modes_identical(spark, materialize):
     )
     got = sorted(
         (r["id_a"], r["id_b"], r["jaccard"])
-        for r in minhash_lsh_pairs(docs, materialize=materialize).collect()
+        for r in minhash_lsh_pairs(docs).collect()
     )
     assert got == [(0, 1, 1.0), (0, 2, 1.0), (1, 2, 1.0)]
 
@@ -1797,10 +1797,11 @@ def test_hits_known_graph(spark):
     assert got["u1"][0] > got["a1"][0] and got["a2"][1] > got["u1"][1]
 
 
-@pytest.mark.parametrize("materialize", [True, False])
-def test_pagerank_and_hits_materialize_modes_identical(spark, materialize):
-    """The per-iteration checkpoint (materialize=True) must be a pure plan
-    optimization: scores bit-identical to the uncut plan (False)."""
+@pytest.mark.parametrize("checkpoint_dir", [True, False], indirect=True)
+def test_pagerank_and_hits_materialize_modes_identical(spark, checkpoint_dir):
+    """The per-iteration cut must be a pure plan optimization: scores
+    bit-identical whether it stores reliable checkpoints (a checkpoint
+    dir is set) or local ones."""
     from textractssmlprocessor_spark.operators.graph import hits, pagerank
 
     edges = spark.createDataFrame(
@@ -1808,9 +1809,9 @@ def test_pagerank_and_hits_materialize_modes_identical(spark, materialize):
         "src string, dst string",
     )
     pr = {r["node"]: r["rank"] for r in
-          pagerank(edges, iterations=3, materialize=materialize).collect()}
+          pagerank(edges, iterations=3).collect()}
     hs = {r["node"]: (r["hub"], r["auth"]) for r in
-          hits(edges, iterations=3, materialize=materialize).collect()}
+          hits(edges, iterations=3).collect()}
     if not hasattr(test_pagerank_and_hits_materialize_modes_identical, "_ref"):
         test_pagerank_and_hits_materialize_modes_identical._ref = (pr, hs)
     else:
@@ -2554,7 +2555,7 @@ def test_blank_docs_never_form_nearup_cliques(spark):
     # no pair involves a blank doc; real near-dupes still pair
     for pairs in (
         ngram_jaccard_pairs(docs, n=3, threshold=0.1),
-        minhash_lsh_pairs(docs, n=3, threshold=0.1, materialize=False),
+        minhash_lsh_pairs(docs, n=3, threshold=0.1),
     ):
         got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
         assert got == {(10, 11)}

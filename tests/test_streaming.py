@@ -416,7 +416,7 @@ def _near_corpus(spark, lo, hi, copies_of=()):
     return base
 
 
-def test_near_dedup_batches_gate_against_history(spark, tmp_path):
+def test_near_dedup_batches_gate_against_history(spark, tmp_path, persistent_rdds):
     from textractssmlprocessor_spark.streaming.dedup_near_stream import (
         process_near_dedup_batch,
     )
@@ -431,8 +431,13 @@ def test_near_dedup_batches_gate_against_history(spark, tmp_path):
         .unionByName(_near_corpus(spark, 0, 10, copies_of=(0, 1, 2)))
         .unionByName(_near_corpus(spark, 0, 16, copies_of=(15,)))
     )
+    before = persistent_rdds()
     process_near_dedup_batch(b0, 0, hist, surv)
     process_near_dedup_batch(b1, 1, hist, surv)
+    # each batch releases the signature cut it took: no block outlives it
+    # (compared as "nothing added": driver GC may meanwhile clean blocks
+    # an earlier test leaked outside any scope)
+    assert persistent_rdds() - before == set()
     got0 = {r["doc_id"] for r in spark.read.parquet(f"{surv}/batch-0").collect()}
     got1 = {r["doc_id"] for r in spark.read.parquet(f"{surv}/batch-1").collect()}
     assert got0 == set(range(10))

@@ -110,24 +110,30 @@ def test_assembly_agrees_with_assignment_view_counts(spark, merges):
     assert seqs.count() == (total_tokens + 4) // 5
 
 
-def test_assembly_cuts_tokenizer_from_the_fanout(spark, merges):
-    """materialize=True localCheckpoints the tokenized input before the
-    three-branch fragment fan-out: the Arrow tokenizer UDF must appear
-    NOWHERE in the assembled plan (it ran exactly once, at the cut), and
-    the uncut plan must produce identical sequences."""
+def test_assembly_cuts_tokenizer_from_the_fanout(spark, tmp_path, merges):
+    """The tokenized input is cut before the three-branch fragment
+    fan-out, on both storage paths (local checkpoint; reliable checkpoint
+    under a checkpoint dir): the Arrow tokenizer UDF must appear NOWHERE
+    in the assembled plan (it ran exactly once, at the cut), and the
+    sequences must equal the tokenized stream in id order, chunked."""
+    from conftest import checkpoint_dir_set
+
     df = spark.createDataFrame(
         [t for t in TEXTS if t[1]], "doc_id int, text string"
     )
-    cut = assemble_training_sequences(ts.tokenize_bpe(df, merges), seq_len=7)
-    plan = cut._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "EvalPython" not in plan
-    uncut = assemble_training_sequences(
-        ts.tokenize_bpe(df, merges), seq_len=7, materialize=False
-    )
-    as_rows = lambda d: sorted(  # noqa: E731
-        (r["seq_id"], tuple(r["token_ids"])) for r in d.collect()
-    )
-    assert as_rows(cut) == as_rows(uncut)
+    stream = [
+        tok
+        for r in sorted(ts.tokenize_bpe(df, merges).collect(), key=lambda r: r["id"])
+        for tok in r["token_ids"]
+    ]
+    want = [(i, tuple(stream[i * 7:(i + 1) * 7])) for i in range((len(stream) + 6) // 7)]
+    for path in (None, str(tmp_path / "ckpt")):
+        with checkpoint_dir_set(spark, path):
+            cut = assemble_training_sequences(ts.tokenize_bpe(df, merges), seq_len=7)
+            plan = cut._jdf.queryExecution().executedPlan().toString()
+            assert "ArrowEvalPython" not in plan and "EvalPython" not in plan
+            got = sorted((r["seq_id"], tuple(r["token_ids"])) for r in cut.collect())
+        assert got == want, path
 
 
 def test_null_text_counts_zero_tokens_in_packing(spark):

@@ -8,6 +8,10 @@
         [--languages en,la] [--near-dup] [--threshold 0.8] \
         [--partitions 16384]
 
+On a multi-executor cluster add ``--conf spark.checkpoint.dir=<shared
+path>``: every plan cut then goes to a reliable checkpoint in that store
+and survives executor loss (see ``build_manifest``).
+
 Stages (each a documented operator, composed here):
 1. `curate.curate_corpus` — language allowlist -> Gopher quality rules ->
    exact-dedup survivorship; per-doc verdict rows (kept, drop_reason).
@@ -59,7 +63,6 @@ def build_manifest(
     id_col: str = "doc_id",
     text_col: str = "text",
     lang_col: str = "lang",
-    materialize="local",
     url_col=None,
     max_per_host=None,
     dsir_target=None,
@@ -89,17 +92,20 @@ def build_manifest(
     near-dup CC ('near_duplicate') -> DSIR target-likeness floor
     ('dsir_low', needs ``dsir_target`` + ``dsir_min``).
 
-    ``materialize='persist'`` routes every intermediate the near-dup stage
-    re-reads (MinHash signatures, CC edge rounds) through replicated-disk
-    persist so a single executor loss doesn't kill the job — the mode a
-    multi-executor cluster should run (dedup.minhash_lsh_pairs documents
-    the trade); 'local' keeps the fast single-node defaults."""
+    Every intermediate a later stage re-reads (the carried manifest, the
+    MinHash signatures, the CC edge rounds) is cut with
+    ``materialize.cut``, which follows the session: local checkpoints by
+    default, reliable checkpoints when a checkpoint dir is set. A
+    multi-executor cluster should set one (``spark-submit --conf
+    spark.checkpoint.dir=<shared path>``) so a single executor loss
+    doesn't kill the job. The returned manifest reads the last cut, so
+    call and consume it inside one ``materialize.scope``."""
     from pyspark.sql import functions as F
 
+    from textractssmlprocessor_spark import materialize
     from textractssmlprocessor_spark.operators.curate import curate_corpus
-    from textractssmlprocessor_spark.operators.graph import _truncate, dedup_clusters
+    from textractssmlprocessor_spark.operators.graph import dedup_clusters
 
-    mat = "persist" if materialize == "persist" else True
     manifest = curate_corpus(
         docs, id_col=id_col, text_col=text_col, lang_col=lang_col,
         languages=languages,
@@ -109,8 +115,7 @@ def build_manifest(
     # keepers() join feeding the stage + the apply_drops join updating the
     # verdicts), so an uncut logical plan doubles per enabled stage —
     # ~2^6 with all six on. Cutting AFTER each enabled stage keeps the
-    # analyzed plan linear in stage count; 'persist' routes the cut
-    # through the reliable checkpoint dir (executor-loss-safe).
+    # analyzed plan linear in stage count.
     n_stages = sum(
         1 for on in (history_fingerprints is not None, history_bands is not None,
                      c4, langid_labeled is not None and bool(langid_allow),
@@ -119,7 +124,7 @@ def build_manifest(
     )
 
     def cut(df):
-        return _truncate(df, mat) if n_stages > 1 else df
+        return materialize.cut(df) if n_stages > 1 else df
 
     def keepers():
         return docs.join(
@@ -213,7 +218,7 @@ def build_manifest(
     if near_dup:
         near_drops = (
             dedup_clusters(keepers(), id_col=id_col, text_col=text_col,
-                           threshold=threshold, materialize=mat)
+                           threshold=threshold)
             .filter(~F.col("is_survivor"))
             .select(F.col("doc_id").alias(id_col))
         )
@@ -239,7 +244,6 @@ def tokenize_and_pack(
     n_merges: int = 8000,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize=True,
 ):
     """Kept corpus -> (sequences DataFrame, merges list): the trainer
     handoff stage. Merges train on the corpus itself (distributed
@@ -258,14 +262,18 @@ def tokenize_and_pack(
     merges = train_bpe_merges(kept, text_col=text_col, n_merges=n_merges)
     tokenized = tokenize_bpe(kept, merges, id_col=id_col, text_col=text_col)
     return (
-        assemble_training_sequences(tokenized, seq_len, materialize=materialize),
+        assemble_training_sequences(tokenized, seq_len),
         merges,
     )
 
 
 def main() -> None:
     _setup_paths()
-    p = argparse.ArgumentParser()
+    p = argparse.ArgumentParser(
+        epilog="On a multi-executor cluster pass --conf "
+        "spark.checkpoint.dir=<shared path> to spark-submit: every plan cut "
+        "then goes to a reliable checkpoint that survives executor loss.",
+    )
     p.add_argument("--input", required=True)
     p.add_argument("--manifest", required=True)
     p.add_argument("--kept-output", default=None)
@@ -276,12 +284,6 @@ def main() -> None:
     p.add_argument("--text-col", default="text")
     p.add_argument("--lang-col", default="lang")
     p.add_argument("--partitions", type=int, default=None)
-    p.add_argument(
-        "--materialize", default="local", choices=["local", "persist"],
-        help="'persist' = replicated-disk intermediates (survives a single "
-        "executor loss; the multi-executor-cluster mode); 'local' = fast "
-        "single-node defaults",
-    )
     p.add_argument("--url-col", default=None)
     p.add_argument("--max-per-host", type=int, default=None,
                    help="per-host diversity cap (needs --url-col)")
@@ -320,6 +322,8 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from textractssmlprocessor_spark.materialize import scope
+
     builder = (
         SparkSession.builder.appName("curate-webtext")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -349,89 +353,87 @@ def main() -> None:
             hist_fp = spark.read.parquet(fp_path)
         if fs_exists(spark, bd_path):
             hist_bands = spark.read.parquet(bd_path)
-    manifest = build_manifest(
-        docs,
-        languages=langs,
-        near_dup=args.near_dup,
-        threshold=args.threshold,
-        id_col=args.id_col,
-        text_col=args.text_col,
-        lang_col=args.lang_col,
-        materialize=args.materialize,
-        url_col=args.url_col,
-        max_per_host=args.max_per_host,
-        dsir_target=(
-            spark.read.parquet(args.dsir_target) if args.dsir_target else None
-        ),
-        dsir_min=args.dsir_min,
-        history_fingerprints=hist_fp,
-        history_bands=hist_bands,
-        c4=args.c4,
-        langid_labeled=(
-            spark.read.parquet(args.langid_labeled)
-            if args.langid_labeled else None
-        ),
-        langid_allow=(
-            args.langid_allow.split(",") if args.langid_allow else None
-        ),
-    )
-    # the manifest is consumed up to three times (write, kept count, kept
-    # join) — write it FIRST, then serve the other consumers from a
-    # re-read of the written parquet: one pipeline execution total, and
-    # nothing depends on executor-local storage
-    manifest.write.mode("overwrite").parquet(args.manifest)
-    written = spark.read.parquet(args.manifest)
-    n_kept = written.filter(F.col("kept")).count()
-    if args.kept_output:
-        kept = docs.join(
-            written.filter(F.col("kept")).select(
-                F.col("id").alias(args.id_col)
+    # one scope over every action: on exit it frees the cuts, including
+    # reliable checkpoint files that stop() would leave in the shared store
+    with scope(spark):
+        manifest = build_manifest(
+            docs,
+            languages=langs,
+            near_dup=args.near_dup,
+            threshold=args.threshold,
+            id_col=args.id_col,
+            text_col=args.text_col,
+            lang_col=args.lang_col,
+            url_col=args.url_col,
+            max_per_host=args.max_per_host,
+            dsir_target=(
+                spark.read.parquet(args.dsir_target) if args.dsir_target else None
             ),
-            args.id_col,
+            dsir_min=args.dsir_min,
+            history_fingerprints=hist_fp,
+            history_bands=hist_bands,
+            c4=args.c4,
+            langid_labeled=(
+                spark.read.parquet(args.langid_labeled)
+                if args.langid_labeled else None
+            ),
+            langid_allow=(
+                args.langid_allow.split(",") if args.langid_allow else None
+            ),
         )
-        kept.write.mode("overwrite").parquet(args.kept_output)
-    if args.sequences_output:
-        kept_docs = docs.join(
-            written.filter(F.col("kept")).select(F.col("id").alias(args.id_col)),
-            args.id_col,
-        )
-        seqs, merges = tokenize_and_pack(
-            kept_docs, seq_len=args.seq_len, n_merges=args.n_merges,
-            id_col=args.id_col, text_col=args.text_col,
-            # same contract as the near-dup stage: --materialize persist
-            # upgrades the assembly's tokenizer cut from localCheckpoint
-            # to a reliable checkpoint (survives executor loss)
-            materialize="persist" if args.materialize == "persist" else True,
-        )
-        seqs.write.mode("overwrite").parquet(args.sequences_output)
-        spark.createDataFrame(
-            [(i, l, r) for i, (l, r) in enumerate(merges)],
-            "rank int, left string, right string",
-        ).write.mode("overwrite").parquet(
-            args.sequences_output + ".merges.parquet"
-        )
-    if args.write_history_dir:
-        import os
+        # the manifest is consumed up to three times (write, kept count, kept
+        # join) — write it FIRST, then serve the other consumers from a
+        # re-read of the written parquet: one pipeline execution total, and
+        # nothing depends on executor-local storage
+        manifest.write.mode("overwrite").parquet(args.manifest)
+        written = spark.read.parquet(args.manifest)
+        n_kept = written.filter(F.col("kept")).count()
+        if args.kept_output:
+            kept = docs.join(
+                written.filter(F.col("kept")).select(
+                    F.col("id").alias(args.id_col)
+                ),
+                args.id_col,
+            )
+            kept.write.mode("overwrite").parquet(args.kept_output)
+        if args.sequences_output:
+            kept_docs = docs.join(
+                written.filter(F.col("kept")).select(F.col("id").alias(args.id_col)),
+                args.id_col,
+            )
+            seqs, merges = tokenize_and_pack(
+                kept_docs, seq_len=args.seq_len, n_merges=args.n_merges,
+                id_col=args.id_col, text_col=args.text_col,
+            )
+            seqs.write.mode("overwrite").parquet(args.sequences_output)
+            spark.createDataFrame(
+                [(i, l, r) for i, (l, r) in enumerate(merges)],
+                "rank int, left string, right string",
+            ).write.mode("overwrite").parquet(
+                args.sequences_output + ".merges.parquet"
+            )
+        if args.write_history_dir:
+            import os
 
-        from textractssmlprocessor_spark.operators.dedup import (
-            minhash_band_table,
-        )
-        from textractssmlprocessor_spark.operators.textstats import fingerprint
+            from textractssmlprocessor_spark.operators.dedup import (
+                minhash_band_table,
+            )
+            from textractssmlprocessor_spark.operators.textstats import fingerprint
 
-        kept_docs = docs.join(
-            written.filter(F.col("kept")).select(F.col("id").alias(args.id_col)),
-            args.id_col,
-        )
-        kept_docs.select(
-            fingerprint(F.col(args.text_col)).alias("fingerprint")
-        ).distinct().write.mode("overwrite").parquet(
-            os.path.join(args.write_history_dir, "fingerprints.parquet")
-        )
-        minhash_band_table(
-            kept_docs, id_col=args.id_col, text_col=args.text_col
-        ).write.mode("overwrite").parquet(
-            os.path.join(args.write_history_dir, "bands.parquet")
-        )
+            kept_docs = docs.join(
+                written.filter(F.col("kept")).select(F.col("id").alias(args.id_col)),
+                args.id_col,
+            )
+            kept_docs.select(
+                fingerprint(F.col(args.text_col)).alias("fingerprint")
+            ).distinct().write.mode("overwrite").parquet(
+                os.path.join(args.write_history_dir, "fingerprints.parquet")
+            )
+            minhash_band_table(
+                kept_docs, id_col=args.id_col, text_col=args.text_col
+            ).write.mode("overwrite").parquet(
+                os.path.join(args.write_history_dir, "bands.parquet")
+            )
     print(f"manifest rows kept this run: {n_kept}")
     spark.stop()
 

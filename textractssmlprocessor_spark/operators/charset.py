@@ -42,7 +42,7 @@ Scale design: ``decode_payload`` is a pure function used two ways —
   and evaluated on every row), so the valid-UTF-8 majority never leaves
   the JVM and only the declared/invalid tail pays an Arrow trip. The two
   branches each scan the input: callers feeding anything deeper than a
-  bare scan should localCheckpoint upstream first.
+  bare scan should ``materialize.cut()`` upstream first.
 
 The split is a pure performance routing: fast-branch output is provably
 identical to what ``decode_payload`` returns on fast-routed rows (valid

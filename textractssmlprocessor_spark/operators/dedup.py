@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import cut
 from .textstats import WS_PLUS, fingerprint, fold_lower
 
 
@@ -412,7 +413,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    materialize: bool | str = True,
     max_bucket: int | None = None,
     hash_fn: str = "md5",
 ) -> DataFrame:
@@ -427,13 +427,11 @@ def minhash_lsh_pairs(
     the first aggregation and never join.
 
     The signature table feeds three subtrees (bands + both verify sides);
-    without materialization Spark recomputes the 16-seed md5 minhash per
-    subtree. ``materialize=True`` localCheckpoints it once — fastest for
-    single-node/local runs, but executor-LOCAL blocks are unrecoverable on
-    executor loss, so one transient failure fails a cluster job.
-    ``materialize="persist"`` uses replicated DISK_ONLY storage instead
-    (recoverable; the right default on a multi-executor cluster — or write
-    the signature table out and re-read it for full durability).
+    uncut, Spark would recompute the 16-seed md5 minhash per subtree, so
+    it is cut once with ``materialize.cut``: a local checkpoint by default
+    (fast, but executor-LOCAL blocks are unrecoverable on executor loss),
+    a reliable checkpoint to the shared store when the session has a
+    checkpoint dir (the multi-executor-cluster setting).
 
     ``max_bucket`` is None by default — every colliding pair is a
     candidate, matching the uncapped banded-self-join semantics (and the
@@ -441,18 +439,14 @@ def minhash_lsh_pairs(
     (e.g. the all-identical-boilerplate cluster), accepting that pairs
     inside skipped buckets are NOT reported.
     """
-    sig = _spread(_shingleable(df, text_col), id_col).select(
-        F.col(id_col).alias("id"),
-        hashed_shingles(F.col(text_col), n, hash_fn).alias("sh"),
-    ).withColumn(
-        "mh", minhash_signature_from_hashed(F.col("sh"), num_hashes, hash_fn)
+    sig = cut(
+        _spread(_shingleable(df, text_col), id_col).select(
+            F.col(id_col).alias("id"),
+            hashed_shingles(F.col(text_col), n, hash_fn).alias("sh"),
+        ).withColumn(
+            "mh", minhash_signature_from_hashed(F.col("sh"), num_hashes, hash_fn)
+        )
     )
-    if materialize == "persist":
-        from pyspark.storagelevel import StorageLevel
-
-        sig = sig.persist(StorageLevel.DISK_ONLY)
-    elif materialize:
-        sig = sig.localCheckpoint(eager=False)
 
     shingle_tbl = sig.select("id", "sh")
     banded = sig.select("id", _band_explode(num_hashes, bands, hash_fn))

@@ -27,17 +27,19 @@ map-side partials plus ONE join of that per-node min back to the edge
 list. Neighborhoods are never collected into a single task (no
 collect_list / collect_set anywhere), so a celebrity node with 10^8
 neighbors streams through an aggregation instead of materializing an
-array; skewed join keys are AQE-skew-splittable. Each round persists the
-edge set (a cached relation is a planning leaf, so the O(rounds) lineage
-never reaches the optimizer), runs exactly one count+checksum action for
-the convergence test, and deterministically unpersists the superseded
-round. Nothing corpus-sized ever reaches the driver.
+array; skewed join keys are AQE-skew-splittable. Each round cuts the
+edge set with ``materialize.cut`` (a stored relation is a planning leaf,
+so the O(rounds) lineage never reaches the optimizer), runs exactly one
+count+checksum action for the convergence test, and then releases the
+superseded round. Nothing corpus-sized ever reaches the driver.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..materialize import cut, release
 
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -66,54 +68,11 @@ def _fingerprint(e: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["chk"])
 
 
-def _truncate(df: DataFrame, materialize) -> DataFrame:
-    """Plan-truncating per-round materialization.
-
-    The iterative loop MUST cut the logical plan each round, not merely
-    cache blocks: every round references the previous edge set ~4 times
-    (adjacency unions + min join), so an uncut analyzed plan grows ~4^rounds
-    and OOMs the driver just stringifying the tree (observed). Checkpoints
-    replace the plan with a leaf; persist() does not.
-
-    True -> localCheckpoint (fast, executor-local, unrecoverable on
-    executor loss); 'persist' -> reliable checkpoint to the session's
-    checkpoint dir (shared store on a cluster; survives executor loss;
-    costs a recompute-to-write per round — Spark's documented trade for
-    reliable checkpoints — and requires setCheckpointDir, enforced here
-    with a clear error)."""
-    if materialize == "persist":
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            raise ValueError(
-                "materialize='persist' needs a reliable checkpoint dir: call "
-                "spark.sparkContext.setCheckpointDir(<shared path>) first"
-            )
-        return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
-
-
-def _round_rdd_ids(spark) -> set:
-    """Ids of currently registered persistent RDDs (localCheckpoint blocks
-    live in this registry). Used to deterministically free SUPERSEDED
-    rounds instead of waiting for driver GC + ContextCleaner — the leak
-    class bench.py's drop_leaked_persists documents. Same public JavaSparkContext
-    surface bench.py uses; no DataFrame->RDD plan conversion involved."""
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-
-
-def _unpersist_rdds(spark, ids: set) -> None:
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in list(jmap.keys()):
-        if rid in ids:
-            jmap[rid].unpersist()
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 30,
-    materialize: bool | str = True,
 ) -> DataFrame:
     """Label every node of the undirected pair graph with the minimum node
     id of its connected component. Returns (id, rep) — one row per node
@@ -121,22 +80,17 @@ def connected_components(
     appear in; callers wanting total coverage left-join this onto the
     corpus and coalesce rep to id, as dedup_clusters does).
 
-    Per-round materialization is a plan-truncating checkpoint (see
-    ``_truncate``: localCheckpoint by default, reliable checkpoint under
-    ``materialize='persist'`` for executor-loss recoverability).
-    ``materialize=False`` is accepted for signature symmetry with the
-    other iterative ops but still localCheckpoints: the per-round cut is
-    CORRECTNESS-critical here (each round references the edge set ~4
-    times, so an uncut plan grows ~4^rounds and OOMs the driver just
-    stringifying the tree — the CLAUDE.md iterative-graph invariant), and
-    unlike pagerank/hits the round count is data-dependent, so there is
-    no safe 'tiny plan-inspection' mode to honor. Cleanup is
-    DETERMINISTIC: once a round's fingerprint action has
-    materialized the new edge set, the superseded round's checkpoint
-    blocks are unpersisted by registry id — at most one round of dead
-    copies is ever live, instead of O(log n) leaked checkpoint RDDs
-    waiting for driver GC. The final round's blocks back the returned
-    labels and are freed when the caller's references are collected.
+    Every round's edge set is a ``materialize.cut``. The cut is
+    CORRECTNESS-critical here, not an option: each round references the
+    edge set ~4 times (adjacency unions + min join), so an uncut analyzed
+    plan grows ~4^rounds and OOMs the driver just stringifying the tree
+    (observed; the CLAUDE.md iterative-graph invariant). Release is
+    DETERMINISTIC: once a round's fingerprint action has stored the new
+    edge set, the superseded round and the mid-round cut are released —
+    one round of copies is live at a time, instead of O(log n) leaked
+    checkpoint RDDs waiting for driver GC. The final round's blocks back
+    the returned labels and are freed by the caller's
+    ``materialize.scope``.
 
     Convergence is detected by fixpoint of the (count, bit_xor-of-xxhash64)
     edge-set fingerprint across a full large+small round; a false stop
@@ -148,13 +102,9 @@ def connected_components(
     returned silently; callers hitting the limit on adversarial graphs
     raise ``max_iter`` explicitly.
     """
-    spark = edges.sparkSession
-    pre_ids = _round_rdd_ids(spark)
-    e = _truncate(_canonical_edges(edges, src, dst), materialize)
+    e = cut(_canonical_edges(edges, src, dst))
     prev = _fingerprint(e)
-    prev_round_ids = _round_rdd_ids(spark) - pre_ids
     if prev[0] == 0:
-        _unpersist_rdds(spark, prev_round_ids)
         return e.select(F.col("u").alias("id"), F.col("v").alias("rep"))
 
     for _ in range(max_iter):
@@ -172,12 +122,11 @@ def connected_components(
             .where(F.col("v") > F.col("u"))
             .select(F.col("v").alias("a"), F.col("m").alias("b"))
         )
-        # mid-round truncation: the small-star half references this edge
-        # set twice (adjacency union) — as a checkpointed leaf both
-        # references share one computation instead of re-running the
-        # large-star agg+join per reference, and the plan stays O(1) deep
-        pre_ids = _round_rdd_ids(spark)
-        e_mid = _truncate(_canonical_edges(lg, "a", "b"), materialize)
+        # mid-round cut: the small-star half references this edge set
+        # twice (adjacency union) — as a stored leaf both references
+        # share one computation instead of re-running the large-star
+        # agg+join per reference, and the plan stays O(1) deep
+        e_mid = cut(_canonical_edges(lg, "a", "b"))
 
         # ---- small-star ----------------------------------------------
         # per-node min over SMALLER neighbors (∪ self); re-attach the
@@ -192,14 +141,11 @@ def connected_components(
             .select(F.col("v").alias("a"), F.col("m").alias("b"))
             .union(m.select(F.col("u").alias("a"), F.col("m").alias("b")))
         )
-        e_new = _truncate(_canonical_edges(sm, "a", "b"), materialize)
+        e_new = cut(_canonical_edges(sm, "a", "b"))
 
-        cur = _fingerprint(e_new)  # materializes e_mid + e_new
-        # the previous round is now superseded — free its checkpoint
-        # blocks deterministically (this round's ids are the new delta)
-        this_round_ids = _round_rdd_ids(spark) - pre_ids
-        _unpersist_rdds(spark, prev_round_ids)
-        prev_round_ids = this_round_ids
+        cur = _fingerprint(e_new)  # stores e_mid + e_new
+        # e_new no longer reads its inputs: free the superseded round
+        release(e, e_mid)
         e = e_new
         if cur == prev:
             # fixpoint: union of stars, each centered at its component min
@@ -224,16 +170,13 @@ def dedup_clusters(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool | str = True,
     **minhash_kwargs,
 ) -> DataFrame:
     """Near-duplicate CLUSTER assignment for every document: MinHash+LSH
     pair generation (dedup.minhash_lsh_pairs, unchanged) -> connected
     components -> (doc_id, cluster_rep, cluster_size, is_survivor).
-
-    ``materialize`` selects the recoverability mode for BOTH stages
-    (True = fast local; 'persist' = replicated-disk, the right choice on
-    a multi-executor cluster — see dedup.minhash_lsh_pairs).
+    Both stages cut through ``materialize.cut``, so a session with a
+    checkpoint dir stores them reliably (the multi-executor choice).
 
     Total over the input corpus: documents in no near-dup pair form
     singleton clusters (rep = self, size 1) via a map-side left join —
@@ -243,11 +186,9 @@ def dedup_clusters(
     from .dedup import minhash_lsh_pairs
 
     pairs = minhash_lsh_pairs(
-        df, id_col=id_col, text_col=text_col, materialize=materialize,
-        **minhash_kwargs,
+        df, id_col=id_col, text_col=text_col, **minhash_kwargs
     )
-    labels = connected_components(pairs, "id_a", "id_b",
-                                  materialize=materialize)
+    labels = connected_components(pairs, "id_a", "id_b")
     sizes = labels.groupBy("rep").agg(
         F.count(F.lit(1)).cast("bigint").alias("cluster_size")
     )
@@ -274,7 +215,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 3,
     damping: float = 0.85,
-    materialize=True,
     round_to: int | None = 6,
 ) -> DataFrame:
     """Host-graph PageRank by unrolled power iteration — the web-graph
@@ -304,26 +244,19 @@ def pagerank(
     TWICE (contrib + dangling) and the static edge/node/degree tables
     once each, so an uncut logical plan grows ~2^iterations (observed
     234 Exchange nodes at 3 iterations on the contract query vs 7 cut).
-    Under ``materialize`` the static tables are checkpointed once and
-    the rank table is checkpointed per iteration — GraphFrames' own
-    discipline for iterative algorithms — with the superseded round's
-    blocks unpersisted deterministically (connected_components' cleanup).
-    ``materialize``: True -> localCheckpoint, 'persist' -> reliable
-    checkpoint (recoverable on executor loss), False -> no cut (tiny
-    graphs / plan-inspection only)."""
-    spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).distinct()
-    if materialize:
-        e = _truncate(e, materialize)
-    nodes = (
+    So the static tables are cut once and the rank table once per
+    iteration (``materialize.cut`` — GraphFrames' own discipline for
+    iterative algorithms), and the superseded round is released as soon
+    as its replacement is stored (connected_components' cleanup)."""
+    e = cut(edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).distinct())
+    nodes = cut(
         e.select(F.col("s").alias("node"))
         .unionByName(e.select(F.col("t").alias("node")))
         .distinct()
     )
-    out_deg = e.groupBy("s").agg(F.count(F.lit(1)).cast("double").alias("deg"))
-    if materialize:
-        nodes = _truncate(nodes, materialize)
-        out_deg = _truncate(out_deg, materialize)
+    out_deg = cut(
+        e.groupBy("s").agg(F.count(F.lit(1)).cast("double").alias("deg"))
+    )
     def _r(c):
         return F.round(c, round_to) if round_to is not None else c
 
@@ -332,7 +265,7 @@ def pagerank(
         "node", _r(F.lit(1.0) / F.col("n")).alias("rank")
     )
     d = float(damping)
-    prev_round_ids: set = set()
+    carried = None  # the stored rank table the next iteration reads
     for it in range(iterations):
         with_deg = ranks.join(out_deg, ranks["node"] == out_deg["s"], "left")
         contrib = (
@@ -365,13 +298,12 @@ def pagerank(
         # cut the rank table so the next iteration's two references share
         # one leaf (last iteration left uncut: the caller's downstream
         # plan fuses with the final update) and free the superseded round
-        if materialize and it < iterations - 1:
-            pre_ids = _round_rdd_ids(spark)
-            ranks = _truncate(ranks, materialize)
-            ranks.count()  # materialize before unpersisting the old round
-            this_round_ids = _round_rdd_ids(spark) - pre_ids
-            _unpersist_rdds(spark, prev_round_ids)
-            prev_round_ids = this_round_ids
+        if it < iterations - 1:
+            ranks = cut(ranks)
+            ranks.count()  # store before releasing the old round
+            if carried is not None:
+                release(carried)
+            carried = ranks
     return ranks
 
 
@@ -380,7 +312,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 3,
-    materialize=True,
     round_to: int | None = 6,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) by unrolled synchronous
@@ -401,27 +332,22 @@ def hits(
     groupBy sum with map-side partials, one 1-row broadcast total via
     crossJoin. Plan discipline as in pagerank: the raw-score table is
     referenced twice per half-step (the total + the normalize), so the
-    uncut plan doubles per half-step; under ``materialize`` the static
-    edge/node tables are cut once and the carried score table per
-    iteration, with deterministic unpersist of the superseded round."""
-    spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).distinct()
-    if materialize:
-        e = _truncate(e, materialize)
-    nodes = (
+    uncut plan doubles per half-step; so the static edge/node tables are
+    cut once and the carried score table per iteration, with the
+    superseded round released once its replacement is stored."""
+    e = cut(edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).distinct())
+    nodes = cut(
         e.select(F.col("s").alias("node"))
         .unionByName(e.select(F.col("t").alias("node")))
         .distinct()
     )
-    if materialize:
-        nodes = _truncate(nodes, materialize)
     def _r(c):
         return F.round(c, round_to) if round_to is not None else c
 
     scores = nodes.select(
         "node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
     )
-    prev_round_ids: set = set()
+    carried = None  # the stored score table the next iteration reads
     for it in range(iterations):
         a_raw = (
             e.join(
@@ -460,11 +386,10 @@ def hits(
             )
         )
         scores = hub.join(auth, "node").select("node", "hub", "auth")
-        if materialize and it < iterations - 1:
-            pre_ids = _round_rdd_ids(spark)
-            scores = _truncate(scores, materialize)
+        if it < iterations - 1:
+            scores = cut(scores)
             scores.count()
-            this_round_ids = _round_rdd_ids(spark) - pre_ids
-            _unpersist_rdds(spark, prev_round_ids)
-            prev_round_ids = this_round_ids
+            if carried is not None:
+                release(carried)
+            carried = scores
     return scores

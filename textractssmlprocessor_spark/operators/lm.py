@@ -263,6 +263,7 @@ def fit_perplexity_thresholds(
     one double each) or pre-sample upstream with a wider hash."""
     import math
 
+    from textractssmlprocessor_spark.materialize import cut, scope
     from textractssmlprocessor_spark.operators.sampling import hash_bucket
 
     samp = scored
@@ -275,16 +276,18 @@ def fit_perplexity_thresholds(
             )
         samp = scored.filter(hash_bucket(F.col(id_col), salt) < hi)
     # the narrow score projection feeds THREE driver actions (count + two
-    # TakeOrdered) — checkpoint it once or each action re-runs the whole
-    # upstream scoring pipeline (observed 2.2x on the contract suite)
-    samp = samp.select(F.col(score_col).alias("v")).localCheckpoint(eager=False)
-    m = samp.count()
-    if m == 0:
-        return None
-    k1 = max(1, math.ceil(m / 3.0))
-    k2 = max(1, math.ceil(2.0 * m / 3.0))
-    t1 = samp.orderBy(F.col("v").desc()).limit(k1).agg(F.min("v")).first()[0]
-    t2 = samp.orderBy(F.col("v").desc()).limit(k2).agg(F.min("v")).first()[0]
+    # TakeOrdered) — cut it once or each action re-runs the whole
+    # upstream scoring pipeline (observed 2.2x on the contract suite); the
+    # thresholds are driver floats, so the sample is released on return
+    with scope(scored.sparkSession):
+        samp = cut(samp.select(F.col(score_col).alias("v")))
+        m = samp.count()
+        if m == 0:
+            return None
+        k1 = max(1, math.ceil(m / 3.0))
+        k2 = max(1, math.ceil(2.0 * m / 3.0))
+        t1 = samp.orderBy(F.col("v").desc()).limit(k1).agg(F.min("v")).first()[0]
+        t2 = samp.orderBy(F.col("v").desc()).limit(k2).agg(F.min("v")).first()[0]
     return (t1, t2)
 
 

@@ -148,20 +148,13 @@ def linearize(lines: DataFrame) -> DataFrame:
     )
 
 
-def reconstruct_documents(
-    blocks: DataFrame, materialize: bool = False
-) -> DataFrame:
+def reconstruct_documents(blocks: DataFrame) -> DataFrame:
     """Full OCR path: blocks -> lines -> boilerplate strip -> document text.
 
     The line table is referenced three times downstream (page counts,
     edge-repeat detection, and the output join), so Spark re-executes the
     blocks input per reference — free for a parquet blocks table (three
     column-pruned scans), but a 3x re-parse when blocks come from an
-    expensive producer like :func:`pdf.pdf_blocks`. ``materialize=True``
-    cuts the plan with a localCheckpoint after line reconstruction so the
-    producer runs ONCE; at cluster scale use a persisted/staged blocks
-    table instead."""
-    lines = blocks_to_lines(blocks)
-    if materialize:
-        lines = lines.localCheckpoint(eager=False)
-    return linearize(strip_page_boilerplate(lines))
+    expensive producer like :func:`pdf.pdf_blocks`. Such a caller passes
+    ``materialize.cut(blocks)`` so the producer runs ONCE."""
+    return linearize(strip_page_boilerplate(blocks_to_lines(blocks)))

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import cut
 from .ordering import block_of, blocked_running_sum
 from .textstats import count_words
 
@@ -159,7 +160,6 @@ def assemble_training_sequences(
     seq_len: int,
     id_col: str = "id",
     tokens_col: str = "token_ids",
-    materialize=True,
 ) -> DataFrame:
     """The writer itself: (seq_id, token_ids) rows of EXACTLY ``seq_len``
     tokens (the one global tail sequence may be shorter) — the corpus's
@@ -176,9 +176,8 @@ def assemble_training_sequences(
     fragments), so there is no skew cliff; sequences land pre-sorted for
     a shard writer via sort WITHIN partitions downstream if needed.
 
-    ``materialize`` (default True -> localCheckpoint; 'persist' ->
-    reliable checkpoint; False -> leave the plan uncut) cuts the
-    tokenized input ONCE before the fan-out: the fragment math reads it
+    The tokenized input is cut ONCE (``materialize.cut``) before the
+    fan-out: the fragment math reads it
     on three branches (the running sum's two passes + the token-array
     join side), and without the cut Spark would re-run the upstream
     tokenizer UDF — the most expensive map stage in the pipeline — for
@@ -187,18 +186,16 @@ def assemble_training_sequences(
     # NULL token arrays count 0 tokens: size(NULL) is -1 (legacy) or NULL
     # (ANSI) — either would poison the blocked running sum every later
     # document's offsets build on (the token_count hazard, same guard)
-    d = tokenized.select(
-        F.col(id_col).alias("id"),
-        F.col(tokens_col).alias("_toks"),
-        F.when(F.col(tokens_col).isNull(), F.lit(0))
-        .otherwise(F.size(F.col(tokens_col)))
-        .cast("bigint")
-        .alias("n_tokens"),
+    d = cut(
+        tokenized.select(
+            F.col(id_col).alias("id"),
+            F.col(tokens_col).alias("_toks"),
+            F.when(F.col(tokens_col).isNull(), F.lit(0))
+            .otherwise(F.size(F.col(tokens_col)))
+            .cast("bigint")
+            .alias("n_tokens"),
+        )
     )
-    if materialize:
-        from .graph import _truncate
-
-        d = _truncate(d, materialize)
     frags = _sequence_assignments(d.select("id", "n_tokens"), seq_len).join(
         d.select("id", "_toks"), "id"
     )

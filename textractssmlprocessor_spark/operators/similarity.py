@@ -428,7 +428,6 @@ def semdedup(
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
     max_cell: int | None = None,
-    materialize: bool | str = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic deduplication over an
     embedding column — k-means clusters the corpus, pairwise cosine runs
@@ -452,7 +451,8 @@ def semdedup(
     bounded; the cell count is the same knob as pairwise_near_duplicates'
     ``n_bits``. Rounded sims (6dp) keep the DuckDB oracle in lockstep."""
     from .dedup import _cooccurrence_member_pairs
-    from .graph import _truncate, connected_components
+    from ..materialize import cut
+    from .graph import connected_components
 
     cent_rows = (
         _collect_centroids(centroids)
@@ -478,11 +478,8 @@ def semdedup(
     )
     # the assigned table feeds FOUR consumers (candidate gen, two vector
     # join-backs, the totalization); without a cut each one re-runs the
-    # scan + assignment. materialize=False keeps THIS table lazy; the CC
-    # stage below still checkpoints per round regardless (its cut is
-    # correctness-critical — see connected_components' docstring)
-    if materialize:
-        a = _truncate(a, materialize)
+    # scan + assignment
+    a = cut(a)
     cand = _cooccurrence_member_pairs(
         a.select("id", "cell"), "cell", F.col("id"), max_group=max_cell
     ).select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
@@ -493,7 +490,7 @@ def semdedup(
         .filter(F.round(cosine(F.col("v_a"), F.col("v_b")), 6) >= threshold)
         .select("id_a", "id_b")
     )
-    labels = connected_components(edges, "id_a", "id_b", materialize=materialize)
+    labels = connected_components(edges, "id_a", "id_b")
     tot = a.join(labels, "id", "left").select(
         "id", "cell", "centroid_sim",
         F.coalesce("rep", F.col("id")).alias("group_rep"),

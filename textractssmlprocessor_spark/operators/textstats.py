@@ -426,13 +426,6 @@ def quality_columns(col: Column) -> dict[str, Column]:
     }
 
 
-def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
-    cols = quality_columns(F.col(text_col))
-    for name, c in cols.items():
-        df = df.withColumn(name, c)
-    return df
-
-
 # --- Gopher-style document quality rules (Rae et al. 2021, public) -----------
 
 # Non-ASCII signal characters built from codepoints (the SCRIPT_RANGES /
@@ -517,12 +510,6 @@ def gopher_columns(col: Column) -> dict[str, Column]:
         & (out["n_stopwords_present"] >= 2)
     )
     return out
-
-
-def with_gopher_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
-    for name, c in gopher_columns(F.col(text_col)).items():
-        df = df.withColumn(name, c)
-    return df
 
 
 # --- readability (Flesch reading ease / Flesch-Kincaid grade) ----------------
@@ -690,29 +677,6 @@ def normalize_for_fingerprint(col: Column) -> Column:
 def fingerprint(col: Column) -> Column:
     """md5 hex of normalized text: engine-portable exact-dedup key."""
     return F.md5(normalize_for_fingerprint(col))
-
-
-# --- cost estimation (reference utils.py:441-478) -------------------------------
-
-
-def with_cost_estimate(df: DataFrame, text_col: str = "text") -> DataFrame:
-    n = F.length(F.col(text_col))
-    return (
-        df.withColumn("character_count", n)
-        .withColumn("gpt_cost", n / 1000000 * 20)
-        .withColumn("polly_cost_generative", n / 1000000 * 30)
-        .withColumn("polly_cost_long_form", n / 1000000 * 100)
-    )
-
-
-def total_cost(df: DataFrame, text_col: str = "text") -> DataFrame:
-    n = F.length(F.col(text_col))
-    return df.agg(
-        F.sum(n).alias("total_character_count"),
-        F.sum(n / 1000000 * 20).alias("total_gpt_cost"),
-        F.sum(n / 1000000 * 30).alias("total_polly_cost_generative"),
-        F.sum(n / 1000000 * 100).alias("total_polly_cost_long_form"),
-    )
 
 
 # --- corpus heavy hitters -------------------------------------------------------

@@ -8,11 +8,11 @@ clean -> chunk -> normalize costs one Python round-trip per batch.
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BooleanType, StringType
+from pyspark.sql.types import ArrayType, StringType
 
 from ..functions.chunking import chunk_text_with_spans
 from ..functions.cleaning import (
@@ -26,7 +26,7 @@ from ..functions.ssml import normalize_ssml
 from ..functions.subs import expand_substitutions
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..schema import CHUNK_WITH_SPAN_TYPE, SUBTITLE_TYPE
+from ..schema import SUBTITLE_TYPE
 from ..functions.subtitles import chunk_subtitles
 
 EXTRACTED_CHUNK_TYPE = StructType(
@@ -108,41 +108,6 @@ def clean_plaintext_udf(payload: pd.Series) -> pd.Series:
         return remove_headers(remove_square_brackets(remove_notes(t)))
 
     return payload.map(clean)
-
-
-@F.pandas_udf(BooleanType())
-def is_html_udf(payload: pd.Series) -> pd.Series:
-    return payload.map(lambda t: None if t is None else is_html(t))
-
-
-@F.pandas_udf(ArrayType(CHUNK_WITH_SPAN_TYPE))
-def chunk_with_spans_udf(text: pd.Series) -> pd.Series:
-    """Sentence-packed ≤2000-char chunks with char-offset spans
-    (reference utils.py:60-84; spans per FIXTURES.md §2)."""
-
-    def chunks(t: Optional[str]) -> Optional[List[dict]]:
-        if t is None:
-            return None
-        return [
-            {"chunk": c, "start": s, "end": e}
-            for c, s, e in chunk_text_with_spans(t)
-        ]
-
-    return text.map(chunks)
-
-
-@F.pandas_udf(StringType())
-def ssml_normalize_udf(chunk: pd.Series) -> pd.Series:
-    """Deterministic annotate step replacing the reference's LLM chain
-    (utils.py:296-307): substitution tables (prompt specs utils.py:96-118)
-    then preprocess+clean (utils.py:300)."""
-
-    def norm(t: Optional[str]) -> Optional[str]:
-        if t is None:
-            return None
-        return normalize_ssml(expand_substitutions(t))
-
-    return chunk.map(norm)
 
 
 @F.pandas_udf(ArrayType(StringType()))

@@ -163,37 +163,6 @@ def _id_lock(table: str, snapshot_id: str, timeout: float = 600.0) -> int:
             time.sleep(0.02)
 
 
-def _committed_version_of(table: str, snapshot_id: str) -> int | None:
-    """Version already committed under ``snapshot_id``, else None.
-    Marker fast path first; full manifest scan as the crash-safe
-    fallback (backfills the marker when it finds one). Lock-free — the
-    authoritative recheck happens under ``_id_lock`` in the writers."""
-    done = _marker_peek(table, snapshot_id)
-    if done is not None:
-        return done
-    for m in history(table):
-        if m["snapshot_id"] == snapshot_id:
-            _backfill_id_marker(table, snapshot_id, m["version"])
-            return m["version"]
-    return None
-
-
-def _backfill_id_marker(table: str, snapshot_id: str, version: int) -> None:
-    """Create-if-absent marker backfill (crash recovery / pre-marker
-    tables). O_EXCL, never replace: swapping the inode under a live
-    ``_id_lock`` holder would split the lock."""
-    path = _id_marker_path(table, snapshot_id)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    try:
-        fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
-    except FileExistsError:
-        return
-    try:
-        os.write(fd, str(version).encode())
-    finally:
-        os.close(fd)
-
-
 def _marker_write_locked(fd: int, version: int) -> None:
     """Record the committed version in the (flock-held) marker fd."""
     os.ftruncate(fd, 0)

@@ -71,6 +71,7 @@ def process_near_dedup_batch(
     """The foreachBatch body (importable and unit-testable without a
     streaming query): gate ``batch`` against the accumulated band table,
     self-dedup the remainder, persist survivors + their bands."""
+    from textractssmlprocessor_spark.materialize import scope
     from textractssmlprocessor_spark.operators.dedup import (
         minhash_band_table,
         minhash_lsh_pairs,
@@ -91,26 +92,29 @@ def process_near_dedup_batch(
         if have_history
         else batch
     )
-    # within-batch near-dups: verified pairs -> min-id survivor (the batch
-    # operators verbatim, so stream==batch by construction)
-    pairs = minhash_lsh_pairs(
-        fresh, id_col=id_col, text_col=text_col, **band_kwargs
-    )
-    losers = (
-        pairs.select(
-            F.greatest(F.col("id_a"), F.col("id_b")).alias(id_col)
-        ).distinct()
-    )
-    survivors = fresh.join(losers, id_col, "left_anti")
-    # idempotent per-batch outputs: a replay overwrites its own epoch
-    survivors.write.mode("overwrite").parquet(
-        os.path.join(survivors_dir, f"batch-{batch_id}")
-    )
-    minhash_band_table(
-        survivors, id_col=id_col, text_col=text_col, **band_kwargs
-    ).write.mode("overwrite").parquet(
-        os.path.join(history_dir, f"batch-{batch_id}")
-    )
+    # one scope per batch: the signature cut minhash_lsh_pairs takes is
+    # released once both writes have read it
+    with scope(spark):
+        # within-batch near-dups: verified pairs -> min-id survivor (the batch
+        # operators verbatim, so stream==batch by construction)
+        pairs = minhash_lsh_pairs(
+            fresh, id_col=id_col, text_col=text_col, **band_kwargs
+        )
+        losers = (
+            pairs.select(
+                F.greatest(F.col("id_a"), F.col("id_b")).alias(id_col)
+            ).distinct()
+        )
+        survivors = fresh.join(losers, id_col, "left_anti")
+        # idempotent per-batch outputs: a replay overwrites its own epoch
+        survivors.write.mode("overwrite").parquet(
+            os.path.join(survivors_dir, f"batch-{batch_id}")
+        )
+        minhash_band_table(
+            survivors, id_col=id_col, text_col=text_col, **band_kwargs
+        ).write.mode("overwrite").parquet(
+            os.path.join(history_dir, f"batch-{batch_id}")
+        )
 
 
 def dedup_near_stream(

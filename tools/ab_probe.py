@@ -3,7 +3,7 @@
 Usage: python tools/ab_probe.py [sf_dir] query[=patch] ... [--rounds N]
 
 Times each named `__spark_entry__.queries()` entry with bench.py's exact
-protocol (noop sink, leaked-persist cleanup, best-of across INTERLEAVED
+protocol (noop sink, one materialize.scope per pass, best-of across INTERLEAVED
 rounds so the variants sample the same host-noise windows — the repo's
 attribution convention for any >=1.4x bench move, BENCH/BASELINE.md).
 
@@ -88,7 +88,8 @@ def main() -> None:
             specs.append((a, a, None))
 
     import __spark_entry__ as entrymod
-    from bench import drop_leaked_persists, run_noop
+    from bench import run_noop
+    from textractssmlprocessor_spark.materialize import scope
     from textractssmlprocessor_spark.session import get_spark
 
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -97,17 +98,18 @@ def main() -> None:
     qs = entrymod.queries()
 
     # warmup python workers once
-    run_noop(qs[specs[0][1]](spark, sf_dir).limit(50))
+    with scope(spark):
+        run_noop(qs[specs[0][1]](spark, sf_dir).limit(50))
 
     all_times: dict[str, list[float]] = {label: [] for label, _, _ in specs}
     for r in range(rounds):
         for label, q, patch in specs:
             undo = PATCHES[patch]() if patch else None
             try:
-                drop_leaked_persists(spark)
-                t0 = time.time()
-                run_noop(qs[q](spark, sf_dir))
-                all_times[label].append(round(time.time() - t0, 3))
+                with scope(spark):
+                    t0 = time.time()
+                    run_noop(qs[q](spark, sf_dir))
+                    all_times[label].append(round(time.time() - t0, 3))
             finally:
                 if undo:
                     undo()

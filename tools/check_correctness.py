@@ -61,6 +61,7 @@ def main():
     import duckdb
 
     import __spark_entry__ as entrymod
+    from textractssmlprocessor_spark.materialize import scope
     from textractssmlprocessor_spark.session import get_spark
 
     spark = get_spark(app_name="check", cores=8, shuffle_partitions=16)
@@ -83,8 +84,8 @@ def main():
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            s_n, s_cols, s_hash = value_hash(sdf)
+            with scope(spark):  # no query's blocks outlive it
+                s_n, s_cols, s_hash = value_hash(fn(spark, sf_dir))
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
             fail += 1
