@@ -4,7 +4,7 @@ fixed fixtures miss."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from reference_oracle import ref_ssml_processing, ref_timestamp, ref_utils
@@ -92,24 +92,55 @@ def test_format_time_property(seconds):
 
 
 _ABBR_TEXT = st.lists(
-    st.sampled_from(
-        ["ibid.", "e.g.", "i.e.", "etc.", "cf.", "viz.", "vs.", "ca.", "fl.",
-         "et al.", "ch. 3", "vol. 2", "p. 14", "pp. 14", "word", "P. 9",
-         "Etc.", "1 Corinthians", "II Samuel", "XIV", "I", "A.B.", "."]
+    st.tuples(
+        st.sampled_from(
+            ["ibid.", "e.g.", "i.e.", "etc.", "cf.", "viz.", "vs.", "ca.", "fl.",
+             "et al.", "ch. 3", "vol. 2", "p. 14", "pp. 14", "word", "P. 9",
+             "Etc.", "1 Corinthians", "II Samuel", "XIV", "I", "A.B.", ".",
+             "İbid.", "ı.e.", "vſ."]
+        ),
+        # "" makes abbreviations touch, where one entry's rewrite changes
+        # whether the next one matches
+        st.sampled_from(["", " ", "\n"]),
     ),
     min_size=0,
     max_size=40,
-).map(" ".join)
+).map(lambda ps: "".join(w + s for w, s in ps))
 
 
 @settings(max_examples=300, deadline=None)
 @given(_ABBR_TEXT)
-def test_fused_abbreviations_equal_sequential(text):
+@example("vs.pp. 12")
+@example("e.g.cf. x")
+@example("i.e.etc.")
+@example("i.e.g.")
+def test_abbreviations_equal_sequential(text):
     from textractssmlprocessor_spark.functions import subs
 
     assert subs.expand_abbreviations(text) == subs.expand_abbreviations_sequential(
         text
     )
+
+
+def test_abbreviation_case_fold_tables_match_re():
+    """The gated pass's soundness rests on two tables describing re's
+    IGNORECASE matching; a Python whose case tables differ must fail here
+    instead of silently skipping a rewrite."""
+    import re
+    import sys
+
+    from textractssmlprocessor_spark.functions import subs
+
+    every = "".join(map(chr, range(sys.maxunicode + 1)))
+    cores = [core for core, _, _ in subs._ABBREVIATIONS]
+    for core in cores:
+        letter = core[0]
+        assert set(subs._FIRST_CASES[letter]) == set(
+            re.findall(letter, every, re.IGNORECASE)
+        ), letter
+    for letter in {ch for core in cores for ch in core if ch.isalpha()}:
+        for c in re.findall(letter, every, re.IGNORECASE):
+            assert c.translate(subs._FOLD_EXOTIC).lower() == letter, (letter, c)
 
 
 # --- sessionize gap-split property (pure function, no Spark) ----------------

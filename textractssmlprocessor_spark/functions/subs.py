@@ -3,8 +3,8 @@
 The reference delegates these rewrites to GPT prompts (reference
 utils.py:96-101 asks for Roman-numeral conversion + abbreviation expansion;
 utils.py:113-115 asks for 'ibid.' replacement and full Bible-book names).
-Our engine replaces the non-deterministic LLM with versioned, ordered
-substitution tables so output is a pure function of input.
+Our engine replaces the non-deterministic LLM with ordered substitution
+tables, applied entry by entry, so output is a pure function of input.
 
 Order matters: Bible-book renames run before generic abbreviation expansion
 (so "1 Cor." resolves as a book, not as a stray abbreviation), and Roman
@@ -14,9 +14,6 @@ numerals run last (book renames consume forms like "II Samuel" first).
 from __future__ import annotations
 
 import re
-from typing import List, Tuple
-
-RULESET_VERSION = "subs-v1"
 
 _ORDINALS = {"1": "First", "2": "Second", "3": "Third"}
 
@@ -28,38 +25,40 @@ _NUMBERED_BOOKS = [
 
 _ROMAN_TO_ORDINAL = {"I": "First", "II": "Second", "III": "Third"}
 
-# (pattern, replacement) pairs applied in order, all case-sensitive unless
-# the pattern says otherwise. Kept small and auditable; extendable per corpus.
-_ABBREVIATIONS: List[Tuple[str, str]] = [
-    (r"\bibid\.", "in the same place"),
-    (r"\be\.g\.", "for example"),
-    (r"\bi\.e\.", "that is"),
-    (r"\betc\.", "et cetera"),
-    (r"\bcf\.", "compare"),
-    (r"\bviz\.", "namely"),
-    (r"\bvs\.", "versus"),
-    (r"\bca\.", "circa"),
-    (r"\bfl\.", "flourished"),
-    (r"\bet al\.", "and others"),
-    (r"\bch\.\s*(?=\d)", "chapter "),
-    (r"\bvol\.\s*(?=\d)", "volume "),
-    (r"\bp\.\s*(?=\d)", "page "),
-    (r"\bpp\.\s*(?=\d)", "pages "),
+# (literal core, trailing context, replacement) triples, applied one after
+# another in table order: entry k sees the output of entries 0..k-1. Each
+# entry's pattern is r"\b" + core + context under re.IGNORECASE. Kept small
+# and auditable; extendable per corpus.
+_ABBREVIATIONS: list[tuple[str, str, str]] = [
+    ("ibid.", "", "in the same place"),
+    ("e.g.", "", "for example"),
+    ("i.e.", "", "that is"),
+    ("etc.", "", "et cetera"),
+    ("cf.", "", "compare"),
+    ("viz.", "", "namely"),
+    ("vs.", "", "versus"),
+    ("ca.", "", "circa"),
+    ("fl.", "", "flourished"),
+    ("et al.", "", "and others"),
+    ("ch.", r"\s*(?=\d)", "chapter "),
+    ("vol.", r"\s*(?=\d)", "volume "),
+    ("p.", r"\s*(?=\d)", "page "),
+    ("pp.", r"\s*(?=\d)", "pages "),
 ]
 
-_COMPILED_ABBREV = [(re.compile(p, re.IGNORECASE), r) for p, r in _ABBREVIATIONS]
-
-# Single-pass fused form of the table above: one alternation with named
-# groups, replacement picked by which branch matched. The branches are
-# mutually exclusive at any given position (each is anchored on a distinct
-# literal prefix), so one left-to-right pass produces the same output as the
-# sequential per-pattern passes — at 1/14th the scan cost. Fast-path guard:
-# every branch requires a '.', so text without one skips the scan entirely.
-_FUSED_ABBREV = re.compile(
-    "|".join(f"(?P<g{i}>{p})" for i, (p, _) in enumerate(_ABBREVIATIONS)),
-    re.IGNORECASE,
-)
-_FUSED_REPL = {f"g{i}": r for i, (_, r) in enumerate(_ABBREVIATIONS)}
+# The characters re.IGNORECASE matches for each core's first letter, and
+# the ones it matches to a core letter that str.lower() misses (İ, ı -> i;
+# ſ -> s); tests/test_property_parity.py pins both against re. A leading \b
+# or IGNORECASE letter makes re try a match at every position; a
+# case-sensitive class gives it a prefix to scan ahead on, and since every
+# member is a word character, (?<!\w.) after it is the same test as \b.
+_FIRST_CASES = {"i": "iIİı", "e": "eE", "c": "cC", "v": "vV", "f": "fF", "p": "pP"}
+_FOLD_EXOTIC = str.maketrans({0x130: "i", 0x131: "i", 0x17F: "s"})
+_GATED_ABBREV = [
+    (c, re.compile(f"(?-i:[{_FIRST_CASES[c[0]]}])(?<!\\w.)"
+                   + re.escape(c[1:]) + ctx, re.IGNORECASE), r)
+    for c, ctx, r in _ABBREVIATIONS
+]
 
 _BOOK_ARABIC = re.compile(
     r"\b([123])\s+(%s)\b" % "|".join(_NUMBERED_BOOKS)
@@ -99,39 +98,25 @@ def expand_bible_books(text: str) -> str:
     return text
 
 
-# Literal cores: every branch of _FUSED_ABBREV requires one of these as a
-# case-insensitive substring of any match ("pp." is covered by "p."), so a
-# memchr-speed scan of the lowercased text proves the expensive alternation
-# can't match. Exotic codepoints that re.IGNORECASE folds onto core letters
-# (derived by probing sre: İ U+0130, ı U+0131 -> i; ſ U+017F -> s; plus the
-# combining dot U+0307 that 'İ'.lower() emits) are normalized first so the
-# guard never skips a text the regex would rewrite.
-_ABBREV_CORES = (
-    "ibid.", "e.g.", "i.e.", "etc.", "cf.", "viz.", "vs.", "ca.", "fl.",
-    "et al.", "ch.", "vol.", "p.",
-)
-_FOLD_EXOTIC = str.maketrans({0x130: "i", 0x131: "i", 0x17F: "s", 0x307: None})
-
-
 def expand_abbreviations(text: str) -> str:
+    """expand_abbreviations_sequential, skipping each entry whose core is
+    absent from the case-folded input. Exact: no replacement contains a
+    '.', so no entry can create a core that was absent at the start."""
     if "." not in text:
         return text
-    if "İ" in text or "ı" in text or "ſ" in text or "̇" in text:
-        low = text.translate(_FOLD_EXOTIC).lower()
-    else:
-        low = text.lower()
-    # any(map(...)) keeps the 13 memchr scans free of per-item generator
-    # frames (measurably faster at millions of chunks per executor)
-    if not any(map(low.__contains__, _ABBREV_CORES)):
-        return text
-    return _FUSED_ABBREV.sub(lambda m: _FUSED_REPL[m.lastgroup], text)
+    exotic = "İ" in text or "ı" in text or "ſ" in text
+    low = (text.translate(_FOLD_EXOTIC) if exotic else text).lower()
+    for core, pat, repl in _GATED_ABBREV:
+        if core in low:
+            text = pat.sub(repl, text)
+    return text
 
 
 def expand_abbreviations_sequential(text: str) -> str:
-    """Reference-shaped sequential form kept as the equivalence oracle for
-    the fused single-pass implementation (tests assert identical output)."""
-    for pat, repl in _COMPILED_ABBREV:
-        text = pat.sub(repl, text)
+    """_ABBREVIATIONS applied in table order, every entry on the whole text:
+    the equivalence oracle for expand_abbreviations."""
+    for core, ctx, repl in _ABBREVIATIONS:
+        text = re.sub(r"\b" + re.escape(core) + ctx, repl, text, flags=re.IGNORECASE)
     return text
 
 
