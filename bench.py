@@ -24,6 +24,29 @@ def run_noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def timed_passes(spark, passes: dict, rounds: int) -> dict[str, list[float]]:
+    """Run each callable in ``passes`` once per round, interleaved (A, B,
+    A, B, ...), and return every pass's seconds by name.
+
+    Shared-VM timing noise is 2-4x and intermittent (identical
+    back-to-back passes measured 2.45 s vs 10.16 s at steady steal), so
+    variants compared in one round sample the same host-noise window.
+    Each pass runs in its own ``materialize.scope``: the blocks its cuts
+    stored are freed before the next pass, so a timing never depends on
+    what ran before it (observed 1.5 s -> 11 s on dedup_minhash_lsh when
+    they leaked)."""
+    from textractssmlprocessor_spark.materialize import scope
+
+    times: dict[str, list[float]] = {name: [] for name in passes}
+    for _ in range(rounds):
+        for name, fn in passes.items():
+            with scope(spark):
+                t0 = time.time()
+                fn()
+                times[name].append(round(time.time() - t0, 3))
+    return times
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -45,32 +68,14 @@ def main() -> None:
     run_noop(extract_chunks(pages, num_partitions=cores * 2).limit(200))
 
     def best_of(fn, runs: int = 3) -> float:
-        # shared-VM timing noise is 2-4x AND intermittent: identical
-        # back-to-back passes measured 2.45s vs 10.16s at steady steal
-        # (BENCH/BASELINE.md round-3 note), so report the best of `runs`
-        # passes — three draws make a recorded bad window unlikely.
-        # Each pass runs in its own scope, so the blocks its cuts stored
-        # are released before the next pass and a query's timing never
-        # depends on its position in the bench order (observed 1.5s ->
-        # 11s on dedup_minhash_lsh when they leaked).
-        best = None
-        for _ in range(runs):
-            with scope(spark):
-                t0 = time.time()
-                fn()
-                dt = time.time() - t0
-            best = dt if best is None or dt < best else best
-        return round(best, 3)
+        # three draws make a recorded bad noise window unlikely
+        return min(timed_passes(spark, {"pass": fn}, runs)["pass"])
 
     timings: dict[str, float] = {}
     timings["extract_chunks"] = best_of(
         lambda: run_noop(extract_chunks(pages, num_partitions=cores * 2))
     )
 
-    # Round-3 contract consolidation renamed/merged several queries
-    # (cosine_topk+ann_lsh_topk+ann_ivf_topk -> ann_topk; lang_id+
-    # quality_score+fingerprint -> text_profile; winnow_words -> winnow);
-    # see BENCH/BASELINE.md for the round-over-round mapping.
     bench_queries = [
         "extract_documents",
         "validate_corpus",
@@ -110,11 +115,10 @@ def main() -> None:
     for name in extra_queries:
         timings_extra[name] = best_of(lambda: run_noop(qs[name](spark, sf_dir)))
 
-    # SRT assembly benched NET of its extract_chunks upstream (rounds 1-2
-    # re-ran the full extraction UDF inside the srt timings, which inflated
-    # the srt lines 2-4x and muddied round-over-round comparison). The chunk
-    # table is cut and stored ONCE outside the timer, in a scope enclosing
-    # the timed passes' own scopes.
+    # SRT assembly benched NET of its extract_chunks upstream, so the srt
+    # lines time assembly rather than the extraction UDF. The chunk table is
+    # cut and stored ONCE outside the timer, in a scope enclosing the timed
+    # passes' own scopes.
     from textractssmlprocessor_spark.operators.align import (
         generate_srt,
         srt_variants,
@@ -141,10 +145,9 @@ def main() -> None:
     # Flagship throughput on a corpus large enough to amortize fixed
     # overhead (the sf tables hold only ~5k docs at sf0.1, which measures
     # job-launch latency more than extraction): 100k synthesized docs with
-    # the standard 1% x64 skew tail (50k in round 1; doubled to further
-    # damp launch noise — docs_per_sec stays comparable). Synthesized AFTER
-    # the per-query loop so its cached blocks never pressure the query
-    # timings; materialized before its own timing starts.
+    # the standard 1% x64 skew tail. Synthesized AFTER the per-query loop
+    # so its cached blocks never pressure the query timings; materialized
+    # before its own timing starts.
     from textractssmlprocessor_spark.corpus import synthesize_pages
 
     big = synthesize_pages(spark, 100000).cache()

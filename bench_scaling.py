@@ -38,153 +38,118 @@ Writes BENCH/BASELINE.md and prints a JSON summary.
 from __future__ import annotations
 
 import json
+import multiprocessing as mp
 import os
 import subprocess
 import sys
+import time
+
+from textractssmlprocessor_spark.corpus import _SENTENCE_BANK
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 
-_WORKER = r"""
-import json, sys, time
-sys.path.insert(0, {repo!r})
-from pyspark.sql import functions as F
-from textractssmlprocessor_spark.session import get_spark
-from textractssmlprocessor_spark.corpus import synthesize_pages
-from textractssmlprocessor_spark.operators.extract import extract_chunks
-from textractssmlprocessor_spark.operators.udfs import extract_full_udf
 
-cores = {cores}
-n_docs = {n_docs}
-spark = get_spark(app_name=f"scaling-{{cores}}", cores=cores,
-                  shuffle_partitions=cores,
-                  extra_conf={{"spark.local.dir": "/dev/shm/spark-local"}})
-spark.sparkContext.setLogLevel("ERROR")
+def spark_level(cores: int, n_docs: int) -> None:
+    """Print the salted and prebucketed series at one level as a JSON line."""
+    from pyspark.sql import functions as F
 
-pages = synthesize_pages(spark, n_docs).cache()
-assert pages.count() == n_docs  # materialize input before timing
+    from bench import run_noop, timed_passes
+    from textractssmlprocessor_spark.corpus import synthesize_pages
+    from textractssmlprocessor_spark.operators.extract import extract_chunks
+    from textractssmlprocessor_spark.operators.udfs import extract_full_udf
+    from textractssmlprocessor_spark.session import get_spark
 
-def run_salted():
-    # `cores` partitions: the 1% x64 skew tail is dense (thousands of skewed
-    # docs per partition after url-hash spread), so 1x already balances;
-    # finer fan-out only adds task+shuffle overhead at this doc density
-    extract_chunks(pages, num_partitions=cores) \
-        .write.format("noop").mode("overwrite").save()
-
-def run_prebucketed():
+    spark = get_spark(app_name=f"scaling-{cores}", cores=cores,
+                      shuffle_partitions=cores,
+                      extra_conf={"spark.local.dir": "/dev/shm/spark-local"})
+    spark.sparkContext.setLogLevel("ERROR")
+    pages = synthesize_pages(spark, n_docs).cache()
+    assert pages.count() == n_docs  # materialize input before timing
     # table-layout salting (bucket(url) partition spec at scale): the scan
     # is already hash-balanced, no runtime shuffle. Same fused UDF as the
-    # salted path (charset-sniffed decode happens INSIDE it since the
-    # round-4 charset change), minus the salted_repartition.
-    d = pages.filter(F.col("html").isNotNull() | F.col("text").isNotNull())
-    d = d.select("url", "html", "text")
-    d.select("url", F.posexplode(extract_full_udf(F.col("html"), F.col("text")))
-             .alias("pos", "c")) \
-        .write.format("noop").mode("overwrite").save()
+    # salted path, minus the salted_repartition.
+    bucketed = pages.filter(F.col("html").isNotNull() | F.col("text").isNotNull())
+    bucketed = bucketed.select(
+        "url",
+        F.posexplode(extract_full_udf(F.col("html"), F.col("text"))).alias("pos", "c"),
+    )
+    series = {
+        # `cores` partitions: the 1% x64 skew tail is dense (thousands of
+        # skewed docs per partition after url-hash spread), so 1x already
+        # balances; finer fan-out only adds task+shuffle overhead
+        "salted": lambda: run_noop(extract_chunks(pages, num_partitions=cores)),
+        "prebucketed": lambda: run_noop(bucketed),
+    }
+    # round 1 warms python workers, JIT and Arrow buffers; best of the other 2
+    times = timed_passes(spark, series, rounds=3)
+    out = {
+        name: {"sec": min(t[1:]), "docs_per_sec": round(n_docs / min(t[1:]), 2)}
+        for name, t in times.items()
+    }
+    print(json.dumps({"cores": cores, "n_docs": n_docs, **out}))
+    spark.stop()
 
-out = {{}}
-for name, fn in (("salted", run_salted), ("prebucketed", run_prebucketed)):
-    fn()  # warmup: python workers + JIT + Arrow buffers
-    best = None
-    for _ in range(2):
-        t0 = time.time()
-        fn()
-        elapsed = time.time() - t0
-        best = elapsed if best is None or elapsed < best else best
-    out[name] = {{"sec": round(best, 3), "docs_per_sec": round(n_docs / best, 2)}}
-print(json.dumps({{"cores": cores, "n_docs": n_docs, **out}}))
-spark.stop()
-"""  # noqa: E501
 
-_MP_WORKER = r"""
-import json, sys, time, multiprocessing as mp
-sys.path.insert(0, {repo!r})
-
-SENTS = [
-    "The quick brown fox jumps over the lazy dog.",
-    "Arma virumque cano Troiae qui primus ab oris.",
-    "Data pipelines must scale without rewriting logic.",
-    "He said that the chapter would end soon.",
-    "Multi word sentences keep the chunker honest.",
-    "Numbers like 42 and dates like 1066 appear here.",
-    "A short one.",
-    "Spark executes columnar batches over arrow buffers.",
-]
-
-def make_doc(i, reps=24):
-    body = " ".join(SENTS[(j + i) % 8] for j in range(reps))
+def _page(i: int) -> tuple[bytes | None, str | None]:
+    """(html, text) of ``synthesize_pages`` row ``i``, laid out the same way:
+    cases 0/1/4 are UTF-8 HTML bytes, the rest plain text."""
+    reps = 24 * 64 if i % 100 == 0 else 24
+    body = " ".join(_SENTENCE_BANK[(j + i) % 8] for j in range(reps))
     case = i % 8
-    title = f"Section {{i % 97}}"
     if case == 0:
-        return f"<h4>{{title}}</h4><p>{{body}}</p><em>{{body[:120]}}</em><strong>Attribution</strong>"
-    if case == 1:
-        return f"<p>{{body}}</p><em>brief quote</em><strong>dropped cite</strong><p>tail text.</p>"
-    if case == 2:
-        return f"CHAPTER HEADING\n{{body}}\nTHE RUNNING HEAD\nfinal line."
-    if case == 3:
-        return f"intro [Note: drop [nested [deep]]] {{body}} outro [stray bracket]"
-    if case == 4:
-        return f"<p>Fish &amp; chips &#8217; {{body}}</p>"
-    return body
+        html = (f"<h4>Section {i % 97}</h4><p>{body}</p><em>{body[:120]}</em>"
+                "<strong>Attribution</strong>")
+    elif case == 1:
+        html = (f"<p>{body}</p><em>brief quote</em>"
+                "<strong>dropped cite</strong><p>tail text.</p>")
+    elif case == 2:
+        return None, f"CHAPTER HEADING\n{body}\nTHE RUNNING HEAD\nfinal line."
+    elif case == 3:
+        return None, f"intro [Note: drop [nested [deep]]] {body} outro [stray bracket]"
+    elif case == 4:
+        html = f"<p>Fish &amp; chips &#8217; {body}</p>"
+    else:
+        return None, body
+    return html.encode("utf-8"), None
 
-def work(args):
-    lo, hi = args
-    from textractssmlprocessor_spark.functions.chunking import chunk_text_with_spans
-    from textractssmlprocessor_spark.functions.cleaning import is_html
-    from textractssmlprocessor_spark.functions.dom import convert_html_to_ssml
-    from textractssmlprocessor_spark.functions.ssml import normalize_ssml
-    from textractssmlprocessor_spark.functions.subs import expand_substitutions
+
+def _extract_span(span: tuple[int, int]) -> int:
+    from textractssmlprocessor_spark.operators.udfs import _full_extract, _page_payload
+
+    lo, hi = span
     for i in range(lo, hi):
-        t = make_doc(i, 24 if i % 100 else 24 * 64)
-        cleaned = convert_html_to_ssml(t) if is_html(t) else t
-        for c, s, e in chunk_text_with_spans(cleaned):
-            normalize_ssml(expand_substitutions(c))
+        _full_extract(_page_payload(*_page(i)))
     return hi - lo
 
-if __name__ == "__main__":
-    procs, n_docs = {cores}, {n_docs}
-    chunks = [(k * n_docs // (procs * 4), (k + 1) * n_docs // (procs * 4))
-              for k in range(procs * 4)]
-    with mp.Pool(procs) as p:
-        p.map(work, chunks[:procs])  # warmup
-        best = None
+
+def mp_level(cores: int, n_docs: int) -> None:
+    """Print the mp ceiling at one level as a JSON line: the UDF's own
+    per-document chain on a bare process pool. No session, so it keeps its
+    own timer: one warmup map, then best of 2."""
+    spans = [(k * n_docs // (cores * 4), (k + 1) * n_docs // (cores * 4))
+             for k in range(cores * 4)]
+    with mp.get_context("spawn").Pool(cores) as p:
+        p.map(_extract_span, spans[:cores])  # warmup
+        times = []
         for _ in range(2):
             t0 = time.time()
-            p.map(work, chunks)
-            dt = time.time() - t0
-            best = dt if best is None or dt < best else best
-    print(json.dumps({{"cores": procs,
-                       "docs_per_sec": round(n_docs / best, 2)}}))
-"""
+            p.map(_extract_span, spans)
+            times.append(time.time() - t0)
+    print(json.dumps({"cores": cores, "docs_per_sec": round(n_docs / min(times), 2)}))
 
 
-def _pinned(cmd: list[str], cores: int) -> list[str]:
+def _pinned_run(level: str, cores: int, n_docs: int) -> dict:
+    """Run ``level(cores, n_docs)`` in a fresh interpreter (fresh JVM)
+    pinned to exactly ``cores`` CPUs; return the JSON line it printed."""
+    cmd = [sys.executable, "-c",
+           f"import bench_scaling as b; b.{level}({cores}, {n_docs})"]
     if os.path.exists("/usr/bin/taskset"):
-        return ["taskset", "-c", f"0-{cores - 1}"] + cmd
-    return cmd
-
-
-def run_level(cores: int, n_docs: int) -> dict:
-    code = _WORKER.format(repo=REPO, cores=cores, n_docs=n_docs)
-    out = subprocess.run(
-        _pinned([sys.executable, "-c", code], cores),
-        capture_output=True, text=True, timeout=1800,
-    )
+        cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
+    out = subprocess.run(cmd, capture_output=True, text=True, timeout=1800, cwd=REPO)
     for line in out.stdout.strip().splitlines()[::-1]:
         if line.startswith("{"):
             return json.loads(line)
-    raise RuntimeError(f"no result from cores={cores}: {out.stderr[-2000:]}")
-
-
-def run_mp(cores: int, n_docs: int) -> dict:
-    code = _MP_WORKER.format(repo=REPO, cores=cores, n_docs=n_docs)
-    out = subprocess.run(
-        _pinned([sys.executable, "-c", code], cores),
-        capture_output=True, text=True, timeout=1800,
-    )
-    for line in out.stdout.strip().splitlines()[::-1]:
-        if line.startswith("{"):
-            return json.loads(line)
-    raise RuntimeError(f"no mp result from cores={cores}: {out.stderr[-2000:]}")
+    raise RuntimeError(f"no {level} result from cores={cores}: {out.stderr[-2000:]}")
 
 
 def main() -> None:
@@ -197,12 +162,12 @@ def main() -> None:
     best: dict[int, dict[str, float]] = {c: {} for c in cores_levels}
     for r in range(rounds):
         for c in cores_levels:
-            lvl = run_level(c, n_docs)
+            lvl = _pinned_run("spark_level", c, n_docs)
             for series in ("salted", "prebucketed"):
                 v = lvl[series]["docs_per_sec"]
                 if v > best[c].get(series, 0):
                     best[c][series] = v
-            m = run_mp(c, n_docs)["docs_per_sec"]
+            m = _pinned_run("mp_level", c, n_docs)["docs_per_sec"]
             if m > best[c].get("mp", 0):
                 best[c]["mp"] = m
         print(json.dumps({"round": r, "best_so_far": best}), file=sys.stderr)

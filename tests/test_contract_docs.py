@@ -62,7 +62,7 @@ def test_plan_cuts_and_releases_only_in_materialize():
     registry sweep would free blocks a caller still reads."""
     cut_calls = {"localCheckpoint", "checkpoint", "persist"}
     banned_names = {"getPersistentRDDs", "StorageLevel"}
-    files = [REPO / "__spark_entry__.py", REPO / "bench.py"]
+    files = [REPO / "__spark_entry__.py", REPO / "bench.py", REPO / "bench_scaling.py"]
     files += sorted((REPO / "textractssmlprocessor_spark").rglob("*.py"))
     files += sorted((REPO / "tools").glob("*.py"))
     owner = REPO / "textractssmlprocessor_spark" / "materialize.py"

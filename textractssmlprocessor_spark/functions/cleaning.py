@@ -98,31 +98,6 @@ def remove_ssml_tags(text: str) -> str:
     return _ANY_TAG.sub("", text).strip()
 
 
-# --- F11: post-annotation HTML-wrapper strip (reference utils.py:266-267) ---
-# Only BARE tags (no attributes) are stripped — `<p class="x">` survives.
-
-_BARE_WRAPPERS = re.compile(r"<(/?)(h4|em|strong|p)>")
-
-
-def strip_bare_wrapper_tags(text: str) -> str:
-    return _BARE_WRAPPERS.sub("", text)
-
-
-# --- F12: leading all-caps title run (reference text_processing.py:25-40) ---
-
-
-def extract_all_caps_title(content: str) -> List[str]:
-    """Leading run of non-empty str.isupper() lines (stripped)."""
-    out: List[str] = []
-    for line in content.split("\n"):
-        line = line.strip()
-        if line.isupper() and line:
-            out.append(line)
-        else:
-            break
-    return out
-
-
 # --- X2: section split (reference text_processing.py:21-23) -----------------
 
 
@@ -131,19 +106,7 @@ def split_into_sections(text: str) -> List[str]:
     return [s.strip() for s in sections if s.strip() and s.strip() != "<br>"]
 
 
-# --- section body cleanup (reference text_processing.py:48-49) --------------
-
-_H4_CENTER_BLOCK = re.compile(r"<h4><center>.*?</center></h4>", re.DOTALL)
-_ANY_TAG_DOTALL = re.compile(r"<.*?>", re.DOTALL)
-
-
-def section_content(section: str) -> str:
-    content = _H4_CENTER_BLOCK.sub("", section).strip()
-    return _ANY_TAG_DOTALL.sub("", content)
-
-
-# --- T5/T6: SRT time formatting (reference timestamp.py:227-231,
-#     audio_processing.py:89-91) ---------------------------------------------
+# --- T5: SRT time formatting (reference timestamp.py:227-231) --------------
 
 
 def format_time(seconds: float) -> str:
@@ -152,11 +115,6 @@ def format_time(seconds: float) -> str:
     minutes, secs = divmod(remainder, 60)
     milliseconds = int((secs % 1) * 1000)
     return f"{int(hours):02d}:{int(minutes):02d}:{int(secs):02d},{milliseconds:03d}"
-
-
-def time_to_seconds(time_str: str) -> float:
-    h, m, s = time_str.replace(",", ".").split(":")
-    return int(h) * 3600 + int(m) * 60 + float(s)
 
 
 # --- T7: natural sort key (reference timestamp.py:233-234) ------------------
@@ -173,24 +131,6 @@ def natural_sort_rank_key(s: str) -> str:
     return "".join(
         c.zfill(12) if c.isdigit() else c.lower() for c in re.split(r"(\d+)", s)
     )
-
-
-# --- T13: SSML -> clean display text (reference file_processing.py:36-42) ---
-# The reference parses with BeautifulSoup(content, 'xml').get_text('\n'); for
-# our engine the equivalent is: newline between tag boundaries, then squeeze
-# blank-line runs. Pinned by goldens (bs4 is not a dependency here).
-
-_TAG_SPLIT = re.compile(r"<[^>]+>")
-_BLANK_RUN = re.compile(r"\n\s*\n")
-_BLANK_RUN2 = re.compile(r"(\n\s*){2,}")
-
-
-def ssml_to_display_text(content: str) -> str:
-    pieces = [p for p in _TAG_SPLIT.split(content)]
-    text = "\n".join(p for p in pieces if p)
-    text = _BLANK_RUN.sub("\n\n", text)
-    text = _BLANK_RUN2.sub("\n\n", text)
-    return text.strip()
 
 
 # --- K6: title-file stub (reference utils.py:321-331) -----------------------

@@ -323,13 +323,10 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from textractssmlprocessor_spark.materialize import scope
+    from textractssmlprocessor_spark.session import ENGINE_CONF
 
-    builder = (
-        SparkSession.builder.appName("curate-webtext")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+    builder = SparkSession.builder.appName("curate-webtext").config(
+        map=ENGINE_CONF
     )
     if args.partitions:
         builder = builder.config(

@@ -72,14 +72,11 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from textractssmlprocessor_spark import lineage as L
+    from textractssmlprocessor_spark.session import ENGINE_CONF
     from textractssmlprocessor_spark.sources import read_pages, read_warc
 
-    builder = (
-        SparkSession.builder.appName("extract-webtext")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+    builder = SparkSession.builder.appName("extract-webtext").config(
+        map=ENGINE_CONF
     )
     if args.partitions:
         builder = builder.config("spark.sql.shuffle.partitions", str(args.partitions))

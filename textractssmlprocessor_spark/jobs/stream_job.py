@@ -79,17 +79,14 @@ def main() -> None:
 
     from textractssmlprocessor_spark import snapshots
     from textractssmlprocessor_spark.operators.extract import extract_chunks
+    from textractssmlprocessor_spark.session import ENGINE_CONF
     from textractssmlprocessor_spark.streaming.extract_stream import stream_pages
     from textractssmlprocessor_spark.streaming.snapshot_sink import (
         batch_snapshot_id,
     )
 
-    builder = (
-        SparkSession.builder.appName("stream-extract-webtext")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+    builder = SparkSession.builder.appName("stream-extract-webtext").config(
+        map=ENGINE_CONF
     )
     if args.partitions:
         builder = builder.config(

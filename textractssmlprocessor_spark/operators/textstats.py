@@ -45,7 +45,6 @@ WS_PLUS = WS_CLASS + "+"
 # and RE2 (DuckDB oracle). This is the split BEFORE any BPE merge; see
 # count_tokens_bpe for the real merges-table count.
 PRETOK_RE = rf"[A-Za-z]+|[0-9]+|[^A-Za-z0-9{WS_ESC}]"
-BPE_TOKEN_RE = PRETOK_RE  # historical alias (pre-rename callers)
 
 # ENGINE-PORTABLE lowercase. Java's lower() applies the full Unicode
 # SpecialCasing map — U+0130 'İ' -> 'i'+U+0307 (combining dot) and
@@ -109,11 +108,6 @@ def count_tokens_pretok(col: Column) -> Column:
     the real ``count_tokens_bpe`` (distinct-word merges application) where
     the budget must match a trained tokenizer."""
     return F.size(F.regexp_extract_all(col, F.lit(PRETOK_RE), F.lit(0)))
-
-
-# pre-rename alias: the honest name is count_tokens_pretok (this was never
-# a BPE — it counts pre-tokenizer matches)
-count_tokens_bpe_approx = count_tokens_pretok
 
 
 def train_bpe_merges(

@@ -17,14 +17,13 @@ Reference quirks replicated on purpose:
 
 from __future__ import annotations
 
-from typing import List, Tuple
+from typing import List
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
-from ..functions.cleaning import remove_ssml_tags_keep_words
 
 _EXCLUDED_PUNCT_TAGS = ["<phoneme>", "</phoneme>", "<lang>", "</lang>"]
 
@@ -392,23 +391,3 @@ def validate(chunks: DataFrame, include_translation_length: bool = False) -> Dat
         out = out.unionByName(rule_translation_length(chunks))
     return out
 
-
-# --- pure-python mirrors for tier-1 parity tests ------------------------------
-
-
-def single_letter_findings_py(ssml: str) -> List[Tuple[str]]:
-    import re
-
-    parts = re.split(_TAG_RE, ssml)
-    out = []
-    for part in parts:
-        if not part.strip():
-            continue
-        out.extend(re.findall(SINGLE_LETTER_RE, part))
-    return out
-
-
-def words_after_ssml_strip(ssml: str) -> int:
-    from .textstats import count_words_py
-
-    return count_words_py(remove_ssml_tags_keep_words(ssml))

@@ -117,12 +117,6 @@ def resolve_url(base: Column, href: Column) -> Column:
     )
 
 
-def with_canonical_url(df: DataFrame, url_col: str = "url") -> DataFrame:
-    return df.withColumn("canonical_url", normalize_url(F.col(url_col))).withColumn(
-        "host", url_host(F.col(url_col))
-    )
-
-
 def url_dedup(
     df: DataFrame, url_col: str = "url", id_col: str = "doc_id"
 ) -> DataFrame:

@@ -36,14 +36,6 @@ SPAN_TYPE = StructType(
     ]
 )
 
-CHUNK_WITH_SPAN_TYPE = StructType(
-    [
-        StructField("chunk", StringType(), True),
-        StructField("start", IntegerType(), True),
-        StructField("end", IntegerType(), True),
-    ]
-)
-
 CHUNKS_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
@@ -59,23 +51,6 @@ SUBTITLE_TYPE = StructType(
         StructField("text", StringType(), True),
         StructField("start", DoubleType(), True),
         StructField("end", DoubleType(), True),
-    ]
-)
-
-AUDIO_MANIFEST_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("part_no", IntegerType(), False),
-        StructField("duration", DoubleType(), False),
-    ]
-)
-
-FINDINGS_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("chunk_number", IntegerType(), False),
-        StructField("rule", StringType(), False),
-        StructField("message", StringType(), True),
     ]
 )
 

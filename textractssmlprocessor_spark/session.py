@@ -20,12 +20,20 @@ from pyspark.sql import SparkSession
 
 DEFAULT_ARROW_BATCH = 512  # records per Arrow batch through pandas UDFs
 
+# Engine semantics every session shares: get_spark's and the spark-submit
+# jobs' (which leave master, memory and UI to the submitter).
+ENGINE_CONF = {
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": str(DEFAULT_ARROW_BATCH),
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+}
+
 
 def get_spark(
     app_name: str = "textractssmlprocessor-spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch: int = DEFAULT_ARROW_BATCH,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cores is None:
@@ -33,19 +41,15 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 32)
 
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
+        .config(map=ENGINE_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config(map=extra_conf or {})
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
