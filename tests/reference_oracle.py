@@ -16,7 +16,27 @@ import os
 import sys
 import types
 
+import pytest
+
 REFERENCE = "/root/reference"
+
+# marks a live-reference parity test; the frozen outputs under tests/frozen/
+# keep the same assertions running without the checkout
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(REFERENCE),
+    reason="reference checkout absent; the frozen parity test covers these inputs",
+)
+
+
+def frozen_reference(section: str) -> dict:
+    """Inputs and expected outputs frozen from the reference-verified tree
+    (tests/frozen/annotate_parity.json)."""
+    import json
+
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "frozen",
+                        "annotate_parity.json")
+    with open(path, encoding="utf-8") as f:
+        return json.load(f)[section]
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))  # noqa: E402
 

@@ -7,6 +7,7 @@ import math
 
 import pytest
 from pyspark.sql import functions as F
+from reference_oracle import frozen_reference, needs_reference
 
 
 @pytest.fixture(scope="module")
@@ -139,24 +140,39 @@ def test_srt_roundtrip(spark):
     assert abs(parsed[1]["end"] - 10.5) < 0.002
 
 
+def _srt_from_spark(spark, case: dict, shorter: bool) -> str:
+    from textractssmlprocessor_spark.operators.align import generate_srt
+
+    chunks = spark.createDataFrame(
+        [tuple(r) for r in case["chunks"]],
+        "url string, chunk_number int, ssml string, extracted_text string",
+    )
+    manifest = spark.createDataFrame(
+        [("u1", i + 1, d) for i, d in enumerate(case["durations"])],
+        "url string, part_no int, duration double",
+    )
+    return generate_srt(chunks, manifest, case["language"], shorter).collect()[0]["srt"]
+
+
+def test_srt_matches_frozen_reference(spark):
+    """SRT content parity without the reference checkout: generate_srt
+    equals the frozen reference-verified documents byte for byte."""
+    case = frozen_reference("srt")
+    for shorter in (False, True):
+        expected = case["expected"]["shorter" if shorter else "original"]
+        assert _srt_from_spark(spark, case, shorter) == expected, f"shorter={shorter}"
+
+
+@needs_reference
 def test_srt_against_reference_generator(spark):
     """SRT content parity: Spark generate_srt output == reference
     generate_srt_content given the same aligned chunks."""
     from reference_oracle import ref_timestamp
 
-    from textractssmlprocessor_spark.operators.align import generate_srt
-
-    chunk_rows = [
-        ("u1", 1, "Alpha sentence one. Beta follows quickly.", "latin one."),
-        ("u1", 2, "Gamma continues the tale. Delta ends it now.", "latin two."),
-        ("u1", 3, "Epsilon. Zeta. " + "Eta theta iota kappa " * 10, "latin three."),
-    ]
-    durations = [3.25, 5.0, 11.75]
-
-    ref = ref_timestamp()
+    case = frozen_reference("srt")
     all_chunks = []
     cum = 0.0
-    for (u, n, ssml, latin), dur in zip(chunk_rows, durations):
+    for (_, _, ssml, latin), dur in zip(case["chunks"], case["durations"]):
         c = {
             "cleaned_english_translation": ssml,
             "original_latin": latin,
@@ -167,16 +183,8 @@ def test_srt_against_reference_generator(spark):
         all_chunks.append(c)
 
     for shorter in (False, True):
-        expected = ref.generate_srt_content(all_chunks, "english", shorter)
-        chunks = spark.createDataFrame(
-            chunk_rows, ["url", "chunk_number", "ssml", "extracted_text"]
-        )
-        manifest = spark.createDataFrame(
-            [("u1", i + 1, d) for i, d in enumerate(durations)],
-            ["url", "part_no", "duration"],
-        )
-        got = generate_srt(chunks, manifest, "english", shorter).collect()[0]["srt"]
-        assert got == expected, f"shorter={shorter}"
+        expected = ref_timestamp().generate_srt_content(all_chunks, case["language"], shorter)
+        assert _srt_from_spark(spark, case, shorter) == expected, f"shorter={shorter}"
 
 
 def test_multimodal_metadata_and_frames(spark):

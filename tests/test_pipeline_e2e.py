@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from reference_oracle import frozen_reference, needs_reference
 
 from textractssmlprocessor_spark.corpus import pages_from_documents
 from textractssmlprocessor_spark.functions.chunking import chunk_text_with_spans
@@ -108,41 +109,49 @@ def test_validator_on_clean_corpus(spark):
     assert "speak_tags" in by_url["u4"]
 
 
+def _validator_counts(spark, ssml_list) -> dict:
+    """Findings per rule from validate(), the one path that runs every rule
+    (the automaton rules only exist inside its fused UDF)."""
+    from textractssmlprocessor_spark.operators.validate import validate
+
+    df = spark.createDataFrame(
+        [(f"u{i}", i + 1, s) for i, s in enumerate(ssml_list)],
+        "url string, chunk_number int, ssml string",
+    )
+    return {r["rule"]: r["count"] for r in validate(df).groupBy("rule").count().collect()}
+
+
+def test_validator_matches_frozen_reference_counts(spark):
+    """Rule-level parity without the reference checkout: finding counts per
+    rule equal the frozen reference-verified counts."""
+    case = frozen_reference("validator")
+    got = _validator_counts(spark, case["ssml"])
+    for rule, expected in case["expected_counts"].items():
+        assert got.get(rule, 0) == expected, rule
+
+
+@needs_reference
 def test_validator_matches_reference_rules(spark):
     """Rule-level parity: Spark findings counts == reference validator counts
     on the same ssml list."""
     from reference_oracle import ref_ssml_validator
 
-    ssml_list = [
-        "<speak>one sentence. repeated line.</speak>",
-        "<speak>repeated line. the english word outside.</speak>",
-        "<speak>café résumé non-ascii</speak>",
-        "<speak>tag</s>, punct</speak>",
-        "<speak>q stray letters x</speak>",
-        "<speak><p><p>nested</p></p></speak>",
-    ]
+    ssml_list = frozen_reference("validator")["ssml"]
     ref = ref_ssml_validator()
-    df = spark.createDataFrame(
-        [(f"u{i}", i + 1, s) for i, s in enumerate(ssml_list)],
-        ["url", "chunk_number", "ssml"],
-    )
-    from textractssmlprocessor_spark.operators import validate as V
-
-    checks = [
-        (V.rule_punctuation, ref.test_punctuation),
-        (V.rule_speak_tags, ref.test_speak_tags),
-        (V.rule_non_standard_characters, ref.test_non_standard_characters_outside_tags),
-        (V.rule_misplaced_closing_tags, ref.test_misplaced_closing_tags),
-        (V.rule_random_single_letters, ref.test_random_single_letters_outside_tags),
-        (V.rule_english_word, ref.test_english_word),
-        (V.rule_balanced_tags, ref.test_balanced_tags),
-        (V.rule_nested_tags, ref.test_nested_tags),
-        (V.rule_duplicates, ref.test_duplicates),
-    ]
-    for spark_rule, ref_rule in checks:
-        ours = spark_rule(df).count()
-        theirs = len(ref_rule(ssml_list))
-        assert ours == theirs, spark_rule.__name__
+    got = _validator_counts(spark, ssml_list)
+    checks = {
+        "punctuation": ref.test_punctuation,
+        "speak_tags": ref.test_speak_tags,
+        "non_standard_characters": ref.test_non_standard_characters_outside_tags,
+        "misplaced_closing_tags": ref.test_misplaced_closing_tags,
+        "random_single_letters": ref.test_random_single_letters_outside_tags,
+        "english_word": ref.test_english_word,
+        "balanced_tags": ref.test_balanced_tags,
+        "nested_tags": ref.test_nested_tags,
+        "duplicates": ref.test_duplicates,
+    }
+    for rule, ref_rule in checks.items():
+        assert got.get(rule, 0) == len(ref_rule(ssml_list)), rule
 
 
 def test_lineage_resume(spark, pages, tmp_path):
