@@ -828,7 +828,9 @@ def test_combine_audio_sink_orders_parts(spark, tmp_path):
 
 def test_srt_file_sink_roundtrip(spark, tmp_path):
     """K4 4-file layout: write via foreachPartition, re-read byte-identical
-    to the per-variant generate_srt output."""
+    to the per-variant generate_srt output. A project with empty ssml but
+    non-empty source text keeps its latin files: its english columns are
+    NULL and no english file is written for it."""
     import os
     from urllib.parse import quote
 
@@ -845,7 +847,8 @@ def test_srt_file_sink_roundtrip(spark, tmp_path):
         [("u/1", 1, "Prima pars longa satis. Altera sententia!",
           "<speak>First long enough part. Second sentence!</speak>"),
          ("u/1", 2, "Tertia pars hic est.", "<speak>Third part is here.</speak>"),
-         ("u2", 1, "Sola pars.", "<speak>A lonely part.</speak>")],
+         ("u2", 1, "Sola pars.", "<speak>A lonely part.</speak>"),
+         ("u3", 1, "Lingua Latina sola manet.", "")],
         "url string, chunk_number int, extracted_text string, ssml string",
     )
     manifest = chunks.select(
@@ -853,6 +856,8 @@ def test_srt_file_sink_roundtrip(spark, tmp_path):
         (F.length("extracted_text") * 0.06).alias("duration"),
     )
     variants = srt_variants(chunks, manifest)
+    [u3] = variants.filter(F.col("url") == "u3").collect()
+    assert u3["english_original"] is None and u3["english_shorter"] is None
     out = str(tmp_path / "srt")
     save_srt_files(variants, out)
     for name in SRT_VARIANTS:
@@ -863,10 +868,16 @@ def test_srt_file_sink_roundtrip(spark, tmp_path):
                 chunks, manifest, language, shorter == "shorter"
             ).collect()
         }
+        assert ("u3" in expected) == (language == "latin"), name
+        if language == "latin":
+            assert u3[name] == expected["u3"], name
         for url, srt in expected.items():
             path = os.path.join(out, quote(url, safe=""), f"{name}.srt")
             with open(path, encoding="utf-8") as f:
                 assert f.read() == srt, (name, url)
+    assert sorted(os.listdir(os.path.join(out, "u3"))) == [
+        "latin_original.srt", "latin_shorter.srt",
+    ]
 
 
 URL_EDGE_CASES = [
@@ -965,33 +976,28 @@ def test_rule_duplicates_flags_physically_duplicated_rows(spark):
     assert rule_duplicates(df).count() == 1
 
 
-def test_fused_udf_rules_match_individual_rules(spark):
-    """rules_udf_fused must stay finding-identical to running the three
-    automaton rules separately (guards the fused Arrow pass against drift)."""
-    from textractssmlprocessor_spark.operators.validate import (
-        rule_balanced_tags,
-        rule_english_word,
-        rule_nested_tags,
-        rules_udf_fused,
-    )
+def test_translation_length_hand_computed(spark):
+    """A4: english/latin word-count ratio outside [0.95, 3.0] is flagged,
+    with <sub> content and tags stripped before counting."""
+    from textractssmlprocessor_spark.operators.validate import rule_translation_length
 
-    dirty = [
-        ("u1", 1, "<speak><p>english outside lang</p></speak>"),
-        ("u2", 1, "<speak><p><p>nested paragraphs</p></p></speak>"),
-        ("u3", 1, "<speak><lang>no close and </s>stray close</speak>"),
-        ("u4", 1, "<speak>clean <lang xml:lang='en-US'>english</lang></speak>"),
+    df = spark.createDataFrame(
+        [
+            # 4 / 4 = 1.0 (hyphenated word counts once): inside
+            ("in", 1, "Gallia est omnis divisa", "<speak>All Gaul is well-known</speak>"),
+            # 3 / 4 = 0.75: below
+            ("low", 1, "arma virumque cano Troiae", "<speak>I sing arms</speak>"),
+            # 10 / 3 = 3.33 once the <sub> body is dropped: above
+            ("high", 1, "unus duo tres",
+             '<speak><sub alias="x">skip these words</sub> a b c d e f g h i j</speak>'),
+        ],
+        "url string, chunk_number int, extracted_text string, ssml string",
+    )
+    got = sorted((r["url"], r["message"]) for r in rule_translation_length(df).collect())
+    assert got == [
+        ("high", "Translation length issue detected. Ratio: 3.33"),
+        ("low", "Translation length issue detected. Ratio: 0.75"),
     ]
-    df = spark.createDataFrame(dirty, "url string, chunk_number int, ssml string")
-    key = lambda rows: sorted(  # noqa: E731
-        (r["url"], r["rule"], r["message"]) for r in rows
-    )
-    fused = key(rules_udf_fused(df).collect())
-    separate = key(
-        rule_english_word(df).collect()
-        + rule_balanced_tags(df).collect()
-        + rule_nested_tags(df).collect()
-    )
-    assert fused == separate and len(fused) >= 3
 
 
 def test_exact_substring_spans_hand_computed(spark):

@@ -106,3 +106,25 @@ def test_langid_scoring_broadcasts_the_model(spark, sf_dir):
     # the corpus side against them
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
     assert "Python" not in plan and "Arrow" not in plan, plan
+
+
+def test_annotate_srt_is_one_python_pass_without_full_outer_joins(spark):
+    """srt_variants aligns once and calls the subtitle UDF once per chunk
+    for all four variants (no per-variant chains stitched by full-outer
+    joins); generate_srt runs the same path with one variant."""
+    from textractssmlprocessor_spark.operators.align import generate_srt, srt_variants
+
+    chunks = spark.createDataFrame(
+        [("u1", 1, "One. Two.", "<speak>One. Two.</speak>"),
+         ("u1", 2, "Three.", "<speak>Three.</speak>"),
+         ("u2", 1, "Four.", "")],
+        "url string, chunk_number int, extracted_text string, ssml string",
+    )
+    manifest = chunks.select(
+        "url", F.col("chunk_number").alias("part_no"), F.lit(2.0).alias("duration")
+    )
+    plan = _plan(srt_variants(chunks, manifest))
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "FullOuter" not in plan, plan
+    plan = _plan(generate_srt(chunks, manifest, "latin", True))
+    assert plan.count("ArrowEvalPython") == 1, plan

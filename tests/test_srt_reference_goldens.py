@@ -45,6 +45,7 @@ def test_reference_srt_roundtrips_byte_identical(spark, fname):
     parsed = parse_srt(docs)
     subs = parsed.select(
         "url",
+        F.lit(fname).alias("variant"),
         F.col("index").alias("subtitle_index"),
         "start", "end", "start_ms", "end_ms", "text",
     )

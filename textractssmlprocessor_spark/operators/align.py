@@ -8,16 +8,21 @@ duration sum (timestamp.py:252-281). Spark restatement:
   inner join on the index (the inner join IS the reference's truncation
   guard: chunks beyond the last audio part drop);
 - running sum (A6) = window sum ordered by part index;
-- subtitle explode (X4/X5) = Arrow-batched UDF -> posexplode;
-- global subtitle index (J4) = row_number over (chunk order, subtitle order);
-- SRT content (K4) = ordered concat of numbered blocks.
+- subtitle explode (X4/X5) = one Arrow-batched UDF call per chunk that
+  returns every requested variant's subtitles -> posexplode;
+- global subtitle index (J4) = row_number over (chunk order, subtitle order)
+  per (project, variant);
+- SRT content (K4) = ordered concat of numbered blocks per (project,
+  variant), pivoted to one column per variant.
 
-Alignment is per ``project`` (the reference's per-directory run), so every
-window partitions by project — at scale each project's chunk stream is
-modest while projects parallelize across the cluster.
+Alignment is per project (the ``url`` column, the reference's per-directory
+run), so every window partitions by project — at scale each project's chunk
+stream is modest while projects parallelize across the cluster.
 """
 
 from __future__ import annotations
+
+from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -25,21 +30,17 @@ from pyspark.sql import functions as F
 from .udfs import subtitles_udf
 
 
-def align_chunks_to_audio(
-    chunks: DataFrame,
-    manifest: DataFrame,
-    project_col: str = "url",
-) -> DataFrame:
-    """chunks (project, chunk_number, ...) x manifest (project, part_no,
-    duration) -> aligned chunks with start_time/end_time."""
-    cw = Window.partitionBy(project_col).orderBy("chunk_number")
-    mw = Window.partitionBy(project_col).orderBy("part_no")
+def align_chunks_to_audio(chunks: DataFrame, manifest: DataFrame) -> DataFrame:
+    """chunks (url, chunk_number, ...) x manifest (url, part_no, duration)
+    -> aligned chunks with start_time/end_time."""
+    cw = Window.partitionBy("url").orderBy("chunk_number")
+    mw = Window.partitionBy("url").orderBy("part_no")
     c = chunks.withColumn("idx", F.row_number().over(cw))
     m = manifest.withColumn("idx", F.row_number().over(mw)).select(
-        project_col, "idx", "duration"
+        "url", "idx", "duration"
     )
-    joined = c.join(m, on=[project_col, "idx"], how="inner")
-    run = Window.partitionBy(project_col).orderBy("idx").rowsBetween(
+    joined = c.join(m, on=["url", "idx"], how="inner")
+    run = Window.partitionBy("url").orderBy("idx").rowsBetween(
         Window.unboundedPreceding, 0
     )
     return (
@@ -49,37 +50,33 @@ def align_chunks_to_audio(
     )
 
 
-def explode_subtitles(
-    aligned: DataFrame,
-    language: str,
-    use_shorter_subtitles: bool,
-    text_col: str | None = None,
-    project_col: str = "url",
-) -> DataFrame:
-    """Aligned chunks -> one row per subtitle with global per-project index
-    (reference timestamp.py:182-206)."""
-    if text_col is None:
-        text_col = "ssml" if language == "english" else "extracted_text"
+def explode_subtitles(aligned: DataFrame, variants: Sequence[str]) -> DataFrame:
+    """Aligned chunks -> one row per (url, variant, subtitle) with the
+    variant's global per-project index (reference timestamp.py:182-206).
+    One ``subtitles_udf`` call per chunk covers every name in ``variants``
+    (``<language>_<original|shorter>``); each variant's subtitles are
+    contiguous in its array, so the array position orders them."""
     subs = aligned.select(
-        project_col,
+        "url",
         "chunk_number",
         F.posexplode(
             subtitles_udf(
-                F.col(text_col),
+                F.col("ssml"),
+                F.col("extracted_text"),
                 F.col("start_time"),
                 F.col("end_time"),
-                F.lit(language),
-                F.lit(use_shorter_subtitles),
+                F.array(*[F.lit(v) for v in variants]),
             )
         ).alias("sub_pos", "sub"),
-    )
-    w = Window.partitionBy(project_col).orderBy("chunk_number", "sub_pos")
+    ).select("url", "chunk_number", "sub_pos", "sub.*")
+    w = Window.partitionBy("url", "variant").orderBy("chunk_number", "sub_pos")
     return subs.select(
-        project_col,
+        "url",
+        "variant",
         F.row_number().over(w).alias("subtitle_index"),
-        F.col("sub.text").alias("text"),
-        F.col("sub.start").alias("start"),
-        F.col("sub.end").alias("end"),
+        "text",
+        "start",
+        "end",
     )
 
 
@@ -114,11 +111,9 @@ def _format_time_ms_col(ms) -> F.Column:
     )
 
 
-def srt_content(
-    subtitles: DataFrame, project_col: str = "url", from_millis: bool = False
-) -> DataFrame:
-    """(project, srt) — the full SRT document per project, assembled with an
-    ordered collect over the window (deterministic; single row per project).
+def srt_content(subtitles: DataFrame, from_millis: bool = False) -> DataFrame:
+    """(url, variant, srt) — the full SRT document per project and variant,
+    assembled with an ordered collect (deterministic; one row per pair).
 
     ``from_millis=True`` serializes from integer ``start_ms``/``end_ms``
     columns instead of float ``start``/``end`` — byte-exact for timestamps
@@ -144,9 +139,9 @@ def srt_content(
     )
     # collect_list gives no ordering guarantee after a shuffle: collect
     # (index, block) structs, sort the array by index, then join — one
-    # deterministic row per project.
+    # deterministic row per (project, variant).
     return (
-        subtitles.groupBy(project_col)
+        subtitles.groupBy("url", "variant")
         .agg(
             F.array_join(
                 F.transform(
@@ -163,14 +158,13 @@ def srt_content(
     )
 
 
-def parse_srt(srt_docs: DataFrame, srt_col: str = "srt",
-              project_col: str = "url") -> DataFrame:
+def parse_srt(srt_docs: DataFrame, srt_col: str = "srt") -> DataFrame:
     """SRT scan (S5, reference audio_processing.py:55-87): whole SRT document
     strings -> one row per subtitle (index, start, end, text). Block split,
     time parsing, and validation mirror the reference parser; invalid blocks
     are skipped. Native expressions end-to-end."""
     blocks = F.split(F.trim(F.col(srt_col)), r"\n\s*\n", -1)
-    b = srt_docs.select(project_col, F.explode(blocks).alias("block"))
+    b = srt_docs.select("url", F.explode(blocks).alias("block"))
     parts = F.split("block", "\n", 3)
     time_re = r"(\d{2}:\d{2}:\d{2},\d{3}) --> (\d{2}:\d{2}:\d{2},\d{3})"
 
@@ -183,7 +177,7 @@ def parse_srt(srt_docs: DataFrame, srt_col: str = "srt",
         )
 
     out = b.select(
-        project_col,
+        "url",
         parts[0].alias("idx_s"),
         parts[1].alias("time_range"),
         F.trim(parts[2]).alias("text"),
@@ -207,7 +201,7 @@ def parse_srt(srt_docs: DataFrame, srt_col: str = "srt",
         )
 
     return out.select(
-        project_col,
+        "url",
         F.col("idx_s").cast("int").alias("index"),
         to_sec(start_s).alias("start"),
         to_sec(end_s).alias("end"),
@@ -217,45 +211,38 @@ def parse_srt(srt_docs: DataFrame, srt_col: str = "srt",
     )
 
 
-def generate_srt(
-    chunks: DataFrame,
-    manifest: DataFrame,
-    language: str,
-    use_shorter_subtitles: bool,
-    project_col: str = "url",
-) -> DataFrame:
-    aligned = align_chunks_to_audio(chunks, manifest, project_col)
-    subs = explode_subtitles(aligned, language, use_shorter_subtitles,
-                             project_col=project_col)
-    return srt_content(subs, project_col)
-
-
 SRT_VARIANTS = (
     "english_original", "english_shorter", "latin_original", "latin_shorter",
 )
 
 
-def srt_variants(
-    chunks: DataFrame, manifest: DataFrame, project_col: str = "url"
+def generate_srt(
+    chunks: DataFrame,
+    manifest: DataFrame,
+    language: str,
+    use_shorter_subtitles: bool,
 ) -> DataFrame:
+    """(url, srt) — one SRT document per project for one variant."""
+    variant = f"{language}_{'shorter' if use_shorter_subtitles else 'original'}"
+    subs = explode_subtitles(align_chunks_to_audio(chunks, manifest), [variant])
+    return srt_content(subs).select("url", "srt")
+
+
+def srt_variants(chunks: DataFrame, manifest: DataFrame) -> DataFrame:
     """All four reference SRT documents per project (timestamp.py:209-224's
-    file set) as one row: english/latin x original/shorter. The alignment
-    subtree is shared; outer join keeps projects where one language side
-    produced no subtitles."""
-    aligned = align_chunks_to_audio(chunks, manifest, project_col)
-    out = None
-    for name in SRT_VARIANTS:
-        language, shorter = name.split("_")
-        shorter = shorter == "shorter"
-        subs = explode_subtitles(aligned, language, shorter, project_col=project_col)
-        doc = srt_content(subs, project_col).withColumnRenamed("srt", name)
-        out = doc if out is None else out.join(doc, project_col, "full_outer")
-    return out
+    file set) as one row: english/latin x original/shorter, from one
+    alignment and one subtitle UDF call per chunk. A variant that produced
+    no subtitles for a project (e.g. empty ssml) is NULL in its column."""
+    subs = explode_subtitles(align_chunks_to_audio(chunks, manifest), SRT_VARIANTS)
+    return (
+        srt_content(subs)
+        .groupBy("url")
+        .pivot("variant", list(SRT_VARIANTS))
+        .agg(F.first("srt"))
+    )
 
 
-def save_srt_files(
-    variants: DataFrame, output_dir: str, project_col: str = "url"
-) -> None:
+def save_srt_files(variants: DataFrame, output_dir: str) -> None:
     """SRT text sink (K4, reference timestamp.py:209-224): writes
     ``<output_dir>/<project>/{english,latin}_{original,shorter}.srt``
     executor-side via foreachPartition (no driver collect); project names
@@ -267,16 +254,14 @@ def save_srt_files(
     the files to be collectable in one place. For pure-Spark targets,
     route payload bytes through a DataFrame write instead.
     """
-    names = SRT_VARIANTS
-
     def write_partition(it):
         import os
         from urllib.parse import quote
 
         for r in it:
-            d = os.path.join(output_dir, quote(r[project_col], safe=""))
+            d = os.path.join(output_dir, quote(r["url"], safe=""))
             os.makedirs(d, exist_ok=True)
-            for name in names:
+            for name in SRT_VARIANTS:
                 if r[name] is not None:
                     with open(
                         os.path.join(d, f"{name}.srt"), "w", encoding="utf-8"

@@ -120,15 +120,26 @@ def split_ssml_udf(s: pd.Series) -> pd.Series:
 
 @F.pandas_udf(ArrayType(SUBTITLE_TYPE))
 def subtitles_udf(
-    text: pd.Series, start: pd.Series, end: pd.Series, language: pd.Series,
-    shorter: pd.Series,
+    ssml: pd.Series, extracted_text: pd.Series, start: pd.Series, end: pd.Series,
+    variants: pd.Series,
 ) -> pd.Series:
-    """Per-chunk subtitle records (reference timestamp.py:182-199)."""
-
+    """Per-chunk subtitle records of every requested variant in one Arrow
+    round trip (reference timestamp.py:182-199). ``variants`` holds
+    ``<language>_<original|shorter>`` names; english reads the ssml, any
+    other language the extracted text. Records come out grouped by variant,
+    in the order of ``variants``."""
     out = []
-    for t, s, e, lang, sh in zip(text, start, end, language, shorter):
-        if t is None or not t:
-            out.append([])
-            continue
-        out.append(chunk_subtitles(t, float(s), float(e), lang, bool(sh)))
+    for en, la, s, e, names in zip(ssml, extracted_text, start, end, variants):
+        subs = []
+        for name in names:
+            language, kind = name.rsplit("_", 1)
+            text = en if language == "english" else la
+            if text:
+                subs += [
+                    {"variant": name, **r}
+                    for r in chunk_subtitles(
+                        text, float(s), float(e), language, kind == "shorter"
+                    )
+                ]
+        out.append(subs)
     return pd.Series(out)

@@ -4,7 +4,8 @@ rule, message).
 Spark restatement of reference pipeline_support/ssml_validator.py (SURVEY.md
 §2.7). Rules that are pure regex run as native JVM expressions (whole-stage
 codegen, zero Python); the two stack-automaton rules and the positional
-rfind rule run as Arrow-batched pandas UDFs over the pure functions.
+rfind rule run together in one Arrow-batched pandas UDF (rules_udf_fused)
+over the pure functions.
 
 Reference quirks replicated on purpose:
 - test_non_standard_characters checks only EVEN-indexed tag-split segments
@@ -17,12 +18,13 @@ Reference quirks replicated on purpose:
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import List
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 
 _EXCLUDED_PUNCT_TAGS = ["<phoneme>", "</phoneme>", "<lang>", "</lang>"]
@@ -303,37 +305,9 @@ def _nested_findings(ssml: str) -> List[str]:
     return out
 
 
-def _udf_rule(fn) -> Column:
-    @F.pandas_udf(ArrayType(StringType()))
-    def rule_udf(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: [] if t is None else fn(t))
-
-    return rule_udf
-
-
-def rule_english_word(chunks: DataFrame, col: str = "ssml") -> DataFrame:
-    msgs = _udf_rule(_english_word_findings)(F.col(col))
-    df = chunks.select("url", "chunk_number", F.explode(msgs).alias("message"))
-    return _finding(df, "english_word", F.col("message"))
-
-
-def rule_balanced_tags(chunks: DataFrame, col: str = "ssml") -> DataFrame:
-    msgs = _udf_rule(_balanced_findings)(F.col(col))
-    df = chunks.select("url", "chunk_number", F.explode(msgs).alias("message"))
-    return _finding(df, "balanced_tags", F.col("message"))
-
-
-def rule_nested_tags(chunks: DataFrame, col: str = "ssml") -> DataFrame:
-    msgs = _udf_rule(_nested_findings)(F.col(col))
-    df = chunks.select("url", "chunk_number", F.explode(msgs).alias("message"))
-    return _finding(df, "nested_tags", F.col("message"))
-
-
 def rules_udf_fused(chunks: DataFrame, col: str = "ssml") -> DataFrame:
     """The three Python-automaton rules in ONE Arrow round trip (each value
     crosses the JVM<->Python boundary once instead of three times)."""
-    from pyspark.sql.types import StructField, StructType
-
     schema = ArrayType(
         StructType(
             [StructField("rule", StringType()), StructField("message", StringType())]
@@ -365,29 +339,13 @@ ALL_RULES = [
     rule_malformed_closing_tags,
     rule_random_single_letters,
     rule_duplicates,
-    rule_english_word,
-    rule_balanced_tags,
-    rule_nested_tags,
+    rules_udf_fused,
 ]
 
-# the rules rules_udf_fused covers in one Arrow pass; anything else in
-# ALL_RULES (including future additions) runs as its own branch
-_FUSED_UDF_RULES = {rule_english_word, rule_balanced_tags, rule_nested_tags}
 
-
-def validate(chunks: DataFrame, include_translation_length: bool = False) -> DataFrame:
-    """Union of all rule findings (ssml_validator.py:255-270). Native rules
-    union as codegen'd branches; the three UDF rules ride one fused Arrow
-    pass (rules_udf_fused) — identical findings to running them separately.
-    Membership-based, so appending a new rule to ALL_RULES always runs it."""
-    out = None
-    for rule in ALL_RULES:
-        if rule in _FUSED_UDF_RULES:
-            continue
-        f = rule(chunks)
-        out = f if out is None else out.unionByName(f)
-    out = out.unionByName(rules_udf_fused(chunks))
-    if include_translation_length:
-        out = out.unionByName(rule_translation_length(chunks))
-    return out
-
+def validate(chunks: DataFrame) -> DataFrame:
+    """Union of all rule findings (ssml_validator.py:255-270): the native
+    rules as codegen'd branches, the three automaton rules as the one fused
+    Arrow pass. rule_translation_length (A4) also needs the source text and
+    runs as its own operator."""
+    return reduce(DataFrame.unionByName, (rule(chunks) for rule in ALL_RULES))

@@ -48,6 +48,7 @@ CHUNKS_SCHEMA = StructType(
 
 SUBTITLE_TYPE = StructType(
     [
+        StructField("variant", StringType(), True),
         StructField("text", StringType(), True),
         StructField("start", DoubleType(), True),
         StructField("end", DoubleType(), True),

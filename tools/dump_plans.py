@@ -24,6 +24,8 @@ HEADLINE = [
     "running_durations",
     "ordering_nav",
     "srt_generate",
+    "srt_variants",
+    "validate_corpus",
     "curate_corpus",
     "winnow",
     "contamination",
