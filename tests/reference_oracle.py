@@ -12,6 +12,7 @@ reference ``chunk_text`` and ours segment identically (SURVEY.md §7).
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 import sys
 import types
@@ -31,8 +32,6 @@ needs_reference = pytest.mark.skipif(
 def frozen_reference(section: str) -> dict:
     """Inputs and expected outputs frozen from the reference-verified tree
     (tests/frozen/annotate_parity.json)."""
-    import json
-
     path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "frozen",
                         "annotate_parity.json")
     with open(path, encoding="utf-8") as f:
