@@ -29,11 +29,11 @@ needs_reference = pytest.mark.skipif(
 )
 
 
-def frozen_reference(section: str) -> dict:
+def frozen_reference(section: str, table: str = "annotate_parity"):
     """Inputs and expected outputs frozen from the reference-verified tree
-    (tests/frozen/annotate_parity.json)."""
+    (tests/frozen/<table>.json)."""
     path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "frozen",
-                        "annotate_parity.json")
+                        f"{table}.json")
     with open(path, encoding="utf-8") as f:
         return json.load(f)[section]
 

@@ -4,7 +4,10 @@ demands — validated here without an Iceberg runtime (none in the sandbox)."""
 
 from __future__ import annotations
 
+import os
 import re
+import subprocess
+import sys
 
 import pytest
 
@@ -74,6 +77,28 @@ def test_extract_job_flag_injects_conf(tmp_path):
     src = inspect.getsource(extract_job.main)
     assert "--iceberg-catalog" in src and "--iceberg-warehouse" in src
     assert "iceberg_submit_conf" in src
+
+
+@pytest.mark.parametrize("flag", ["--output", "--lineage"])
+def test_extract_job_rejects_table_identifier_sinks(tmp_path, flag):
+    """run_with_lineage writes parquet directories, so a catalog table name
+    as a sink must stop the job with a clear error before any Spark work,
+    not become a relative directory named after the table."""
+    from textractssmlprocessor_spark.jobs import extract_job
+
+    args = {
+        "--input": str(tmp_path / "pages.parquet"),
+        "--output": str(tmp_path / "chunks"),
+        "--lineage": str(tmp_path / "lineage.parquet"),
+        flag: "lake.crawl.sink",
+    }
+    proc = subprocess.run(
+        [sys.executable, extract_job.__file__, *[x for kv in args.items() for x in kv]],
+        cwd=tmp_path, capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode != 0
+    assert f"{flag} 'lake.crawl.sink' is not a filesystem path" in proc.stderr
+    assert os.listdir(tmp_path) == []
 
 
 GOLDENS = "goldens/iceberg"

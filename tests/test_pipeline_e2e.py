@@ -3,6 +3,10 @@ invariants, and checkpoint-resume (SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import os
+import uuid
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 from reference_oracle import frozen_reference, needs_reference
@@ -222,6 +226,85 @@ def test_lineage_crash_between_write_and_lineage_is_idempotent(spark, pages, tmp
     # and the rerun covered the whole corpus
     n_urls = final.select("url").distinct().count()
     assert n_urls == pages.count()
+
+
+@contextmanager
+def job_ids(spark):
+    """Collect into the yielded list the ids of the Spark jobs the block
+    submits (its own job group)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        ids.extend(sorted(sc.statusTracker().getJobIdsForGroup(group)))
+
+
+def _files(path):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), path)
+        for d, _, fs in os.walk(path) for f in fs
+    )
+
+
+def test_lineage_first_run_jobs_and_rows(spark, pages, tmp_path):
+    """A first run (no lineage table yet) reads no lineage and anti-joins
+    nothing: scan, UDF and write, then the read-back lineage tail. Its
+    lineage rows equal an independent recompute, checksums included."""
+    from textractssmlprocessor_spark import lineage
+
+    out = str(tmp_path / "chunks_f")
+    lin = str(tmp_path / "lineage_f")
+    pages.count()  # the cached input is ready before the measured call
+    with job_ids(spark) as ids:
+        lineage.run_with_lineage(pages, spark, out, lin, n_buckets=8, num_partitions=8)
+    assert 0 < len(ids) <= 5, ids
+
+    chunks = lineage.with_bucket(extract_chunks(pages, num_partitions=8), 8)
+    # the lineage definition spelled out in one plain aggregate
+    spelled = chunks.groupBy("bucket").agg(
+        F.lit("done").alias("status"),
+        F.countDistinct("url").cast("int").alias("n_docs"),
+        F.count(F.lit(1)).cast("int").alias("n_chunks"),
+        F.hex(F.bit_xor(F.xxhash64("url", "chunk_number", "ssml"))).alias("checksum"),
+    )
+    cols = ["bucket", "status", "n_docs", "n_chunks", "checksum"]
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(cols).collect())
+
+    got = rows(spark.read.parquet(lin))
+    assert got == rows(lineage.lineage_rows(chunks)) == rows(spelled)
+    assert len(got) == 8 and all(r[4] for r in got)
+
+
+def test_lineage_pure_resume_scans_nothing(spark, pages, tmp_path):
+    """Every bucket done: the rerun reads only the lineage table. It never
+    evaluates an input row and writes no output file."""
+    from textractssmlprocessor_spark import lineage
+
+    out = str(tmp_path / "chunks_p")
+    lin = str(tmp_path / "lineage_p")
+    lineage.run_with_lineage(pages, spark, out, lin, n_buckets=8, num_partitions=8)
+    before = _files(out)
+    # any job that scans the input fails on this column
+    poisoned = pages.withColumn("text", F.raise_error(F.lit("input scanned")).cast("string"))
+    metrics = {}
+    with job_ids(spark) as ids:
+        again = lineage.run_with_lineage(
+            poisoned, spark, out, lin, n_buckets=8, num_partitions=8,
+            metrics_out=metrics,
+        )
+    assert metrics == {"n_chunks": 0, "n_docs_approx": 0, "ssml_bytes": 0}
+    assert again.count() == 0
+    assert _files(out) == before
+    # the only Spark work is reading the done set off the lineage table
+    with job_ids(spark) as done_set_ids:
+        lineage.completed_buckets(spark, lin).select("bucket").collect()
+    assert len(ids) == len(done_set_ids), (ids, done_set_ids)
 
 
 def test_malformed_utf8_html_degrades_not_fails(spark):

@@ -1,14 +1,46 @@
 """Property-based parity: randomized inputs (hypothesis) through our
 functions vs the reference oracles — catches packing/boundary edge cases the
-fixed fixtures miss."""
+fixed fixtures miss. A fixed sample of each property's inputs, with the
+outputs of the reference-verified tree, is frozen in
+tests/frozen/property_parity.json, so the comparison also runs without the
+reference checkout; the live properties skip then."""
 
 from __future__ import annotations
 
+import json
+
+import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from reference_oracle import ref_ssml_processing, ref_timestamp, ref_utils
+from reference_oracle import (
+    frozen_reference,
+    needs_reference,
+    ref_ssml_processing,
+    ref_timestamp,
+    ref_utils,
+)
 from textractssmlprocessor_spark.functions import chunking, cleaning, ssml, subtitles
+
+_FROZEN = {
+    "chunk_text": chunking.chunk_text,
+    "remove_headers": cleaning.remove_headers,
+    "preprocess_ssml_tags": ssml.preprocess_ssml_tags,
+    "split_ssml": chunking.split_ssml,
+    "split_into_subtitles": subtitles.split_into_subtitles,
+    "split_latin_subtitles": subtitles.split_latin_subtitles,
+    "format_time": cleaning.format_time,
+}
+
+
+@pytest.mark.parametrize("name", list(_FROZEN))
+def test_matches_frozen_reference(name):
+    cases = frozen_reference(name, "property_parity")
+    assert cases
+    for args, want in cases:
+        # the JSON round trip turns tuples into lists, as in the frozen file
+        assert json.loads(json.dumps(_FROZEN[name](*args))) == want, args
+
 
 # text made of words, punctuation, newlines — printable ASCII plus a little
 # unicode to exercise isupper/word-boundary semantics
@@ -25,18 +57,21 @@ _TEXT = st.lists(st.tuples(_WORD, _SEP), min_size=0, max_size=80).map(
 )
 
 
+@needs_reference
 @settings(max_examples=150, deadline=None)
 @given(_TEXT, st.integers(min_value=10, max_value=300))
 def test_chunk_text_property(text, size):
     assert chunking.chunk_text(text, size) == ref_utils().chunk_text(text, size)
 
 
+@needs_reference
 @settings(max_examples=150, deadline=None)
 @given(_TEXT)
 def test_remove_headers_property(text):
     assert cleaning.remove_headers(text) == ref_utils().remove_headers(text)
 
 
+@needs_reference
 @settings(max_examples=150, deadline=None)
 @given(_TEXT)
 def test_preprocess_ssml_property(text):
@@ -52,6 +87,7 @@ _SSML = st.lists(
 ).map("".join)
 
 
+@needs_reference
 @settings(max_examples=150, deadline=None)
 @given(_SSML, st.integers(min_value=15, max_value=200))
 def test_split_ssml_property(text, size):
@@ -60,6 +96,7 @@ def test_split_ssml_property(text, size):
     )
 
 
+@needs_reference
 @settings(max_examples=100, deadline=None)
 @given(
     _TEXT.filter(lambda t: len(t.strip()) > 0),
@@ -72,6 +109,7 @@ def test_subtitles_property(text, start, dur):
     assert subtitles.split_into_subtitles(text, start, end) == ref
 
 
+@needs_reference
 @settings(max_examples=100, deadline=None)
 @given(
     _TEXT.filter(lambda t: len(t.strip()) > 0),
@@ -85,6 +123,7 @@ def test_latin_subtitles_property(text, start, dur):
     ) == ref_timestamp().split_latin_subtitles(text, start, end)
 
 
+@needs_reference
 @settings(max_examples=200, deadline=None)
 @given(st.floats(min_value=0, max_value=200000, allow_nan=False))
 def test_format_time_property(seconds):

@@ -7,9 +7,15 @@
         --lineage <lineage table path> \
         [--languages en,la] [--buckets 4096] [--partitions 16384]
 
-Resumable: reruns skip buckets recorded as done in the lineage table
-(anti-join on the broadcast lineage set). Designed for multi-executor
-clusters; the same code runs unchanged on local[N].
+``--output`` and ``--lineage`` are filesystem paths (parquet directories;
+a name with no '/' that does not end in .parquet is rejected): the input
+may be an Iceberg table, the sinks may not.
+
+Resumable: reruns skip buckets recorded as done in the lineage table. The
+broadcast anti-join against the lineage set runs only when a lineage table
+exists; a first run goes straight from the scan to the extraction and its
+write. Designed for multi-executor clusters; the same code runs unchanged
+on local[N].
 """
 
 from __future__ import annotations
@@ -63,6 +69,16 @@ def main() -> None:
     p.add_argument("--iceberg-catalog-impl", default="hadoop",
                    choices=["hadoop", "hive", "rest"])
     args = p.parse_args()
+    from textractssmlprocessor_spark.sources import is_path
+
+    for flag, value in (("--output", args.output), ("--lineage", args.lineage)):
+        if not is_path(value):
+            p.error(
+                f"{flag} {value!r} is not a filesystem path: the chunks and "
+                "lineage tables are parquet directories, so give a path "
+                "containing '/' or ending in .parquet (a catalog table "
+                "identifier is not supported here)"
+            )
     # bare relative dirs (no '/' or suffix) are still parquet if they exist
     # on the local filesystem — don't surprise users with an Iceberg error
     input_format = args.input_format

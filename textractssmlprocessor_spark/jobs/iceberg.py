@@ -26,11 +26,15 @@ Typical launch (the documented stanza, also in jobs/README.md):
       --py-files textractssmlprocessor_spark.zip \\
       textractssmlprocessor_spark/jobs/extract_job.py \\
       --input lake.crawl.pages --input-format iceberg \\
-      --output lake.crawl.chunks --lineage lake.crawl.lineage
+      --output s3://bucket/crawl/chunks --lineage s3://bucket/crawl/lineage
 
-Writes are snapshot-idempotent on the Iceberg side: each
-``run_with_lineage`` pass lands as one snapshot, and a rerun that skips
-completed buckets appends only the missing ones.
+Only the INPUT may be an Iceberg table. ``--output`` and ``--lineage`` are
+filesystem paths: ``run_with_lineage`` writes both as parquet directories
+(chunks by dynamic per-bucket overwrite, lineage rows by append), and
+``extract_job`` rejects a sink name that is not a path (no '/' and no
+``.parquet`` suffix) rather than let a table identifier become a relative
+directory. ``chunks_table_ddl`` specifies an Iceberg sink table; nothing in
+the extraction writes to it yet.
 """
 
 from __future__ import annotations

@@ -29,14 +29,22 @@ def with_bucket(df: DataFrame, n_buckets: int = N_BUCKETS_DEFAULT) -> DataFrame:
 def lineage_rows(chunks: DataFrame) -> DataFrame:
     """Aggregate one lineage row per bucket: doc/chunk counts + an
     order-insensitive checksum (bit_xor of per-row xxhash64 — stable under
-    partitioning/row order, immune to overflow)."""
-    return chunks.groupBy("bucket").agg(
-        F.lit("done").alias("status"),
-        F.countDistinct("url").cast("int").alias("n_docs"),
-        F.count(F.lit(1)).cast("int").alias("n_chunks"),
-        F.hex(
-            F.bit_xor(F.xxhash64(F.col("url"), F.col("chunk_number"), F.col("ssml")))
-        ).alias("checksum"),
+    partitioning/row order, immune to overflow). Rows are hashed first and
+    shuffled once, by bucket: the distinct url count then needs no second
+    Exchange on (bucket, url)."""
+    return (
+        chunks.select(
+            "bucket", "url",
+            F.xxhash64(F.col("url"), F.col("chunk_number"), F.col("ssml")).alias("h"),
+        )
+        .repartition("bucket")
+        .groupBy("bucket")
+        .agg(
+            F.lit("done").alias("status"),
+            F.countDistinct("url").cast("int").alias("n_docs"),
+            F.count(F.lit(1)).cast("int").alias("n_chunks"),
+            F.hex(F.bit_xor("h")).alias("checksum"),
+        )
     )
 
 
@@ -79,7 +87,8 @@ def run_with_lineage(
 ) -> DataFrame:
     """Checkpoint-resumable extraction: skip completed buckets, extract the
     rest, append output partitioned by bucket, then append lineage rows.
-    Returns the chunks written in this run.
+    Returns the chunks written in this run. When every bucket is already
+    done, nothing is scanned or written and the returned frame is empty.
 
     ``metrics_out``: pass a dict to receive run counters (n_chunks,
     n_docs_approx, ssml_bytes) observed DURING the write action itself
@@ -94,12 +103,21 @@ def run_with_lineage(
     # driver-side keeps the post-write read-back partition-PRUNED to this
     # run's buckets — re-reading the whole accumulated output and
     # anti-joining would scan 100 TB of prior runs to find this run's rows.
-    done = {
-        r["bucket"]
-        for r in completed_buckets(spark, lineage_path).select("bucket").collect()
-    }
+    # A first run has no lineage table, so its done set is empty without a
+    # Spark job and the input needs no anti-join.
+    resuming = fs_exists(spark, lineage_path)
+    done: set[int] = set()
+    if resuming:
+        done = {
+            r["bucket"]
+            for r in completed_buckets(spark, lineage_path).select("bucket").collect()
+        }
     todo_buckets = [b for b in range(n_buckets) if b not in done]
-    todo = resume_filter(pages, spark, lineage_path, n_buckets)
+    todo = (
+        resume_filter(pages, spark, lineage_path, n_buckets)
+        if resuming and todo_buckets
+        else pages
+    )
     chunks = with_bucket(
         extract_chunks(
             todo,
@@ -108,6 +126,24 @@ def run_with_lineage(
         ),
         n_buckets,
     )
+    # Lineage rows come from the files written (the durable truth, not a
+    # recompute of the UDF pipeline); the isin filter prunes the read to
+    # this run's bucket partitions only, and the known schema spares the
+    # read a parquet schema-inference job. Built after the write: a file
+    # read lists its files when it is created.
+    schema = chunks.schema
+
+    def read_back() -> DataFrame:
+        return spark.read.schema(schema).parquet(output_path).filter(
+            F.col("bucket").isin(todo_buckets)
+        )
+
+    if not todo_buckets:
+        # pure-resume rerun: every bucket is done, so neither scan the input
+        # nor write anything
+        if metrics_out is not None:
+            metrics_out.update(n_chunks=0, n_docs_approx=0, ssml_bytes=0)
+        return read_back()
     obs = None
     if metrics_out is not None:
         from pyspark.sql import Observation
@@ -118,7 +154,7 @@ def run_with_lineage(
             F.count(F.lit(1)).alias("n_chunks"),
             F.approx_count_distinct("url").alias("n_docs_approx"),
             # coalesce: sum over an empty run is NULL, and the metrics
-            # contract is integers (a pure-resume rerun writes 0 rows)
+            # contract is integers (a rerun over no new pages writes 0 rows)
             F.coalesce(F.sum(F.octet_length("ssml")), F.lit(0)).alias(
                 "ssml_bytes"
             ),
@@ -131,13 +167,6 @@ def run_with_lineage(
     ).partitionBy("bucket").parquet(output_path)
     if obs is not None:
         metrics_out.update(obs.get)  # ready: the write action completed
-    # Lineage rows come from the files just written (the durable truth, not
-    # a recompute of the UDF pipeline); the isin filter prunes the read to
-    # this run's bucket partitions only.
-    written = spark.read.parquet(output_path).filter(
-        F.col("bucket").isin(todo_buckets)
-    )
+    written = read_back()
     lineage_rows(written).write.mode("append").parquet(lineage_path)
     return written
-
-

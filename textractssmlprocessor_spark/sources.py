@@ -18,6 +18,12 @@ from .schema import PAGES_SCHEMA
 PAGES_COLUMNS = [f.name for f in PAGES_SCHEMA.fields]
 
 
+def is_path(source: str) -> bool:
+    """A path separator or a ``.parquet`` suffix marks a filesystem path;
+    any other name is an Iceberg table identifier."""
+    return "/" in source or source.endswith(".parquet")
+
+
 def read_pages(
     spark: SparkSession, source: str, format: str | None = None
 ) -> DataFrame:
@@ -30,9 +36,7 @@ def read_pages(
     Iceberg table identifier. Column pruning to the pages schema is
     applied so accidental extra columns never flow downstream.
     """
-    fmt = format or (
-        "parquet" if "/" in source or source.endswith(".parquet") else "iceberg"
-    )
+    fmt = format or ("parquet" if is_path(source) else "iceberg")
     if fmt == "iceberg":
         df = spark.read.format("iceberg").load(source)
     elif fmt == "snapshot":
