@@ -31,7 +31,7 @@ def test_fs_list_names(spark, tmp_path):
 
 
 def test_lineage_resume_accepts_file_uri(spark, tmp_path):
-    """completed_buckets on a file: URI lineage path — the exact call
+    """done_buckets on a file: URI lineage path — the exact call
     shape a cluster submit uses — must read the table, not treat the
     URI as an absent local path."""
     from textractssmlprocessor_spark import lineage as L
@@ -42,10 +42,9 @@ def test_lineage_resume_accepts_file_uri(spark, tmp_path):
     )
     path = str(tmp_path / "lineage.parquet")
     rows.write.parquet(path)
-    got = L.completed_buckets(spark, f"file:{path}")
-    assert {r["bucket"] for r in got.collect()} == {0}
-    # absent path still yields the empty frame (schema-stable), not an error
-    assert L.completed_buckets(spark, f"file:{tmp_path}/none").count() == 0
+    assert L.done_buckets(spark, f"file:{path}") == {0}
+    # absent path still yields the empty set, not an error
+    assert L.done_buckets(spark, f"file:{tmp_path}/none") == set()
 
 
 def test_history_paths_scheme_aware(spark, tmp_path):

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import random
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 TAGS = ["h4", "em", "strong", "p", "span", "script", "style", "br",
@@ -39,6 +39,9 @@ _soup_bits = st.lists(
 
 @settings(max_examples=300, deadline=None)
 @given(_soup_bits)
+# "<![" without a marked-section keyword: the stdlib scanner raises here
+@example(["<![0"])
+@example(["<![foo[x]]>", "y"])
 def test_convert_html_to_ssml_total_on_tag_soup(bits):
     from textractssmlprocessor_spark.functions.dom import convert_html_to_ssml
 

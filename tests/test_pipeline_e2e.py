@@ -158,6 +158,15 @@ def test_validator_matches_reference_rules(spark):
         assert got.get(rule, 0) == len(ref_rule(ssml_list)), rule
 
 
+def _not_done(pages, done, n_buckets):
+    """The pages a resume still has to extract, each with its bucket."""
+    from textractssmlprocessor_spark import lineage
+
+    return lineage.with_bucket(pages, n_buckets).filter(
+        ~F.col("bucket").isin(sorted(done))
+    )
+
+
 def test_lineage_resume(spark, pages, tmp_path):
     """Tier-4: run on a subset, then rerun on the full corpus; completed
     buckets are skipped and the final output equals a fresh full run."""
@@ -171,12 +180,11 @@ def test_lineage_resume(spark, pages, tmp_path):
     first = lineage.run_with_lineage(part, spark, out, lin, n_buckets=8)
     n_first = first.count()
     assert n_first > 0
-    done_before = lineage.completed_buckets(spark, lin).count()
-    assert done_before == 8  # every bucket got at least a lineage row
+    done_before = lineage.done_buckets(spark, lin)
+    assert len(done_before) == 8  # every bucket got at least a lineage row
 
     # resume over the FULL corpus: everything is skipped (all buckets done)
-    resumed = lineage.resume_filter(pages, spark, lin, n_buckets=8)
-    assert resumed.count() == 0
+    assert _not_done(pages, done_before, 8).count() == 0
 
 
 def test_lineage_partial_resume(spark, pages, tmp_path):
@@ -190,13 +198,13 @@ def test_lineage_partial_resume(spark, pages, tmp_path):
     half = bucketed.filter(F.col("bucket") < 4).drop("bucket")
     lineage.run_with_lineage(half, spark, out, lin, n_buckets=8)
 
-    todo = lineage.resume_filter(pages, spark, lin, n_buckets=8)
+    todo = _not_done(pages, lineage.done_buckets(spark, lin), 8)
     remaining_buckets = {r["bucket"] for r in todo.select("bucket").distinct().collect()}
     assert remaining_buckets == {4, 5, 6, 7}
 
     # finish the job; now nothing remains
     lineage.run_with_lineage(pages, spark, out, lin, n_buckets=8)
-    assert lineage.resume_filter(pages, spark, lin, n_buckets=8).count() == 0
+    assert _not_done(pages, lineage.done_buckets(spark, lin), 8).count() == 0
 
 
 def test_lineage_crash_between_write_and_lineage_is_idempotent(spark, pages, tmp_path):
@@ -252,7 +260,7 @@ def _files(path):
 
 
 def test_lineage_first_run_jobs_and_rows(spark, pages, tmp_path):
-    """A first run (no lineage table yet) reads no lineage and anti-joins
+    """A first run (no lineage table yet) reads no lineage and filters
     nothing: scan, UDF and write, then the read-back lineage tail. Its
     lineage rows equal an independent recompute, checksums included."""
     from textractssmlprocessor_spark import lineage
@@ -281,6 +289,50 @@ def test_lineage_first_run_jobs_and_rows(spark, pages, tmp_path):
     assert len(got) == 8 and all(r[4] for r in got)
 
 
+def test_lineage_partial_resume_jobs(spark, pages, tmp_path, monkeypatch):
+    """Half-then-full: the resume reads the done set once and filters the
+    input by bucket, so it submits at most one job more than a first run
+    and its extract input has no join. Output and lineage tables equal a
+    fresh full run's."""
+    from textractssmlprocessor_spark import lineage
+    from textractssmlprocessor_spark.operators import extract
+
+    pages.count()  # the cached input is ready before the measured calls
+    fresh_out, fresh_lin = str(tmp_path / "fresh_out"), str(tmp_path / "fresh_lin")
+    with job_ids(spark) as first_ids:
+        lineage.run_with_lineage(
+            pages, spark, fresh_out, fresh_lin, n_buckets=8, num_partitions=8
+        )
+
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    half = lineage.with_bucket(pages, 8).filter(F.col("bucket") < 4).drop("bucket")
+    lineage.run_with_lineage(half, spark, out, lin, n_buckets=8, num_partitions=8)
+    inputs = []
+
+    def spy(df, *args, **kwargs):
+        inputs.append(df)
+        return extract_chunks(df, *args, **kwargs)
+
+    monkeypatch.setattr(extract, "extract_chunks", spy)
+    with job_ids(spark) as resume_ids:
+        lineage.run_with_lineage(pages, spark, out, lin, n_buckets=8, num_partitions=8)
+    assert 0 < len(resume_ids) <= len(first_ids) + 1, (resume_ids, first_ids)
+    (todo,) = inputs
+    plan = todo._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+
+    def rows(path, cols):
+        return sorted(
+            tuple(str(v) for v in r)
+            for r in spark.read.parquet(path).select(cols).collect()
+        )
+
+    chunk_cols = ["bucket", "url", "chunk_number", "extracted_text", "ssml", "spans"]
+    assert rows(out, chunk_cols) == rows(fresh_out, chunk_cols)
+    lin_cols = ["bucket", "status", "n_docs", "n_chunks", "checksum"]
+    assert rows(lin, lin_cols) == rows(fresh_lin, lin_cols)
+
+
 def test_lineage_pure_resume_scans_nothing(spark, pages, tmp_path):
     """Every bucket done: the rerun reads only the lineage table. It never
     evaluates an input row and writes no output file."""
@@ -303,7 +355,7 @@ def test_lineage_pure_resume_scans_nothing(spark, pages, tmp_path):
     assert _files(out) == before
     # the only Spark work is reading the done set off the lineage table
     with job_ids(spark) as done_set_ids:
-        lineage.completed_buckets(spark, lin).select("bucket").collect()
+        lineage.done_buckets(spark, lin)
     assert len(ids) == len(done_set_ids), (ids, done_set_ids)
 
 

@@ -288,6 +288,16 @@ class _TreeBuilder(HTMLParser):
     def handle_pi(self, data):
         self.stack[-1].children.append(Special("pi", data))
 
+    def parse_marked_section(self, i, report=1):
+        # "<![" without a known keyword (e.g. "<![0") makes the stdlib
+        # scanner raise AssertionError (bs4 rejects such markup outright);
+        # read it as a bogus comment up to the next ">", as the HTML5
+        # tokenizer does, so one malformed page cannot fail the job
+        try:
+            return super().parse_marked_section(i, report)
+        except AssertionError:
+            return self.parse_bogus_comment(i, report)
+
 
 def parse_html(html_content: str) -> Node:
     b = _TreeBuilder()

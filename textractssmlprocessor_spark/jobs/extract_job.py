@@ -12,9 +12,9 @@ a name with no '/' that does not end in .parquet is rejected): the input
 may be an Iceberg table, the sinks may not.
 
 Resumable: reruns skip buckets recorded as done in the lineage table. The
-broadcast anti-join against the lineage set runs only when a lineage table
-exists; a first run goes straight from the scan to the extraction and its
-write. Designed for multi-executor clusters; the same code runs unchanged
+done set is read once onto the driver, and the input is filtered to the
+remaining buckets before the salted shuffle; a first run (no lineage table)
+goes straight from the scan to the extraction and its write. Designed for multi-executor clusters; the same code runs unchanged
 on local[N].
 """
 

@@ -3,27 +3,31 @@
 The reference's resume semantic is a global part counter skipping
 already-produced outputs (reference ssml_processing.py:106-110). At cluster
 scale that becomes: deterministically bucket documents by url hash, record a
-lineage row per completed bucket (counts + checksum), and on rerun anti-join
-completed buckets so only missing work re-executes. Writes are idempotent at
-bucket granularity (partitionBy(bucket) parquet overwrite per bucket).
+lineage row per completed bucket (counts + checksum), and on rerun filter the
+input to the buckets not yet done, so only missing work re-executes. Writes
+are idempotent at bucket granularity (partitionBy(bucket) parquet overwrite
+per bucket).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .fsutil import fs_exists
+from .schema import LINEAGE_SCHEMA
 
 N_BUCKETS_DEFAULT = 64
+
+
+def _bucket(n_buckets: int) -> Column:
+    return F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
 
 
 def with_bucket(df: DataFrame, n_buckets: int = N_BUCKETS_DEFAULT) -> DataFrame:
     """Stable url-hash bucket: pmod(xxhash64(url), n). The same salt key used
     for repartitioning, so a bucket is co-located by construction."""
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
-    )
+    return df.withColumn("bucket", _bucket(n_buckets))
 
 
 def lineage_rows(chunks: DataFrame) -> DataFrame:
@@ -48,31 +52,20 @@ def lineage_rows(chunks: DataFrame) -> DataFrame:
     )
 
 
-def completed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame:
-    """Read the lineage table if it exists; else an empty frame."""
+def done_buckets(spark: SparkSession, lineage_path: str) -> set[int]:
+    """The buckets the lineage table records done; empty when there is no
+    table yet. The known schema spares the read a schema-inference job, and
+    the set absorbs a bucket recorded twice (e.g. a rerun that raced its own
+    lineage append)."""
     if not fs_exists(spark, lineage_path):
-        from .schema import LINEAGE_SCHEMA
-
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
-    # dropDuplicates guards against a bucket recorded twice (e.g. a rerun
-    # that raced its own lineage append)
-    return (
-        spark.read.parquet(lineage_path)
+        return set()
+    rows = (
+        spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
         .filter(F.col("status") == "done")
-        .dropDuplicates(["bucket"])
+        .select("bucket")
+        .collect()
     )
-
-
-def resume_filter(
-    pages: DataFrame, spark: SparkSession, lineage_path: str,
-    n_buckets: int = N_BUCKETS_DEFAULT,
-) -> DataFrame:
-    """Drop documents whose bucket already completed: broadcast anti-join on
-    the (tiny) lineage table — no shuffle of the big side."""
-    done = completed_buckets(spark, lineage_path).select("bucket")
-    return with_bucket(pages, n_buckets).join(
-        F.broadcast(done), on="bucket", how="left_anti"
-    )
+    return {r["bucket"] for r in rows}
 
 
 def run_with_lineage(
@@ -103,21 +96,11 @@ def run_with_lineage(
     # driver-side keeps the post-write read-back partition-PRUNED to this
     # run's buckets — re-reading the whole accumulated output and
     # anti-joining would scan 100 TB of prior runs to find this run's rows.
-    # A first run has no lineage table, so its done set is empty without a
-    # Spark job and the input needs no anti-join.
-    resuming = fs_exists(spark, lineage_path)
-    done: set[int] = set()
-    if resuming:
-        done = {
-            r["bucket"]
-            for r in completed_buckets(spark, lineage_path).select("bucket").collect()
-        }
+    # The same list filters the input before the salted shuffle, so skipped
+    # pages never cross it; a first run has no done bucket and no filter.
+    done = done_buckets(spark, lineage_path)
     todo_buckets = [b for b in range(n_buckets) if b not in done]
-    todo = (
-        resume_filter(pages, spark, lineage_path, n_buckets)
-        if resuming and todo_buckets
-        else pages
-    )
+    todo = pages.filter(_bucket(n_buckets).isin(todo_buckets)) if done else pages
     chunks = with_bucket(
         extract_chunks(
             todo,

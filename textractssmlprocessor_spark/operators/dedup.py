@@ -187,7 +187,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_doc_freq: int = 1000,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """All document pairs with n-gram Jaccard >= threshold.
 
@@ -203,7 +202,7 @@ def ngram_jaccard_pairs(
     df = _shingleable(df, text_col)
     shingled = _spread(df, id_col).select(
         F.col(id_col).alias("id"),
-        hashed_shingles(F.col(text_col), n, hash_fn).alias("sh"),
+        hashed_shingles(F.col(text_col), n).alias("sh"),
     )
     exploded = shingled.select(
         "id", F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle")
@@ -227,59 +226,32 @@ def ngram_jaccard_pairs(
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
-def shingle_hash(col, hash_fn: str = "md5"):
-    """Per-token hash: "md5" (8-hex prefix — engine-portable, the oracle
-    default) or "xxhash64" (JVM-intrinsic bigint, no hex string
-    materialization, 8-byte fixed-width shuffle keys). Measured at sf0.1 x
-    32 cores: 8-25% end-to-end on minhash/ngram/winnow (the per-hash cost
-    is far cheaper but explode+shuffle dominates these plans); the gap
-    widens where the hash count per byte rises (char winnowing, larger
-    num_hashes)."""
-    if hash_fn == "md5":
-        return F.substring(F.md5(col), 1, 8)
-    if hash_fn == "xxhash64":
-        return F.xxhash64(col)
-    raise ValueError(f"unsupported hash_fn: {hash_fn!r}")
+def shingle_hash(col):
+    """Per-token hash: the 8-hex md5 prefix (engine-portable, so the oracle
+    can recompute it)."""
+    return F.substring(F.md5(col), 1, 8)
 
 
-def gram_hash(col, hash_fn: str = "md5"):
+def gram_hash(col):
     """FULL-width hash for exact-membership keys (the exact-substring
     path). The 32-bit ``shingle_hash`` prefix is fine where collisions
     only perturb a Jaccard estimate, but 'this k-gram occurs more than
     once' is a set-membership decision: at web scale, birthday collisions
     (~n^2 / 2^33 false pairs) would mark unique k-grams as duplicated and
     the removal side would silently delete unique text. Full md5
-    (128-bit) for the oracle-portable default; xxhash64 (64-bit,
-    JVM-intrinsic, fixed-width shuffle key) for the production path —
-    at 10^12 grams xxhash64 still expects ~10^4 collisions, so md5 is
-    the right default where deletion is irreversible."""
-    if hash_fn == "md5":
-        return F.md5(col)
-    if hash_fn == "xxhash64":
-        return F.xxhash64(col)
-    raise ValueError(f"unsupported hash_fn: {hash_fn!r}")
+    (128-bit) keeps that negligible and stays oracle-portable."""
+    return F.md5(col)
 
 
-def hashed_shingles(text_col, n: int = 3, hash_fn: str = "md5"):
+def hashed_shingles(text_col, n: int = 3):
     """Shingles compressed to token hashes (shingle_hash): 3-10x smaller
     arrays in every shuffle, identical Jaccard (collisions negligible)."""
-    return F.array_distinct(
-        F.transform(word_shingles(text_col, n), lambda s: shingle_hash(s, hash_fn))
-    )
+    return F.array_distinct(F.transform(word_shingles(text_col, n), shingle_hash))
 
 
-def minhash_signature_from_hashed(sh_col, num_hashes: int = 16,
-                                  hash_fn: str = "md5"):
-    """minhash_k = min over hashed shingles of seed-k(h): md5(k|h8) in the
-    portable default, xxhash64(k, h) in the production path — either way
-    the seeded hash acts as the permutation."""
-    if hash_fn == "xxhash64":
-        return F.array(
-            *[
-                F.array_min(F.transform(sh_col, lambda h: F.xxhash64(F.lit(k), h)))
-                for k in range(num_hashes)
-            ]
-        )
+def minhash_signature_from_hashed(sh_col, num_hashes: int = 16):
+    """minhash_k = min over hashed shingles of md5(k|h8): the seeded hash
+    acts as the permutation."""
     return F.array(
         *[
             F.array_min(
@@ -290,7 +262,7 @@ def minhash_signature_from_hashed(sh_col, num_hashes: int = 16,
     )
 
 
-def _band_explode(num_hashes: int, bands: int, hash_fn: str):
+def _band_explode(num_hashes: int, bands: int):
     """Exploded band-bucket column over a materialized ``mh`` signature
     array: bucket = hash(band_idx | the band's signature rows). Shared by
     minhash_lsh_pairs and the band-table/history path so both produce
@@ -306,20 +278,12 @@ def _band_explode(num_hashes: int, bands: int, hash_fn: str):
     return F.explode(
         F.array(
             *[
-                (
-                    F.xxhash64(
-                        F.lit(b),
+                F.md5(
+                    F.concat_ws(
+                        "|",
+                        F.lit(str(b)),
                         *[F.col("mh")[b * rows_per_band + r]
                           for r in range(rows_per_band)],
-                    )
-                    if hash_fn == "xxhash64"
-                    else F.md5(
-                        F.concat_ws(
-                            "|",
-                            F.lit(str(b)),
-                            *[F.col("mh")[b * rows_per_band + r]
-                              for r in range(rows_per_band)],
-                        )
                     )
                 )
                 for b in range(bands)
@@ -335,7 +299,6 @@ def minhash_band_table(
     n: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """(id, bucket) banded-MinHash table — ``bands`` rows per document,
     buckets identical to minhash_lsh_pairs' candidate keys. This is the
@@ -346,12 +309,12 @@ def minhash_band_table(
         _spread(_shingleable(df, text_col), id_col)
         .select(
             F.col(id_col).alias("id"),
-            hashed_shingles(F.col(text_col), n, hash_fn).alias("sh"),
+            hashed_shingles(F.col(text_col), n).alias("sh"),
         )
         .withColumn(
-            "mh", minhash_signature_from_hashed(F.col("sh"), num_hashes, hash_fn)
+            "mh", minhash_signature_from_hashed(F.col("sh"), num_hashes)
         )
-        .select("id", _band_explode(num_hashes, bands, hash_fn))
+        .select("id", _band_explode(num_hashes, bands))
     )
 
 
@@ -363,7 +326,6 @@ def near_dupes_against_history(
     n: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Rows of ``new`` that do NOT collide with the accumulated history
     band table in any MinHash band — the near-duplicate analogue of
@@ -377,7 +339,7 @@ def near_dupes_against_history(
     pass pairs still go through minhash_lsh_pairs' verified path; this
     gate only guards against RE-ADMITTING content near-duplicating an
     earlier pass. Band parameters must match the history table's (same
-    num_hashes/bands/hash_fn — enforced by construction when history
+    num_hashes/bands — enforced by construction when history
     was written by minhash_band_table).
 
     Scale shape: the new pass computes its band table map-side (after
@@ -391,7 +353,7 @@ def near_dupes_against_history(
     """
     new_bands = minhash_band_table(
         new, id_col, text_col, n=n, num_hashes=num_hashes,
-        bands=bands, hash_fn=hash_fn,
+        bands=bands,
     )
     hit_ids = (
         new_bands.join(
@@ -414,7 +376,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     threshold: float = 0.5,
     max_bucket: int | None = None,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Candidate pairs from banded MinHash buckets, verified with exact
     Jaccard over hashed shingles.
@@ -442,14 +403,14 @@ def minhash_lsh_pairs(
     sig = cut(
         _spread(_shingleable(df, text_col), id_col).select(
             F.col(id_col).alias("id"),
-            hashed_shingles(F.col(text_col), n, hash_fn).alias("sh"),
+            hashed_shingles(F.col(text_col), n).alias("sh"),
         ).withColumn(
-            "mh", minhash_signature_from_hashed(F.col("sh"), num_hashes, hash_fn)
+            "mh", minhash_signature_from_hashed(F.col("sh"), num_hashes)
         )
     )
 
     shingle_tbl = sig.select("id", "sh")
-    banded = sig.select("id", _band_explode(num_hashes, bands, hash_fn))
+    banded = sig.select("id", _band_explode(num_hashes, bands))
     cand = (
         _cooccurrence_member_pairs(banded, "bucket", F.col("id"), max_group=max_bucket)
         .select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
@@ -536,7 +497,6 @@ def benchmark_contamination(
     probe_text_col: str = "text",
     n: int = 5,
     min_overlap: int = 1,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Decontamination scan: documents sharing >= min_overlap distinct word
     n-grams with a benchmark/probe corpus -> (id, n_overlap). The standard
@@ -551,7 +511,7 @@ def benchmark_contamination(
     stays low enough for short test documents."""
     probe_sh = (
         probes.select(
-            F.explode(hashed_shingles(F.col(probe_text_col), n, hash_fn)).alias(
+            F.explode(hashed_shingles(F.col(probe_text_col), n)).alias(
                 "shingle"
             )
         )
@@ -559,7 +519,7 @@ def benchmark_contamination(
     )
     doc_sh = _spread(df, id_col).select(
         F.col(id_col).alias("id"),
-        F.explode(hashed_shingles(F.col(text_col), n, hash_fn)).alias("shingle"),
+        F.explode(hashed_shingles(F.col(text_col), n)).alias("shingle"),
     )
     return (
         doc_sh.join(probe_sh, "shingle")
@@ -574,7 +534,6 @@ def exact_substring_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 10,
-    hash_fn: str = "md5",
     keep_first: bool = True,
 ) -> DataFrame:
     """Exact-substring duplicate spans (Lee et al. 2021, "Deduplicating
@@ -624,7 +583,7 @@ def exact_substring_spans(
         # FULL-width gram key (gram_hash, not the 8-hex shingle_hash
         # prefix): 'occurs more than once' is exact membership — a 32-bit
         # key's birthday collisions would delete unique text at web scale
-        .select("id", "pos", gram_hash(F.col("gram"), hash_fn).alias("h"))
+        .select("id", "pos", gram_hash(F.col("gram")).alias("h"))
     )
     dup = (
         grams.groupBy("h")
@@ -668,7 +627,6 @@ def drop_duplicate_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 10,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """The removal side of ``exact_substring_spans``: rebuild each
     document's text with every duplicated token span cut out, keeping the
@@ -683,7 +641,7 @@ def drop_duplicate_spans(
     to the exploded words on id — a per-id equi-join; span rows per doc
     are few — then an anti range-filter and order-stable reassembly."""
     ids = df.select(F.col(id_col).alias("id")).dropDuplicates(["id"])
-    spans = exact_substring_spans(df, id_col, text_col, k, hash_fn, keep_first=True)
+    spans = exact_substring_spans(df, id_col, text_col, k, keep_first=True)
     norm = F.regexp_replace(F.trim(F.col(text_col)), WS_PLUS, " ")
     words = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("id"), F.posexplode(F.split(norm, " ")).alias("pos", "w")
@@ -719,7 +677,6 @@ def winnow_fingerprint_table(
     text_col: str = "text",
     k: int = 8,
     window: int = 4,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, the MOSS
     rolling-hash scheme) as distinct (id, fingerprint) rows: hash every
@@ -761,7 +718,7 @@ def winnow_fingerprint_table(
     n_grams = F.greatest(F.length("_nrm") - F.lit(k - 1), F.lit(1))
     hashes = F.transform(
         F.sequence(F.lit(1), n_grams),
-        lambda i: shingle_hash(F.substr(F.col("_nrm"), i, F.lit(k)), hash_fn),
+        lambda i: shingle_hash(F.substr(F.col("_nrm"), i, F.lit(k))),
     )
     exploded = nrm.select("id", F.posexplode(hashes).alias("pos", "h"))
     frame = W.partitionBy("id").orderBy("pos").rowsBetween(0, window - 1)
@@ -785,7 +742,6 @@ def winnow_word_fingerprint_table(
     text_col: str = "text",
     k: int = 4,
     window: int = 4,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Word-gram winnowing: the character variant's scale path (~1 md5 per
     WORD of corpus instead of per character, ~6x cheaper) with a per-word
@@ -819,7 +775,7 @@ def winnow_word_fingerprint_table(
             (F.col("pos") <= F.col("_n") - k)
             | ((F.col("_n") < k) & (F.col("pos") == 0))
         )
-        .select("id", "pos", shingle_hash(F.col("gram"), hash_fn).alias("h"))
+        .select("id", "pos", shingle_hash(F.col("gram")).alias("h"))
     )
     frame = W.partitionBy("id").orderBy("pos").rowsBetween(0, window - 1)
     fp = grams.select(

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .udfs import clean_document_udf, clean_plaintext_udf
+from .udfs import clean_document_udf
 
 DEFAULT_SALT_PARTITIONS = 256
 
@@ -46,14 +46,12 @@ def clean_pages(
     df: DataFrame,
     languages: list[str] | None = None,
     num_partitions: int = DEFAULT_SALT_PARTITIONS,
-    strip_boilerplate: bool = False,
 ) -> DataFrame:
     """pages -> (url, warc_ts, lang, extracted_text).
 
     ``extracted_text`` is the reference's latin-correlate content
     (utils.py:289-291): HTML payloads pass through convert_html_to_ssml,
-    plain text passes through unchanged (or through the boilerplate strip
-    chain when ``strip_boilerplate`` — text_processing path)."""
+    plain text passes through unchanged."""
     if languages:
         df = df.filter(F.col("lang").isin(languages))  # pushed into the scan
     df = df.filter(F.col("html").isNotNull() | F.col("text").isNotNull())
@@ -61,8 +59,6 @@ def clean_pages(
     df = salted_repartition(df, num_partitions)
     # charset-sniffed decode happens inside the fused UDF (module docstring)
     cleaned = clean_document_udf(F.col("html"), F.col("text"))
-    if strip_boilerplate:
-        cleaned = clean_plaintext_udf(cleaned)
     return df.select(
         "url", "warc_ts", "lang", cleaned.alias("extracted_text")
     )

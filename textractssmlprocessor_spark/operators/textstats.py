@@ -99,17 +99,6 @@ def count_words(col: Column) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(WORD_RE), F.lit(0)))
 
 
-def count_tokens_pretok(col: Column) -> Column:
-    """PRE-tokenizer match count (letter runs / digit runs / single
-    symbols) — a fast native LOWER BOUND proxy for BPE token counts, NOT
-    a merges-table BPE (every alpha word counts 1 regardless of how many
-    pieces a real tokenizer would split it into, so pretok <= BPE always).
-    Shard budgets sized from this undercount long-word-heavy corpora; use
-    the real ``count_tokens_bpe`` (distinct-word merges application) where
-    the budget must match a trained tokenizer."""
-    return F.size(F.regexp_extract_all(col, F.lit(PRETOK_RE), F.lit(0)))
-
-
 def train_bpe_merges(
     df: DataFrame,
     text_col: str = "text",

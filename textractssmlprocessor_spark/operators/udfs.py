@@ -15,12 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from ..functions.chunking import chunk_text_with_spans
-from ..functions.cleaning import (
-    is_html,
-    remove_headers,
-    remove_notes,
-    remove_square_brackets,
-)
+from ..functions.cleaning import is_html
 from ..functions.dom import convert_html_to_ssml
 from ..functions.ssml import normalize_ssml
 from ..functions.subs import expand_substitutions
@@ -95,19 +90,6 @@ def clean_document_udf(html: pd.Series, text: pd.Series) -> pd.Series:
     return pd.Series(
         [clean(_page_payload(h, t)) for h, t in zip(html, text)]
     )
-
-
-@F.pandas_udf(StringType())
-def clean_plaintext_udf(payload: pd.Series) -> pd.Series:
-    """Plain-text boilerplate strip (reference text_processing.py:6-19 +
-    utils.py:52-58): notes, stray brackets, ALL-CAPS headers."""
-
-    def clean(t: Optional[str]) -> Optional[str]:
-        if t is None:
-            return None
-        return remove_headers(remove_square_brackets(remove_notes(t)))
-
-    return payload.map(clean)
 
 
 @F.pandas_udf(ArrayType(StringType()))
