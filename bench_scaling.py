@@ -11,9 +11,11 @@ cores).
 
 Three series per level, measured back-to-back so they share machine state:
 
-- ``salted``      scan -> explicit salted repartition on xxhash64(url) into
-                  `cores` partitions -> fused extraction UDF -> sink. The
-                  north-rule runtime path for arbitrarily-laid-out input.
+- ``salted``      scan -> explicit salted repartition into `cores`
+                  partitions, partition id pmod(xxhash64(url), cores) (the
+                  lineage bucket's own hash) -> fused extraction UDF ->
+                  sink. The north-rule runtime path for
+                  arbitrarily-laid-out input.
 - ``prebucketed`` same job with the salting moved into the TABLE LAYOUT
                   (Iceberg ``bucket(url)`` hidden partitioning at 100 TB;
                   here the already-hash-balanced cached input): zero runtime
@@ -236,8 +238,9 @@ rounds, because the shared-VM host's background load swings ~30% on
 different machine states across levels and fabricate efficiency noise.
 Three series measured back-to-back per level:
 
-- **salted**: explicit runtime salted repartition on `xxhash64(url)` into
-  `cores` partitions (north-rule path for arbitrarily-laid-out input).
+- **salted**: explicit runtime salted repartition into `cores` partitions,
+  partition id `pmod(xxhash64(url), cores)`, the lineage bucket's own hash
+  (north-rule path for arbitrarily-laid-out input).
 - **prebucketed**: salting moved into the table layout (Iceberg
   `bucket(url)` hidden partitioning at 100 TB; here the hash-balanced
   cached input) — zero runtime shuffle, the at-scale production path.

@@ -571,6 +571,35 @@ def test_salted_repartition_spreads_hot_host(spark):
     assert max(sizes) < mean * 1.3, sizes  # no partition >30% above mean
 
 
+def test_salted_repartition_aligns_with_lineage_buckets(spark):
+    """The salt is the lineage bucket's own url hash: with B a multiple of
+    P, each bucket pmod(xxhash64(url), B) lands in exactly one partition,
+    and on any todo subset of buckets (a resume) no partition holds more
+    than the B / P buckets it holds on a first run."""
+    from textractssmlprocessor_spark.corpus import synthesize_pages
+    from textractssmlprocessor_spark.operators.extract import (
+        salted_repartition,
+        url_slot,
+    )
+
+    pages = synthesize_pages(spark, 2000, n_hosts=3, sentences_per_doc=2)
+    parts = 4
+    for n_buckets in (4, 16, 64):
+        for todo in (range(n_buckets), range(0, n_buckets, parts), [1, 2, 3, n_buckets - 1]):
+            pairs = (
+                salted_repartition(pages.filter(url_slot(n_buckets).isin(list(todo))), parts)
+                .select(F.spark_partition_id().alias("p"), url_slot(n_buckets).alias("b"))
+                .distinct()
+                .collect()
+            )
+            owner = {}
+            for r in pairs:
+                assert owner.setdefault(r["b"], r["p"]) == r["p"], (n_buckets, r)
+            assert set(owner) == set(todo)
+            held = [sum(1 for p in owner.values() if p == q) for q in range(parts)]
+            assert max(held) <= n_buckets // parts, (n_buckets, list(todo), held)
+
+
 def test_ann_ivf_is_subset_of_exact_ranking(spark, sf_dir):
     """IVF results are a valid approximate subset: every returned neighbor's
     similarity matches the exact computation for that id."""

@@ -259,6 +259,16 @@ def _files(path):
     )
 
 
+def _spelled_lineage(chunks):
+    """The lineage definition spelled out in one plain aggregate."""
+    return chunks.groupBy("bucket").agg(
+        F.lit("done").alias("status"),
+        F.countDistinct("url").cast("int").alias("n_docs"),
+        F.count(F.lit(1)).cast("int").alias("n_chunks"),
+        F.hex(F.bit_xor(F.xxhash64("url", "chunk_number", "ssml"))).alias("checksum"),
+    )
+
+
 def test_lineage_first_run_jobs_and_rows(spark, pages, tmp_path):
     """A first run (no lineage table yet) reads no lineage and filters
     nothing: scan, UDF and write, then the read-back lineage tail. Its
@@ -273,20 +283,46 @@ def test_lineage_first_run_jobs_and_rows(spark, pages, tmp_path):
     assert 0 < len(ids) <= 5, ids
 
     chunks = lineage.with_bucket(extract_chunks(pages, num_partitions=8), 8)
-    # the lineage definition spelled out in one plain aggregate
-    spelled = chunks.groupBy("bucket").agg(
-        F.lit("done").alias("status"),
-        F.countDistinct("url").cast("int").alias("n_docs"),
-        F.count(F.lit(1)).cast("int").alias("n_chunks"),
-        F.hex(F.bit_xor(F.xxhash64("url", "chunk_number", "ssml"))).alias("checksum"),
-    )
     cols = ["bucket", "status", "n_docs", "n_chunks", "checksum"]
     def rows(df):
         return sorted(tuple(r) for r in df.select(cols).collect())
 
     got = rows(spark.read.parquet(lin))
-    assert got == rows(lineage.lineage_rows(chunks)) == rows(spelled)
+    assert got == rows(lineage.lineage_rows(chunks)) == rows(_spelled_lineage(chunks))
     assert len(got) == 8 and all(r[4] for r in got)
+
+
+@pytest.mark.parametrize(
+    "n_buckets, n_partitions, files_per_bucket",
+    # B a multiple of P: one writer per bucket; P a multiple of B: lcm = P
+    # files. A salt unaligned with the bucket writes B * P = 32 in both.
+    [(8, 4, [1] * 8), (4, 8, [2] * 4)],
+)
+def test_lineage_write_makes_lcm_files(spark, pages, tmp_path, n_buckets, n_partitions, files_per_bucket):
+    """The salt routes by the bucket's own url hash, so a run writes at most
+    lcm(buckets, partitions) parquet files. Output and lineage rows equal
+    an independent recompute, checksums included."""
+    from textractssmlprocessor_spark import lineage
+
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    lineage.run_with_lineage(
+        pages, spark, out, lin, n_buckets=n_buckets, num_partitions=n_partitions
+    )
+    per_bucket = sorted(
+        (d, sum(f.endswith(".parquet") for f in os.listdir(os.path.join(out, d))))
+        for d in os.listdir(out) if d.startswith("bucket=")
+    )
+    assert [n for _, n in per_bucket] == files_per_bucket, per_bucket
+
+    # recomputed through a one-partition extract: no salt alignment involved
+    chunks = lineage.with_bucket(extract_chunks(pages, num_partitions=1), n_buckets)
+    chunk_cols = ["bucket", "url", "chunk_number", "extracted_text", "ssml", "spans"]
+    lin_cols = ["bucket", "status", "n_docs", "n_chunks", "checksum"]
+    def rows(df, cols):
+        return sorted(tuple(str(v) for v in r) for r in df.select(cols).collect())
+
+    assert rows(spark.read.parquet(out), chunk_cols) == rows(chunks, chunk_cols)
+    assert rows(spark.read.parquet(lin), lin_cols) == rows(_spelled_lineage(chunks), lin_cols)
 
 
 def test_lineage_partial_resume_jobs(spark, pages, tmp_path, monkeypatch):

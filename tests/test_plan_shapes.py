@@ -35,6 +35,10 @@ def test_flagship_has_exactly_one_arrow_node_and_one_exchange(spark, sf_dir):
     plan = _plan(extract_chunks(pages_from_documents(spark, sf_dir)))
     assert plan.count("ArrowEvalPython") == 1, plan
     assert plan.count("Exchange") == 1, plan
+    # the salt routes by the url hash itself (the lineage bucket's hash),
+    # not by a Murmur3 hash of it
+    assert "Exchange shufflepartitionidpassthrough(" in plan, plan
+    assert "hashpartitioning" not in plan, plan
 
 
 def test_parquet_scan_pushdown(spark, tmp_path):

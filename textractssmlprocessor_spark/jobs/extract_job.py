@@ -16,6 +16,12 @@ done set is read once onto the driver, and the input is filtered to the
 remaining buckets before the salted shuffle; a first run (no lineage table)
 goes straight from the scan to the extraction and its write. Designed for multi-executor clusters; the same code runs unchanged
 on local[N].
+
+A full run writes at most lcm(--buckets, --partitions) output files (the
+salt and the bucket are the same url hash; see
+``operators.extract.salted_repartition``). Make one a multiple of the
+other: --partitions unset means 256 salt partitions, and 4096 buckets
+then get one writer each (4096 files).
 """
 
 from __future__ import annotations

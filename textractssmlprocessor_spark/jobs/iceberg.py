@@ -16,10 +16,13 @@ all defined here so they are testable instead of living in a wiki:
 3. ``chunks_table_ddl(...)``: the sink spec, same bucket function so the
    chunks align with their source pages for lineage joins.
 
-Typical launch (the documented stanza, also in jobs/README.md):
+Typical launch (the documented stanza, also in jobs/README.md). The
+engine needs Spark 4.1+ (``DataFrame.repartitionById``), so ``--packages``
+must name an ``iceberg-spark-runtime`` built for that Spark line and
+Scala 2.13; a Spark 3.5 / Scala 2.12 runtime does not load:
 
     spark-submit \\
-      --packages org.apache.iceberg:iceberg-spark-runtime-3.5_2.12:1.5.0 \\
+      --packages org.apache.iceberg:iceberg-spark-runtime-<spark>_<scala>:<version> \\
       $(python -c "from textractssmlprocessor_spark.jobs.iceberg import \\
                    iceberg_submit_args_shell; \\
                    print(iceberg_submit_args_shell('lake', 's3://bucket/wh'))") \\

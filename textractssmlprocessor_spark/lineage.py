@@ -11,23 +11,23 @@ per bucket).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .fsutil import fs_exists
+from .operators import extract
 from .schema import LINEAGE_SCHEMA
 
 N_BUCKETS_DEFAULT = 64
 
 
-def _bucket(n_buckets: int) -> Column:
-    return F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
-
-
 def with_bucket(df: DataFrame, n_buckets: int = N_BUCKETS_DEFAULT) -> DataFrame:
-    """Stable url-hash bucket: pmod(xxhash64(url), n). The same salt key used
-    for repartitioning, so a bucket is co-located by construction."""
-    return df.withColumn("bucket", _bucket(n_buckets))
+    """Stable url-hash bucket: pmod(xxhash64(url), n), the same url hash
+    the salted shuffle routes by (``extract.url_slot``). After a salted
+    shuffle into P partitions, bucket b sits only in partitions
+    p = b (mod gcd(n, P)): in exactly one partition when n is a multiple
+    of P, and a bucketed write makes at most lcm(n, P) files."""
+    return df.withColumn("bucket", extract.url_slot(n_buckets))
 
 
 def lineage_rows(chunks: DataFrame) -> DataFrame:
@@ -89,8 +89,6 @@ def run_with_lineage(
     the data; distinct aggregates aren't allowed there, hence the approx
     doc count). These are the job-level metrics; the durable per-bucket
     counts/checksums live in the lineage rows."""
-    from .operators.extract import DEFAULT_SALT_PARTITIONS, extract_chunks
-
     # The buckets this run owns are knowable BEFORE any scan: every bucket
     # not yet recorded done in the (tiny) lineage table. Computing them
     # driver-side keeps the post-write read-back partition-PRUNED to this
@@ -100,12 +98,12 @@ def run_with_lineage(
     # pages never cross it; a first run has no done bucket and no filter.
     done = done_buckets(spark, lineage_path)
     todo_buckets = [b for b in range(n_buckets) if b not in done]
-    todo = pages.filter(_bucket(n_buckets).isin(todo_buckets)) if done else pages
+    todo = pages.filter(extract.url_slot(n_buckets).isin(todo_buckets)) if done else pages
     chunks = with_bucket(
-        extract_chunks(
+        extract.extract_chunks(
             todo,
             languages=languages,
-            num_partitions=num_partitions or DEFAULT_SALT_PARTITIONS,
+            num_partitions=num_partitions or extract.DEFAULT_SALT_PARTITIONS,
         ),
         n_buckets,
     )

@@ -35,11 +35,30 @@ from .udfs import clean_document_udf
 DEFAULT_SALT_PARTITIONS = 256
 
 
+def url_slot(n: int, key: str = "url") -> Column:
+    """pmod(xxhash64(url), n): the one url hash, read modulo ``n``. The
+    salted shuffle routes by it (n = partitions) and the lineage bucket is
+    it (n = buckets), so the two layouts line up."""
+    return F.pmod(F.xxhash64(F.col(key)), F.lit(n)).cast("int")
+
+
 def salted_repartition(df: DataFrame, num_partitions: int, key: str = "url") -> DataFrame:
-    """Explicit skew defusal: repartition on xxhash64(url) so that documents
-    from one hot host spread uniformly across partitions regardless of the
-    source file layout (north_rule requirement)."""
-    return df.repartition(num_partitions, F.xxhash64(F.col(key)))
+    """Explicit skew defusal: row goes to partition pmod(xxhash64(url), P),
+    so documents from one hot host spread uniformly across partitions
+    regardless of the source file layout (north_rule requirement).
+
+    The partition id IS the url hash mod P, with no second hash on top
+    (``repartitionById``, Spark 4.1+). A lineage bucket b = h mod B then
+    lands only in partitions p = b (mod gcd(B, P)) (Chinese remainder
+    theorem), so a bucketed write makes at most lcm(B, P) files instead
+    of B * P; with B a multiple of P each bucket sits in exactly one
+    partition. Trade-off: a partition always holds the same buckets (those
+    = p mod gcd(B, P)), so a resume over a subset of buckets spreads only
+    as evenly as the subset falls on those residues, and partitions whose
+    buckets are all done sit idle. No partition gets more than the
+    B / gcd(B, P) buckets it holds on a first run, so no resume task is
+    larger than the same partition's first-run task."""
+    return df.repartitionById(num_partitions, url_slot(num_partitions, key))
 
 
 def clean_pages(
