@@ -1837,8 +1837,9 @@ def q_validate_corpus(spark, sf_dir):
     from textractssmlprocessor_spark.operators.extract import extract_chunks
     from textractssmlprocessor_spark.operators.validate import validate
 
-    # 10 rule branches read the chunk table: cut the UDF pipeline once
-    # instead of re-running it per branch
+    # the chunk table has 3 readers (the per-chunk rules' pass and the
+    # duplicates rule's two): cut the UDF pipeline once instead of planning
+    # it per reader
     chunks = cut(extract_chunks(_pages(spark, sf_dir), num_partitions=32))
     return validate(chunks)
 

@@ -9,6 +9,8 @@ first."""
 from __future__ import annotations
 
 import os
+import random
+import re
 import sys
 
 import pytest
@@ -36,10 +38,43 @@ ADVERSARIAL_SSML = [
 ]
 
 
+# one row that fires all six native rules and the english_word automaton:
+# stray text before <speak>, '</s>,' (punctuation + misplaced), '</b.>'
+# (malformed), café in an even segment, single letters x and q
+ALL_RULES_SSML = "x <speak></s>, café q </b.> english</speak>"
+ALL_RULES_FIRED = {
+    "punctuation", "speak_tags", "non_standard_characters",
+    "misplaced_closing_tags", "malformed_closing_tags",
+    "random_single_letters", "english_word",
+}
+# the tags, punctuation, non-ASCII runs, letters and whitespace that
+# ADVERSARIAL_SSML uses, as the alphabet of a seeded random sample
+_ALPHABET = sorted(
+    {
+        tok
+        for s in ADVERSARIAL_SSML
+        for tok in re.findall(r"<[^>]+>|[^\x00-\x7F]+|\w+|\s|[^\w\s<]", s)
+    }
+)
+
+
+def _sampled_ssml(seed: int = 10, n: int = 200):
+    rng = random.Random(seed)
+    return [
+        "".join(rng.choice(_ALPHABET) for _ in range(rng.randint(1, 14)))
+        for _ in range(n)
+    ]
+
+
+VALIDATE_SSML = ADVERSARIAL_SSML + [None, "", ALL_RULES_SSML] + _sampled_ssml()
+VALIDATE_ROWS = [(f"u{i}", i + 1, s) for i, s in enumerate(VALIDATE_SSML)]
+
+
 @pytest.fixture(scope="module")
 def chunk_table(spark):
-    rows = [(f"u{i}", i + 1, s) for i, s in enumerate(ADVERSARIAL_SSML)]
-    return spark.createDataFrame(rows, "url string, chunk_number int, ssml string")
+    return spark.createDataFrame(
+        VALIDATE_ROWS, "url string, chunk_number int, ssml string"
+    )
 
 
 def _sorted_tuples(rows):
@@ -47,13 +82,15 @@ def _sorted_tuples(rows):
 
 
 def test_validate_mirror_matches_spark(spark, chunk_table):
+    """Adversarial rows, a NULL and an '' row, one row firing seven rules,
+    and a seeded sample over the adversarial alphabet, in one collect."""
     from textractssmlprocessor_spark.operators.validate import validate
 
     got = _sorted_tuples(r.asDict() for r in validate(chunk_table).collect())
-    exp = _sorted_tuples(
-        G.validate_rows([(f"u{i}", i + 1, s) for i, s in enumerate(ADVERSARIAL_SSML)])
-    )
+    exp = _sorted_tuples(G.validate_rows(VALIDATE_ROWS))
     assert got == exp
+    all_rules_url = VALIDATE_ROWS[VALIDATE_SSML.index(ALL_RULES_SSML)][0]
+    assert ALL_RULES_FIRED <= {r for u, _, r, _ in got if u == all_rules_url}
 
 
 def test_duplicates_mirror_multiplicity(spark):

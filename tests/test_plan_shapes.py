@@ -132,3 +132,19 @@ def test_annotate_srt_is_one_python_pass_without_full_outer_joins(spark):
     assert "FullOuter" not in plan, plan
     plan = _plan(generate_srt(chunks, manifest, "latin", True))
     assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_validate_reads_the_chunk_table_in_one_pass(spark, tmp_path):
+    """The nine per-chunk rules are one projection over one scan; only the
+    corpus-wide duplicates rule reads the table again (its grouped
+    occurrences feed both the first-wins aggregate and the join back)."""
+    from textractssmlprocessor_spark.operators.validate import validate
+
+    src = str(tmp_path / "chunks.parquet")
+    spark.createDataFrame(
+        [("u1", 1, "<speak>One. One.</speak>"), ("u2", 1, "x <speak>é</s>,")],
+        "url string, chunk_number int, ssml string",
+    ).write.parquet(src)
+    plan = _plan(validate(spark.read.parquet(src)))
+    assert plan.count("FileScan") <= 3, plan
+    assert plan.count("ArrowEvalPython") == 1, plan

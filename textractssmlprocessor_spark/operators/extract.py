@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .udfs import clean_document_udf
+from .udfs import clean_document_udf, extract_full_udf, split_ssml_udf
 
 DEFAULT_SALT_PARTITIONS = 256
 
@@ -61,6 +61,19 @@ def salted_repartition(df: DataFrame, num_partitions: int, key: str = "url") -> 
     return df.repartitionById(num_partitions, url_slot(num_partitions, key))
 
 
+def _salted_payloads(
+    df: DataFrame, languages: list[str] | None, num_partitions: int, *carry: str
+) -> DataFrame:
+    """The extract prelude: lang and null filters (pushed into the scan),
+    then (url, *carry, html, text) through the salted shuffle. The
+    charset-sniffed decode happens after it, inside the UDF (module
+    docstring)."""
+    if languages:
+        df = df.filter(F.col("lang").isin(languages))
+    df = df.filter(F.col("html").isNotNull() | F.col("text").isNotNull())
+    return salted_repartition(df.select("url", *carry, "html", "text"), num_partitions)
+
+
 def clean_pages(
     df: DataFrame,
     languages: list[str] | None = None,
@@ -71,16 +84,9 @@ def clean_pages(
     ``extracted_text`` is the reference's latin-correlate content
     (utils.py:289-291): HTML payloads pass through convert_html_to_ssml,
     plain text passes through unchanged."""
-    if languages:
-        df = df.filter(F.col("lang").isin(languages))  # pushed into the scan
-    df = df.filter(F.col("html").isNotNull() | F.col("text").isNotNull())
-    df = df.select("url", "warc_ts", "lang", "html", "text")
-    df = salted_repartition(df, num_partitions)
-    # charset-sniffed decode happens inside the fused UDF (module docstring)
+    df = _salted_payloads(df, languages, num_partitions, "warc_ts", "lang")
     cleaned = clean_document_udf(F.col("html"), F.col("text"))
-    return df.select(
-        "url", "warc_ts", "lang", cleaned.alias("extracted_text")
-    )
+    return df.select("url", "warc_ts", "lang", cleaned.alias("extracted_text"))
 
 
 def extract_chunks(
@@ -95,14 +101,7 @@ def extract_chunks(
     The entire Python path (clean -> chunk -> substitute -> normalize) is ONE
     fused pandas UDF (`extract_full_udf`): one Arrow round trip per batch,
     then a native posexplode — no chunk text re-enters Python."""
-    from .udfs import extract_full_udf
-
-    if languages:
-        df = df.filter(F.col("lang").isin(languages))  # pushed into the scan
-    df = df.filter(F.col("html").isNotNull() | F.col("text").isNotNull())
-    df = df.select("url", "html", "text")
-    df = salted_repartition(df, num_partitions)
-    # charset-sniffed decode happens inside the fused UDF (module docstring)
+    df = _salted_payloads(df, languages, num_partitions)
     chunked = df.select(
         "url",
         F.posexplode(
@@ -165,8 +164,6 @@ def synchronized_texts(
 def split_ssml_chunks(df: DataFrame, ssml_col: str = "ssml") -> DataFrame:
     """Tag-aware ≤2500-char re-split of normalized SSML (reference
     ssml_processing.py:9-56) -> adds (part_number, ssml_part)."""
-    from .udfs import split_ssml_udf
-
     return df.select(
         "*", F.posexplode(split_ssml_udf(F.col(ssml_col))).alias("part_pos", "ssml_part")
     ).withColumn("part_number", (F.col("part_pos") + 1).cast("int")).drop("part_pos")

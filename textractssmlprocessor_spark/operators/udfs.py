@@ -12,17 +12,15 @@ from typing import Optional
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType
+from pyspark.sql.types import ArrayType, IntegerType, StringType, StructField, StructType
 
 from ..functions.chunking import chunk_text_with_spans
 from ..functions.cleaning import is_html
 from ..functions.dom import convert_html_to_ssml
 from ..functions.ssml import normalize_ssml
 from ..functions.subs import expand_substitutions
-from pyspark.sql.types import IntegerType, StructField, StructType
-
-from ..schema import SUBTITLE_TYPE
 from ..functions.subtitles import chunk_subtitles
+from ..schema import SUBTITLE_TYPE
 
 EXTRACTED_CHUNK_TYPE = StructType(
     [
@@ -49,10 +47,17 @@ def _page_payload(html: Optional[bytes], text: Optional[str]) -> Optional[str]:
     return text
 
 
+def _clean(t: Optional[str]) -> Optional[str]:
+    """HTML branch of the reference's process_text_file (utils.py:284-287):
+    HTML payloads run the DOM heuristics, plain text passes through."""
+    if t is None:
+        return None
+    return convert_html_to_ssml(t) if is_html(t) else t
+
+
 def _full_extract(t: Optional[str]):
     if t is None:
         return None
-    cleaned = convert_html_to_ssml(t) if is_html(t) else t
     return [
         {
             "chunk": c,
@@ -60,7 +65,7 @@ def _full_extract(t: Optional[str]):
             "start": s,
             "end": e,
         }
-        for c, s, e in chunk_text_with_spans(cleaned)
+        for c, s, e in chunk_text_with_spans(_clean(t))
     ]
 
 
@@ -77,19 +82,10 @@ def extract_full_udf(html: pd.Series, text: pd.Series) -> pd.Series:
 
 @F.pandas_udf(StringType())
 def clean_document_udf(html: pd.Series, text: pd.Series) -> pd.Series:
-    """Charset-sniffed decode + HTML branch of the reference's
-    process_text_file (utils.py:284-287): HTML payloads run the DOM
-    heuristics, plain text passes through. The result is the byte-identity
-    anchor (the reference's latin-correlate write, utils.py:289-291)."""
-
-    def clean(t: Optional[str]) -> Optional[str]:
-        if t is None:
-            return None
-        return convert_html_to_ssml(t) if is_html(t) else t
-
-    return pd.Series(
-        [clean(_page_payload(h, t)) for h, t in zip(html, text)]
-    )
+    """Charset-sniffed decode + the clean step of ``extract_full_udf``
+    (``_clean``). The result is the byte-identity anchor (the reference's
+    latin-correlate write, utils.py:289-291)."""
+    return pd.Series([_clean(_page_payload(h, t)) for h, t in zip(html, text)])
 
 
 @F.pandas_udf(ArrayType(StringType()))

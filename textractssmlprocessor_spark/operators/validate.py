@@ -2,23 +2,28 @@
 rule, message).
 
 Spark restatement of reference pipeline_support/ssml_validator.py (SURVEY.md
-§2.7). Rules that are pure regex run as native JVM expressions (whole-stage
-codegen, zero Python); the two stack-automaton rules and the positional
-rfind rule run together in one Arrow-batched pandas UDF (rules_udf_fused)
-over the pure functions.
+§2.7), which runs every rule over a chunk in one loop
+(ssml_validator.py:255-270). ``validate`` keeps that shape: each per-chunk
+rule is a Column function (ssml -> array of message strings), and one
+projection concatenates the nine rules' findings and explodes them, so one
+pass over the chunk table serves them all. The six pure-regex rules are
+native JVM expressions (regexp_extract_all and higher-order functions,
+whole-stage codegen, zero Python); the two stack-automaton rules and the
+positional rfind rule run together in one Arrow-batched pandas UDF
+(``automaton_rules``) over the pure functions. Only the corpus-wide
+duplicates rule, which needs every chunk, is a second branch.
 
 Reference quirks replicated on purpose:
 - test_non_standard_characters checks only EVEN-indexed tag-split segments
   (ssml_validator.py:64-65 splits with a non-capturing pattern, so the
   ``j % 2 == 0`` guard silently skips every other text segment);
 - duplicate detection is order-dependent first-wins across the whole corpus
-  (ssml_validator.py:47 a single ``seen_lines`` set) -> window by first
-  (url, chunk_number) occurrence.
+  (ssml_validator.py:47 a single ``seen_lines`` set) -> the first
+  (url, chunk_number, position) occurrence of a line is not a finding.
 """
 
 from __future__ import annotations
 
-from functools import reduce
 from typing import List
 
 import pandas as pd
@@ -38,125 +43,110 @@ _TAG_RE = r"<[^>]+>"
 # removal must split sentences identically
 SENTENCE_SPLIT_RE = r"(?<=\.|\?|!)\s+"
 
-
-def _finding(df: DataFrame, rule: str, message: Column) -> DataFrame:
-    return df.select(
-        "url", "chunk_number", F.lit(rule).alias("rule"), message.alias("message")
-    )
+_FINDINGS_TYPE = ArrayType(
+    StructType([StructField("rule", StringType()), StructField("message", StringType())])
+)
 
 
-def rule_punctuation(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+def _matches(s: Column, pattern: str) -> Column:
+    return F.regexp_extract_all(s, F.lit(pattern), F.lit(0))
+
+
+def _quoted(prefix: str, matches: Column) -> Column:
+    return F.transform(matches, lambda m: F.concat(F.lit(prefix), m, F.lit("'")))
+
+
+# --- native rules: ssml Column -> array<string> of messages ------------------
+# Each function is named after the rule it reports as (validate tags its
+# messages with the function's __name__).
+
+
+def punctuation(ssml: Column) -> Column:
     """Tag immediately followed by .,:; except phoneme/lang
     (ssml_validator.py:32-41)."""
-    matches = F.regexp_extract_all(F.col(col), F.lit(r"(</?[^>]+>)\s*([.,:;])"), F.lit(0))
-    df = chunks.select(
-        "url", "chunk_number", F.explode(matches).alias("m")
-    ).withColumn("tag", F.regexp_extract("m", r"^(</?[^>]+>)", 1))
-    df = df.filter(~F.col("tag").isin(_EXCLUDED_PUNCT_TAGS))
-    return _finding(
-        df,
-        "punctuation",
-        F.concat(
-            F.lit("Suspicious punctuation: '"), F.col("tag"),
-            F.lit("' followed by '"), F.substring(F.col("m"), -1, 1), F.lit("'"),
+
+    def tag(m: Column) -> Column:
+        return F.regexp_extract(m, r"^(</?[^>]+>)", 1)
+
+    kept = F.filter(
+        _matches(ssml, r"(</?[^>]+>)\s*([.,:;])"),
+        lambda m: ~tag(m).isin(_EXCLUDED_PUNCT_TAGS),
+    )
+    return F.transform(
+        kept,
+        lambda m: F.concat(
+            F.lit("Suspicious punctuation: '"), tag(m),
+            F.lit("' followed by '"), F.substring(m, -1, 1), F.lit("'"),
         ),
     )
 
 
-def rule_speak_tags(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+def speak_tags(ssml: Column) -> Column:
     """Exactly one <speak>...</speak>, at start and end
     (ssml_validator.py:71-84)."""
-    opens = F.size(F.split(F.col(col), "<speak>", -1)) - 1
-    closes = F.size(F.split(F.col(col), "</speak>", -1)) - 1
-    stripped = F.trim(F.col(col))
-    df = chunks.withColumn("opens", opens).withColumn("closes", closes)
-    bad_count = df.filter((F.col("opens") != 1) | (F.col("closes") != 1))
-    f1 = _finding(
-        bad_count,
-        "speak_tags",
-        F.concat(
-            F.lit("Incorrect number of <speak> tags. Found "),
-            F.col("opens").cast("string"), F.lit(" opening and "),
-            F.col("closes").cast("string"), F.lit(" closing tags."),
-        ),
-    )
-    ok_count = df.filter((F.col("opens") == 1) & (F.col("closes") == 1))
-    bad_order = ok_count.filter(
-        F.instr(F.col(col), "<speak>") > F.instr(F.col(col), "</speak>")
-    )
-    f2 = _finding(
-        bad_order, "speak_tags",
-        F.lit("Closing </speak> tag appears before opening <speak> tag."),
-    )
-    bad_pos = ok_count.filter(
-        (F.instr(F.col(col), "<speak>") <= F.instr(F.col(col), "</speak>"))
-        & (
-            ~stripped.startswith("<speak>") | ~stripped.endswith("</speak>")
+    opens = F.size(F.split(ssml, "<speak>", -1)) - 1
+    closes = F.size(F.split(ssml, "</speak>", -1)) - 1
+    stripped = F.trim(ssml)
+    message = (
+        F.when(
+            (opens != 1) | (closes != 1),
+            F.concat(
+                F.lit("Incorrect number of <speak> tags. Found "),
+                opens.cast("string"), F.lit(" opening and "),
+                closes.cast("string"), F.lit(" closing tags."),
+            ),
+        )
+        .when(
+            F.instr(ssml, "<speak>") > F.instr(ssml, "</speak>"),
+            F.lit("Closing </speak> tag appears before opening <speak> tag."),
+        )
+        .when(
+            ~stripped.startswith("<speak>") | ~stripped.endswith("</speak>"),
+            F.lit("<speak> tags are not at the start and end of the SSML."),
         )
     )
-    f3 = _finding(
-        bad_pos, "speak_tags",
-        F.lit("<speak> tags are not at the start and end of the SSML."),
-    )
-    return f1.unionByName(f2).unionByName(f3)
+    return F.array_compact(F.array(message))
 
 
-def rule_non_standard_characters(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+def non_standard_characters(ssml: Column) -> Column:
     """Non-ASCII outside tags — EVEN tag-split segments only
     (ssml_validator.py:57-69, quirk preserved)."""
-    parts = F.split(F.col(col), _TAG_RE, -1)
-    df = chunks.select(
-        "url", "chunk_number", F.posexplode(parts).alias("j", "part")
-    ).filter(F.col("j") % 2 == 0)
-    runs = F.regexp_extract_all(F.col("part"), F.lit(r"[^\x00-\x7F]+"), F.lit(0))
-    df = df.select("url", "chunk_number", F.explode(runs).alias("run"))
-    return _finding(
-        df,
-        "non_standard_characters",
-        F.concat(
-            F.lit("Non-standard character(s) found outside tags: '"),
-            F.col("run"), F.lit("'"),
-        ),
-    )
+    even = F.filter(F.split(ssml, _TAG_RE, -1), lambda p, j: j % 2 == 0)
+    runs = F.flatten(F.transform(even, lambda p: _matches(p, r"[^\x00-\x7F]+")))
+    return _quoted("Non-standard character(s) found outside tags: '", runs)
 
 
-def rule_misplaced_closing_tags(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+def misplaced_closing_tags(ssml: Column) -> Column:
     """Closing tag followed by punctuation/paren (ssml_validator.py:151-163)."""
-    matches = F.regexp_extract_all(
-        F.col(col), F.lit(r"</[^>]+>\s*[(.,:;!?)]"), F.lit(0)
-    )
-    df = chunks.select("url", "chunk_number", F.explode(matches).alias("m"))
-    return _finding(
-        df, "misplaced_closing_tags",
-        F.concat(F.lit("Misplaced closing tag detected: '"), F.col("m"), F.lit("'")),
+    return _quoted(
+        "Misplaced closing tag detected: '", _matches(ssml, r"</[^>]+>\s*[(.,:;!?)]")
     )
 
 
-def rule_malformed_closing_tags(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+def malformed_closing_tags(ssml: Column) -> Column:
     """Punctuation inside a closing tag (ssml_validator.py:131-149)."""
-    matches = F.regexp_extract_all(
-        F.col(col), F.lit(r"</\s*(\w+)[^>]*[.,:;!?][^>]*>"), F.lit(0)
-    )
-    df = chunks.select("url", "chunk_number", F.explode(matches).alias("m"))
-    return _finding(
-        df, "malformed_closing_tags",
-        F.concat(F.lit("Malformed closing tag detected: '"), F.col("m"), F.lit("'")),
+    return _quoted(
+        "Malformed closing tag detected: '",
+        _matches(ssml, r"</\s*(\w+)[^>]*[.,:;!?][^>]*>"),
     )
 
 
-def rule_random_single_letters(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+def random_single_letters(ssml: Column) -> Column:
     """Stray single letters outside tags (ssml_validator.py:165-183); checks
     every non-empty tag-split segment."""
-    parts = F.split(F.col(col), _TAG_RE, -1)
-    df = chunks.select(
-        "url", "chunk_number", F.explode(parts).alias("part")
-    ).filter(F.trim(F.col("part")) != "")
-    hits = F.regexp_extract_all(F.col("part"), F.lit(SINGLE_LETTER_RE), F.lit(0))
-    df = df.select("url", "chunk_number", F.explode(hits).alias("m"))
-    return _finding(
-        df, "random_single_letters",
-        F.concat(F.lit("Random single letter detected: '"), F.col("m"), F.lit("'")),
-    )
+    parts = F.filter(F.split(ssml, _TAG_RE, -1), lambda p: F.trim(p) != "")
+    hits = F.flatten(F.transform(parts, lambda p: _matches(p, SINGLE_LETTER_RE)))
+    return _quoted("Random single letter detected: '", hits)
+
+
+NATIVE_RULES = (
+    punctuation,
+    speak_tags,
+    non_standard_characters,
+    misplaced_closing_tags,
+    malformed_closing_tags,
+    random_single_letters,
+)
 
 
 def rule_duplicates(chunks: DataFrame, col: str = "ssml") -> DataFrame:
@@ -187,21 +177,20 @@ def rule_duplicates(chunks: DataFrame, col: str = "ssml") -> DataFrame:
         .select("clean_line", "_first")
     )
     n_emit = F.when(occ == F.col("_first"), F.col("_m") - 1).otherwise(F.col("_m"))
-    df = (
+    return (
         grouped.join(firsts, "clean_line")
         .withColumn("_k", n_emit)
         .filter(F.col("_k") > 0)
         .select(
             "url",
             "chunk_number",
-            "clean_line",
+            F.lit("duplicates").alias("rule"),
+            F.concat(
+                F.lit("Possible duplicate: '"), F.col("clean_line"), F.lit("'")
+            ).alias("message"),
             F.explode(F.sequence(F.lit(1), F.col("_k"))).alias("_i"),
         )
         .drop("_i")
-    )
-    return _finding(
-        df, "duplicates",
-        F.concat(F.lit("Possible duplicate: '"), F.col("clean_line"), F.lit("'")),
     )
 
 
@@ -220,26 +209,23 @@ def rule_translation_length(
         F.regexp_replace(F.col(ssml_col), r"(?s)<\s*sub\s+[^>]*>.*?</\s*sub\s*>", ""),
         _TAG_RE, "",
     )
-    latin_words = F.size(F.regexp_extract_all(F.col(original_col), F.lit(word_re), F.lit(0)))
-    english_words = F.size(F.regexp_extract_all(clean_en, F.lit(word_re), F.lit(0)))
-    df = (
-        chunks.withColumn("latin_words", latin_words)
-        .withColumn("english_words", english_words)
-        .withColumn(
-            "ratio",
-            F.when(
-                F.col("latin_words") > 0,
-                F.col("english_words") / F.col("latin_words"),
-            ).otherwise(F.lit(float("inf"))),
-        )
-        .filter((F.col("ratio") > high) | (F.col("ratio") < low))
+    latin_words = F.size(_matches(F.col(original_col), word_re))
+    english_words = F.size(_matches(clean_en, word_re))
+    ratio = F.when(latin_words > 0, english_words / latin_words).otherwise(
+        F.lit(float("inf"))
     )
-    return _finding(
-        df, "translation_length",
-        F.concat(
-            F.lit("Translation length issue detected. Ratio: "),
-            F.round("ratio", 2).cast("string"),
-        ),
+    return (
+        chunks.withColumn("ratio", ratio)
+        .filter((F.col("ratio") > high) | (F.col("ratio") < low))
+        .select(
+            "url",
+            "chunk_number",
+            F.lit("translation_length").alias("rule"),
+            F.concat(
+                F.lit("Translation length issue detected. Ratio: "),
+                F.round("ratio", 2).cast("string"),
+            ).alias("message"),
+        )
     )
 
 
@@ -305,47 +291,41 @@ def _nested_findings(ssml: str) -> List[str]:
     return out
 
 
-def rules_udf_fused(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+@F.pandas_udf(_FINDINGS_TYPE)
+def automaton_rules(s: pd.Series) -> pd.Series:
     """The three Python-automaton rules in ONE Arrow round trip (each value
     crosses the JVM<->Python boundary once instead of three times)."""
-    schema = ArrayType(
-        StructType(
-            [StructField("rule", StringType()), StructField("message", StringType())]
+
+    def run(t):
+        if t is None:
+            return []
+        return (
+            [{"rule": "english_word", "message": m} for m in _english_word_findings(t)]
+            + [{"rule": "balanced_tags", "message": m} for m in _balanced_findings(t)]
+            + [{"rule": "nested_tags", "message": m} for m in _nested_findings(t)]
         )
+
+    return s.map(run)
+
+
+def _tagged(rule: str, messages: Column) -> Column:
+    findings = F.transform(
+        messages, lambda m: F.struct(F.lit(rule).alias("rule"), m.alias("message"))
     )
-
-    @F.pandas_udf(schema)
-    def fused(s: pd.Series) -> pd.Series:
-        def run(t):
-            if t is None:
-                return []
-            return (
-                [{"rule": "english_word", "message": m} for m in _english_word_findings(t)]
-                + [{"rule": "balanced_tags", "message": m} for m in _balanced_findings(t)]
-                + [{"rule": "nested_tags", "message": m} for m in _nested_findings(t)]
-            )
-
-        return s.map(run)
-
-    df = chunks.select("url", "chunk_number", F.explode(fused(F.col(col))).alias("f"))
-    return df.select("url", "chunk_number", F.col("f.rule").alias("rule"), F.col("f.message").alias("message"))
-
-
-ALL_RULES = [
-    rule_punctuation,
-    rule_speak_tags,
-    rule_non_standard_characters,
-    rule_misplaced_closing_tags,
-    rule_malformed_closing_tags,
-    rule_random_single_letters,
-    rule_duplicates,
-    rules_udf_fused,
-]
+    return F.coalesce(findings, F.array().cast(_FINDINGS_TYPE))
 
 
 def validate(chunks: DataFrame) -> DataFrame:
-    """Union of all rule findings (ssml_validator.py:255-270): the native
-    rules as codegen'd branches, the three automaton rules as the one fused
-    Arrow pass. rule_translation_length (A4) also needs the source text and
-    runs as its own operator."""
-    return reduce(DataFrame.unionByName, (rule(chunks) for rule in ALL_RULES))
+    """All rule findings (ssml_validator.py:255-270): the nine per-chunk
+    rules in one projection of finding arrays and one explode, unioned with
+    the corpus-wide rule_duplicates. rule_translation_length (A4) also needs
+    the source text and runs as its own operator."""
+    ssml = F.col("ssml")
+    findings = F.concat(
+        *(_tagged(rule.__name__, rule(ssml)) for rule in NATIVE_RULES),
+        automaton_rules(ssml),
+    )
+    per_chunk = chunks.select(
+        "url", "chunk_number", F.explode(findings).alias("f")
+    ).select("url", "chunk_number", "f.rule", "f.message")
+    return per_chunk.unionByName(rule_duplicates(chunks))
