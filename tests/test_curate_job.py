@@ -8,6 +8,7 @@ import os
 import shutil
 import subprocess
 
+import pytest
 from pyspark.sql import functions as F
 
 from test_spark_submit_job import _clean_env, _package_zip, _spark_submit_path
@@ -180,7 +181,7 @@ def test_build_manifest_host_cap_and_dsir_stages(spark):
     target = docs.select("doc_id", "text").limit(20)
     m2 = build_manifest(
         docs, url_col="url", max_per_host=10,
-        dsir_target=target, dsir_min=1e9, dsir_buckets=500,
+        dsir_target=target, dsir_min=1e9,
     )
     rows2 = {r["id"]: r for r in m2.collect()}
     assert len(rows2) == n_input
@@ -242,11 +243,12 @@ def test_build_manifest_history_gates(spark):
 
 
 def test_build_manifest_plan_truncated_across_stages(spark):
-    """All five optional stages enabled: the carried manifest is
-    referenced twice per stage (keepers join + apply_drops join), so an
-    uncut logical plan grows ~2^stages. The per-stage cut must keep
-    the final analyzed plan LINEAR — a leaf (checkpointed RDD) plus one
-    stage's worth of joins — and the composed verdicts total."""
+    """All seven optional gates enabled: the carried manifest is
+    referenced twice per gate (keepers join + drop-marking join), so an
+    uncut logical plan grows ~2^gates. The per-gate cut must keep the
+    final analyzed plan LINEAR (a leaf, the checkpointed RDD, plus one
+    gate's worth of joins), the composed verdicts total, and each doc's
+    drop_reason the earliest gate that drops it."""
     from pyspark.sql import functions as F
 
     from textractssmlprocessor_spark.jobs.curate_job import build_manifest
@@ -254,23 +256,39 @@ def test_build_manifest_plan_truncated_across_stages(spark):
     from textractssmlprocessor_spark.operators.textstats import fingerprint
 
     base = " The cat and the dog of the house is that with us in there."
+
+    def text(i):
+        # even docs in language 'aa', odd in 'zz' (disjoint char trigrams
+        # for the lang-ID gate); six sentences + the tail pass C4
+        p = "kar" if i % 2 == 0 else "oxq"
+        return " ".join(
+            " ".join(f"{p}{i}x{s}y{j}" for j in range(10)) + "."
+            for s in range(6)
+        ) + base
+
+    texts = {i: text(i) for i in range(16)}
+    texts[3] += " tail"  # near copy of a prior-pass doc; no C4 terminal
+    texts[4] = texts[4].replace(".", "")  # no sentences: C4 drop
+    texts[5] = texts[5].replace(".", "")
+    texts[114] = texts[14] + " One more short sentence here."
+    # all but the near-dup pair share one host; the cap keeps 3 of it
+    host = {14: "h1", 114: "h2"}
     docs = spark.createDataFrame(
-        [
-            (
-                i,
-                (" ".join(f"tok{i}x{j}" for j in range(60))) + base,
-                "en",
-                f"https://h{i % 3}.example.org/p/{i}",
-            )
-            for i in range(10)
-        ],
+        [(i, t, "en", f"https://{host.get(i, 'h0')}.example.org/p/{i}")
+         for i, t in texts.items()],
         "doc_id bigint, text string, lang string, url string",
     )
-    prior = docs.filter(F.col("doc_id") == 0)
+    labeled = spark.createDataFrame(
+        [(i, text(i), "aa" if i % 2 == 0 else "zz") for i in range(16)],
+        "doc_id bigint, text string, lang string",
+    )
+    prior = labeled.filter(F.col("doc_id").isin(1, 3))
     m = build_manifest(
-        docs, languages=["en"], near_dup=True, threshold=0.5,
-        url_col="url", max_per_host=50,
-        dsir_target=docs.select("doc_id", "text"), dsir_min=-1e9,
+        docs, languages=["en"], c4=True,
+        langid_labeled=labeled, langid_allow=["aa"],
+        near_dup=True, threshold=0.5,
+        url_col="url", max_per_host=3,
+        dsir_target=docs.select("doc_id", "text"), dsir_min=1e9,
         history_fingerprints=prior.select(
             fingerprint(F.col("text")).alias("fingerprint")
         ),
@@ -281,8 +299,53 @@ def test_build_manifest_plan_truncated_across_stages(spark):
     # failure in graph.py's history); cut, it's the last stage only
     assert plan.count("Join") <= 4, plan.count("Join")
     rows = {r["id"]: r for r in m.collect()}
-    assert len(rows) == 10
-    assert rows[0]["drop_reason"] == "seen_exact"
+    assert len(rows) == len(texts)
+
+    order = ["seen_exact", "seen_near", "c4", "language_model", "host_cap",
+             "near_duplicate", "dsir_low"]
+    # the gates each doc is planted to fail; the impossible DSIR floor
+    # fails every doc. Host cap and near-dup verdicts depend on who is
+    # still kept, so they are checked by count and plant instead
+    hits = {i: {"language_model"} for i in range(1, 16, 2)}
+    hits[1] |= {"seen_exact"}
+    hits[3] |= {"seen_near", "c4"}
+    hits[4] = {"c4"}
+    hits[5] |= {"c4"}
+    for i, r in rows.items():
+        known = hits.get(i, set()) | {"dsir_low"}
+        reason = r["drop_reason"]
+        assert not r["kept"] and reason in order, (i, reason)
+        assert reason in known or reason in ("host_cap", "near_duplicate")
+        assert all(order.index(reason) <= order.index(g) for g in known), (
+            i, reason, known)
+    assert {r["drop_reason"] for r in rows.values()} == set(order)
+    assert rows[114]["drop_reason"] == "near_duplicate"
+    assert sum(r["drop_reason"] == "host_cap" for r in rows.values()) == 3
+
+
+@pytest.mark.parametrize(
+    "given, missing",
+    [
+        ({"max_per_host": 10}, "url_col"),
+        ({"url_col": "url"}, "max_per_host"),
+        ({"dsir_min": 0.0}, "dsir_target"),
+        ({"dsir_target": "docs"}, "dsir_min"),
+        ({"langid_allow": ["en"]}, "langid_labeled"),
+        ({"langid_labeled": "docs"}, "langid_allow"),
+    ],
+)
+def test_build_manifest_rejects_half_configured_gate(spark, given, missing):
+    """A gate given only some of its arguments must fail, naming the
+    missing one, instead of shipping the data with no gate applied."""
+    from textractssmlprocessor_spark.jobs.curate_job import build_manifest
+
+    docs = spark.createDataFrame(
+        [(1, "some text", "en", "https://h.example.org/")],
+        "doc_id bigint, text string, lang string, url string",
+    )
+    kwargs = {k: docs if v == "docs" else v for k, v in given.items()}
+    with pytest.raises(ValueError, match=f"missing {missing}$"):
+        build_manifest(docs, **kwargs)
 
 
 def test_build_manifest_same_with_checkpoint_dir(spark, tmp_path):
@@ -361,7 +424,6 @@ def test_build_manifest_c4_and_langid_stages(spark):
         c4=True,
         langid_labeled=labeled,
         langid_allow=["aa"],
-        langid_buckets=512,
     )
     got = {r["id"]: r for r in manifest.collect()}
     assert len(got) == 41

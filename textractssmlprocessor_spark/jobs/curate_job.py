@@ -15,9 +15,9 @@ and survives executor loss (see ``build_manifest``).
 Stages (each a documented operator, composed here):
 1. `curate.curate_corpus` — language allowlist -> Gopher quality rules ->
    exact-dedup survivorship; per-doc verdict rows (kept, drop_reason).
-2. optional `--near-dup`: `graph.dedup_clusters` (MinHash+LSH pairs ->
-   large-star/small-star connected components) over the stage-1 keepers;
-   non-representative cluster members drop with reason 'near_duplicate'.
+2. the optional gates the flags enable, one ordered list in
+   `build_manifest`; each runs over the docs still kept and marks its
+   drops with its own reason.
 3. manifest write (the audit artifact: one row per input doc, never
    filtered away), plus optional filtered-corpus write of the keepers.
 4. optional `--sequences-output`: the trainer handoff — BPE merges
@@ -55,6 +55,28 @@ def _setup_paths() -> None:
     ).rstrip(os.pathsep)
 
 
+def _configured(gate: str, **args) -> bool:
+    """Whether ``gate`` runs: True when every argument it needs is set
+    (not None), False when none is. A half-configured gate raises
+    ValueError naming what is missing: skipping it would ship data the
+    caller meant to filter."""
+    missing = [name for name, value in args.items() if value is None]
+    if 0 < len(missing) < len(args):
+        raise ValueError(
+            f"the {gate} gate needs {' and '.join(args)}; "
+            f"missing {', '.join(missing)}"
+        )
+    return not missing
+
+
+def _complement(keepers, survivors, id_col: str):
+    """Ids of ``keepers`` absent from ``survivors``: the drops of a gate
+    whose operator returns what it keeps."""
+    return keepers.select(id_col).join(
+        survivors.select(id_col), id_col, "left_anti"
+    )
+
+
 def build_manifest(
     docs,
     languages=None,
@@ -67,33 +89,24 @@ def build_manifest(
     max_per_host=None,
     dsir_target=None,
     dsir_min=None,
-    dsir_buckets: int = 10000,
     history_fingerprints=None,
     history_bands=None,
     c4: bool = False,
     langid_labeled=None,
     langid_allow=None,
-    langid_buckets: int = 2048,
 ):
     """Compose the curation verdicts; importable and unit-testable without
-    spark-submit. Returns (id, kept, drop_reason) — total over the input.
-    Stage order (each optional stage sees only prior keepers): incremental
-    history gates FIRST (cheapest drops: 'seen_exact' via the Bloom
-    sketch-then-verify against ``history_fingerprints``, a 1-column
-    fingerprint table from prior passes; 'seen_near' via the MinHash band
-    probe against ``history_bands``, the (id, bucket) table
-    dedup.minhash_band_table persists per pass) -> language/Gopher/
-    exact-dedup -> C4 line/page rules ('c4', map-side, Raffel et al.
-    2020) -> trained NB lang-ID allowlist ('language_model', needs
-    ``langid_labeled`` — a labeled table to fit langid.train_langid_nb
-    on — plus the ``langid_allow`` list; this is the gate for corpora
-    WITHOUT a lang column, where curate_corpus's allowlist can't run) ->
-    per-host cap ('host_cap', needs ``url_col`` + ``max_per_host``) ->
-    near-dup CC ('near_duplicate') -> DSIR target-likeness floor
-    ('dsir_low', needs ``dsir_target`` + ``dsir_min``).
+    spark-submit. Returns (id, kept, drop_reason), total over the input.
 
-    Every intermediate a later stage re-reads (the carried manifest, the
-    MinHash signatures, the CC edge rounds) is cut with
+    ``curate_corpus`` (language allowlist -> Gopher quality -> exact dedup)
+    gives the first verdicts. Each optional gate enabled by the arguments
+    then runs, in the order of the ``gates`` list below, over the docs
+    kept so far, and the ids it drops get its reason. A gate whose
+    arguments are only half given raises ValueError.
+
+    The carried manifest is read twice per gate (the keepers join feeding
+    the gate and the join marking its drops), so an uncut plan doubles per
+    gate. With more than one gate, each gate's result is cut with
     ``materialize.cut``, which follows the session: local checkpoints by
     default, reliable checkpoints when a checkpoint dir is set. A
     multi-executor cluster should set one (``spark-submit --conf
@@ -103,138 +116,85 @@ def build_manifest(
     from pyspark.sql import functions as F
 
     from textractssmlprocessor_spark import materialize
-    from textractssmlprocessor_spark.operators.curate import curate_corpus
-    from textractssmlprocessor_spark.operators.graph import dedup_clusters
+    from textractssmlprocessor_spark.operators import (
+        content, curate, dedup, delta, dsir, graph, langid, weburl,
+    )
 
-    manifest = curate_corpus(
+    # (reason, keepers -> ids the gate drops), cheapest drops first
+    gates = []
+    if history_fingerprints is not None:
+        # Bloom sketch-then-verify against prior passes' fingerprint table
+        gates.append(("seen_exact", lambda k: _complement(
+            k, delta.new_against_history_bloom(
+                k, history_fingerprints, id_col=id_col, text_col=text_col),
+            id_col)))
+    if history_bands is not None:
+        # MinHash band probe against the (id, bucket) table that
+        # dedup.minhash_band_table persists per pass
+        gates.append(("seen_near", lambda k: _complement(
+            k, dedup.near_dupes_against_history(
+                k, history_bands, id_col=id_col, text_col=text_col),
+            id_col)))
+    if c4:
+        # C4 line/page rules (Raffel et al. 2020), map-side
+        gates.append(("c4", lambda k: k.select(
+            id_col,
+            content.c4_line_columns(F.col(text_col))["c4_keep"].alias("_c4"),
+        ).filter(F.col("_c4") == 0).select(id_col)))
+    if _configured("language_model", langid_labeled=langid_labeled,
+                   langid_allow=langid_allow):
+        # NB lang-ID fitted on a labeled table: the allowlist for corpora
+        # WITHOUT a lang column, where curate_corpus's can't run
+        def language_model(k):
+            weights, stats = langid.train_langid_nb(
+                langid_labeled, label_col=lang_col, id_col=id_col,
+                text_col=text_col, buckets=2048,
+            )
+            return langid.langid_scores(
+                k, weights, stats, id_col=id_col, text_col=text_col,
+                buckets=2048,
+            ).filter(~F.col("lang_model_pred").isin(list(langid_allow))).select(
+                F.col("id").alias(id_col))
+
+        gates.append(("language_model", language_model))
+    if _configured("host_cap", max_per_host=max_per_host, url_col=url_col):
+        gates.append(("host_cap", lambda k: _complement(
+            k, weburl.cap_per_host(
+                k, max_per_host, url_col=url_col, id_col=id_col),
+            id_col)))
+    if near_dup:
+        # MinHash+LSH connected components; non-representatives drop
+        gates.append(("near_duplicate", lambda k: graph.dedup_clusters(
+            k, id_col=id_col, text_col=text_col, threshold=threshold
+        ).filter(~F.col("is_survivor")).select(F.col("doc_id").alias(id_col))))
+    if _configured("dsir_low", dsir_target=dsir_target, dsir_min=dsir_min):
+        # DSIR target-likeness floor
+        gates.append(("dsir_low", lambda k: dsir.dsir_scores(
+            k, dsir_target, id_col=id_col, text_col=text_col, buckets=10000
+        ).filter(F.col("dsir_logratio") < dsir_min).select(
+            F.col("id").alias(id_col))))
+
+    manifest = curate.curate_corpus(
         docs, id_col=id_col, text_col=text_col, lang_col=lang_col,
         languages=languages,
     )
-    # Per-stage plan truncation (graph.py's per-round discipline): every
-    # optional stage below references the carried manifest twice (the
-    # keepers() join feeding the stage + the apply_drops join updating the
-    # verdicts), so an uncut logical plan doubles per enabled stage —
-    # ~2^6 with all six on. Cutting AFTER each enabled stage keeps the
-    # analyzed plan linear in stage count.
-    n_stages = sum(
-        1 for on in (history_fingerprints is not None, history_bands is not None,
-                     c4, langid_labeled is not None and bool(langid_allow),
-                     bool(max_per_host and url_col), near_dup,
-                     dsir_target is not None and dsir_min is not None) if on
-    )
-
-    def cut(df):
-        return materialize.cut(df) if n_stages > 1 else df
-
-    def keepers():
-        return docs.join(
+    for reason, gate in gates:
+        keepers = docs.join(
             manifest.filter(F.col("kept")).select(F.col("id").alias(id_col)),
             id_col,
         )
-
-    def apply_drops(drop_ids, reason):
-        drops = drop_ids.select(
+        drops = gate(keepers).select(
             F.col(id_col).alias("id"), F.lit(True).alias("_hit")
         ).distinct()
-        return (
-            manifest.join(drops, "id", "left")
-            .select(
-                "id",
-                (F.col("kept") & F.col("_hit").isNull()).alias("kept"),
-                F.coalesce(
-                    F.col("drop_reason"),
-                    F.when(F.col("_hit"), F.lit(reason)),
-                ).alias("drop_reason"),
-            )
+        manifest = manifest.join(drops, "id", "left").select(
+            "id",
+            (F.col("kept") & F.col("_hit").isNull()).alias("kept"),
+            F.coalesce(
+                F.col("drop_reason"), F.when(F.col("_hit"), F.lit(reason))
+            ).alias("drop_reason"),
         )
-
-    if history_fingerprints is not None:
-        from textractssmlprocessor_spark.operators.delta import (
-            new_against_history_bloom,
-        )
-
-        k = keepers()
-        fresh = new_against_history_bloom(
-            k, history_fingerprints, id_col=id_col, text_col=text_col
-        ).select(id_col)
-        seen = k.select(id_col).join(fresh, id_col, "left_anti")
-        manifest = cut(apply_drops(seen, "seen_exact"))
-
-    if history_bands is not None:
-        from textractssmlprocessor_spark.operators.dedup import (
-            near_dupes_against_history,
-        )
-
-        k = keepers()
-        fresh = near_dupes_against_history(
-            k, history_bands, id_col=id_col, text_col=text_col
-        ).select(id_col)
-        seen = k.select(id_col).join(fresh, id_col, "left_anti")
-        manifest = cut(apply_drops(seen, "seen_near"))
-
-    if c4:
-        from textractssmlprocessor_spark.operators.content import c4_line_columns
-
-        k = keepers()
-        bad = (
-            k.select(
-                id_col,
-                c4_line_columns(F.col(text_col))["c4_keep"].alias("_c4"),
-            )
-            .filter(F.col("_c4") == 0)
-            .select(id_col)
-        )
-        manifest = cut(apply_drops(bad, "c4"))
-
-    if langid_labeled is not None and langid_allow:
-        from textractssmlprocessor_spark.operators.langid import (
-            langid_scores,
-            train_langid_nb,
-        )
-
-        weights, stats = train_langid_nb(
-            langid_labeled, label_col=lang_col, id_col=id_col,
-            text_col=text_col, buckets=langid_buckets,
-        )
-        k = keepers()
-        bad = (
-            langid_scores(k, weights, stats, id_col=id_col,
-                          text_col=text_col, buckets=langid_buckets)
-            .filter(~F.col("lang_model_pred").isin(list(langid_allow)))
-            .select(F.col("id").alias(id_col))
-        )
-        manifest = cut(apply_drops(bad, "language_model"))
-
-    if max_per_host and url_col:
-        from textractssmlprocessor_spark.operators.weburl import cap_per_host
-
-        k = keepers()
-        survivors = cap_per_host(
-            k, max_per_host, url_col=url_col, id_col=id_col
-        ).select(id_col)
-        over = k.select(id_col).join(survivors, id_col, "left_anti")
-        manifest = cut(apply_drops(over, "host_cap"))
-
-    if near_dup:
-        near_drops = (
-            dedup_clusters(keepers(), id_col=id_col, text_col=text_col,
-                           threshold=threshold)
-            .filter(~F.col("is_survivor"))
-            .select(F.col("doc_id").alias(id_col))
-        )
-        manifest = cut(apply_drops(near_drops, "near_duplicate"))
-
-    if dsir_target is not None and dsir_min is not None:
-        from textractssmlprocessor_spark.operators.dsir import dsir_scores
-
-        low = (
-            dsir_scores(keepers(), dsir_target, id_col=id_col,
-                        text_col=text_col, buckets=dsir_buckets)
-            .filter(F.col("dsir_logratio") < dsir_min)
-            .select(F.col("id").alias(id_col))
-        )
-        manifest = cut(apply_drops(low, "dsir_low"))
-
+        if len(gates) > 1:
+            manifest = materialize.cut(manifest)
     return manifest
 
 
@@ -353,51 +313,48 @@ def main() -> None:
     # one scope over every action: on exit it frees the cuts, including
     # reliable checkpoint files that stop() would leave in the shared store
     with scope(spark):
-        manifest = build_manifest(
-            docs,
-            languages=langs,
-            near_dup=args.near_dup,
-            threshold=args.threshold,
-            id_col=args.id_col,
-            text_col=args.text_col,
-            lang_col=args.lang_col,
-            url_col=args.url_col,
-            max_per_host=args.max_per_host,
-            dsir_target=(
-                spark.read.parquet(args.dsir_target) if args.dsir_target else None
-            ),
-            dsir_min=args.dsir_min,
-            history_fingerprints=hist_fp,
-            history_bands=hist_bands,
-            c4=args.c4,
-            langid_labeled=(
-                spark.read.parquet(args.langid_labeled)
-                if args.langid_labeled else None
-            ),
-            langid_allow=(
-                args.langid_allow.split(",") if args.langid_allow else None
-            ),
-        )
+        try:
+            manifest = build_manifest(
+                docs,
+                languages=langs,
+                near_dup=args.near_dup,
+                threshold=args.threshold,
+                id_col=args.id_col,
+                text_col=args.text_col,
+                lang_col=args.lang_col,
+                url_col=args.url_col,
+                max_per_host=args.max_per_host,
+                dsir_target=(
+                    spark.read.parquet(args.dsir_target) if args.dsir_target else None
+                ),
+                dsir_min=args.dsir_min,
+                history_fingerprints=hist_fp,
+                history_bands=hist_bands,
+                c4=args.c4,
+                langid_labeled=(
+                    spark.read.parquet(args.langid_labeled)
+                    if args.langid_labeled else None
+                ),
+                langid_allow=(
+                    args.langid_allow.split(",") if args.langid_allow else None
+                ),
+            )
+        except ValueError as e:
+            p.error(str(e))
         # the manifest is consumed up to three times (write, kept count, kept
         # join) — write it FIRST, then serve the other consumers from a
         # re-read of the written parquet: one pipeline execution total, and
         # nothing depends on executor-local storage
         manifest.write.mode("overwrite").parquet(args.manifest)
         written = spark.read.parquet(args.manifest)
-        n_kept = written.filter(F.col("kept")).count()
+        kept_rows = written.filter(F.col("kept"))
+        n_kept = kept_rows.count()
+        kept_docs = docs.join(
+            kept_rows.select(F.col("id").alias(args.id_col)), args.id_col
+        )
         if args.kept_output:
-            kept = docs.join(
-                written.filter(F.col("kept")).select(
-                    F.col("id").alias(args.id_col)
-                ),
-                args.id_col,
-            )
-            kept.write.mode("overwrite").parquet(args.kept_output)
+            kept_docs.write.mode("overwrite").parquet(args.kept_output)
         if args.sequences_output:
-            kept_docs = docs.join(
-                written.filter(F.col("kept")).select(F.col("id").alias(args.id_col)),
-                args.id_col,
-            )
             seqs, merges = tokenize_and_pack(
                 kept_docs, seq_len=args.seq_len, n_merges=args.n_merges,
                 id_col=args.id_col, text_col=args.text_col,
@@ -410,17 +367,11 @@ def main() -> None:
                 args.sequences_output + ".merges.parquet"
             )
         if args.write_history_dir:
-            import os
-
             from textractssmlprocessor_spark.operators.dedup import (
                 minhash_band_table,
             )
             from textractssmlprocessor_spark.operators.textstats import fingerprint
 
-            kept_docs = docs.join(
-                written.filter(F.col("kept")).select(F.col("id").alias(args.id_col)),
-                args.id_col,
-            )
             kept_docs.select(
                 fingerprint(F.col(args.text_col)).alias("fingerprint")
             ).distinct().write.mode("overwrite").parquet(
