@@ -23,29 +23,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-# trained-model memo (train-once / replay-everywhere): collected weight
-# rows keyed by (model, sf_dir, config) — plain driver data, session-free,
-# bounded by construction (n_langs * buckets max). Rebuilt as literal
-# DataFrames per call so a new SparkSession never sees a stale handle.
-_MODEL_CACHE: dict[tuple, tuple] = {}
+# fitted-model memo (train-once / replay-everywhere), keyed by
+# (applicationId, *key): a key never outlives its SparkContext, so a new
+# session refits instead of reading another session's tables.
+_FITTED: dict[tuple, object] = {}
 
 
-def _replay_models(spark, key: tuple, fit) -> list[DataFrame]:
-    """Train-once / broadcast-replay memo shared by every model-carrying
-    contract query (the operator-level sibling of
-    ``langid.materialize_langid_model``): the FIRST profile of a corpus
-    executes ``fit()`` — which must return BOUNDED model DataFrames
-    (weights / cell tables, never corpus-shaped data) — collects them to
-    driver rows, and memoizes (rows, schema) per key. Every later pass
-    rebuilds them as literal tables, so steady-state scoring never
-    re-executes the training aggregations. This is what persisting
-    ``weights.write.parquet()`` buys in production, expressed without a
-    scratch directory."""
-    cached = _MODEL_CACHE.get(key)
-    if cached is None:
-        cached = tuple((df.collect(), df.schema) for df in fit())
-        _MODEL_CACHE[key] = cached
-    return [spark.createDataFrame(rows, schema) for rows, schema in cached]
+def _fit_once(spark, key: tuple, fit):
+    """Train-once memo shared by every model-carrying contract query: the
+    FIRST profile of a corpus runs ``fit()`` and every later pass of the
+    same application gets back what it returned — BOUNDED model tables
+    frozen by ``materialize.freeze`` (weights / cell tables, never
+    corpus-shaped data) or plain scalars such as fitted thresholds — so
+    steady-state scoring never re-executes the training aggregations.
+    This is what persisting ``weights.write.parquet()`` buys in
+    production, expressed without a scratch directory."""
+    memo_key = (spark.sparkContext.applicationId, *key)
+    if memo_key not in _FITTED:
+        _FITTED[memo_key] = fit()
+    return _FITTED[memo_key]
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -252,6 +248,7 @@ def q_text_profile(spark, sf_dir):
     # above it can emit ANY label seen in training (the corpus labels
     # `zh`, unreachable by the Latin lexicon). The DuckDB oracle replays
     # featurize -> fit -> score -> argmax end-to-end.
+    from textractssmlprocessor_spark.materialize import freeze
     from textractssmlprocessor_spark.operators.langid import (
         langid_scores,
         train_langid_nb,
@@ -259,18 +256,19 @@ def q_text_profile(spark, sf_dir):
 
     d0 = _docs(spark, sf_dir)
     # train-once / broadcast-replay (production idiom): the fit runs as
-    # ONE bounded job the FIRST time a corpus is profiled; the collected
-    # weights (n_langs*buckets rows max — plain driver data, session-free)
-    # are memoized per sf_dir and rebuilt as literal tables on every later
-    # pass, so steady-state scoring never re-executes the training aggs.
-    # This is what persisting weights.write.parquet() buys in production,
-    # expressed without a scratch directory.
-    weights, lstats = _replay_models(
+    # ONE bounded job the FIRST time a corpus is profiled; the frozen
+    # weights (n_langs*buckets rows max) are memoized per sf_dir and
+    # replayed as literal tables on every later pass, so steady-state
+    # scoring never re-executes the training aggs.
+    weights, lstats = _fit_once(
         spark,
         ("langid_nb", sf_dir, 2048),
-        lambda: train_langid_nb(
-            d0.filter(F.col("doc_id") % 2 == 0), buckets=2048
-        ),
+        lambda: [
+            freeze(df)
+            for df in train_langid_nb(
+                d0.filter(F.col("doc_id") % 2 == 0), buckets=2048
+            )
+        ],
     )
     lm = langid_scores(d0, weights, lstats, buckets=2048).withColumnRenamed(
         "id", "doc_id"
@@ -888,22 +886,27 @@ def q_gopher_quality(spark, sf_dir):
     # vocab/bigram tables are NOT memoized: their size is
     # corpus-vocabulary-shaped, not bucket-bounded — persisting those is a
     # weights.write.parquet() job in production, not a driver memo.)
+    from textractssmlprocessor_spark.materialize import freeze
     from textractssmlprocessor_spark.operators.dsir import (
         dsir_model,
         linear_text_classifier,
         train_nb_weights,
     )
 
-    weights, dsir_m = _replay_models(
+    weights, dsir_m = _fit_once(
         spark,
         ("gopher_models", sf_dir, 2000),
         lambda: (
-            train_nb_weights(
-                d.filter(F.col("doc_id") % 5 == 0),
-                d.filter(F.col("doc_id") % 5 != 0),
-                buckets=2000,
+            freeze(
+                train_nb_weights(
+                    d.filter(F.col("doc_id") % 5 == 0),
+                    d.filter(F.col("doc_id") % 5 != 0),
+                    buckets=2000,
+                )
             ),
-            dsir_model(d, d.filter(F.col("doc_id") % 5 == 0), buckets=2000),
+            freeze(
+                dsir_model(d, d.filter(F.col("doc_id") % 5 == 0), buckets=2000)
+            ),
         ),
     )
     ds = dsir_scores(
@@ -927,13 +930,15 @@ def q_gopher_quality(spark, sf_dir):
         label_perplexity_buckets,
     )
 
-    tkey = ("gopher_ppl", sf_dir)
-    if tkey not in _MODEL_CACHE:
-        _MODEL_CACHE[tkey] = fit_perplexity_thresholds(
+    thresholds = _fit_once(
+        spark,
+        ("gopher_ppl", sf_dir),
+        lambda: fit_perplexity_thresholds(
             joined, score_col="lm_avg_logprob", id_col="doc_id", sample_frac=0.5
-        )
+        ),
+    )
     return label_perplexity_buckets(
-        joined, _MODEL_CACHE[tkey], score_col="lm_avg_logprob"
+        joined, thresholds, score_col="lm_avg_logprob"
     )
 
 

@@ -111,6 +111,7 @@ def test_prefit_model_replays_identically_with_fewer_shuffles(spark):
     collected/rebuilt (cell, c_raw, c_tgt) model must equal the inline fit
     value-for-value, and its plan must drop the training aggregations —
     the model side becomes a local literal table."""
+    from textractssmlprocessor_spark.materialize import freeze
     from textractssmlprocessor_spark.operators.dsir import dsir_model, dsir_scores
 
     raw = spark.createDataFrame(
@@ -119,7 +120,7 @@ def test_prefit_model_replays_identically_with_fewer_shuffles(spark):
     )
     tgt = raw.filter("doc_id % 4 = 0")
     m = dsir_model(raw, tgt, buckets=64)
-    local = spark.createDataFrame(m.collect(), m.schema)
+    local = freeze(m)
 
     refit = {
         r["id"]: (r["dsir_n_grams"], r["dsir_logratio"])

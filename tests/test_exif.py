@@ -157,7 +157,7 @@ def test_dhash_normalizes_tagged_jpeg_rotation():
     from textractssmlprocessor_spark.operators.multimodal import (
         _dhash_bits,
         apply_exif_orientation,
-        decode_jpeg_progressive_pixels,
+        decode_jpeg_pixels,
         dhash64,
     )
     from tests.test_operators_spark import _build_prog_jpeg_gray8
@@ -173,7 +173,7 @@ def test_dhash_normalizes_tagged_jpeg_rotation():
     # identity tag hashes like the untagged payload
     assert dhash64(tagged(1)) == dhash64(j)
     # rotation tag hashes like the ROTATED pixels (white-box equality)
-    dec = decode_jpeg_progressive_pixels(j)
+    dec = decode_jpeg_pixels(j)
     for o in (3, 6, 8):
         assert dhash64(tagged(o)) == _dhash_bits(
             *apply_exif_orientation(*dec, o)
@@ -233,7 +233,7 @@ def test_redaction_zeroes_offset_stored_coordinates():
 
 def test_redaction_preserves_other_metadata_and_pixels():
     from textractssmlprocessor_spark.operators.multimodal import (
-        decode_jpeg_progressive_pixels,
+        decode_jpeg_pixels,
         exif_metadata,
         redact_exif_gps,
     )
@@ -248,8 +248,8 @@ def test_redaction_preserves_other_metadata_and_pixels():
     assert flag == 1
     assert exif_metadata(red) == (6, "CanonX", "D5", "2023:05:01 10:00:00", 0)
     # pixels decode byte-identically
-    assert decode_jpeg_progressive_pixels(red) == (
-        decode_jpeg_progressive_pixels(tagged)
+    assert decode_jpeg_pixels(red) == (
+        decode_jpeg_pixels(tagged)
     )
     # non-GPS payloads pass through unchanged
     assert redact_exif_gps(j) == (j, 0)

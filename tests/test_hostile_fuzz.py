@@ -90,7 +90,6 @@ def test_media_parsers_contained_on_garbage():
     parsers = [
         mm.decode_png_pixels,
         mm.decode_jpeg_pixels,
-        mm.decode_jpeg_progressive_pixels,
         mm.decode_gif_pixels,
         mm.decode_vp8l_pixels,
         mm.audio_metadata,

@@ -101,6 +101,36 @@ def test_extract_job_rejects_table_identifier_sinks(tmp_path, flag):
     assert os.listdir(tmp_path) == []
 
 
+@pytest.mark.parametrize(
+    "given, missing",
+    [
+        (("--iceberg-catalog", "lake"), "--iceberg-warehouse"),
+        (("--iceberg-warehouse", "s3://bucket/wh"), "--iceberg-catalog"),
+    ],
+)
+def test_extract_job_rejects_half_configured_iceberg_catalog(
+    tmp_path, given, missing
+):
+    """The catalog is registered only with both Iceberg flags, so one flag
+    alone must stop the job naming the missing one, before any Spark work,
+    instead of being silently ignored."""
+    from textractssmlprocessor_spark.jobs import extract_job
+
+    proc = subprocess.run(
+        [
+            sys.executable, extract_job.__file__,
+            "--input", str(tmp_path / "pages.parquet"),
+            "--output", str(tmp_path / "chunks"),
+            "--lineage", str(tmp_path / "lineage.parquet"),
+            *given,
+        ],
+        cwd=tmp_path, capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode != 0
+    assert f"{given[0]} needs {missing}" in proc.stderr
+    assert os.listdir(tmp_path) == []
+
+
 GOLDENS = "goldens/iceberg"
 
 

@@ -168,10 +168,10 @@ def test_null_labels_do_not_train_a_class(spark, corpus):
 def test_all_null_labels_degrade_to_empty_model(spark):
     """A corpus with NO labeled rows fits zero classes: stats/weights are
     empty, scoring yields zero rows (the degenerate-input invariant), and
-    materialization round-trips the empty tables without error."""
+    freezing round-trips the empty tables without error."""
+    from textractssmlprocessor_spark.materialize import freeze
     from textractssmlprocessor_spark.operators.langid import (
         langid_scores,
-        materialize_langid_model,
         train_langid_nb,
     )
 
@@ -181,20 +181,20 @@ def test_all_null_labels_degrade_to_empty_model(spark):
     )
     weights, stats = train_langid_nb(unlabeled, buckets=256)
     assert weights.count() == 0 and stats.count() == 0
-    w_l, s_l = materialize_langid_model(weights, stats)
+    w_l, s_l = freeze(weights), freeze(stats)
     assert langid_scores(unlabeled, w_l, s_l, buckets=256).count() == 0
 
 
 def test_materialized_model_replays_identically(spark, corpus):
+    from textractssmlprocessor_spark.materialize import freeze
     from textractssmlprocessor_spark.operators.langid import (
         langid_scores,
-        materialize_langid_model,
         train_langid_nb,
     )
 
     train = corpus.filter(F.col("doc_id") % 2 == 0)
     weights, stats = train_langid_nb(train, buckets=512)
-    w_local, s_local = materialize_langid_model(weights, stats)
+    w_local, s_local = freeze(weights), freeze(stats)
     direct = {
         r["id"]: (r["lang_model_pred"], r["lang_model_score"])
         for r in langid_scores(corpus, weights, stats, buckets=512).collect()

@@ -327,7 +327,7 @@ def test_png_pixel_decode_real(spark):
     import zlib
 
     from textractssmlprocessor_spark.operators.multimodal import (
-        decode_image_stub,
+        decode_pixels,
         decode_png_pixels,
         image_pixels,
     )
@@ -370,7 +370,7 @@ def test_png_pixel_decode_real(spark):
     # one row per filter type, split across two IDAT chunks
     png = encode(w, h, rgb, color_type=2, filters=[0, 1, 2, 3, 4], split_idat=True)
     assert decode_png_pixels(png) == (w, h, 3, rgb)
-    assert decode_image_stub(png, fake=False) == (w, h)
+    assert decode_pixels(png) == (w, h, 3, rgb)
 
     gray = bytes((x * 11) % 256 for x in range(w * h))
     assert decode_png_pixels(encode(w, h, gray, color_type=0, filters=[4, 3, 2, 1, 0])) \
@@ -386,14 +386,13 @@ def test_png_pixel_decode_real(spark):
     assert decode_png_pixels(encode(3, 2, idx, color_type=3, palette=palette)) \
         == (3, 2, 3, expected)
 
-    # unsupported/broken shapes are None, and fake=False raises for non-PNG
+    # unsupported/broken shapes are None, also through the decode chain
     assert decode_png_pixels(b"not a png") is None
     assert decode_png_pixels(png[:40]) is None
     depth16 = bytearray(encode(2, 2, bytes(12)))
     depth16[24] = 16  # IHDR bit-depth byte
     assert decode_png_pixels(bytes(depth16)) is None
-    with pytest.raises(NotImplementedError):
-        decode_image_stub(b"\xff\xd8 jpeg-ish", fake=False)
+    assert decode_pixels(b"\xff\xd8 jpeg-ish") is None
 
     df = spark.createDataFrame(
         [("png://1", bytearray(png)), ("txt://2", bytearray(b"nope"))],
@@ -1932,7 +1931,8 @@ def test_decode_jpeg_flat_exact():
 
 def test_decode_jpeg_real_fixture():
     """Real-world smoke: a color JPEG from the Python stdlib test data
-    decodes to the right shape, deterministically."""
+    decodes to the right shape and to pinned pixels, deterministically."""
+    import hashlib
     import os
 
     p = ("/mnt/sandboxing/model_tools_env/v1/python/install/lib/"
@@ -1950,12 +1950,15 @@ def test_decode_jpeg_real_fixture():
     b2 = decode_jpeg_pixels(data)
     assert a is not None and a[:3] == (16, 16, 3) and len(a[3]) == 16 * 16 * 3
     assert a == b2
+    assert hashlib.md5(a[3]).hexdigest() == "dbb5d9878836c7edc21cfc2ce6115416"
 
 
-def _build_flat_jpeg_color_420(ycbcr=(120, 140, 100)):
+def _build_flat_jpeg_color_420(ycbcr=(120, 140, 100), interleaved=True):
     """16x16 baseline JPEG, 3 components with 4:2:0 subsampling (Y 2x2,
     Cb/Cr 1x1 — one interleaved MCU of 4 Y blocks + Cb + Cr), every
-    component flat: exact expected RGB from the same BT.601 arithmetic."""
+    component flat: exact expected RGB from the same BT.601 arithmetic.
+    With ``interleaved=False`` the same image is coded as three
+    non-interleaved scans, one SOS per component (T.81 A.2.2)."""
     import struct
 
     def seg(marker, body):
@@ -1969,42 +1972,39 @@ def _build_flat_jpeg_color_420(ycbcr=(120, 140, 100)):
     dht_dc = seg(0xC4, bytes([0x00]) + dc_counts + bytes(range(12)))
     ac_counts = bytes([0, 1] + [0] * 14)
     dht_ac = seg(0xC4, bytes([0x10]) + ac_counts + bytes([0x00]))
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
 
-    bits = []
+    def scan(comp_ids, diffs):
+        bits = []
 
-    def put(value, n):
-        for k in range(n - 1, -1, -1):
-            bits.append((value >> k) & 1)
+        def put(value, n):
+            for k in range(n - 1, -1, -1):
+                bits.append((value >> k) & 1)
 
-    def put_block(diff):
-        s = abs(diff).bit_length()
-        put(s, 4)
-        if s:
-            # T.81 signed magnitude: negatives as ones'-complement bits
-            put(diff if diff >= 0 else diff + (1 << s) - 1, s)
-        put(0b00, 2)  # EOB
+        for diff in diffs:
+            s = abs(diff).bit_length()
+            put(s, 4)
+            if s:
+                # T.81 signed magnitude: negatives as ones'-complement bits
+                put(diff if diff >= 0 else diff + (1 << s) - 1, s)
+            put(0b00, 2)  # EOB
+        header = bytes([len(comp_ids)])
+        for cid in comp_ids:
+            header += bytes([cid, 0x00])
+        return seg(0xDA, header + bytes([0, 63, 0])) + _prog_jpeg_bits(bits)
 
-    # MCU: Y blocks (first carries the DC, rest diff 0), then Cb, then Cr
-    for blk in range(4):
-        put_block((y0 - 128) * 8 if blk == 0 else 0)
-    put_block((cb0 - 128) * 8)
-    put_block((cr0 - 128) * 8)
-    while len(bits) % 8:
-        bits.append(1)
-    payload = bytearray()
-    for i in range(0, len(bits), 8):
-        byte = 0
-        for bt in bits[i : i + 8]:
-            byte = (byte << 1) | bt
-        payload.append(byte)
-        if byte == 0xFF:
-            payload.append(0x00)
-    return (b"\xff\xd8" + dqt + sof + dht_dc + dht_ac + sos
-            + bytes(payload) + b"\xff\xd9")
+    # each component's first block carries its DC, the rest diff 0
+    y = [(y0 - 128) * 8, 0, 0, 0]
+    cb, cr = [(cb0 - 128) * 8], [(cr0 - 128) * 8]
+    if interleaved:  # MCU: the 4 Y blocks, then Cb, then Cr
+        scans = scan([1, 2, 3], y + cb + cr)
+    else:
+        scans = scan([1], y) + scan([2], cb) + scan([3], cr)
+    return b"\xff\xd8" + dqt + sof + dht_dc + dht_ac + scans + b"\xff\xd9"
 
 
 def test_decode_jpeg_color_420_exact():
+    """Exact BT.601 colour from one interleaved scan, and from three
+    non-interleaved scans (one SOS per component) of the same image."""
     import numpy as np
 
     from textractssmlprocessor_spark.operators.multimodal import (
@@ -2012,16 +2012,45 @@ def test_decode_jpeg_color_420_exact():
     )
 
     y0, cb0, cr0 = 120, 140, 100
-    data = _build_flat_jpeg_color_420((y0, cb0, cr0))
-    got = decode_jpeg_pixels(data)
-    assert got is not None and got[:3] == (16, 16, 3)
-    px = np.frombuffer(got[3], dtype=np.uint8).reshape(16, 16, 3)
     exp_r = int(np.round(y0 + 1.402 * (cr0 - 128)))
     exp_g = int(np.round(y0 - 0.344136 * (cb0 - 128) - 0.714136 * (cr0 - 128)))
     exp_b = int(np.round(y0 + 1.772 * (cb0 - 128)))
-    assert (px[:, :, 0] == exp_r).all()
-    assert (px[:, :, 1] == exp_g).all()
-    assert (px[:, :, 2] == exp_b).all()
+    assert (exp_r, exp_g, exp_b) == (81, 136, 141)
+    for interleaved in (True, False):
+        data = _build_flat_jpeg_color_420((y0, cb0, cr0), interleaved)
+        assert data.count(b"\xff\xda") == (1 if interleaved else 3)
+        got = decode_jpeg_pixels(data)
+        assert got is not None and got[:3] == (16, 16, 3)
+        px = np.frombuffer(got[3], dtype=np.uint8).reshape(16, 16, 3)
+        assert (px[:, :, 0] == exp_r).all(), interleaved
+        assert (px[:, :, 1] == exp_g).all(), interleaved
+        assert (px[:, :, 2] == exp_b).all(), interleaved
+
+
+def test_decode_jpeg_four_components_declined():
+    """A 4-component (CMYK / YCCK) frame is outside the decoder: None,
+    not RGB built from its first three components."""
+    import struct
+
+    from textractssmlprocessor_spark.operators.multimodal import (
+        decode_jpeg_pixels,
+        image_dimensions,
+    )
+
+    data = _build_flat_jpeg_color_420()
+    at = data.index(b"\xff\xc0")
+    sof = (b"\xff\xc0" + struct.pack(">H", 20) + bytes([8])
+           + struct.pack(">HH", 8, 8) + bytes([4])
+           + bytes([1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0, 4, 0x11, 0]))
+    # one interleaved MCU: four flat DC-only blocks (DC size 0, EOB)
+    sos = (b"\xff\xda" + struct.pack(">H", 14)
+           + bytes([4, 1, 0, 2, 0, 3, 0, 4, 0, 0, 63, 0])
+           + _prog_jpeg_bits([0, 0, 0, 0, 0, 0] * 4))
+    # the builder's 3-component SOF is followed by its DHTs, then its SOS
+    dhts = data[data.index(b"\xff\xc4") : data.index(b"\xff\xda")]
+    cmyk = data[:at] + sof + dhts + sos + b"\xff\xd9"
+    assert image_dimensions(cmyk) == ("jpeg", 8, 8)
+    assert decode_jpeg_pixels(cmyk) is None
 
 
 # --- GIF pixel decode (multimodal.decode_gif_pixels) -------------------------
@@ -2212,7 +2241,7 @@ def test_gif_rides_image_pixels_and_dhash(spark):
     assert dh["g1"] is not None and dh["bad"] is None
 
 
-# --- progressive JPEG decode (multimodal.decode_jpeg_progressive_pixels) -----
+# --- progressive JPEG decode (multimodal.decode_jpeg_pixels, SOF2) ----------
 
 
 def _prog_jpeg_bits(bits):
@@ -2303,7 +2332,6 @@ def test_decode_jpeg_progressive_exact():
 
     from textractssmlprocessor_spark.operators.multimodal import (
         decode_jpeg_pixels,
-        decode_jpeg_progressive_pixels,
     )
 
     A = np.array([[ (math.sqrt(0.5) if u == 0 else 1.0) / 2.0
@@ -2311,8 +2339,7 @@ def test_decode_jpeg_progressive_exact():
                     for x in range(8)] for u in range(8)])
     for dc, ac in [(256, 7), (-96, 6), (80, -5), (0, 0)]:
         data = _build_prog_jpeg_gray8(dc, ac)
-        assert decode_jpeg_pixels(data) is None  # SOF2: baseline declines
-        got = decode_jpeg_progressive_pixels(data)
+        got = decode_jpeg_pixels(data)
         assert got is not None and got[:3] == (8, 8, 1), (dc, ac)
         C = np.zeros((8, 8))
         C[0, 0] = dc
@@ -2324,33 +2351,37 @@ def test_decode_jpeg_progressive_exact():
 
 def test_decode_jpeg_progressive_real_fixtures():
     """Real encoder output: SOF2 files shipped with system packages decode
-    deterministically with correct header dimensions and sane content
-    (the nodejs doc images are white stripes on white)."""
+    deterministically with correct header dimensions, sane content (the
+    nodejs doc images are white stripes on white) and pinned pixels."""
+    import hashlib
     import os
 
     import numpy as np
 
     from textractssmlprocessor_spark.operators.multimodal import (
-        decode_jpeg_progressive_pixels,
+        decode_jpeg_pixels,
         image_dimensions,
     )
 
     fixtures = [
-        ("/usr/share/doc/nodejs/full-white-stripe.jpg", 240),
-        ("/usr/share/doc/nodejs/thin-white-stripe.jpg", 200),
+        ("/usr/share/doc/nodejs/full-white-stripe.jpg", 240,
+         "85b122593b02b705b60a049d13266fd9"),
+        ("/usr/share/doc/nodejs/thin-white-stripe.jpg", 200,
+         "d7aa174819b83b65669174931574910b"),
     ]
     ran = False
-    for path, min_mean in fixtures:
+    for path, min_mean, md5 in fixtures:
         if not os.path.exists(path):
             continue
         ran = True
         b = open(path, "rb").read()
         fmt, w, h = image_dimensions(b)
-        d = decode_jpeg_progressive_pixels(b)
+        d = decode_jpeg_pixels(b)
         assert d is not None and d[:2] == (w, h) and d[2] == 3
-        assert d == decode_jpeg_progressive_pixels(b)  # deterministic
+        assert d == decode_jpeg_pixels(b)  # deterministic
         mean = np.frombuffer(d[3], dtype=np.uint8).mean()
         assert mean > min_mean, (path, mean)
+        assert hashlib.md5(d[3]).hexdigest() == md5, path
     if not ran:
         import pytest as _pytest
 

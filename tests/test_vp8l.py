@@ -479,10 +479,10 @@ def test_containment_truncation_and_garbage():
 
 
 def test_dispatch_and_dhash_bridge():
-    """decode_image_stub + image_dhash route VP8L; the dHash equals the
+    """decode_pixels + image_dhash route VP8L; the dHash equals the
     PNG sibling's (same pixels -> identical hash, the format bridge)."""
     from textractssmlprocessor_spark.operators.multimodal import (
-        decode_image_stub,
+        decode_pixels,
         dhash64,
     )
 
@@ -493,7 +493,7 @@ def test_dispatch_and_dhash_bridge():
         for x in range(8)
     ]
     webp = _encode_literals(pixels, 8, 8)
-    assert decode_image_stub(webp, fake=False) == (8, 8)
+    assert decode_pixels(webp)[:3] == (8, 8, 4)
     assert dhash64(webp) == dhash64(_png_sibling(pixels, 8, 8))
 
 

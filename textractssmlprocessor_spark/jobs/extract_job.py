@@ -75,6 +75,14 @@ def main() -> None:
     p.add_argument("--iceberg-catalog-impl", default="hadoop",
                    choices=["hadoop", "hive", "rest"])
     args = p.parse_args()
+    if bool(args.iceberg_catalog) != bool(args.iceberg_warehouse):
+        given, missing = (
+            ("--iceberg-catalog", "--iceberg-warehouse")
+            if args.iceberg_catalog
+            else ("--iceberg-warehouse", "--iceberg-catalog")
+        )
+        p.error(f"{given} needs {missing}: the catalog is registered only "
+                "with both set")
     from textractssmlprocessor_spark.sources import is_path
 
     for flag, value in (("--output", args.output), ("--lineage", args.lineage)):
@@ -102,7 +110,7 @@ def main() -> None:
     )
     if args.partitions:
         builder = builder.config("spark.sql.shuffle.partitions", str(args.partitions))
-    if args.iceberg_catalog and args.iceberg_warehouse:
+    if args.iceberg_catalog:
         from textractssmlprocessor_spark.jobs.iceberg import iceberg_submit_conf
 
         for k, v in iceberg_submit_conf(

@@ -16,6 +16,12 @@ identical with either storage.
   write them;
 - otherwise: ``localCheckpoint(eager=False)``, executor-local and fast.
 
+``freeze(df)`` is the other way to stop recomputing a producer, for a
+BOUNDED table such as a fitted model's weights: collect it to the driver
+and rebuild it as a literal table with the same schema. The frozen plan
+is a local relation, so later plans broadcast-replay it without running
+its producer again and there are no blocks to release.
+
 ``scope(spark)`` owns release. Every ``cut()`` taken while a scope is open
 on the same thread registers its RDD id with the innermost scope at call
 time (a lazy local checkpoint joins the persistent-RDD registry then, not
@@ -72,6 +78,13 @@ def cut(df: DataFrame) -> DataFrame:
     if _open.stack:
         _open.stack[-1].add(_rdd_id(out))
     return out
+
+
+def freeze(df: DataFrame) -> DataFrame:
+    """``df`` collected and rebuilt as a literal table with its schema.
+    Only for bounded tables (module docstring): every row passes through
+    the driver."""
+    return df.sparkSession.createDataFrame(df.collect(), df.schema)
 
 
 def release(*cuts: DataFrame) -> None:

@@ -246,26 +246,3 @@ def langid_scores(
         ).alias("lang_model_margin"),
         F.max("n_grams").alias("langid_n_grams"),
     )
-
-
-def materialize_langid_model(
-    weights: DataFrame, lang_stats: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Train-once / replay-everywhere: collect the fitted model into
-    driver memory and rebuild it as LOCAL DataFrames, so every downstream
-    :func:`langid_scores` pass broadcast-replays a literal table instead
-    of re-running the training aggregations inside its own plan.
-
-    Bounded by construction: ``weights`` is at most n_langs * buckets
-    rows and ``lang_stats`` one row per language — independent of corpus
-    size, the same bound that already justifies broadcasting them. This
-    is the production idiom for a 100 TB corpus: fit on the labeled
-    slice, persist the two tables (``weights.write.parquet(...)`` is the
-    durable variant of this call), then score any number of partitions /
-    days / reruns against the frozen weights without touching the
-    training data again.
-    """
-    spark = weights.sparkSession
-    w_local = spark.createDataFrame(weights.collect(), weights.schema)
-    s_local = spark.createDataFrame(lang_stats.collect(), lang_stats.schema)
-    return w_local, s_local

@@ -6,20 +6,19 @@ pure-stdlib container-header parser (``image_dimensions``) covering
 PNG/JPEG/GIF/BMP, and duration/sample-rate/channels from a pure-stdlib
 audio parser (``audio_metadata``) covering WAV and MP3 (full MPEG
 frame walk — exact VBR durations) — no media library needed — and are
-NULL for unrecognized payloads, never fabricated. PIXEL decode is REAL
-for PNG (``decode_png_pixels``: zlib inflate + all five scanline filters +
-palette expansion) and baseline JPEG (marker walk, canonical Huffman,
-dequant + numpy IDCT, YCbCr->RGB), both exposed distributed as
-``image_pixels``, GIF (``decode_gif_pixels``: LZW expansion +
-interlace reorder + palette, first frame), PROGRESSIVE JPEG
-(``decode_jpeg_progressive_pixels``: SOF2 spectral-selection +
-successive-approximation scan accumulation, T.81 Annex G), and
-WEBP-LOSSLESS (``decode_vp8l_pixels``: canonical prefix codes, LZ77
-with the plane-code map, color cache, and the four inverse transforms
-per the public VP8L spec / RFC 9649). The decode chain covers the
-formats that make up essentially all web images;
-``decode_image_stub(fake=False)`` raises NotImplementedError only for
-payloads outside them (lossy VP8 is an arithmetic-coded codec).
+NULL for unrecognized payloads, never fabricated. PIXEL decode is REAL,
+and ``decode_pixels`` is the one chain every caller uses: PNG
+(``decode_png_pixels``: zlib inflate + all five scanline filters +
+palette expansion), JPEG (``decode_jpeg_pixels``: sequential SOF0/1 and
+progressive SOF2 frames through one marker walk, one scan decoder and
+one dequant + numpy IDCT + YCbCr->RGB stage, T.81 Annexes F and G), GIF
+(``decode_gif_pixels``: LZW expansion + interlace reorder + palette,
+first frame) and WEBP-LOSSLESS (``decode_vp8l_pixels``: canonical prefix
+codes, LZ77 with the plane-code map, color cache, and the four inverse
+transforms per the public VP8L spec / RFC 9649), exposed distributed as
+``image_pixels``. The chain covers the formats that make up essentially
+all web images; it returns None for payloads outside them (lossy VP8 is
+an arithmetic-coded codec) and for corrupt streams.
 Everything Spark-side — schema, Arrow batch shape, mapInPandas
 partitioning — is real and tested.
 """
@@ -64,34 +63,6 @@ FRAME_SCHEMA = StructType(
         StructField("frame", BinaryType(), True),
     ]
 )
-
-
-def decode_image_stub(payload: bytes, fake: bool = True) -> tuple[int, int]:
-    """With ``fake=True`` (the oracle-stable path) returns deterministic
-    pseudo-dimensions from the content hash. With ``fake=False`` decodes
-    REAL pixels — PNG via ``decode_png_pixels`` (pure stdlib), baseline /
-    progressive JPEG via ``decode_jpeg_pixels`` /
-    ``decode_jpeg_progressive_pixels`` (stdlib + numpy), GIF via
-    ``decode_gif_pixels`` (pure stdlib) — and returns the true
-    dimensions; payloads outside those formats raise
-    NotImplementedError."""
-    if not fake:
-        decoded = (
-            decode_png_pixels(payload)
-            or decode_jpeg_pixels(payload)
-            or decode_jpeg_progressive_pixels(payload)
-            or decode_gif_pixels(payload)
-            or decode_vp8l_pixels(payload)
-        )
-        if decoded is None:
-            raise NotImplementedError(
-                "real pixel decode implemented for PNG, baseline +"
-                " progressive JPEG, and GIF; this payload is another "
-                "format (or a JPEG shape outside 8-bit Huffman coding)"
-            )
-        return decoded[0], decoded[1]
-    h = hashlib.md5(payload or b"").digest()
-    return 64 + h[0] % 192, 64 + h[1] % 192
 
 
 # PNG color types (spec §11.2.2): samples per pixel at bit depth 8.
@@ -792,12 +763,29 @@ def undecodable_codec(p: bytes) -> str | None:
     return d[0]
 
 
+def decode_pixels(payload: bytes) -> tuple[int, int, int, bytes] | None:
+    """The one pixel-decode chain: PNG, JPEG (sequential or progressive),
+    GIF, then lossless WebP. Returns (width, height, channels, row-major
+    8-bit samples), or None for payloads outside those formats (lossy VP8
+    WebP is an arithmetic-coded codec; BMP) and when a decoder raises on a
+    truncated or corrupt stream: a NULL row, never a dead job."""
+    try:
+        return (
+            decode_png_pixels(payload)
+            or decode_jpeg_pixels(payload)
+            or decode_gif_pixels(payload)
+            or decode_vp8l_pixels(payload)
+        )
+    except Exception:
+        return None
+
+
 def image_pixels(
     df: DataFrame, url_col: str = "url", bin_col: str = "payload",
 ) -> DataFrame:
-    """Distributed REAL pixel decode: binary PNG / baseline-JPEG / GIF
-    column ->
-    (width, height, channels, row-major samples) via mapInPandas.
+    """Distributed REAL pixel decode (``decode_pixels``): binary image
+    column -> (width, height, channels, row-major samples) via
+    mapInPandas.
     Undecodable rows get NULLs (total function — one bad payload never
     kills a 100 TB job) plus an ``undecodable_codec`` audit label when the
     container was recognized, so a corpus rollup can quantify the decode
@@ -806,22 +794,10 @@ def image_pixels(
     ``byte_histogram_features`` or any downstream embedding UDF without
     leaving the Arrow batch path."""
 
-    def _decode_any(p):
-        try:
-            return (
-                decode_png_pixels(p)
-                or decode_jpeg_pixels(p)
-                or decode_jpeg_progressive_pixels(p)
-                or decode_gif_pixels(p)
-                or decode_vp8l_pixels(p)
-            )
-        except Exception:
-            return None  # truncated/corrupt stream: NULL row, not a dead job
-
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = [
-                _decode_any(bytes(p)) if p is not None else None
+                decode_pixels(bytes(p)) if p is not None else None
                 for p in pdf[bin_col]
             ]
             yield pd.DataFrame(
@@ -855,9 +831,8 @@ def image_dimensions(payload: bytes) -> tuple[str, int, int] | None:
     (logical screen descriptor), BMP (BITMAPINFOHEADER) and WebP (RIFF
     VP8/VP8L/VP8X chunk headers, the three container flavors). Returns
     None for unrecognized/truncated payloads; never fabricates
-    dimensions. (WebP PIXELS stay in decode_image_stub's honest
-    NotImplementedError bucket — a VP8 entropy decoder is a codec, not a
-    header walk.)"""
+    dimensions. (Lossy VP8 WebP PIXELS stay outside ``decode_pixels`` —
+    a VP8 entropy decoder is a codec, not a header walk.)"""
     import struct
 
     if payload is None or len(payload) < 10:
@@ -1343,7 +1318,7 @@ def _dhash_bits(w: int, h: int, ch: int, pix: bytes) -> int:
 
 def dhash64(payload: bytes) -> int | None:
     """64-bit perceptual difference hash (dHash) over the REAL decode
-    (PNG, baseline JPEG or GIF): grayscale -> nearest-neighbor 9x8 grid ->
+    (``decode_pixels``): grayscale -> nearest-neighbor 9x8 grid ->
     bit (r, c) = grid[r][c] > grid[r][c+1]. Resolution/re-encode-stable
     for identical content, locality-preserving for small edits
     (crops/brightness shift a few bits) — and format-bridging: a PNG and
@@ -1353,16 +1328,7 @@ def dhash64(payload: bytes) -> int | None:
     form, so tagged and baked-in rotations of the same picture are
     near-dups). Returns a SIGNED 64-bit int (Spark LongType-safe
     two's complement) or None for undecodable payloads."""
-    try:
-        decoded = (
-            decode_png_pixels(payload)
-            or decode_jpeg_pixels(payload)
-            or decode_jpeg_progressive_pixels(payload)
-            or decode_gif_pixels(payload)
-            or decode_vp8l_pixels(payload)
-        )
-    except Exception:
-        return None  # truncated/corrupt stream: NULL, not a dead job
+    decoded = decode_pixels(payload)
     if decoded is None:
         return None
     if bytes(payload[:2]) == b"\xff\xd8":
@@ -1470,316 +1436,6 @@ def dhash_near_dupes(
     return verified
 
 
-def _jpeg_next_marker(b: bytes, pos: int) -> int:
-    """First position >= pos of a real marker (0xFF + non-stuffing,
-    non-RST byte) — where the next header segment starts after entropy
-    data."""
-    while pos + 1 < len(b):
-        if b[pos] == 0xFF and b[pos + 1] != 0x00 and not (
-            0xD0 <= b[pos + 1] <= 0xD7
-        ):
-            return pos
-        pos += 1
-    return len(b)
-
-
-def _jpeg_prog_scan(
-    b, pos, scan, ss, se, ah, al, comps, coefs, bdims, huff,
-    restart, mcus_x, mcus_y,
-):
-    """Decode ONE progressive scan's entropy data (T.81 Annex G) into the
-    accumulated per-component coefficient arrays; returns the stream
-    position after the scan. Four scan kinds: DC first / DC refine
-    (interleaved MCU order when the scan has several components,
-    raster block order otherwise) and AC first / AC refine (always one
-    component, raster block order, EOB-run coded). Truncated entropy
-    data keeps whatever decoded (EOFError ends the scan, the progressive
-    contract: every prefix of scans is a valid coarse image)."""
-    reader = _JpegBitReader(b, pos)
-    dc_pred = [0] * len(comps)
-    eobrun = 0
-    p1, m1 = 1 << al, -1 << al
-
-    def refine_nonzero(cf, idx):
-        # one correction bit on an already-nonzero coefficient: magnitude
-        # grows by 2^al in the coefficient's own sign direction
-        if reader.read_bit() and not (cf[idx] & p1):
-            cf[idx] += p1 if cf[idx] > 0 else m1
-
-    def dc_block(ci, by, bx):
-        cf = coefs[ci][by, bx]
-        if ah == 0:
-            s = _jpeg_huff_decode(reader, huff[(0, scan_tabs[ci][0])])
-            dc_pred[ci] += _jpeg_extend(reader.read_bits(s), s)
-            cf[0] = dc_pred[ci] << al
-        else:
-            if reader.read_bit():
-                cf[0] |= p1  # two's-complement OR: exact for negatives too
-
-    def ac_block(ci, by, bx):
-        nonlocal eobrun
-        cf = coefs[ci][by, bx]
-        tac = scan_tabs[ci][1]
-        if ah == 0:  # AC first scan
-            if eobrun:
-                eobrun -= 1
-                return
-            k = ss
-            while k <= se:
-                rs = _jpeg_huff_decode(reader, huff[(1, tac)])
-                r, s = rs >> 4, rs & 15
-                if s == 0:
-                    if r < 15:
-                        eobrun = (1 << r) - 1
-                        if r:
-                            eobrun += reader.read_bits(r)
-                        return
-                    k += 16  # ZRL
-                    continue
-                k += r
-                if k > se:
-                    return
-                cf[_JPEG_ZIGZAG[k]] = _jpeg_extend(reader.read_bits(s), s) << al
-                k += 1
-        else:  # AC refinement scan (stb_image/libjpeg structure)
-            if eobrun:
-                eobrun -= 1
-                for k in range(ss, se + 1):
-                    if cf[_JPEG_ZIGZAG[k]]:
-                        refine_nonzero(cf, _JPEG_ZIGZAG[k])
-                return
-            k = ss
-            while k <= se:
-                rs = _jpeg_huff_decode(reader, huff[(1, tac)])
-                r, s = rs >> 4, rs & 15
-                val = 0
-                if s == 0:
-                    if r < 15:
-                        eobrun = (1 << r) - 1
-                        if r:
-                            eobrun += reader.read_bits(r)
-                        r = 64  # the block's tail is correction bits only
-                else:
-                    val = p1 if reader.read_bit() else m1
-                while k <= se:
-                    idx = _JPEG_ZIGZAG[k]
-                    k += 1
-                    if cf[idx]:
-                        refine_nonzero(cf, idx)
-                    else:
-                        if r == 0:
-                            if val:
-                                cf[idx] = val
-                            break
-                        r -= 1
-
-    scan_tabs = {ci: (tdc, tac) for ci, tdc, tac in scan}
-    unit = 0
-    try:
-        if ss == 0 and len(scan) > 1:  # interleaved DC scan: MCU order
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    if restart and unit and unit % restart == 0:
-                        reader.sync_restart()
-                        dc_pred = [0] * len(comps)
-                    for ci, _t, _a in scan:
-                        _, hs, vs, _q = comps[ci]
-                        for by in range(vs):
-                            for bx in range(hs):
-                                dc_block(ci, my * vs + by, mx * hs + bx)
-                    unit += 1
-        else:  # non-interleaved: the component's true block grid, raster
-            ci = scan[0][0]
-            bw, bh = bdims[ci]
-            for by in range(bh):
-                for bx in range(bw):
-                    if restart and unit and unit % restart == 0:
-                        reader.sync_restart()
-                        dc_pred = [0] * len(comps)
-                        eobrun = 0
-                    if ss == 0:
-                        dc_block(ci, by, bx)
-                    else:
-                        ac_block(ci, by, bx)
-                    unit += 1
-    except (EOFError, IndexError, ValueError):
-        pass  # truncated scan: keep the coefficients decoded so far
-    return _jpeg_next_marker(b, reader.pos)
-
-
-def _jpeg_parse_dht(seg: bytes, huff: dict) -> None:
-    """Parse one DHT segment (possibly several tables) into
-    ``huff[(table_class, table_id)] = {(bitlen, code): symbol}`` —
-    canonical Huffman per T.81 Annex C. ONE definition shared by the
-    baseline and progressive decoders (a fix here must reach both)."""
-    j = 0
-    while j < len(seg):
-        tc, th = seg[j] >> 4, seg[j] & 15
-        counts = seg[j + 1 : j + 17]
-        syms = seg[j + 17 : j + 17 + sum(counts)]
-        table: dict[tuple[int, int], int] = {}
-        code, k = 0, 0
-        for length in range(1, 17):
-            for _ in range(counts[length - 1]):
-                table[(length, code)] = syms[k]
-                code += 1
-                k += 1
-            code <<= 1
-        huff[(tc, th)] = table
-        j += 17 + sum(counts)
-
-
-def decode_jpeg_progressive_pixels(
-    payload: bytes,
-) -> tuple[int, int, int, bytes] | None:
-    """REAL progressive JPEG decode (SOF2 — spectral selection +
-    successive approximation, ITU T.81 Annex G), stdlib + numpy: the
-    marker walk processes every SOS scan in sequence (DHT/DQT may be
-    redefined between scans), accumulating QUANTIZED coefficients per
-    component across scans; after EOI one vectorized dequant + 8x8
-    IDCT-II + chroma upsample + BT.601 conversion produces the pixels.
-    Returns (width, height, channels, row-major samples) or None for
-    non-progressive payloads (baseline SOF0/1 belongs to
-    decode_jpeg_pixels) and unsupported shapes (12-bit, arithmetic,
-    hierarchical)."""
-    import math
-    import struct
-
-    import numpy as np
-
-    if payload is None:
-        return None
-    b = bytes(payload)
-    if b[:2] != b"\xff\xd8":
-        return None
-    qt: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict] = {}
-    comps = None
-    coefs: list = []
-    bdims: list = []
-    restart = 0
-    hmax = vmax = mcus_x = mcus_y = 0
-    h = w = 0
-    i = 2
-    while i + 2 <= len(b):
-        if b[i] != 0xFF:
-            i += 1
-            continue
-        marker = b[i + 1]
-        if marker == 0xFF:  # spec-legal fill byte (B.1.1.2)
-            i += 1
-            continue
-        if marker == 0xD9:
-            break
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            i += 2
-            continue
-        if i + 4 > len(b):
-            break
-        (seglen,) = struct.unpack(">H", b[i + 2 : i + 4])
-        seg = b[i + 4 : i + 2 + seglen]
-        if marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                      0xCB, 0xCD, 0xCE, 0xCF):
-            return None  # baseline/other frames: not this decoder's job
-        if marker == 0xDB:
-            j = 0
-            while j < len(seg):
-                pq, tq = seg[j] >> 4, seg[j] & 15
-                if pq != 0:
-                    return None
-                qt[tq] = list(seg[j + 1 : j + 65])
-                j += 65
-        elif marker == 0xC2:  # SOF2
-            if seg[0] != 8:
-                return None
-            h, w = struct.unpack(">HH", seg[1:5])
-            if not h or not w or h * w > _MAX_DECODE_PIXELS:
-                return None
-            comps = []
-            for c in range(seg[5]):
-                cid, hv, tq_ = seg[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 15, tq_))
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            mcus_x = -(-w // (8 * hmax))
-            mcus_y = -(-h // (8 * vmax))
-            for _cid, hs, vs, _tq in comps:
-                coefs.append(
-                    np.zeros((mcus_y * vs, mcus_x * hs, 64), dtype=np.int64)
-                )
-                cw, ch = -(-w * hs // hmax), -(-h * vs // vmax)
-                bdims.append((-(-cw // 8), -(-ch // 8)))
-        elif marker == 0xC4:
-            _jpeg_parse_dht(seg, huff)
-        elif marker == 0xDD:
-            (restart,) = struct.unpack(">H", seg[:2])
-        elif marker == 0xDA:
-            if comps is None:
-                return None
-            ncs = seg[0]
-            scan = []
-            for c in range(ncs):
-                cid, tabs = seg[1 + 2 * c], seg[2 + 2 * c]
-                idx = next(
-                    (k for k, fc in enumerate(comps) if fc[0] == cid), None
-                )
-                if idx is None:
-                    return None
-                scan.append((idx, tabs >> 4, tabs & 15))
-            ss, se = seg[1 + 2 * ncs], seg[2 + 2 * ncs]
-            ahal = seg[3 + 2 * ncs]
-            i = _jpeg_prog_scan(
-                b, i + 2 + seglen, scan, ss, se, ahal >> 4, ahal & 15,
-                comps, coefs, bdims, huff, restart, mcus_x, mcus_y,
-            )
-            continue
-        i += 2 + seglen
-    if comps is None:
-        return None
-
-    A = np.array(
-        [
-            [
-                (math.sqrt(0.5) if u == 0 else 1.0) / 2.0
-                * math.cos((2 * x + 1) * u * math.pi / 16.0)
-                for x in range(8)
-            ]
-            for u in range(8)
-        ]
-    )
-    full = []
-    for (cid, hs, vs, tq_), cf in zip(comps, coefs):
-        if tq_ not in qt:
-            return None
-        # coefficients sit at NATURAL positions (stored via _JPEG_ZIGZAG
-        # at decode time) but the quant table arrives in zigzag order
-        q_nat = np.zeros(64)
-        for zz_i, nat in enumerate(_JPEG_ZIGZAG):
-            q_nat[nat] = qt[tq_][zz_i]
-        deq = cf.astype(np.float64) * q_nat
-        bh, bw = cf.shape[0], cf.shape[1]
-        blocks = deq.reshape(bh, bw, 8, 8)
-        pix = np.einsum("uy,rcuv,vx->rycx", A, blocks, A) + 128.0
-        plane = pix.reshape(bh * 8, bw * 8)
-        up = np.repeat(
-            np.repeat(plane, vmax // vs, axis=0), hmax // hs, axis=1
-        )
-        full.append(up[:h, :w])
-    if len(full) == 1:
-        out = np.clip(np.round(full[0]), 0, 255).astype(np.uint8)
-        return (w, h, 1, out.tobytes())
-    if len(full) != 3:
-        return None
-    y, cb, cr = full[0], full[1] - 128.0, full[2] - 128.0
-    r = y + 1.402 * cr
-    g = y - 0.344136 * cb - 0.714136 * cr
-    bch = y + 1.772 * cb
-    rgb = np.stack(
-        [np.clip(np.round(p), 0, 255) for p in (r, g, bch)], axis=-1
-    ).astype(np.uint8)
-    return (w, h, 3, rgb.tobytes())
-
-
 # JPEG zigzag order (ITU T.81 Figure A.6): index in the entropy stream ->
 # (row*8 + col) position in the 8x8 block.
 _JPEG_ZIGZAG = [
@@ -1792,7 +1448,7 @@ _JPEG_ZIGZAG = [
 
 class _JpegBitReader:
     """Entropy-stream bit reader: un-stuffs 0xFF00, surfaces restart
-    markers (RST0-7) via align_to_marker, stops cleanly at other markers."""
+    markers (RST0-7) via sync_restart, stops cleanly at other markers."""
 
     def __init__(self, data: bytes, pos: int) -> None:
         self.d, self.pos, self.bit = data, pos, 0
@@ -1839,17 +1495,170 @@ def _jpeg_huff_decode(reader, table: dict) -> int:
     raise ValueError("invalid JPEG Huffman code")
 
 
+def _jpeg_next_marker(b: bytes, pos: int) -> int:
+    """First position >= pos of a real marker (0xFF + non-stuffing,
+    non-RST byte) — where the next header segment starts after entropy
+    data."""
+    while pos + 1 < len(b):
+        if b[pos] == 0xFF and b[pos + 1] != 0x00 and not (
+            0xD0 <= b[pos + 1] <= 0xD7
+        ):
+            return pos
+        pos += 1
+    return len(b)
+
+
+def _jpeg_parse_dht(seg: bytes, huff: dict) -> None:
+    """Parse one DHT segment (possibly several tables) into
+    ``huff[(table_class, table_id)] = {(bitlen, code): symbol}`` —
+    canonical Huffman per T.81 Annex C. A DHT may redefine a table
+    between scans; each SOS binds the tables current at that point."""
+    j = 0
+    while j < len(seg):
+        tc, th = seg[j] >> 4, seg[j] & 15
+        counts = seg[j + 1 : j + 17]
+        syms = seg[j + 17 : j + 17 + sum(counts)]
+        table: dict[tuple[int, int], int] = {}
+        code, k = 0, 0
+        for length in range(1, 17):
+            for _ in range(counts[length - 1]):
+                table[(length, code)] = syms[k]
+                code += 1
+                k += 1
+            code <<= 1
+        huff[(tc, th)] = table
+        j += 17 + sum(counts)
+
+
+def _jpeg_scan(
+    reader, scan, ss, se, ah, al, sequential, restart, mcus_x, mcus_y,
+):
+    """Decode ONE scan's entropy data into the QUANTIZED coefficient
+    arrays of its components, at natural positions. ``scan`` holds one
+    (coefs, hs, vs, blocks_x, blocks_y, dc table, ac table) per
+    component. Progressive scans (T.81 Annex G) are DC first / DC refine
+    and AC first / AC refine (one component, EOB-run coded). A
+    sequential scan (Annex F) is an AC-first scan with ss=0, se=63,
+    ah=al=0: each block decodes its DC, then its AC run, and a run past
+    index 63 is corrupt data. A DC or sequential scan with several
+    components walks interleaved MCU order; a one-component scan walks
+    the component's true block grid in raster order. Truncated or
+    corrupt data raises; the caller decides what a scan keeps."""
+    dc_pred = [0] * len(scan)
+    eobrun = 0
+    p1, m1 = 1 << al, -1 << al
+
+    def refine_nonzero(cf, idx):
+        # one correction bit on an already-nonzero coefficient: magnitude
+        # grows by 2^al in the coefficient's own sign direction
+        if reader.read_bit() and not (cf[idx] & p1):
+            cf[idx] += p1 if cf[idx] > 0 else m1
+
+    def block(n, cf):
+        nonlocal eobrun
+        if ss == 0:
+            if ah == 0:
+                s = _jpeg_huff_decode(reader, scan[n][5])
+                dc_pred[n] += _jpeg_extend(reader.read_bits(s), s)
+                cf[0] = dc_pred[n] << al
+            elif reader.read_bit():
+                cf[0] |= p1  # two's-complement OR: exact for negatives too
+            if not sequential:
+                return
+        k, tac = ss or 1, scan[n][6]
+        if ah == 0:  # AC first scan, or the AC run of a sequential block
+            if eobrun:
+                eobrun -= 1
+                return
+            while k <= se:
+                rs = _jpeg_huff_decode(reader, tac)
+                r, s = rs >> 4, rs & 15
+                if s == 0:
+                    if r < 15:
+                        eobrun = (1 << r) - 1
+                        if r:
+                            eobrun += reader.read_bits(r)
+                        return
+                    k += 16  # ZRL
+                    continue
+                k += r
+                if k > se:
+                    if sequential:
+                        raise ValueError("JPEG AC run past index 63")
+                    return
+                cf[_JPEG_ZIGZAG[k]] = _jpeg_extend(reader.read_bits(s), s) << al
+                k += 1
+        else:  # AC refinement scan (stb_image/libjpeg structure)
+            if eobrun:
+                eobrun -= 1
+                for k in range(ss, se + 1):
+                    if cf[_JPEG_ZIGZAG[k]]:
+                        refine_nonzero(cf, _JPEG_ZIGZAG[k])
+                return
+            while k <= se:
+                rs = _jpeg_huff_decode(reader, tac)
+                r, s = rs >> 4, rs & 15
+                val = 0
+                if s == 0:
+                    if r < 15:
+                        eobrun = (1 << r) - 1
+                        if r:
+                            eobrun += reader.read_bits(r)
+                        r = 64  # the block's tail is correction bits only
+                else:
+                    val = p1 if reader.read_bit() else m1
+                while k <= se:
+                    idx = _JPEG_ZIGZAG[k]
+                    k += 1
+                    if cf[idx]:
+                        refine_nonzero(cf, idx)
+                    else:
+                        if r == 0:
+                            if val:
+                                cf[idx] = val
+                            break
+                        r -= 1
+
+    if ss == 0 and len(scan) > 1:  # interleaved: MCU order
+        units = (
+            [
+                (n, cf[my * vs + by, mx * hs + bx])
+                for n, (cf, hs, vs, *_tabs) in enumerate(scan)
+                for by in range(vs)
+                for bx in range(hs)
+            ]
+            for my in range(mcus_y)
+            for mx in range(mcus_x)
+        )
+    else:  # one component: its true block grid, raster order
+        cf, _hs, _vs, bw, bh = scan[0][:5]
+        units = ([(0, cf[by, bx])] for by in range(bh) for bx in range(bw))
+    for unit, blocks in enumerate(units):
+        if restart and unit and unit % restart == 0:
+            reader.sync_restart()
+            dc_pred = [0] * len(scan)
+            eobrun = 0
+        for n, blk in blocks:
+            block(n, blk)
+
+
 def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes] | None:
-    """REAL baseline JPEG decode, stdlib + numpy: marker walk (DQT/SOF0/
-    DHT/DRI/SOS) -> canonical-Huffman entropy decode with byte-unstuffing
-    and restart-marker resync -> dequantize -> de-zigzag -> 8x8 IDCT-II
-    (numpy basis product) -> per-component nearest-neighbor chroma
-    upsample -> BT.601 YCbCr->RGB. Returns (width, height, channels,
-    row-major 8-bit samples) or None for non-JPEG / non-baseline shapes
-    (progressive SOF2, arithmetic coding, precision != 8). Correctness
-    path like decode_png_pixels: per-symbol Python is fine for the test
-    tier; production swaps a C codec inside the same image_pixels
-    plumbing. Spec: ITU T.81 sections B.2, F.2."""
+    """REAL JPEG decode of Huffman-coded 8-bit frames, sequential (SOF0/1,
+    ITU T.81 Annex F) and progressive (SOF2, spectral selection +
+    successive approximation, Annex G), stdlib + numpy. One marker walk
+    runs every SOS scan (DHT/DQT may be redefined between scans), each
+    accumulating QUANTIZED coefficients per component through
+    ``_jpeg_scan``; after EOI one vectorized dequantize + 8x8 IDCT-II
+    (``A.T @ blocks @ A``) + nearest-neighbor chroma upsample + BT.601
+    YCbCr->RGB produces the pixels. Returns (width, height, channels,
+    row-major 8-bit samples) or None for non-JPEG payloads, unsupported
+    frames (lossless, hierarchical, arithmetic-coded, 12-bit, a component
+    count other than 1 or 3) and a sequential frame with no scan.
+    Truncated or corrupt sequential data raises (callers map it to NULL);
+    a truncated progressive stream keeps the scans decoded before the
+    cut. Correctness path like decode_png_pixels: per-symbol Python is
+    fine for the test tier; production swaps a C codec inside the same
+    image_pixels plumbing."""
     import math
     import struct
 
@@ -1862,9 +1671,9 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes] | None:
         return None
     qt: dict[int, list[int]] = {}
     huff: dict[tuple[int, int], dict] = {}
-    frame = None  # (h, w, [(comp_id, hs, vs, tq)])
+    comps = None  # [(comp_id, hs, vs, tq)] from the SOF
     restart = 0
-    scan = None
+    scanned = False
     i = 2
     while i + 4 <= len(b):
         if b[i] != 0xFF:
@@ -1874,64 +1683,87 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes] | None:
         if marker == 0xFF:  # spec-legal fill byte (B.1.1.2)
             i += 1
             continue
+        if marker == 0xD9:  # EOI
+            break
         if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
             i += 2  # standalone markers carry no length field
             continue
-        if marker in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                      0xCD, 0xCE, 0xCF):
-            return None  # non-baseline frame
-        if marker == 0xD9:  # EOI
-            break
         (seglen,) = struct.unpack(">H", b[i + 2 : i + 4])
         seg = b[i + 4 : i + 2 + seglen]
+        if marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD,
+                      0xCE, 0xCF):
+            return None  # lossless, hierarchical or arithmetic frame
         if marker == 0xDB:  # DQT (possibly several tables per segment)
             j = 0
             while j < len(seg):
                 pq, tq = seg[j] >> 4, seg[j] & 15
                 if pq != 0:
-                    return None  # 16-bit quant: not baseline-8
+                    return None  # 16-bit quant: 12-bit precision frames
                 qt[tq] = list(seg[j + 1 : j + 65])
                 j += 65
-        elif marker == 0xC0 or marker == 0xC1:  # SOF0/1 (baseline huffman)
-            if seg[0] != 8:
-                return None
+        elif marker in (0xC0, 0xC1, 0xC2):  # Huffman sequential / SOF2
             h, w = struct.unpack(">HH", seg[1:5])
-            if h * w > _MAX_DECODE_PIXELS:
+            comps = [
+                (seg[6 + 3 * c], seg[7 + 3 * c] >> 4, seg[7 + 3 * c] & 15,
+                 seg[8 + 3 * c])
+                for c in range(seg[5])
+            ]
+            if seg[0] != 8 or len(comps) not in (1, 3) or not (
+                0 < h * w <= _MAX_DECODE_PIXELS
+            ) or not all(hs and vs for _cid, hs, vs, _tq in comps):
                 return None
-            ncomp = seg[5]
-            comps = []
-            for c in range(ncomp):
-                cid, hv, tq_ = seg[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 15, tq_))
-            frame = (h, w, comps)
+            progressive = marker == 0xC2
+            hmax = max(c[1] for c in comps)
+            vmax = max(c[2] for c in comps)
+            mcus_x = -(-w // (8 * hmax))
+            mcus_y = -(-h // (8 * vmax))
+            coefs = [
+                np.zeros((mcus_y * vs, mcus_x * hs, 64), dtype=np.int64)
+                for _cid, hs, vs, _tq in comps
+            ]
         elif marker == 0xC4:  # DHT
             _jpeg_parse_dht(seg, huff)
         elif marker == 0xDD:  # DRI
             (restart,) = struct.unpack(">H", seg[:2])
         elif marker == 0xDA:  # SOS
-            if frame is None:
+            if comps is None:
                 return None  # SOS before SOF: malformed stream
-            ncomp_s = seg[0]
-            scan = []  # (comp index in frame, dc table, ac table)
-            for c in range(ncomp_s):
+            ncs = seg[0]
+            scan = []
+            for c in range(ncs):
                 cid, tabs = seg[1 + 2 * c], seg[2 + 2 * c]
                 idx = next(
-                    k for k, fc in enumerate(frame[2]) if fc[0] == cid
+                    (k for k, fc in enumerate(comps) if fc[0] == cid), None
                 )
-                scan.append((idx, tabs >> 4, tabs & 15))
-            i = i + 2 + seglen  # entropy data starts here
-            break
+                if idx is None:
+                    return None
+                _cid, hs, vs, _tq = comps[idx]
+                scan.append((
+                    coefs[idx], hs, vs,
+                    -(-w * hs // (8 * hmax)), -(-h * vs // (8 * vmax)),
+                    huff.get((0, tabs >> 4)), huff.get((1, tabs & 15)),
+                ))
+            # a sequential scan is Ss=0, Se=63, Ah=Al=0 whatever it says
+            ss, se, ahal = (
+                seg[1 + 2 * ncs : 4 + 2 * ncs] if progressive else (0, 63, 0)
+            )
+            reader = _JpegBitReader(b, i + 2 + seglen)
+            try:
+                _jpeg_scan(
+                    reader, scan, ss, se, ahal >> 4, ahal & 15,
+                    not progressive, restart, mcus_x, mcus_y,
+                )
+            except (EOFError, IndexError, ValueError):
+                if not progressive:
+                    raise
+                # every prefix of progressive scans is a coarse image
+            scanned = True
+            i = _jpeg_next_marker(b, reader.pos)
+            continue
         i += 2 + seglen
-    else:
+    if comps is None or not (scanned or progressive):
         return None
-    if frame is None or scan is None:
-        return None  # EOI (or EOF) before any SOS: nothing to decode
 
-    h, w, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
     # IDCT basis: A[u, x] = c(u)/2 * cos((2x+1) u pi / 16)
     A = np.array(
         [
@@ -1943,50 +1775,19 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes] | None:
             for u in range(8)
         ]
     )
-    planes = [
-        np.zeros((mcus_y * 8 * c[2], mcus_x * 8 * c[1])) for c in comps
-    ]
-    reader = _JpegBitReader(b, i)
-    dc_pred = [0] * len(comps)
-    mcu_count = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart and mcu_count and mcu_count % restart == 0:
-                reader.sync_restart()
-                dc_pred = [0] * len(comps)
-            for ci, tdc, tac in scan:
-                _, hs, vs, tq_ = comps[ci]
-                for by in range(vs):
-                    for bx in range(hs):
-                        coef = np.zeros(64)
-                        s = _jpeg_huff_decode(reader, huff[(0, tdc)])
-                        dc_pred[ci] += _jpeg_extend(reader.read_bits(s), s)
-                        coef[0] = dc_pred[ci] * qt[tq_][0]
-                        k = 1
-                        while k < 64:
-                            rs = _jpeg_huff_decode(reader, huff[(1, tac)])
-                            if rs == 0:
-                                break
-                            if rs == 0xF0:
-                                k += 16
-                                continue
-                            k += rs >> 4
-                            s = rs & 15
-                            coef[_JPEG_ZIGZAG[k]] = (
-                                _jpeg_extend(reader.read_bits(s), s)
-                                * qt[tq_][k]
-                            )
-                            k += 1
-                        block = A.T @ coef.reshape(8, 8) @ A + 128.0
-                        y0 = (my * vs + by) * 8
-                        x0 = (mx * hs + bx) * 8
-                        planes[ci][y0 : y0 + 8, x0 : x0 + 8] = block
-            mcu_count += 1
-
-    # upsample every component to full resolution (nearest), crop to (h, w)
     full = []
-    for (cid, hs, vs, _tq), plane in zip(comps, planes):
-        up = np.repeat(np.repeat(plane, vmax // vs, axis=0), hmax // hs, axis=1)
+    for (_cid, hs, vs, tq), cf in zip(comps, coefs):
+        if tq not in qt:
+            return None
+        q_nat = np.zeros(64)  # the quant table arrives in zigzag order
+        q_nat[_JPEG_ZIGZAG] = qt[tq]
+        bh, bw = cf.shape[:2]
+        blocks = (cf * q_nat).reshape(bh, bw, 8, 8)
+        pix = (A.T @ blocks @ A + 128.0).transpose(0, 2, 1, 3)
+        plane = pix.reshape(bh * 8, bw * 8)
+        up = np.repeat(
+            np.repeat(plane, vmax // vs, axis=0), hmax // hs, axis=1
+        )
         full.append(up[:h, :w])
     if len(full) == 1:
         out = np.clip(np.round(full[0]), 0, 255).astype(np.uint8)
