@@ -1610,7 +1610,7 @@ def q_synchronized_texts(spark, sf_dir):
 
 def q_media_metadata(spark, sf_dir):
     # multimodal plumbing: binary payload -> typed metadata (hash/size via
-    # mapInPandas; md5 hex matches the SQL oracle)
+    # map_rows over mapInArrow; md5 hex matches the SQL oracle)
     from textractssmlprocessor_spark.operators.multimodal import media_metadata
 
     d = _docs(spark, sf_dir).select(
@@ -1775,9 +1775,9 @@ def q_ocr_reconstruct(spark, sf_dir):
     # Two variants of the north-star layout path: 'blocks' reconstructs
     # the synthetic Textract-style blocks table; 'pdf' runs the FULL
     # pipeline from raw binary — operators/pdf.py content-stream parse
-    # (mapInPandas, zero shuffle) -> positioned blocks -> line banding ->
-    # running-head/folio strip -> document text, against fixture PDFs
-    # whose intended text the oracle states as literals.
+    # (map_rows over mapInArrow, zero shuffle) -> positioned blocks ->
+    # line banding -> running-head/folio strip -> document text, against
+    # fixture PDFs whose intended text the oracle states as literals.
     from textractssmlprocessor_spark.materialize import cut
     from textractssmlprocessor_spark.operators.ocr import reconstruct_documents
     from textractssmlprocessor_spark.operators.pdf import pdf_blocks

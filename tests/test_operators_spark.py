@@ -2349,6 +2349,44 @@ def test_decode_jpeg_progressive_exact():
         assert (px == exp).all(), (dc, ac, px[0], exp[0])
 
 
+def test_jpeg_bit_reader_end_of_data_is_eof_error():
+    """The entropy reader signals the end of its data as EOFError: after
+    the 8 bits of a 1-byte payload, and at a marker."""
+    import pytest as _pytest
+
+    from textractssmlprocessor_spark.operators.multimodal import _JpegBitReader
+
+    r = _JpegBitReader(b"\xa5", 0)
+    assert r.read_bits(8) == 0xA5
+    with _pytest.raises(EOFError):
+        r.read_bit()
+    with _pytest.raises(EOFError):
+        _JpegBitReader(b"\xff", 0).read_bit()
+    with _pytest.raises(EOFError):
+        _JpegBitReader(b"\xff\xd9", 0).read_bit()
+    assert _JpegBitReader(b"\xff\x00", 0).read_bits(8) == 0xFF  # stuffed
+
+
+def test_progressive_scan_bug_is_not_read_as_truncation(monkeypatch):
+    """A progressive stream keeps the scans decoded before the end of its
+    data (EOFError) or a corrupt code (ValueError), but any other error
+    inside a scan is a decoder bug and must raise, not come back as a
+    coarse image."""
+    import pytest as _pytest
+
+    from textractssmlprocessor_spark.operators import multimodal
+
+    data = _build_prog_jpeg_gray8(256, 7)
+    assert multimodal.decode_jpeg_pixels(data) is not None
+
+    def broken_scan(*args, **kwargs):
+        raise IndexError("decoder bug")
+
+    monkeypatch.setattr(multimodal, "_jpeg_scan", broken_scan)
+    with _pytest.raises(IndexError):
+        multimodal.decode_jpeg_pixels(data)
+
+
 def test_decode_jpeg_progressive_real_fixtures():
     """Real encoder output: SOF2 files shipped with system packages decode
     deterministically with correct header dimensions, sane content (the

@@ -106,8 +106,8 @@ def test_corrupt_and_textless_inputs():
 
 def test_spark_pdf_to_document_reconstruction(spark):
     """The north-star layout path end-to-end: binary PDFs -> positioned
-    blocks (mapInPandas) -> line banding -> running-head/folio strip ->
-    document text."""
+    blocks (map_rows over mapInArrow) -> line banding -> running-head/folio
+    strip -> document text."""
     from textractssmlprocessor_spark.operators.ocr import reconstruct_documents
 
     def book(urlseed: str) -> bytes:

@@ -93,7 +93,8 @@ def test_pdf_blocks_is_one_mapinpandas_pass(spark):
         "url string, payload binary",
     )
     plan = _plan(pdf_blocks(df))
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan, plan
     assert "Exchange" not in plan, plan
 
 

@@ -331,3 +331,40 @@ def test_wat_hostile_payload_types_contained(spark, tmp_path):
     r2 = rows["https://wat.example.org/2"]
     assert r2["title"] == "Good Title"
     assert r2["links"] == []  # dict Links treated as absent-list
+
+
+def test_warc_offset_dates_are_utc_instants(spark, tmp_path):
+    """A WARC/1.1 date with a UTC offset lands as its UTC instant (the
+    session runs in UTC); a date whose UTC instant falls outside the
+    calendar is NULL rather than a failed task."""
+    import datetime as dt
+
+    p = tmp_path / "offset.warc"
+    p.write_bytes(
+        _record("resource", b"<p>a</p>", url="https://o.example.org/1",
+                date="2024-05-01T12:30:00.5+02:00")
+        + _record("resource", b"<p>b</p>", url="https://o.example.org/2",
+                  date="0001-01-01T00:00:00+05:00")
+    )
+    from textractssmlprocessor_spark.sources import read_warc
+
+    ts = {r["url"]: r["warc_ts"] for r in read_warc(spark, str(p)).collect()}
+    assert ts == {
+        "https://o.example.org/1": dt.datetime(2024, 5, 1, 10, 30, 0, 500000),
+        "https://o.example.org/2": None,
+    }
+
+
+def test_segments_without_matching_records_yield_no_rows(spark, tmp_path):
+    """A segment with no record of the requested type is an empty batch,
+    not a failed task: WET over a WARC-only segment, WAT over a segment
+    with no metadata record."""
+    p = tmp_path / "html-only.warc"
+    p.write_bytes(
+        _record("response", b"HTTP/1.1 200 OK\r\n\r\n<p>x</p>",
+                url="https://h.example.org/1")
+    )
+    from textractssmlprocessor_spark.sources import read_wat, read_wet
+
+    assert read_wet(spark, str(p)).collect() == []
+    assert read_wat(spark, str(p)).collect() == []

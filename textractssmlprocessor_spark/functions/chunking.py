@@ -21,32 +21,21 @@ DEFAULT_SSML_CHUNK = 2500
 
 def chunk_text(text: str, max_chunk_size: int = DEFAULT_TEXT_CHUNK) -> List[str]:
     """Greedy sentence packing, byte-compatible with reference utils.py:60-84
-    given the same sentence splitter (see functions/sentencize.py).
-
-    Packing rule (order matters): if adding the next sentence would overflow a
-    non-empty chunk, flush first; after appending ``sentence + " "``, flush
-    again if the chunk is already >= max. Chunks are stripped.
-    """
-    chunks: List[str] = []
-    current = ""
-    for sentence in sentencize(text):
-        if len(current) + len(sentence) > max_chunk_size and current:
-            chunks.append(current.strip())
-            current = ""
-        current += sentence + " "
-        if len(current) >= max_chunk_size:
-            chunks.append(current.strip())
-            current = ""
-    if current:
-        chunks.append(current.strip())
-    return chunks
+    given the same sentence splitter (see functions/sentencize.py): the
+    chunk strings of :func:`chunk_text_with_spans`, the one packer."""
+    return [c for c, _, _ in chunk_text_with_spans(text, max_chunk_size)]
 
 
 def chunk_text_with_spans(
     text: str, max_chunk_size: int = DEFAULT_TEXT_CHUNK
 ) -> List[Tuple[str, int, int]]:
-    """Like :func:`chunk_text` but each chunk carries ``(chunk, start, end)``
-    character offsets into the *input* text covering its first..last sentence.
+    """Greedy sentence packing (reference utils.py:60-84) with each chunk's
+    ``(chunk, start, end)`` character offsets into the *input* text covering
+    its first..last sentence.
+
+    Packing rule (order matters): if adding the next sentence would overflow a
+    non-empty chunk, flush first; after appending ``sentence + " "``, flush
+    again if the chunk is already >= max. Chunks are stripped.
 
     ``text[start:end]`` contains the chunk's sentences with their original
     inter-sentence whitespace (the chunk string itself normalizes separators

@@ -11,7 +11,7 @@ they are one AQE-planned shuffle join on a near-unique key (no skew).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .textstats import fingerprint
@@ -85,6 +85,24 @@ def new_against_history(
     )
 
 
+def _bloom_bits(fp: Column, m_bits: int, k: int) -> list[tuple[Column, Column]]:
+    """The k Bloom bits of fingerprint ``fp`` as (word_idx, mask) pairs:
+    hash_i = conv(md5(fp || ':' || i)[:8 hex], 16, 10) mod m_bits sets
+    bit hash_i % 64 of the bigint word floor(hash_i / 64)."""
+    out = []
+    for i in range(1, k + 1):
+        h = F.conv(
+            F.substring(F.md5(F.concat(fp, F.lit(f":{i}"))), 1, 8), 16, 10
+        ).cast("bigint") % m_bits
+        # pyspark's shiftleft() wants a literal shift; the column-shift
+        # form is the SQL function
+        mask = F.call_function(
+            "shiftleft", F.lit(1).cast("bigint"), (h % 64).cast("int")
+        )
+        out.append((F.floor(h / 64).cast("bigint"), mask))
+    return out
+
+
 def bloom_bitmap(
     seen_fingerprints: DataFrame,
     m_bits: int = 1 << 20,
@@ -107,26 +125,13 @@ def bloom_bitmap(
     10^8 fingerprints at ~1.2% FP with k=4. The bitmap table broadcasts
     (it is m/64 rows regardless of history size) — probing NEVER
     shuffles the corpus."""
-    fp = F.col("fingerprint")
-    hashes = [
-        (
-            F.conv(
-                F.substring(F.md5(F.concat(fp, F.lit(f":{i}"))), 1, 8), 16, 10
-            ).cast("bigint")
-            % m_bits
-        )
-        for i in range(1, k + 1)
+    bits = [
+        F.struct(word.alias("word_idx"), mask.alias("mask"))
+        for word, mask in _bloom_bits(F.col("fingerprint"), m_bits, k)
     ]
     return (
-        seen_fingerprints.select(F.explode(F.array(*hashes)).alias("h"))
-        .select(
-            F.floor(F.col("h") / 64).cast("bigint").alias("word_idx"),
-            # pyspark's shiftleft() wants a literal shift; the column-shift
-            # form exists only in SQL
-            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(h % 64 AS INT))").alias(
-                "mask"
-            ),
-        )
+        seen_fingerprints.select(F.explode(F.array(*bits)).alias("b"))
+        .select("b.word_idx", "b.mask")
         .groupBy("word_idx")
         .agg(F.bit_or("mask").alias("bits"))
     )
@@ -157,31 +162,22 @@ def new_against_history_bloom(
     sketch-then-verify trade, with exactness preserved by construction.
     """
     bitmap = bloom_bitmap(seen_fingerprints, m_bits=m_bits, k=k)
-    fingerprinted = new.withColumn("fingerprint", fingerprint(F.col(text_col)))
-    probed = fingerprinted
+    probed = new.withColumn("fingerprint", fingerprint(F.col(text_col)))
     maybe = F.lit(True)
-    fp = F.col("fingerprint")
-    for i in range(1, k + 1):
-        h = F.conv(
-            F.substring(F.md5(F.concat(fp, F.lit(f":{i}"))), 1, 8), 16, 10
-        ).cast("bigint") % m_bits
-        probed = probed.withColumn(f"_h{i}", h)
+    for i, (word, mask) in enumerate(_bloom_bits(F.col("fingerprint"), m_bits, k)):
+        probed = probed.withColumns({f"_h{i}": word, f"_m{i}": mask})
         w = F.broadcast(
             bitmap.select(
                 F.col("word_idx").alias(f"_w{i}"), F.col("bits").alias(f"_b{i}")
             )
         )
-        probed = probed.join(
-            w,
-            F.floor(F.col(f"_h{i}") / 64).cast("bigint") == F.col(f"_w{i}"),
-            "left",
-        )
-        mask = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(_h{i} % 64 AS INT))")
+        probed = probed.join(w, F.col(f"_h{i}") == F.col(f"_w{i}"), "left")
         maybe = maybe & (
-            F.col(f"_b{i}").isNotNull() & (F.col(f"_b{i}").bitwiseAND(mask) != 0)
+            F.col(f"_b{i}").isNotNull()
+            & (F.col(f"_b{i}").bitwiseAND(F.col(f"_m{i}")) != 0)
         )
     probed = probed.withColumn("_maybe", maybe).drop(
-        *[c for i in range(1, k + 1) for c in (f"_w{i}", f"_b{i}", f"_h{i}")]
+        *[f"_{c}{i}" for i in range(k) for c in "hmwb"]
     )
     fresh = probed.filter(~F.col("_maybe")).drop("_maybe")
     candidates = probed.filter(F.col("_maybe")).drop("_maybe")

@@ -19,14 +19,13 @@ transforms per the public VP8L spec / RFC 9649), exposed distributed as
 ``image_pixels``. The chain covers the formats that make up essentially
 all web images; it returns None for payloads outside them (lossy VP8 is
 an arithmetic-coded codec) and for corrupt streams.
-Everything Spark-side — schema, Arrow batch shape, mapInPandas
-partitioning — is real and tested.
+Everything Spark-side — schema, Arrow batch shape, the ``map_rows`` pass
+(one row function per operator over ``mapInArrow``) — is real and tested.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -41,6 +40,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .udfs import map_rows
 
 MEDIA_META_SCHEMA = StructType(
     [
@@ -785,7 +786,7 @@ def image_pixels(
 ) -> DataFrame:
     """Distributed REAL pixel decode (``decode_pixels``): binary image
     column -> (width, height, channels, row-major samples) via
-    mapInPandas.
+    ``map_rows``.
     Undecodable rows get NULLs (total function — one bad payload never
     kills a 100 TB job) plus an ``undecodable_codec`` audit label when the
     container was recognized, so a corpus rollup can quantify the decode
@@ -794,35 +795,13 @@ def image_pixels(
     ``byte_histogram_features`` or any downstream embedding UDF without
     leaving the Arrow batch path."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                decode_pixels(bytes(p)) if p is not None else None
-                for p in pdf[bin_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    "url": pdf[url_col],
-                    "width": pd.array(
-                        [r[0] if r else None for r in rows], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [r[1] if r else None for r in rows], dtype="Int32"
-                    ),
-                    "channels": pd.array(
-                        [r[2] if r else None for r in rows], dtype="Int32"
-                    ),
-                    "pixels": [r[3] if r else None for r in rows],
-                    "undecodable_codec": [
-                        undecodable_codec(bytes(p))
-                        if r is None and p is not None
-                        else None
-                        for r, p in zip(rows, pdf[bin_col])
-                    ],
-                }
-            )
+    def row(url, p):
+        if p is None:
+            return [(url, *[None] * 5)]
+        r = decode_pixels(p)
+        return [(url, *r, None) if r else (url, *[None] * 4, undecodable_codec(p))]
 
-    return df.select(url_col, bin_col).mapInPandas(gen, PIXELS_SCHEMA)
+    return map_rows(df.select(url_col, bin_col), row, PIXELS_SCHEMA)
 
 
 def image_dimensions(payload: bytes) -> tuple[str, int, int] | None:
@@ -1101,7 +1080,7 @@ def media_metadata(
     df: DataFrame, url_col: str = "url", bin_col: str = "payload",
     media_type: str = "binary",
 ) -> DataFrame:
-    """Binary column -> typed metadata rows via mapInPandas (Arrow batches;
+    """Binary column -> typed metadata rows via ``map_rows`` (Arrow batches;
     the binary never converts to Python objects row-by-row on the driver).
     width/height/media_type are REAL, parsed from the container header
     (``image_dimensions``; PNG/JPEG/GIF/BMP), and so are
@@ -1109,51 +1088,19 @@ def media_metadata(
     (``audio_metadata``; WAV/MP3); unrecognized payloads keep the
     ``media_type`` default with NULL dimensions/duration."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[bin_col]
-            dims = [
-                image_dimensions(bytes(p)) if p is not None else None
-                for p in payloads
-            ]
-            auds = [
-                audio_metadata(bytes(p)) if d is None and p is not None else None
-                for d, p in zip(dims, payloads)
-            ]
-            yield pd.DataFrame(
-                {
-                    "url": pdf[url_col],
-                    "media_type": [
-                        d[0] if d else a[0] if a
-                        else (media_type if p is not None else None)
-                        for d, a, p in zip(dims, auds, payloads)
-                    ],
-                    # NULL payload -> NULL n_bytes: "no media" is not a
-                    # zero-byte media object (media_type/content_hash are
-                    # already NULL on this row; 0 here was the one
-                    # inconsistent field)
-                    "n_bytes": [
-                        len(p) if p is not None else None for p in payloads
-                    ],
-                    "content_hash": [
-                        hashlib.md5(bytes(p)).hexdigest() if p is not None else None
-                        for p in payloads
-                    ],
-                    "width": [d[1] if d else None for d in dims],
-                    "height": [d[2] if d else None for d in dims],
-                    "duration_ms": pd.array(
-                        [a[1] if a else None for a in auds], dtype="Int64"
-                    ),
-                    "sample_rate": pd.array(
-                        [a[2] if a else None for a in auds], dtype="Int32"
-                    ),
-                    "channels": pd.array(
-                        [a[3] if a else None for a in auds], dtype="Int32"
-                    ),
-                }
-            )
+    def row(url, p):
+        if p is None:
+            # "no media" is not a zero-byte media object: every field NULL
+            return [(url, *[None] * 8)]
+        d = image_dimensions(p)
+        a = None if d else audio_metadata(p)
+        kind = d[0] if d else a[0] if a else media_type
+        return [(
+            url, kind, len(p), hashlib.md5(p).hexdigest(),
+            *(d[1:] if d else (None, None)), *(a[1:] if a else (None,) * 3),
+        )]
 
-    return df.select(url_col, bin_col).mapInPandas(gen, MEDIA_META_SCHEMA)
+    return map_rows(df.select(url_col, bin_col), row, MEDIA_META_SCHEMA)
 
 
 FEATURES_SCHEMA = StructType(
@@ -1181,23 +1128,17 @@ def byte_histogram_features(
     computable without media libraries, directly consumable by the
     similarity operators (cosine_topk / ann_lsh_topk); swapping in a CNN
     embedding replaces only the inner numpy expression."""
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(url, p):
+        if p is None:
+            return [(url, None)]
+        arr = np.frombuffer(p, dtype=np.uint8)
+        hist = np.bincount(arr >> 2, minlength=64).astype("float64")
+        norm = float(np.sqrt((hist * hist).sum()))
+        return [(url, (hist / norm if norm else hist).tolist())]
 
-        for pdf in batches:
-            feats = []
-            for p in pdf[bin_col]:
-                if p is None:
-                    feats.append(None)
-                    continue
-                arr = np.frombuffer(bytes(p), dtype=np.uint8)
-                hist = np.bincount(arr >> 2, minlength=64).astype("float64")
-                norm = float(np.sqrt((hist * hist).sum()))
-                feats.append((hist / norm if norm else hist).tolist())
-            yield pd.DataFrame({"url": pdf[url_col], "features": feats})
-
-    return df.select(url_col, bin_col).mapInPandas(gen, FEATURES_SCHEMA)
+    return map_rows(df.select(url_col, bin_col), row, FEATURES_SCHEMA)
 
 
 def resize_media_stub(
@@ -1209,37 +1150,23 @@ def resize_media_stub(
     analogue of NN image scaling). A real pipeline swaps the numpy take for
     a decoder+scaler; the Spark plumbing (Arrow batches, binary in/out,
     typed dims) is identical and tested."""
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    n_out = width * height
 
-        n_out = width * height
-        for pdf in batches:
-            outs = []
-            for p in pdf[bin_col]:
-                if p is None or len(p) == 0:
-                    outs.append(None)
-                    continue
-                arr = np.frombuffer(bytes(p), dtype=np.uint8)
-                # exact integer resampling (k*(L-1))//(n-1): reproducible in
-                # any engine, no float-ulp index jitter at bin boundaries
-                if n_out == 1 or len(arr) == 1:
-                    idx = np.zeros(n_out, dtype=np.int64)
-                else:
-                    idx = (np.arange(n_out, dtype=np.int64) * (len(arr) - 1)) // (
-                        n_out - 1
-                    )
-                outs.append(arr[idx].tobytes())
-            yield pd.DataFrame(
-                {
-                    "url": pdf[url_col],
-                    "width": width,
-                    "height": height,
-                    "payload": outs,
-                }
-            )
+    def row(url, p):
+        if not p:
+            return [(url, width, height, None)]
+        arr = np.frombuffer(p, dtype=np.uint8)
+        # exact integer resampling (k*(L-1))//(n-1): reproducible in any
+        # engine, no float-ulp index jitter at bin boundaries
+        if n_out == 1 or len(arr) == 1:
+            idx = np.zeros(n_out, dtype=np.int64)
+        else:
+            idx = (np.arange(n_out, dtype=np.int64) * (len(arr) - 1)) // (n_out - 1)
+        return [(url, width, height, arr[idx].tobytes())]
 
-    return df.select(url_col, bin_col).mapInPandas(gen, RESIZED_SCHEMA)
+    return map_rows(df.select(url_col, bin_col), row, RESIZED_SCHEMA)
 
 
 def sample_frames(
@@ -1248,22 +1175,18 @@ def sample_frames(
 ) -> DataFrame:
     """Deterministic frame sampling stand-in: slice the payload every
     ``every_n_bytes`` (a real video pipeline would seek keyframes; the Spark
-    plumbing — 1->N expansion inside mapInPandas — is identical)."""
+    plumbing — 1->N expansion inside one ``map_rows`` pass — is
+    identical)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, nos, frames = [], [], []
-            for u, p in zip(pdf[url_col], pdf[bin_col]):
-                if p is None:
-                    continue
-                b = bytes(p)
-                for i in range(0, max(len(b), 1), every_n_bytes):
-                    urls.append(u)
-                    nos.append(i // every_n_bytes)
-                    frames.append(b[i : i + every_n_bytes])
-            yield pd.DataFrame({"url": urls, "frame_no": nos, "frame": frames})
+    def row(url, p):
+        if p is None:
+            return []
+        return [
+            (url, i // every_n_bytes, p[i : i + every_n_bytes])
+            for i in range(0, max(len(p), 1), every_n_bytes)
+        ]
 
-    return df.select(url_col, bin_col).mapInPandas(gen, FRAME_SCHEMA)
+    return map_rows(df.select(url_col, bin_col), row, FRAME_SCHEMA)
 
 
 def apply_exif_orientation(
@@ -1352,26 +1275,14 @@ DHASH_SCHEMA = StructType(
 def image_dhash(
     df: DataFrame, url_col: str = "url", bin_col: str = "payload"
 ) -> DataFrame:
-    """Distributed perceptual hashing: (url, dhash) via mapInPandas over
+    """Distributed perceptual hashing: (url, dhash) via ``map_rows`` over
     the binary column; NULL for undecodable rows (total — one bad payload
     never kills the job)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": pdf[url_col],
-                    "dhash": pd.array(
-                        [
-                            dhash64(bytes(p)) if p is not None else None
-                            for p in pdf[bin_col]
-                        ],
-                        dtype="Int64",
-                    ),
-                }
-            )
+    def row(url, p):
+        return [(url, dhash64(p) if p is not None else None)]
 
-    return df.select(url_col, bin_col).mapInPandas(gen, DHASH_SCHEMA)
+    return map_rows(df.select(url_col, bin_col), row, DHASH_SCHEMA)
 
 
 def dhash_near_dupes(
@@ -1446,17 +1357,25 @@ _JPEG_ZIGZAG = [
 ]
 
 
+_JPEG_RST = {bytes((0xFF, m)) for m in range(0xD0, 0xD8)}
+
+
 class _JpegBitReader:
     """Entropy-stream bit reader: un-stuffs 0xFF00, surfaces restart
-    markers (RST0-7) via sync_restart, stops cleanly at other markers."""
+    markers (RST0-7) via sync_restart, stops cleanly at other markers.
+    The end of the entropy data (a marker or the end of the payload)
+    raises EOFError, never IndexError."""
 
     def __init__(self, data: bytes, pos: int) -> None:
         self.d, self.pos, self.bit = data, pos, 0
 
     def read_bit(self) -> int:
         d = self.d
-        if self.d[self.pos] == 0xFF and d[self.pos + 1] != 0x00:
-            raise EOFError("marker reached")
+        try:
+            if d[self.pos] == 0xFF and d[self.pos + 1] != 0x00:
+                raise EOFError("marker reached")
+        except IndexError:
+            raise EOFError("end of payload") from None
         b = (d[self.pos] >> (7 - self.bit)) & 1
         self.bit += 1
         if self.bit == 8:
@@ -1475,7 +1394,7 @@ class _JpegBitReader:
         if self.bit:
             self.bit = 0
             self.pos += 2 if self.d[self.pos] == 0xFF else 1
-        if self.d[self.pos] == 0xFF and 0xD0 <= self.d[self.pos + 1] <= 0xD7:
+        if self.d[self.pos : self.pos + 2] in _JPEG_RST:
             self.pos += 2
 
 
@@ -1753,7 +1672,7 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes] | None:
                     reader, scan, ss, se, ahal >> 4, ahal & 15,
                     not progressive, restart, mcus_x, mcus_y,
                 )
-            except (EOFError, IndexError, ValueError):
+            except (EOFError, ValueError):
                 if not progressive:
                     raise
                 # every prefix of progressive scans is a coarse image
@@ -2027,36 +1946,16 @@ EXIF_SCHEMA = StructType(
 def image_exif(
     df: DataFrame, url_col: str = "url", bin_col: str = "payload"
 ) -> DataFrame:
-    """Distributed EXIF extraction over a binary column (mapInPandas,
+    """Distributed EXIF extraction over a binary column (``map_rows``,
     Arrow batches — the standard multimodal plumbing). exif_present is
     0 with all-NULL fields for non-JPEG/EXIF-free payloads so the
     privacy audit ('which images still carry GPS?') is one filter."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [
-                exif_metadata(bytes(p)) if p is not None else None
-                for p in pdf[bin_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    "url": pdf[url_col],
-                    "exif_present": pd.array(
-                        [1 if m else 0 for m in metas], dtype="Int32"
-                    ),
-                    "exif_orientation": pd.array(
-                        [m[0] if m else None for m in metas], dtype="Int32"
-                    ),
-                    "exif_make": [m[1] if m else None for m in metas],
-                    "exif_model": [m[2] if m else None for m in metas],
-                    "exif_datetime": [m[3] if m else None for m in metas],
-                    "exif_has_gps": pd.array(
-                        [m[4] if m else None for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+    def row(url, p):
+        m = exif_metadata(p) if p is not None else None
+        return [(url, 1, *m) if m else (url, 0, *[None] * 5)]
 
-    return df.select(url_col, bin_col).mapInPandas(gen, EXIF_SCHEMA)
+    return map_rows(df.select(url_col, bin_col), row, EXIF_SCHEMA)
 
 
 # EXIF type sizes (TIFF 6.0 §2): tag value byte width per element
@@ -2162,27 +2061,11 @@ REDACTED_SCHEMA = StructType(
 def redact_media_gps(
     df: DataFrame, url_col: str = "url", bin_col: str = "payload"
 ) -> DataFrame:
-    """Distributed GPS redaction over a binary column (mapInPandas):
+    """Distributed GPS redaction over a binary column (``map_rows``):
     returns (url, payload, gps_redacted) with GPS-bearing JPEGs rewritten
     in place and everything else passed through byte-identical."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = [
-                redact_exif_gps(bytes(p)) if p is not None else (None, 0)
-                for p in pdf[bin_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    "url": pdf[url_col],
-                    "payload": [
-                        bytearray(p) if p is not None else None
-                        for p, _ in outs
-                    ],
-                    "gps_redacted": pd.array(
-                        [f for _, f in outs], dtype="Int32"
-                    ),
-                }
-            )
+    def row(url, p):
+        return [(url, *redact_exif_gps(p)) if p is not None else (url, None, 0)]
 
-    return df.select(url_col, bin_col).mapInPandas(gen, REDACTED_SCHEMA)
+    return map_rows(df.select(url_col, bin_col), row, REDACTED_SCHEMA)

@@ -35,8 +35,8 @@ convention — ``left = x / page_width``, ``top = 1 - y / page_height``
 (PDF's origin is bottom-left), width estimated from the string length at
 the current font size, height = font size / page height.
 
-Scale: parsing is a :func:`mapInPandas` pass — one Arrow batch transfer,
-no shuffle, no driver involvement; a 100 TB PDF corpus parses at scan
+Scale: parsing is one ``map_rows`` pass (``mapInArrow``) — one Arrow batch
+transfer, no shuffle, no driver involvement; a 100 TB PDF corpus parses at scan
 parallelism. The downstream line/boilerplate windows key on
 (url, page_no): high-cardinality by construction.
 """
@@ -48,6 +48,8 @@ import zlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from .udfs import map_rows
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
 _WS = b"\x00\t\n\x0c\r "
@@ -529,30 +531,19 @@ def pdf_blocks(
 ) -> DataFrame:
     """(url, page_no, block_id, left, top, width, height, text) — the
     :mod:`ocr` blocks schema, extracted from a binary PDF column. One
-    mapInPandas pass (Arrow-batched, zero shuffle); unparseable or
+    ``map_rows`` pass (Arrow-batched, zero shuffle); unparseable or
     text-free PDFs simply emit no rows."""
-    cols = [url_col, payload_col]
 
-    def run(batches):
-        import pandas as pd
+    def row(url, payload):
+        if payload is None:
+            return []
+        try:
+            parsed = parse_pdf_blocks(payload)
+        except Exception:
+            return []  # corrupt file: drop, never kill the task
+        return [(url, *block) for block in parsed]
 
-        for pdf in batches:
-            rows = []
-            for url, payload in zip(pdf[cols[0]], pdf[cols[1]]):
-                if payload is None:
-                    continue
-                try:
-                    parsed = parse_pdf_blocks(bytes(payload))
-                except Exception:
-                    continue  # corrupt file: drop, never kill the task
-                for p, b, left, top, w, h, text in parsed:
-                    rows.append((url, p, b, left, top, w, h, text))
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in _BLOCK_SCHEMA.fields],
-            )
-
-    return df.select(*cols).mapInPandas(run, schema=_BLOCK_SCHEMA)
+    return map_rows(df.select(url_col, payload_col), row, _BLOCK_SCHEMA)
 
 
 # --------------------------------------------------------------------------

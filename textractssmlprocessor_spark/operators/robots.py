@@ -6,7 +6,7 @@ opt-out-respecting filter in every modern corpus pipeline). Two pieces:
 
 - ``parse_robots``: (host, robots_txt) -> one row per rule
   (host, rule, path) for the groups matching the given user-agent
-  (default ``*``), via an Arrow-batched pandas UDF. The robots table is
+  (default ``*``), via one ``map_rows`` pass. The robots table is
   HOST-count-sized (millions of rows, kilobytes each), not corpus-sized —
   Python parsing here is off the hot path by construction.
 - ``robots_verdicts``: urls x rules -> per-url allowed/blocked under the
@@ -26,13 +26,11 @@ rules.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from .udfs import map_rows
 from .weburl import url_host
 
 ROBOTS_RULES_SCHEMA = StructType(
@@ -96,24 +94,15 @@ def parse_robots(
     ``agent``. Hosts whose robots.txt yields no applicable rules emit
     nothing (absent host == allowed)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hosts, rules_, paths = [], [], []
-            for host, text in zip(pdf[host_col], pdf[text_col]):
-                if host is None:
-                    # a NULL host can never match the verdict equijoin, and
-                    # emitting it would break the non-nullable output schema
-                    # (Arrow NPEs on the schema lie) — drop the dead row
-                    continue
-                for rule, path in _parse_robots_txt(
-                    text if text is not None else "", agent
-                ):
-                    hosts.append(host)
-                    rules_.append(rule)
-                    paths.append(path)
-            yield pd.DataFrame({"host": hosts, "rule": rules_, "path": paths})
+    def row(host, text):
+        if host is None:
+            # a NULL host can never match the verdict equijoin, and emitting
+            # it would break the non-nullable output schema (Arrow NPEs on
+            # the schema lie) — drop the dead row
+            return []
+        return [(host, *r) for r in _parse_robots_txt(text or "", agent)]
 
-    return df.select(host_col, text_col).mapInPandas(gen, ROBOTS_RULES_SCHEMA)
+    return map_rows(df.select(host_col, text_col), row, ROBOTS_RULES_SCHEMA)
 
 
 def robots_verdicts(

@@ -4,14 +4,20 @@ pure functions from ``textractssmlprocessor_spark.functions``).
 
 Chained pandas UDF projections fuse into a single ArrowEvalPython node, so
 clean -> chunk -> normalize costs one Python round-trip per batch.
+
+``map_rows`` is the one way to turn a payload column into rows (0, 1 or N
+output rows per input row): a row function over one ``mapInArrow`` pass.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Callable, Iterable, Optional
 
 import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import ArrayType, IntegerType, StringType, StructField, StructType
 
 from ..functions.chunking import chunk_text_with_spans
@@ -30,6 +36,36 @@ EXTRACTED_CHUNK_TYPE = StructType(
         StructField("end", IntegerType(), True),
     ]
 )
+
+
+def map_rows(
+    df: DataFrame, fn: Callable[..., Iterable[tuple]], schema: StructType
+) -> DataFrame:
+    """Row map over one ``mapInArrow`` pass: ``fn(*row)`` gets the values
+    of one input row (bytes, str, int, datetime or None, in ``df``'s
+    column order) and returns an iterable of output tuples in ``schema``
+    order, 0, 1 or N per input row. Each Arrow batch becomes one record
+    batch built column by column with the schema's Arrow types, with no
+    pandas step, so NULLs and 64-bit ints keep their values. A timestamp
+    must be an aware UTC datetime: Arrow keeps the wall clock of any
+    other offset. Nothing is caught here: containment belongs to
+    ``fn``."""
+    arrow_schema = to_arrow_schema(schema)
+
+    def gen(batches):
+        for batch in batches:
+            rows = [
+                out
+                for row in zip(*(c.to_pylist() for c in batch.columns))
+                for out in fn(*row)
+            ]
+            columns = list(zip(*rows)) or [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+                schema=arrow_schema,
+            )
+
+    return df.mapInArrow(gen, schema)
 
 
 def _page_payload(html: Optional[bytes], text: Optional[str]) -> Optional[str]:

@@ -12,7 +12,16 @@ is source-agnostic DataFrame code.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
+from .operators.udfs import map_rows
 from .schema import PAGES_SCHEMA
 
 PAGES_COLUMNS = [f.name for f in PAGES_SCHEMA.fields]
@@ -61,9 +70,10 @@ def _parse_warc_date(raw_ts: str):
     second-precision 'Z' form first; WARC/1.1 permits fractional seconds
     and offsets (fromisoformat covers those). A naive result would be
     re-interpreted in the session timezone and shift the instant, so tz
-    is always pinned. ONE definition shared by read_warc/read_wet/read_wat
-    — a fallback fix must not be appliable to one reader and not the
-    others."""
+    is always pinned, and an offset is converted to UTC: the Arrow
+    conversion keeps an aware datetime's wall clock, not its instant.
+    ONE definition shared by read_warc/read_wet/read_wat — a fallback fix
+    must not be appliable to one reader and not the others."""
     from datetime import datetime, timezone
 
     try:
@@ -73,10 +83,10 @@ def _parse_warc_date(raw_ts: str):
     except ValueError:
         try:
             ts = datetime.fromisoformat(raw_ts.replace("Z", "+00:00"))
-            return ts if ts.tzinfo is not None else ts.replace(
-                tzinfo=timezone.utc
-            )
-        except ValueError:
+            if ts.tzinfo is None:
+                return ts.replace(tzinfo=timezone.utc)
+            return ts.astimezone(timezone.utc)
+        except (ValueError, OverflowError):  # overflow: year 1 shifted back
             return None
 
 
@@ -165,9 +175,9 @@ def read_warc(
     -> the standard pages table (url, warc_ts, html, text=NULL, lang=NULL).
 
     Only 'response'/'resource' records yield pages; the HTTP envelope in
-    response bodies is stripped to the payload. Parsing is an Arrow-batched
-    mapInPandas over binaryFile rows — one Python pass per segment file, no
-    per-record round trips.
+    response bodies is stripped to the payload. Parsing is one ``map_rows``
+    pass (``mapInArrow``) over binaryFile rows — one Python pass per segment
+    file, no per-record round trips.
 
     Scale note: binaryFile materializes a whole (compressed) segment per
     row (CC segments are ~1 GB), so executor memory must cover one
@@ -177,42 +187,25 @@ def read_warc(
     Filter pushdown doesn't apply here; land WARC -> Iceberg once with this
     reader, then run everything downstream off the columnar table
     (read_pages), which is where the 10^12-doc pipeline should live."""
-    import pandas as pd
-
     files = spark.read.format("binaryFile").load(path)
 
-    def parse(batches):
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "url": [], "warc_ts": [], "html": [], "text": [], "lang": [],
-            }
-            for content in pdf["content"]:
-                for headers, body in _safe_records(bytes(content)):
-                    if headers.get("warc-type") not in record_types:
-                        continue
-                    url = headers.get("warc-target-uri")
-                    if not url:
-                        continue
-                    ts = _parse_warc_date(headers.get("warc-date", ""))
-                    payload = body
-                    if headers.get("warc-type") == "response" and body[:5] == b"HTTP/":
-                        sep = body.find(b"\r\n\r\n")
-                        if sep >= 0:
-                            payload = body[sep + 4 :]
-                    rows["url"].append(url)
-                    rows["warc_ts"].append(ts)
-                    if payload_as_text:
-                        rows["html"].append(None)
-                        rows["text"].append(
-                            payload.decode("utf-8", errors="replace")
-                        )
-                    else:
-                        rows["html"].append(payload)
-                        rows["text"].append(None)
-                    rows["lang"].append(None)
-            yield pd.DataFrame(rows)
+    def pages(content):
+        for headers, body in _safe_records(content):
+            kind = headers.get("warc-type")
+            url = headers.get("warc-target-uri")
+            if kind not in record_types or not url:
+                continue
+            ts = _parse_warc_date(headers.get("warc-date", ""))
+            if kind == "response" and body[:5] == b"HTTP/":
+                sep = body.find(b"\r\n\r\n")
+                if sep >= 0:
+                    body = body[sep + 4 :]
+            if payload_as_text:
+                yield (url, ts, None, body.decode("utf-8", errors="replace"), None)
+            else:
+                yield (url, ts, body, None, None)
 
-    return files.select("content").mapInPandas(parse, schema=PAGES_SCHEMA)
+    return map_rows(files.select("content"), pages, PAGES_SCHEMA)
 
 
 def read_wet(spark: SparkSession, path: str) -> DataFrame:
@@ -235,9 +228,7 @@ def write_pages_output(
     idempotent snapshots.py commit (pass the run id after the colon);
     parquet targets partition by url bucket via the lineage module instead
     (lineage.run_with_lineage)."""
-    fmt = format or (
-        "parquet" if "/" in target or target.endswith(".parquet") else "iceberg"
-    )
+    fmt = format or ("parquet" if is_path(target) else "iceberg")
     if fmt == "iceberg":
         chunks.writeTo(target).overwritePartitions()
     elif fmt.startswith("snapshot"):
@@ -253,6 +244,17 @@ def write_pages_output(
         raise ValueError(f"unsupported output format: {fmt!r}")
 
 
+WAT_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("warc_ts", TimestampType()),
+        StructField("title", StringType()),
+        StructField("n_links", LongType()),
+        StructField("links", ArrayType(StringType())),
+    ]
+)
+
+
 def read_wat(spark: SparkSession, path: str) -> DataFrame:
     """WAT scan — the third Common Crawl sibling: 'metadata' records whose
     payload is a JSON envelope describing the crawled page (headers, title,
@@ -261,78 +263,58 @@ def read_wat(spark: SparkSession, path: str) -> DataFrame:
     columnar input extract_links/pagerank-style graph jobs consume when
     the pipeline starts from CC's own metadata instead of raw html.
 
-    Same streaming record walker and mapInPandas shape as read_warc (one
+    Same streaming record walker and ``map_rows`` shape as read_warc (one
     Python pass per segment, one in-flight record); the JSON payload is
     parsed with the stdlib parser and reduced to the graph-relevant fields
     IN the task, so only narrow rows reach Arrow — never the raw JSON
     envelopes. Unparseable payloads yield a row with NULL title/links
     rather than failing the segment (mirrors the walker's malformed-record
     policy)."""
-    import pandas as pd
+    import json
 
     files = spark.read.format("binaryFile").load(path)
 
-    schema = (
-        "url string, warc_ts timestamp, title string, "
-        "n_links bigint, links array<string>"
-    )
-
-    def parse(batches):
-        import json
-
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "url": [], "warc_ts": [], "title": [], "n_links": [], "links": [],
-            }
-            for content in pdf["content"]:
-                for headers, body in _safe_records(bytes(content)):
-                    if headers.get("warc-type") != "metadata":
-                        continue
-                    url = headers.get("warc-target-uri")
-                    if not url:
-                        continue
-                    ts = _parse_warc_date(headers.get("warc-date", ""))
+    def link_rows(content):
+        for headers, body in _safe_records(content):
+            url = headers.get("warc-target-uri")
+            if headers.get("warc-type") != "metadata" or not url:
+                continue
+            title = None
+            links: list | None = None
+            try:
+                env = json.loads(body.decode("utf-8", errors="replace"))
+                # CC-WAT layout: Envelope -> Payload-Metadata ->
+                # HTTP-Response-Metadata -> HTML-Metadata
+                html_md = (
+                    env.get("Envelope", {})
+                    .get("Payload-Metadata", {})
+                    .get("HTTP-Response-Metadata", {})
+                    .get("HTML-Metadata", {})
+                )
+                head = html_md.get("Head", {})
+                # type containment: the envelope is UNTRUSTED JSON — a
+                # numeric Title or Links[].url would reach the Arrow cast
+                # and fail the TASK (string column, int cell). Non-string
+                # values drop, not crash.
+                title = head.get("Title")
+                if not isinstance(title, str):
                     title = None
-                    links: list | None = None
-                    try:
-                        env = json.loads(body.decode("utf-8", errors="replace"))
-                        # CC-WAT layout: Envelope -> Payload-Metadata ->
-                        # HTTP-Response-Metadata -> HTML-Metadata
-                        html_md = (
-                            env.get("Envelope", {})
-                            .get("Payload-Metadata", {})
-                            .get("HTTP-Response-Metadata", {})
-                            .get("HTML-Metadata", {})
-                        )
-                        head = html_md.get("Head", {})
-                        # type containment: the envelope is UNTRUSTED JSON —
-                        # a numeric Title or Links[].url would flow into the
-                        # pandas->Arrow cast and fail the TASK (string column,
-                        # int cell). Non-string values drop, not crash.
-                        title = head.get("Title")
-                        if not isinstance(title, str):
-                            title = None
-                        raw_links = html_md.get("Links", [])
-                        if not isinstance(raw_links, list):
-                            raw_links = []
-                        links = [
-                            l["url"] for l in raw_links
-                            if isinstance(l, dict)
-                            and isinstance(l.get("url"), str)
-                            and l["url"]
-                        ]
-                    except (ValueError, AttributeError, TypeError):
-                        pass
-                    rows["url"].append(url)
-                    rows["warc_ts"].append(ts)
-                    rows["title"].append(title)
-                    rows["n_links"].append(
-                        len(links) if links is not None else None
-                    )
-                    rows["links"].append(links)
-            yield pd.DataFrame(rows)
+                raw_links = html_md.get("Links", [])
+                if not isinstance(raw_links, list):
+                    raw_links = []
+                links = [
+                    l["url"] for l in raw_links
+                    if isinstance(l, dict)
+                    and isinstance(l.get("url"), str)
+                    and l["url"]
+                ]
+            except (ValueError, AttributeError, TypeError):
+                pass
+            ts = _parse_warc_date(headers.get("warc-date", ""))
+            n_links = len(links) if links is not None else None
+            yield (url, ts, title, n_links, links)
 
-    return files.select("content").mapInPandas(parse, schema=schema)
+    return map_rows(files.select("content"), link_rows, WAT_SCHEMA)
 
 
 def write_jsonl(

@@ -62,7 +62,11 @@ def main() -> None:
         # count the numbered detail headers only
         n_ex = len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
         n_py = len(
-            re.findall(r"^\(\d+\) (?:ArrowEvalPython|MapInPandas)", plan, re.M)
+            re.findall(
+                r"^\(\d+\) (?:ArrowEvalPython|MapInPandas|MapInArrow)",
+                plan,
+                re.M,
+            )
         )
         print(f"{name}: {n_ex} Exchange, {n_py} Python nodes -> {path}")
     spark.stop()
