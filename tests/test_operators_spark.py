@@ -472,6 +472,33 @@ def test_audio_metadata_real_headers(spark):
     assert meta["txt://3"]["duration_ms"] is None
 
 
+def test_media_metadata_out_of_int32_headers(spark):
+    """A header value above 2^31-1 does not fit its IntegerType column: the
+    row keeps the default media_type with NULL fields instead of failing
+    the task."""
+    import struct
+
+    from textractssmlprocessor_spark.operators.multimodal import media_metadata
+
+    png = (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
+           + struct.pack(">IIBBBBB", 0xFFFFFFFF, 1, 8, 0, 0, 0, 0) + bytes(4))
+    bmp = (b"BM" + bytes(12) + struct.pack("<Iii", 40, 1, -(2**31)) + bytes(28))
+    fmt = struct.pack("<HHIIHH", 1, 1, 0xFFFFFFF0, 32000, 2, 16)
+    body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", 64) + bytes(64))
+    wav = b"RIFF" + struct.pack("<I", len(body)) + body
+    df = spark.createDataFrame(
+        [(u, bytearray(p)) for u, p in (("png", png), ("bmp", bmp), ("wav", wav))],
+        ["url", "payload"],
+    )
+    rows = {r["url"]: r for r in media_metadata(df).collect()}
+    for url, p in (("png", png), ("bmp", bmp), ("wav", wav)):
+        r = rows[url]
+        assert (r["media_type"], r["n_bytes"]) == ("binary", len(p))
+        assert (r["width"], r["height"], r["duration_ms"], r["sample_rate"],
+                r["channels"]) == (None,) * 5
+
+
 def _wav_pcm(samples, rate=8000, channels=1) -> bytes:
     """PCM16-LE WAV with explicit sample values (interleaved if stereo)."""
     import struct

@@ -161,6 +161,56 @@ def test_abbreviations_equal_sequential(text):
     )
 
 
+def _books_and_numerals_oracle(text):
+    """The \\b-led book and Roman-numeral patterns, tried at every
+    position: the equivalence oracle for expand_bible_books followed by
+    convert_roman_numerals."""
+    import re
+
+    from textractssmlprocessor_spark.functions import subs
+
+    books = "|".join(subs._NUMBERED_BOOKS)
+    text = re.sub(r"\b([123])\s+(%s)\b" % books,
+                  lambda m: f"{subs._ORDINALS[m.group(1)]} {m.group(2)}", text)
+    text = re.sub(r"\b(I{1,3})\s+(%s)\b" % books,
+                  lambda m: f"{subs._ROMAN_TO_ORDINAL[m.group(1)]} {m.group(2)}", text)
+    return re.sub(
+        r"\b(?=[IVXLCDM]{2,}\b)(M{0,3})(CM|CD|D?C{0,3})(XC|XL|L?X{0,3})(IX|IV|V?I{0,3})\b",
+        lambda m: str(subs.roman_to_int(m.group(0))) if m.group(0) else "",
+        text,
+    )
+
+
+_BOOK_ROMAN_TEXT = st.one_of(
+    st.lists(
+        st.tuples(
+            st.sampled_from(
+                ["1", "2", "3", "4", "11", "I", "II", "III", "IIII", "Samuel",
+                 "Kings", "John", "Johnny", "Peter", "XIV", "MCMXC", "MMMM", "IC",
+                 "VX", "IIX", "DC", "CIVIL", "iv", "MIX", "LI", "x", "é", "_", "Ⅻ"]
+            ),
+            st.sampled_from(["", " ", "  ", "\n", "\t", ".", "-"]),
+        ),
+        max_size=30,
+    ).map(lambda ps: "".join(w + s for w, s in ps)),
+    st.text(alphabet="IVXLCDM123 Samuel\né_.", max_size=60),
+)
+
+
+@settings(max_examples=400, deadline=None)
+@given(_BOOK_ROMAN_TEXT)
+@example("II Samuel XIV")
+@example("x1 Samuel, é2 Kings, _3 John, \n1 Peter")
+@example("III Kings IIII John IIX MMMCMXCIX")
+@example("I\nSamuel CIVIL XIVé DCé_")
+def test_books_and_numerals_equal_boundary_patterns(text):
+    from textractssmlprocessor_spark.functions import subs
+
+    assert subs.convert_roman_numerals(
+        subs.expand_bible_books(text)
+    ) == _books_and_numerals_oracle(text)
+
+
 def test_abbreviation_case_fold_tables_match_re():
     """The gated pass's soundness rests on two tables describing re's
     IGNORECASE matching; a Python whose case tables differ must fail here

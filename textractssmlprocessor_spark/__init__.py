@@ -17,6 +17,14 @@ corpus.py    deterministic synthetic web-page corpus (url, warc_ts, html,
              text, lang) for tests + benchmarks
 lineage.py   salted repartitioning, per-partition lineage rows,
              checkpoint-resume bucket filter
+
+Importing the package gates ``zipimporter.invalidate_caches`` (_zipgate.py),
+so a Python worker that unpickles a package function stops re-reading
+pyspark.zip on every task.
 """
+
+from . import _zipgate
+
+_zipgate.install()
 
 __version__ = "0.1.0"

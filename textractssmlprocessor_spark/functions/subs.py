@@ -60,19 +60,20 @@ _GATED_ABBREV = [
     for c, ctx, r in _ABBREVIATIONS
 ]
 
+# The same prefix-scannable spelling for the books and Roman numerals: a
+# leading literal or class, then (?<!\w.) for the \b before it.
 _BOOK_ARABIC = re.compile(
-    r"\b([123])\s+(%s)\b" % "|".join(_NUMBERED_BOOKS)
+    r"([123])(?<!\w.)\s+(%s)\b" % "|".join(_NUMBERED_BOOKS)
 )
 _BOOK_ROMAN = re.compile(
-    r"\b(I{1,3})\s+(%s)\b" % "|".join(_NUMBERED_BOOKS)
+    r"(I(?<!\w.)I{0,2})\s+(%s)\b" % "|".join(_NUMBERED_BOOKS)
 )
 
-_ROMAN_NUMERAL = re.compile(
-    r"\b(?=[IVXLCDM]{2,}\b)(M{0,3})(CM|CD|D?C{0,3})(XC|XL|L?X{0,3})(IX|IV|V?I{0,3})\b"
-)
+# A word of >= 2 roman letters only; it converts when it is one numeral.
+_ROMAN_WORD = re.compile(r"[IVXLCDM](?<!\w.)[IVXLCDM]+\b")
+_ROMAN_NUMERAL = re.compile(r"M{0,3}(CM|CD|D?C{0,3})(XC|XL|L?X{0,3})(IX|IV|V?I{0,3})")
 
 _ROMAN_VALUES = {"I": 1, "V": 5, "X": 10, "L": 50, "C": 100, "D": 500, "M": 1000}
-_ROMAN_GATE = re.compile(r"[IVXLCDM]{2}")
 
 
 def roman_to_int(s: str) -> int:
@@ -126,15 +127,9 @@ def convert_roman_numerals(text: str) -> str:
 
     def repl(m: re.Match) -> str:
         s = m.group(0)
-        if not s:
-            return s
-        return str(roman_to_int(s))
+        return str(roman_to_int(s)) if _ROMAN_NUMERAL.fullmatch(s) else s
 
-    # any match needs >= 2 consecutive roman chars: a single character-class
-    # scan (C loop) gates the backtracking alternation
-    if _ROMAN_GATE.search(text) is None:
-        return text
-    return _ROMAN_NUMERAL.sub(repl, text)
+    return _ROMAN_WORD.sub(repl, text)
 
 
 def expand_substitutions(text: str) -> str:

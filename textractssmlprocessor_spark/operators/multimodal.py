@@ -804,12 +804,16 @@ def image_pixels(
     return map_rows(df.select(url_col, bin_col), row, PIXELS_SCHEMA)
 
 
+_INT32_MAX = 2**31 - 1  # width/height/sample_rate are IntegerType columns
+
+
 def image_dimensions(payload: bytes) -> tuple[str, int, int] | None:
     """REAL (format, width, height) from container headers, pure stdlib —
     the public byte layouts of PNG (IHDR), JPEG (SOFn segment walk), GIF
     (logical screen descriptor), BMP (BITMAPINFOHEADER) and WebP (RIFF
     VP8/VP8L/VP8X chunk headers, the three container flavors). Returns
-    None for unrecognized/truncated payloads; never fabricates
+    None for unrecognized/truncated payloads and for a dimension that
+    does not fit the int32 width/height columns; never fabricates
     dimensions. (Lossy VP8 WebP PIXELS stay outside ``decode_pixels`` —
     a VP8 entropy decoder is a codec, not a header walk.)"""
     import struct
@@ -837,7 +841,7 @@ def image_dimensions(payload: bytes) -> tuple[str, int, int] | None:
         return None
     if b[:8] == b"\x89PNG\r\n\x1a\n" and len(b) >= 24 and b[12:16] == b"IHDR":
         w, h = struct.unpack(">II", b[16:24])
-        return ("png", w, h)
+        return ("png", w, h) if max(w, h) <= _INT32_MAX else None
     if b[:6] in (b"GIF87a", b"GIF89a"):
         w, h = struct.unpack("<HH", b[6:10])
         return ("gif", w, h)
@@ -845,7 +849,7 @@ def image_dimensions(payload: bytes) -> tuple[str, int, int] | None:
         hdr_size = struct.unpack("<I", b[14:18])[0]
         if hdr_size >= 40:  # BITMAPINFOHEADER and later
             w, h = struct.unpack("<ii", b[18:26])
-            return ("bmp", w, abs(h))
+            return ("bmp", w, abs(h)) if abs(h) <= _INT32_MAX else None
         if hdr_size == 12 and len(b) >= 22:  # BITMAPCOREHEADER
             w, h = struct.unpack("<HH", b[18:22])
             return ("bmp", w, h)
@@ -891,7 +895,8 @@ def audio_metadata(payload: bytes) -> tuple[str, int, int, int] | None:
     estimates). Returns None for unrecognized/truncated payloads; never
     fabricates. Replaces the reference's mutagen ``MP3(path).info.length``
     (timestamp.py:273-274) with an in-engine parser that runs on binary
-    COLUMNS inside Arrow batches instead of driver-side files."""
+    COLUMNS inside Arrow batches instead of driver-side files. A WAV
+    sample rate that does not fit the int32 column also gives None."""
     import struct
 
     if payload is None or len(payload) < 12:
@@ -915,7 +920,7 @@ def audio_metadata(payload: bytes) -> tuple[str, int, int, int] | None:
             elif tag == b"data":
                 data_size = min(size, len(b) - i - 8)
             i += 8 + size + (size & 1)  # chunks are word-aligned
-        if not sample_rate or data_size is None:
+        if not sample_rate or sample_rate > _INT32_MAX or data_size is None:
             return None
         if not byte_rate:
             if not bits or not channels:

@@ -7,6 +7,12 @@ clean -> chunk -> normalize costs one Python round-trip per batch.
 
 ``map_rows`` is the one way to turn a payload column into rows (0, 1 or N
 output rows per input row): a row function over one ``mapInArrow`` pass.
+
+Every Python UDF task pays a fixed worker cost before its first batch.
+pyspark's per-task ``importlib.invalidate_caches()`` would re-read
+pyspark.zip's central directory once per zipimporter (~0.15 s); a worker
+that unpickles any function here has imported the package, whose
+``_zipgate`` re-reads an archive only when it changed.
 """
 
 from __future__ import annotations
