@@ -473,9 +473,10 @@ def test_audio_metadata_real_headers(spark):
 
 
 def test_media_metadata_out_of_int32_headers(spark):
-    """A header value above 2^31-1 does not fit its IntegerType column: the
-    row keeps the default media_type with NULL fields instead of failing
-    the task."""
+    """A header value above 2^31-1 does not fit its IntegerType column,
+    and a WAV without a byte rate whose fallback rate * channels * bits / 8
+    is 0 has no duration: the row keeps the default media_type with NULL
+    fields instead of failing the task."""
     import struct
 
     from textractssmlprocessor_spark.operators.multimodal import media_metadata
@@ -487,12 +488,17 @@ def test_media_metadata_out_of_int32_headers(spark):
     body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
             + b"data" + struct.pack("<I", 64) + bytes(64))
     wav = b"RIFF" + struct.pack("<I", len(body)) + body
+    # PCM, 1 channel, 7 Hz, byte rate 0, 1 bit: fallback 7 * 1 * 1 // 8 is 0
+    fmt = struct.pack("<HHIIHH", 1, 1, 7, 0, 1, 1)
+    body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", 4) + bytes(4))
+    wav0 = b"RIFF" + struct.pack("<I", len(body)) + body
+    payloads = (("png", png), ("bmp", bmp), ("wav", wav), ("wav0", wav0))
     df = spark.createDataFrame(
-        [(u, bytearray(p)) for u, p in (("png", png), ("bmp", bmp), ("wav", wav))],
-        ["url", "payload"],
+        [(u, bytearray(p)) for u, p in payloads], ["url", "payload"],
     )
     rows = {r["url"]: r for r in media_metadata(df).collect()}
-    for url, p in (("png", png), ("bmp", bmp), ("wav", wav)):
+    for url, p in payloads:
         r = rows[url]
         assert (r["media_type"], r["n_bytes"]) == ("binary", len(p))
         assert (r["width"], r["height"], r["duration_ms"], r["sample_rate"],
@@ -1955,6 +1961,12 @@ def test_decode_jpeg_flat_exact():
         assert (gw, gh, ch) == (w, h, 1)
         assert set(px) == {160}, f"expected flat 160, got {set(px)}"
 
+    # an SOF declaring length 1: its dimensions would come from bytes
+    # outside the segment, so neither parser reads them
+    short_sof = b"\xff\xd8\xff\xc0\x00\x01" + bytes(20)
+    assert image_dimensions(short_sof) is None
+    assert decode_jpeg_pixels(short_sof) is None
+
 
 def test_decode_jpeg_real_fixture():
     """Real-world smoke: a color JPEG from the Python stdlib test data
@@ -2374,6 +2386,11 @@ def test_decode_jpeg_progressive_exact():
         exp = np.clip(np.round(A.T @ C @ A + 128.0), 0, 255).astype(np.uint8)
         px = np.frombuffer(got[3], dtype=np.uint8).reshape(8, 8)
         assert (px == exp).all(), (dc, ac, px[0], exp[0])
+
+    # a progressive frame cut before its first scan has no pixels: no
+    # uniform 128-gray image from all-zero coefficients
+    data = _build_prog_jpeg_gray8(256, 7)
+    assert decode_jpeg_pixels(data[: data.index(b"\xff\xda")]) is None
 
 
 def test_jpeg_bit_reader_end_of_data_is_eof_error():

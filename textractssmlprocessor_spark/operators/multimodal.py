@@ -26,6 +26,7 @@ Everything Spark-side — schema, Arrow batch shape, the ``map_rows`` pass
 from __future__ import annotations
 
 import hashlib
+import struct
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -79,6 +80,60 @@ _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 _MAX_DECODE_PIXELS = 64 << 20
 
 
+# Container readers shared by several parsers: JPEG segments and RIFF chunks
+# are walked only here (the WAV and TIFF readers sit with their parsers), so
+# one set of bounds rules covers every caller. Callers keep their own stop
+# rules (stop at SOS, first VP8L chunk, ...).
+
+
+def _jpeg_segments(b: bytes):
+    """Yield (marker, body_start, body_end) for each JPEG segment that has
+    a length field, after SOI. Fill bytes (0xFF runs, T.81 B.1.1.2), stray
+    bytes between segments and the standalone markers (SOI, TEM, RST0-7)
+    are skipped. EOI ends the walk, and so does a declared length below 2
+    or one that runs past the payload. After an SOS the walk resumes at
+    the next real marker behind the entropy data (0xFF followed by neither
+    a stuffed 0x00 nor an RSTn), found with ``bytes.find``; a caller that
+    stops at SOS stops iterating, the decoder sees every scan header."""
+    n = len(b)
+    i = 2
+    # a marker in the last 3 bytes has no room for a length field, so no
+    # segment can follow it
+    while (i := b.find(b"\xff", i)) >= 0 and i + 3 < n:
+        marker = b[i + 1]
+        if marker == 0xFF:
+            i += 1
+            continue
+        if marker == 0xD9:
+            return
+        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
+            i += 2
+            continue
+        end = i + 2 + (b[i + 2] << 8 | b[i + 3])
+        if end < i + 4 or end > n:
+            return
+        yield marker, i + 4, end
+        i = end
+        if marker == 0xDA:
+            while (i := b.find(b"\xff", i)) >= 0 and i + 1 < n and (
+                b[i + 1] == 0 or 0xD0 <= b[i + 1] <= 0xD7
+            ):
+                i += 2
+            if i < 0:
+                return
+
+
+def _riff_chunks(b: bytes):
+    """Yield (fourcc, body_start, body_end) for each chunk after the
+    12-byte RIFF header ('RIFF', size, form type), word-aligned, with
+    body_end clamped to the payload."""
+    i, n = 12, len(b)
+    while i + 8 <= n:
+        size = int.from_bytes(b[i + 4 : i + 8], "little")
+        yield b[i : i + 4], i + 8, min(i + 8 + size, n)
+        i += 8 + size + (size & 1)
+
+
 def decode_png_pixels(payload: bytes) -> tuple[int, int, int, bytes] | None:
     """REAL PNG pixel decode, pure stdlib: chunk walk -> zlib inflate of the
     concatenated IDAT stream -> per-scanline unfilter (all five public
@@ -88,7 +143,6 @@ def decode_png_pixels(payload: bytes) -> tuple[int, int, int, bytes] | None:
     (bit depth != 8, Adam7 interlace). The per-byte unfilter loop is
     Python — correct and Arrow-batched; a production deployment swaps in a
     C codec inside the same ``image_pixels`` plumbing."""
-    import struct
     import zlib
 
     if payload is None:
@@ -645,17 +699,10 @@ def decode_vp8l_pixels(payload: bytes) -> tuple[int, int, int, bytes] | None:
         b = bytes(payload)
         if b[:4] != b"RIFF" or len(b) < 20 or b[8:12] != b"WEBP":
             return None
-        # chunk walk: top-level VP8L, or VP8L inside a VP8X container
-        import struct
-
-        i, stream = 12, None
-        while i + 8 <= len(b):
-            tag = b[i : i + 4]
-            size = struct.unpack("<I", b[i + 4 : i + 8])[0]
-            if tag == b"VP8L":
-                stream = b[i + 8 : i + 8 + size]
-                break
-            i += 8 + size + (size & 1)
+        # top-level VP8L, or VP8L inside a VP8X container
+        stream = next(
+            (b[s:e] for tag, s, e in _riff_chunks(b) if tag == b"VP8L"), None
+        )
         if stream is None or len(stream) < 5 or stream[0] != 0x2F:
             return None
         br = _Vp8lBits(stream, 8)
@@ -816,8 +863,6 @@ def image_dimensions(payload: bytes) -> tuple[str, int, int] | None:
     does not fit the int32 width/height columns; never fabricates
     dimensions. (Lossy VP8 WebP PIXELS stay outside ``decode_pixels`` —
     a VP8 entropy decoder is a codec, not a header walk.)"""
-    import struct
-
     if payload is None or len(payload) < 10:
         return None
     b = bytes(payload)
@@ -854,29 +899,15 @@ def image_dimensions(payload: bytes) -> tuple[str, int, int] | None:
             w, h = struct.unpack("<HH", b[18:22])
             return ("bmp", w, h)
         return None
-    if b[:2] == b"\xff\xd8":  # JPEG: walk segments to the first SOFn
-        i = 2
-        while i + 9 <= len(b):
-            if b[i] != 0xFF:
-                i += 1
-                continue
-            marker = b[i + 1]
-            if marker == 0xFF:
-                i += 1  # spec-legal fill byte (B.1.1.2) before a marker
-                continue
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                i += 2  # standalone markers, no length field
-                continue
-            if marker in (0xD9, 0xDA):
-                return None  # EOI / start-of-scan: no SOFn seen, give up
-            seg_len = struct.unpack(">H", b[i + 2 : i + 4])[0]
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                if i + 9 <= len(b):
-                    h, w = struct.unpack(">HH", b[i + 5 : i + 9])
-                    return ("jpeg", w, h)
+    if b[:2] == b"\xff\xd8":  # JPEG: the first SOFn before any scan
+        for marker, s, e in _jpeg_segments(b):
+            if marker == 0xDA:
                 return None
-            i += 2 + seg_len
-        return None
+            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
+                if e - s < 5:  # precision, height, width
+                    return None
+                h, w = struct.unpack(">HH", b[s + 1 : s + 5])
+                return ("jpeg", w, h)
     return None
 
 
@@ -885,6 +916,26 @@ def image_dimensions(payload: bytes) -> tuple[str, int, int] | None:
 _MP3_BITRATE_V1_L3 = (0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
 _MP3_BITRATE_V2_L3 = (0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160)
 _MP3_RATES = {3: (44100, 48000, 32000), 2: (22050, 24000, 16000), 0: (11025, 12000, 8000)}
+
+
+def _wav_format(b: bytes):
+    """(format_code, channels, sample_rate, byte_rate, bits, data) of a
+    RIFF/WAVE payload, None for any other. The format fields come from
+    the last ``fmt `` chunk holding the 14-byte WAVEFORMAT fields (all
+    None without one); bits only from a chunk of 16 bytes or more (None
+    otherwise: in a 14-byte chunk those bytes are the next chunk's
+    header). ``data`` is a zero-copy view of the last ``data`` chunk,
+    clamped to the payload, or None."""
+    if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+        return None
+    fmt, data = (None,) * 5, None
+    for tag, s, e in _riff_chunks(b):
+        if tag == b"fmt " and e - s >= 14:
+            bits = struct.unpack("<H", b[s + 14 : s + 16])[0] if e - s >= 16 else None
+            fmt = (*struct.unpack("<HHII", b[s : s + 12]), bits)
+        elif tag == b"data":
+            data = memoryview(b)[s:e]
+    return (*fmt, data)
 
 
 def audio_metadata(payload: bytes) -> tuple[str, int, int, int] | None:
@@ -896,37 +947,23 @@ def audio_metadata(payload: bytes) -> tuple[str, int, int, int] | None:
     fabricates. Replaces the reference's mutagen ``MP3(path).info.length``
     (timestamp.py:273-274) with an in-engine parser that runs on binary
     COLUMNS inside Arrow batches instead of driver-side files. A WAV
-    sample rate that does not fit the int32 column also gives None."""
-    import struct
-
+    sample rate that does not fit the int32 column also gives None, and
+    so does a WAV whose byte rate is 0 and cannot be derived."""
     if payload is None or len(payload) < 12:
         return None
     b = bytes(payload)
 
-    if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-        i, sample_rate, channels, byte_rate, bits, data_size = 12, None, None, None, None, None
-        while i + 8 <= len(b):
-            tag = b[i : i + 4]
-            size = struct.unpack("<I", b[i + 4 : i + 8])[0]
-            if tag == b"fmt " and size >= 14 and i + 20 <= len(b):
-                channels, sample_rate, byte_rate = struct.unpack(
-                    "<HII", b[i + 10 : i + 20]
-                )
-                # bits exists only in fmt chunks >= 16 bytes — reading it
-                # from a 14-byte WAVE_FORMAT chunk would take the NEXT
-                # chunk's header bytes as the bit depth
-                if size >= 16 and i + 24 <= len(b):
-                    bits = struct.unpack("<H", b[i + 22 : i + 24])[0]
-            elif tag == b"data":
-                data_size = min(size, len(b) - i - 8)
-            i += 8 + size + (size & 1)  # chunks are word-aligned
-        if not sample_rate or sample_rate > _INT32_MAX or data_size is None:
+    wav = _wav_format(b)
+    if wav is not None:
+        _code, channels, sample_rate, byte_rate, bits, data = wav
+        if not sample_rate or sample_rate > _INT32_MAX or data is None:
             return None
+        # a header without a byte rate falls back to rate * channels * bits
+        # / 8, which is 0 for fewer than 8 bits per sample frame
+        byte_rate = byte_rate or sample_rate * channels * (bits or 0) // 8
         if not byte_rate:
-            if not bits or not channels:
-                return None
-            byte_rate = sample_rate * channels * bits // 8
-        return ("wav", data_size * 1000 // byte_rate, sample_rate, channels or 1)
+            return None
+        return ("wav", len(data) * 1000 // byte_rate, sample_rate, channels or 1)
 
     i = 0
     if b[:3] == b"ID3" and len(b) >= 10:  # ID3v2: syncsafe 28-bit size
@@ -982,25 +1019,12 @@ def pcm_samples(payload: bytes):
     Nones for anything else (float/ADPCM/MP3-in-RIFF are codecs, same
     never-fabricate rule as the image decoders). A data chunk longer than
     the remaining bytes is truncated to complete frames."""
-    import struct
-
     import numpy as np
 
-    if payload is None or len(payload) < 12:
+    wav = None if payload is None else _wav_format(bytes(payload))
+    if wav is None:
         return None
-    b = bytes(payload)
-    if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-        return None
-    i, fmt_code, channels, rate, bits, data = 12, None, None, None, None, None
-    while i + 8 <= len(b):
-        tag = b[i : i + 4]
-        size = struct.unpack("<I", b[i + 4 : i + 8])[0]
-        if tag == b"fmt " and size >= 16 and i + 24 <= len(b):
-            fmt_code, channels, rate = struct.unpack("<HHI", b[i + 8 : i + 16])
-            bits = struct.unpack("<H", b[i + 22 : i + 24])[0]
-        elif tag == b"data":
-            data = b[i + 8 : i + 8 + min(size, len(b) - i - 8)]
-        i += 8 + size + (size & 1)
+    fmt_code, channels, rate, _byte_rate, bits, data = wav
     if fmt_code != 1 or bits != 16 or not rate or not channels or data is None:
         return None
     frame = 2 * channels
@@ -1419,19 +1443,6 @@ def _jpeg_huff_decode(reader, table: dict) -> int:
     raise ValueError("invalid JPEG Huffman code")
 
 
-def _jpeg_next_marker(b: bytes, pos: int) -> int:
-    """First position >= pos of a real marker (0xFF + non-stuffing,
-    non-RST byte) — where the next header segment starts after entropy
-    data."""
-    while pos + 1 < len(b):
-        if b[pos] == 0xFF and b[pos + 1] != 0x00 and not (
-            0xD0 <= b[pos + 1] <= 0xD7
-        ):
-            return pos
-        pos += 1
-    return len(b)
-
-
 def _jpeg_parse_dht(seg: bytes, huff: dict) -> None:
     """Parse one DHT segment (possibly several tables) into
     ``huff[(table_class, table_id)] = {(bitlen, code): symbol}`` —
@@ -1577,14 +1588,13 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes] | None:
     YCbCr->RGB produces the pixels. Returns (width, height, channels,
     row-major 8-bit samples) or None for non-JPEG payloads, unsupported
     frames (lossless, hierarchical, arithmetic-coded, 12-bit, a component
-    count other than 1 or 3) and a sequential frame with no scan.
+    count other than 1 or 3) and a frame with no scan.
     Truncated or corrupt sequential data raises (callers map it to NULL);
     a truncated progressive stream keeps the scans decoded before the
     cut. Correctness path like decode_png_pixels: per-symbol Python is
     fine for the test tier; production swaps a C codec inside the same
     image_pixels plumbing."""
     import math
-    import struct
 
     import numpy as np
 
@@ -1598,22 +1608,8 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes] | None:
     comps = None  # [(comp_id, hs, vs, tq)] from the SOF
     restart = 0
     scanned = False
-    i = 2
-    while i + 4 <= len(b):
-        if b[i] != 0xFF:
-            i += 1
-            continue
-        marker = b[i + 1]
-        if marker == 0xFF:  # spec-legal fill byte (B.1.1.2)
-            i += 1
-            continue
-        if marker == 0xD9:  # EOI
-            break
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            i += 2  # standalone markers carry no length field
-            continue
-        (seglen,) = struct.unpack(">H", b[i + 2 : i + 4])
-        seg = b[i + 4 : i + 2 + seglen]
+    for marker, s, e in _jpeg_segments(b):
+        seg = b[s:e]
         if marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD,
                       0xCE, 0xCF):
             return None  # lossless, hierarchical or arithmetic frame
@@ -1626,6 +1622,8 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes] | None:
                 qt[tq] = list(seg[j + 1 : j + 65])
                 j += 65
         elif marker in (0xC0, 0xC1, 0xC2):  # Huffman sequential / SOF2
+            if len(seg) < 6 or len(seg) < 6 + 3 * seg[5]:
+                return None  # shorter than its own component table
             h, w = struct.unpack(">HH", seg[1:5])
             comps = [
                 (seg[6 + 3 * c], seg[7 + 3 * c] >> 4, seg[7 + 3 * c] & 15,
@@ -1671,10 +1669,9 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes] | None:
             ss, se, ahal = (
                 seg[1 + 2 * ncs : 4 + 2 * ncs] if progressive else (0, 63, 0)
             )
-            reader = _JpegBitReader(b, i + 2 + seglen)
             try:
                 _jpeg_scan(
-                    reader, scan, ss, se, ahal >> 4, ahal & 15,
+                    _JpegBitReader(b, e), scan, ss, se, ahal >> 4, ahal & 15,
                     not progressive, restart, mcus_x, mcus_y,
                 )
             except (EOFError, ValueError):
@@ -1682,10 +1679,7 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes] | None:
                     raise
                 # every prefix of progressive scans is a coarse image
             scanned = True
-            i = _jpeg_next_marker(b, reader.pos)
-            continue
-        i += 2 + seglen
-    if comps is None or not (scanned or progressive):
+    if comps is None or not scanned:
         return None
 
     # IDCT basis: A[u, x] = c(u)/2 * cos((2x+1) u pi / 16)
@@ -1754,66 +1748,67 @@ _EXIF_MAX_APP1 = 16  # hostile-payload cap on Exif segments inspected
 _EXIF_MAX_IFD_CHAIN = 8  # hostile-payload cap on IFD0->IFD1->... hops
 
 
-def _exif_tiff_segments(b: bytes) -> list[tuple[int, int]]:
-    """(tiff_start, tiff_end) byte ranges of every APP1 Exif segment in a
-    JPEG, in file order, capped at _EXIF_MAX_APP1. Shared marker walk for
-    exif_metadata and redact_exif_gps (same containment discipline as
-    image_dimensions)."""
-    import struct
-
-    out: list[tuple[int, int]] = []
-    i = 2
-    while i + 4 <= len(b) and len(out) < _EXIF_MAX_APP1:
-        if b[i] != 0xFF:
-            i += 1
+def _exif_tiffs(b: bytes):
+    """The TIFF reader: (tiff_start, tiff, byte_order, ifd0_offset) for
+    each APP1 Exif segment before the first scan whose TIFF header reads
+    — an 'II' / 'MM' byte-order mark (given as int.from_bytes' 'little' /
+    'big'), magic 42 and the IFD0 offset — in file order. At most
+    _EXIF_MAX_APP1 Exif segments are inspected."""
+    n_exif = 0
+    for marker, s, e in _jpeg_segments(b):
+        if marker == 0xDA or n_exif == _EXIF_MAX_APP1:
+            return
+        if marker != 0xE1 or b[s : s + 6] != b"Exif\x00\x00":
             continue
-        marker = b[i + 1]
-        if marker == 0xFF:
-            i += 1
-            continue
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            i += 2
-            continue
-        if marker in (0xD9, 0xDA):
-            break  # entropy data: headers are done
-        seg_len = struct.unpack(">H", b[i + 2 : i + 4])[0]
-        if seg_len < 2 or i + 2 + seg_len > len(b):
-            break  # truncated/hostile length
-        if marker == 0xE1 and b[i + 4 : i + 10] == b"Exif\x00\x00":
-            out.append((i + 10, i + 2 + seg_len))
-        i += 2 + seg_len
-    return out
+        n_exif += 1
+        tiff = b[s + 6 : e]
+        order = {b"II": "little", b"MM": "big"}.get(tiff[:2])
+        if order and len(tiff) >= 8 and int.from_bytes(tiff[2:4], order) == 42:
+            yield s + 6, tiff, order, int.from_bytes(tiff[4:8], order)
 
 
-def _ifd_chain_offsets(
-    tiff: bytes, e: str, ifd0_off: int
-) -> list[int]:
-    """Offsets of IFD0, IFD1, ... following each IFD's trailing
-    next-pointer; visited-set + _EXIF_MAX_IFD_CHAIN capped, every offset
-    bounds-checked against the segment."""
-    import struct
+def _tiff_int(tiff: bytes, order: str, off: int, size: int) -> int | None:
+    """Unsigned ``size``-byte integer at ``off``, None outside the segment."""
+    if 0 <= off and off + size <= len(tiff):
+        return int.from_bytes(tiff[off : off + size], order)
+    return None
 
-    offs: list[int] = []
+
+def _tiff_ifd(tiff: bytes, order: str, off: int):
+    """(entry_count, entries) of the IFD at ``off``; None when the count is
+    outside the segment, zero or above _EXIF_MAX_IFD_ENTRIES. ``entries``
+    are (tag, type, count, value_field_offset) in table order, duplicate
+    tags kept (redaction must zero every copy), for each entry whose tag,
+    type and count lie inside the segment; the 4-byte value field is read
+    by the caller, bounds-checked (``_tiff_int``)."""
+    n = _tiff_int(tiff, order, off, 2)
+    if not n or n > _EXIF_MAX_IFD_ENTRIES:
+        return None
+    entries = [
+        (
+            int.from_bytes(tiff[base : base + 2], order),
+            int.from_bytes(tiff[base + 2 : base + 4], order),
+            int.from_bytes(tiff[base + 4 : base + 8], order),
+            base + 8,
+        )
+        for base in range(off + 2, min(off + 2 + 12 * n, len(tiff) - 7), 12)
+    ]
+    return n, entries
+
+
+def _tiff_ifds(tiff: bytes, order: str, off: int):
+    """The entries (per ``_tiff_ifd``) of IFD0, IFD1, ... along each IFD's
+    trailing next-pointer; visited-set and _EXIF_MAX_IFD_CHAIN capped,
+    ends at a zero or unreadable pointer or an unreadable IFD."""
     seen: set[int] = set()
-    off = ifd0_off
-    while (
-        off not in seen
-        and len(offs) < _EXIF_MAX_IFD_CHAIN
-        and 0 <= off
-        and off + 2 <= len(tiff)
-    ):
+    while off and off not in seen and len(seen) < _EXIF_MAX_IFD_CHAIN:
+        ifd = _tiff_ifd(tiff, order, off)
+        if ifd is None:
+            return
         seen.add(off)
-        n = struct.unpack(e + "H", tiff[off : off + 2])[0]
-        if n == 0 or n > _EXIF_MAX_IFD_ENTRIES:
-            break
-        offs.append(off)
-        nxt_at = off + 2 + 12 * n
-        if nxt_at + 4 > len(tiff):
-            break
-        off = struct.unpack(e + "I", tiff[nxt_at : nxt_at + 4])[0]
-        if off == 0:
-            break
-    return offs
+        n, entries = ifd
+        yield entries
+        off = _tiff_int(tiff, order, off + 2 + 12 * n, 4)
 
 
 def exif_metadata(
@@ -1826,64 +1821,32 @@ def exif_metadata(
     IFD0->IFD1 chain of ANY APP1 Exif segment carries a GPS-IFD pointer
     whose target is inside its segment with at least one entry — the
     privacy audit must not be blind to IFD1/second-segment GPS."""
-    import struct
-
     if payload is None or len(payload) < 4:
         return None
     b = bytes(payload)
     if b[:2] != b"\xff\xd8":
         return None
-    segments = _exif_tiff_segments(b)
 
     def parse_segment(
-        tiff: bytes,
+        tiff: bytes, order: str, ifd0_off: int,
     ) -> tuple[int | None, str | None, str | None, str | None, int] | None:
-        if len(tiff) < 8:
-            return None
-        if tiff[:2] == b"II":
-            e = "<"
-        elif tiff[:2] == b"MM":
-            e = ">"
-        else:
-            return None
-        if struct.unpack(e + "H", tiff[2:4])[0] != 42:
-            return None
+        def u(off: int, size: int) -> int | None:
+            return _tiff_int(tiff, order, off, size)
 
-        def u16(off: int) -> int | None:
-            return (
-                struct.unpack(e + "H", tiff[off : off + 2])[0]
-                if 0 <= off and off + 2 <= len(tiff)
-                else None
-            )
+        def tags(entries) -> dict[int, tuple[int, int, int]]:
+            """tag -> (type, count, value_field_offset), last duplicate."""
+            return {t: (typ, cnt, voff) for t, typ, cnt, voff in entries}
 
-        def u32(off: int) -> int | None:
-            return (
-                struct.unpack(e + "I", tiff[off : off + 4])[0]
-                if 0 <= off and off + 4 <= len(tiff)
-                else None
-            )
-
-        def read_ifd(off: int) -> dict[int, tuple[int, int, int]]:
-            """tag -> (type, count, value_field_offset); {} unreadable."""
-            n = u16(off)
-            if n is None or n == 0 or n > _EXIF_MAX_IFD_ENTRIES:
-                return {}
-            out: dict[int, tuple[int, int, int]] = {}
-            for k in range(n):
-                base = off + 2 + 12 * k
-                tag, typ = u16(base), u16(base + 2)
-                cnt = u32(base + 4)
-                if tag is None or typ is None or cnt is None:
-                    return out  # truncated entry table: keep what parsed
-                out[tag] = (typ, cnt, base + 8)
-            return out
+        def read_ifd(off: int | None) -> dict[int, tuple[int, int, int]]:
+            ifd = None if off is None else _tiff_ifd(tiff, order, off)
+            return tags(ifd[1]) if ifd else {}
 
         def ascii_val(entry: tuple[int, int, int]) -> str | None:
             typ, cnt, voff = entry
             if typ != 2 or cnt == 0:
                 return None
             cnt = min(cnt, _EXIF_MAX_STR)
-            src = voff if cnt <= 4 else u32(voff)
+            src = voff if cnt <= 4 else u(voff, 4)
             if src is None or src + cnt > len(tiff):
                 return None
             raw = tiff[src : src + cnt]
@@ -1891,11 +1854,8 @@ def exif_metadata(
 
         def short_val(entry: tuple[int, int, int]) -> int | None:
             typ, cnt, voff = entry
-            return u16(voff) if typ == 3 and cnt >= 1 else None
+            return u(voff, 2) if typ == 3 and cnt >= 1 else None
 
-        ifd0_off = u32(4)
-        if ifd0_off is None:
-            return None
         ifd0 = read_ifd(ifd0_off)
         if not ifd0:
             return None
@@ -1904,25 +1864,21 @@ def exif_metadata(
         model = ascii_val(ifd0[0x0110]) if 0x0110 in ifd0 else None
         dt = None
         if 0x8769 in ifd0:
-            p = u32(ifd0[0x8769][2])
-            if p is not None:
-                exif_ifd = read_ifd(p)
-                if 0x9003 in exif_ifd:
-                    dt = ascii_val(exif_ifd[0x9003])
+            exif_ifd = read_ifd(u(ifd0[0x8769][2], 4))
+            if 0x9003 in exif_ifd:
+                dt = ascii_val(exif_ifd[0x9003])
         has_gps = 0
-        for off in _ifd_chain_offsets(tiff, e, ifd0_off):
-            ifd = read_ifd(off)
-            if 0x8825 in ifd:
-                p = u32(ifd[0x8825][2])
-                if p is not None and read_ifd(p):
-                    has_gps = 1
-                    break
+        for entries in _tiff_ifds(tiff, order, ifd0_off):
+            gps = tags(entries).get(0x8825)
+            if gps is not None and read_ifd(u(gps[2], 4)):
+                has_gps = 1
+                break
         return (orientation, make, model, dt, has_gps)
 
     first: tuple | None = None
     any_gps = 0
-    for s, t in segments:
-        parsed = parse_segment(b[s:t])
+    for _start, tiff, order, ifd0_off in _exif_tiffs(b):
+        parsed = parse_segment(tiff, order, ifd0_off)
         if parsed is None:
             continue
         if first is None:
@@ -1990,66 +1946,36 @@ def redact_exif_gps(payload: bytes) -> tuple[bytes, int]:
     b = bytes(payload)
     if exif_metadata(b) is None:
         return (b, 0)
-    import struct
-
     out = bytearray(b)
     redacted = 0
-    for tiff_start, tiff_end in _exif_tiff_segments(b):
-        tiff = b[tiff_start:tiff_end]
-        if len(tiff) < 8 or tiff[:2] not in (b"II", b"MM"):
-            continue
-        e = "<" if tiff[:2] == b"II" else ">"
-        if struct.unpack(e + "H", tiff[2:4])[0] != 42:
-            continue
-        ifd0_off = struct.unpack(e + "I", tiff[4:8])[0]
 
-        def u16(off, tiff=tiff, e=e):
-            return struct.unpack(e + "H", tiff[off : off + 2])[0]
+    def zero(lo: int, hi: int) -> None:
+        if lo < hi:
+            out[lo:hi] = bytes(hi - lo)
 
-        def u32(off, tiff=tiff, e=e):
-            return struct.unpack(e + "I", tiff[off : off + 4])[0]
-
-        def zero(tiff_off, length, tiff_start=tiff_start, tiff_end=tiff_end):
-            lo = tiff_start + max(tiff_off, 0)
-            hi = min(tiff_start + tiff_off + length, tiff_end)
-            if lo < hi:
-                out[lo:hi] = bytes(hi - lo)
-
+    for start, tiff, order, ifd0_off in _exif_tiffs(b):
+        end = start + len(tiff)
         # GPS pointers can live in IFD0 OR any later IFD on the chain;
         # a hostile entry table may carry DUPLICATE 0x8825 entries (the
-        # audit's read_ifd dict keeps the LAST duplicate, so redacting
-        # only the first would leave an audit-visible GPS IFD behind) —
-        # chase and zero every one.
-        for ifd_off in _ifd_chain_offsets(tiff, e, ifd0_off):
-            if ifd_off + 2 > len(tiff):
-                continue
-            n = u16(ifd_off)
-            gps_offs = []
-            for k in range(min(n, _EXIF_MAX_IFD_ENTRIES)):
-                base = ifd_off + 2 + 12 * k
-                if base + 12 > len(tiff):
-                    break
-                if u16(base) == 0x8825:
-                    gps_offs.append(u32(base + 8))
-            for gps_off in gps_offs:
-                if gps_off + 2 > len(tiff):
+        # audit's tag dict keeps the LAST duplicate, so redacting only
+        # the first would leave an audit-visible GPS IFD behind) — chase
+        # and zero every one.
+        for entries in _tiff_ifds(tiff, order, ifd0_off):
+            for tag, _typ, _cnt, voff in entries:
+                gps_off = _tiff_int(tiff, order, voff, 4) if tag == 0x8825 else None
+                gps = None if gps_off is None else _tiff_ifd(tiff, order, gps_off)
+                if gps is None:
                     continue
-                gn = u16(gps_off)
-                if gn == 0 or gn > _EXIF_MAX_IFD_ENTRIES:
-                    continue
-                ifd_len = 2 + 12 * gn + 4
-                if gps_off + ifd_len > len(tiff):
-                    # truncated table: zero what exists
-                    ifd_len = len(tiff) - gps_off
-                for k in range(gn):
-                    base = gps_off + 2 + 12 * k
-                    if base + 12 > len(tiff):
-                        break
-                    typ, cnt = u16(base + 2), u32(base + 4)
+                gn, gps_entries = gps
+                for _gtag, typ, cnt, gvoff in gps_entries:
                     size = _TIFF_TYPE_SIZE.get(typ, 1) * min(cnt, 1 << 20)
-                    if size > 4:  # offset-stored value: chase and zero it
-                        zero(u32(base + 8), size)
-                zero(gps_off, ifd_len)
+                    val = _tiff_int(tiff, order, gvoff, 4)
+                    if size > 4 and val is not None:
+                        # offset-stored value: chase and zero it
+                        zero(start + val, min(start + val + size, end))
+                # count, entries, next pointer; a truncated table is
+                # zeroed as far as it exists
+                zero(start + gps_off, min(start + gps_off + 6 + 12 * gn, end))
                 redacted = 1
     return (bytes(out) if redacted else b, redacted)
 

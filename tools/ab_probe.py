@@ -5,7 +5,10 @@ Usage: python tools/ab_probe.py [sf_dir] query ... [--rounds N]
 Times each named `__spark_entry__.queries()` entry in bench.py's timed-pass
 loop: noop sink, one materialize.scope per pass, rounds INTERLEAVED so the
 queries sample the same host-noise windows. To A/B a code change, run the
-probe in two checkouts (parent and change), alternating on the same boot.
+probe in two checkouts (parent and change) on the same boot, alternating
+which checkout runs first (A B B A ...): consecutive probe processes get
+faster on a 4-core host, so whichever side runs first loses. Report the
+result for each order, not one pooled number.
 Prints one JSON line {"sf": ..., "rounds": N, "cores": C,
 "best": {name: sec}, "all": {name: [sec]}}.
 """
