@@ -2431,6 +2431,35 @@ def test_progressive_scan_bug_is_not_read_as_truncation(monkeypatch):
         multimodal.decode_jpeg_pixels(data)
 
 
+def test_progressive_undefined_huffman_table_keeps_earlier_scans():
+    """An SOS naming a Huffman table no DHT defined is corrupt input, not
+    a decoder bug: the progressive decode keeps the scans before it. With
+    the third (AC first) scan pointed at tables 3/3, the image equals the
+    stream cut before that scan, which differs from the clean decode.
+    With the FIRST scan pointed there, no scan decodes: the frame is not
+    an image (no flat 128-gray fabrication), so decode_pixels is None."""
+    from textractssmlprocessor_spark.operators.multimodal import (
+        decode_jpeg_pixels,
+        decode_pixels,
+    )
+
+    data = _build_prog_jpeg_gray8(256, 7)
+    sos = [i for i in range(len(data)) if data[i : i + 2] == b"\xff\xda"]
+
+    def with_tables_3(at):
+        bad = bytearray(data)
+        bad[at + 6] = 0x33  # FF DA, length(2), ncs, cid, then the table byte
+        return bytes(bad)
+
+    got = decode_jpeg_pixels(with_tables_3(sos[2]))
+    assert got is not None
+    assert got == decode_jpeg_pixels(data[: sos[2]])
+    assert got != decode_jpeg_pixels(data)
+    with pytest.raises(ValueError):
+        decode_jpeg_pixels(with_tables_3(sos[0]))
+    assert decode_pixels(with_tables_3(sos[0])) is None
+
+
 def test_decode_jpeg_progressive_real_fixtures():
     """Real encoder output: SOF2 files shipped with system packages decode
     deterministically with correct header dimensions, sane content (the

@@ -216,3 +216,67 @@ def test_blocked_running_sum_null_leading_values(spark):
         ).collect()
     }
     assert got == {0: 5.0, 1: 6.0, 2: 6.0, 3: 8.0}
+
+
+def test_ordered_values_ties_nulls_across_partitions(spark):
+    """The group's values come back in key order whatever partition each
+    row arrived from: ties on the key break by value, NULL keys sort
+    first, and a NULL value keeps its slot."""
+    from textractssmlprocessor_spark.operators.ordering import ordered_values
+
+    rows = [
+        (1, 2, "b"), (1, 2, "a"), (1, None, "z"), (1, 1, None), (1, 0, "c"),
+        (1, 1, "d"), (2, 5, "y"), (2, 3, "x"), (2, 5, None), (2, None, None),
+    ]
+    df = spark.createDataFrame(rows, "g int, k int, v string").repartition(5)
+    assert df.rdd.getNumPartitions() >= 4
+    got = {
+        r["g"]: r["vs"]
+        for r in df.groupBy("g").agg(ordered_values("v", "k").alias("vs")).collect()
+    }
+    assert got == {
+        1: ["z", "c", None, "d", "a", "b"],
+        2: [None, "x", None, "y"],
+    }
+
+
+@pytest.fixture(scope="module")
+def scored(spark):
+    # distinct (score, id) pairs, rows spread round-robin over 6 partitions
+    rows = [(0, (i * 37) % 11, i) for i in range(40)] + [(1, 3, 100), (1, 9, 101), (1, 3, 102)]
+    return spark.createDataFrame(rows, "key int, s int, id int").repartition(6).cache()
+
+
+def test_top_k_per_single_key_equals_global_sort(spark, scored):
+    """One key holding rows in every partition: the two phases return the
+    global sort's first k."""
+    from textractssmlprocessor_spark.operators.ordering import top_k_per
+
+    order = [F.col("s").desc(), F.col("id")]
+    one = scored.filter(F.col("key") == 0)
+    assert one.rdd.glom().map(len).filter(lambda n: n > 0).count() >= 4
+    expected = [tuple(r) for r in one.orderBy(*order).limit(5).collect()]
+    got = [tuple(r) for r in top_k_per(one, "key", order, 5).orderBy(*order).collect()]
+    assert got == expected
+
+
+def test_top_k_per_k_above_group_size_keeps_whole_group(spark, scored):
+    from textractssmlprocessor_spark.operators.ordering import top_k_per
+
+    got = top_k_per(scored, "key", [F.col("s").desc(), F.col("id")], 10)
+    assert sorted(r["id"] for r in got.filter(F.col("key") == 1).collect()) == [100, 101, 102]
+    assert got.filter(F.col("key") == 0).count() == 10
+    assert got.columns == scored.columns
+
+
+def test_dedup_paragraphs_first_occurrence_needs_fingerprint_and_position(spark):
+    """Doc 5 holds two rows: position (5, 0) is the first occurrence of
+    'ex' but a later copy of 'why'. Only the paragraph whose fingerprint
+    first occurs there survives, so both doc-5 rows rebuild to 'ex'."""
+    from textractssmlprocessor_spark.operators.dedup import dedup_paragraphs
+
+    df = spark.createDataFrame(
+        [(2, "why"), (5, "ex"), (5, "why")], "doc_id long, text string"
+    )
+    got = sorted(tuple(r) for r in dedup_paragraphs(df).collect())
+    assert got == [(2, "why"), (5, "ex"), (5, "ex")]

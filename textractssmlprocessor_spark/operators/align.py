@@ -27,6 +27,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .ordering import ordered_values
 from .udfs import subtitles_udf
 
 
@@ -137,24 +138,8 @@ def srt_content(subtitles: DataFrame, from_millis: bool = False) -> DataFrame:
         end_c, F.lit("\n"),
         F.col("text"), F.lit("\n\n"),
     )
-    # collect_list gives no ordering guarantee after a shuffle: collect
-    # (index, block) structs, sort the array by index, then join — one
-    # deterministic row per (project, variant).
-    return (
-        subtitles.groupBy("url", "variant")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(F.col("subtitle_index").alias("i"), block.alias("b"))
-                        )
-                    ),
-                    lambda s: s["b"],
-                ),
-                "",
-            ).alias("srt")
-        )
+    return subtitles.groupBy("url", "variant").agg(
+        F.array_join(ordered_values(block, "subtitle_index"), "").alias("srt")
     )
 
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..materialize import cut
+from .ordering import ordered_values
 from .textstats import WS_PLUS, fingerprint, fold_lower
 
 
@@ -292,6 +293,22 @@ def _band_explode(num_hashes: int, bands: int):
     ).alias("bucket")
 
 
+def _signatures(
+    df: DataFrame, id_col: str, text_col: str, n: int, num_hashes: int
+) -> DataFrame:
+    """(id, sh, mh): hashed shingles and their MinHash signature per
+    fingerprintable document — the one signature both band-table paths
+    read, so their buckets agree by construction."""
+    return (
+        _spread(_shingleable(df, text_col), id_col)
+        .select(
+            F.col(id_col).alias("id"),
+            hashed_shingles(F.col(text_col), n).alias("sh"),
+        )
+        .withColumn("mh", minhash_signature_from_hashed(F.col("sh"), num_hashes))
+    )
+
+
 def minhash_band_table(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -305,16 +322,8 @@ def minhash_band_table(
     artifact an incremental pipeline PERSISTS between passes: narrow
     (two hashes per row), content-free (no text leaves the pass), and
     append-only — exactly what near_dupes_against_history probes."""
-    return (
-        _spread(_shingleable(df, text_col), id_col)
-        .select(
-            F.col(id_col).alias("id"),
-            hashed_shingles(F.col(text_col), n).alias("sh"),
-        )
-        .withColumn(
-            "mh", minhash_signature_from_hashed(F.col("sh"), num_hashes)
-        )
-        .select("id", _band_explode(num_hashes, bands))
+    return _signatures(df, id_col, text_col, n, num_hashes).select(
+        "id", _band_explode(num_hashes, bands)
     )
 
 
@@ -400,14 +409,7 @@ def minhash_lsh_pairs(
     (e.g. the all-identical-boilerplate cluster), accepting that pairs
     inside skipped buckets are NOT reported.
     """
-    sig = cut(
-        _spread(_shingleable(df, text_col), id_col).select(
-            F.col(id_col).alias("id"),
-            hashed_shingles(F.col(text_col), n).alias("sh"),
-        ).withColumn(
-            "mh", minhash_signature_from_hashed(F.col("sh"), num_hashes)
-        )
-    )
+    sig = cut(_signatures(df, id_col, text_col, n, num_hashes))
 
     shingle_tbl = sig.select("id", "sh")
     banded = sig.select("id", _band_explode(num_hashes, bands))
@@ -474,15 +476,7 @@ def drop_duplicate_sentences(
         (F.col("clean_line") == "") | (occ == F.col("_first"))
     )
     rebuilt = kept.groupBy(*id_cols).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("pos").alias("i"), F.col("line").alias("l")))
-                ),
-                lambda s: s["l"],
-            ),
-            " ",
-        ).alias(text_col)
+        F.array_join(ordered_values("line", "pos"), " ").alias(text_col)
     )
     return ids.join(rebuilt, list(id_cols), "left").select(
         *id_cols, F.coalesce(F.col(text_col), F.lit("")).alias(text_col)
@@ -656,15 +650,7 @@ def drop_duplicate_spans(
     )
     kept = words.join(hit, ["id", "pos"], "left_anti")
     rebuilt = kept.groupBy("id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("pos").alias("i"), F.col("w").alias("t")))
-                ),
-                lambda s: s["t"],
-            ),
-            " ",
-        ).alias(text_col)
+        F.array_join(ordered_values("w", "pos"), " ").alias(text_col)
     )
     return ids.join(rebuilt, ["id"], "left").select(
         "id", F.coalesce(F.col(text_col), F.lit("")).alias(text_col)
@@ -912,38 +898,32 @@ def dedup_paragraphs(
 
     Scale: explode -> groupBy(fingerprint) [shuffle 1] -> join back on
     fingerprint [shuffle 2, AQE-planned; near-unique key so no skew] ->
-    groupBy(id) rebuild via array_sort(collect_list(struct)) [shuffle 3,
+    groupBy(id) ordered rebuild (ordering.ordered_values) [shuffle 3,
     per-document state only — no global window]. Short paragraphs bypass
     the dedup joins entirely and union back in.
+
+    A paragraph survives where its (fingerprint, id, idx) is its
+    fingerprint's first occurrence in :func:`paragraph_fingerprints` — all
+    three keys, since a position that first holds one paragraph may also
+    hold a later copy of another (a duplicated id).
     """
     paras = _spread(df, id_col).select(
         F.col(id_col).alias("id"),
         F.posexplode(F.split(F.col(text_col), sep)).alias("idx", "para"),
     )
     short = paras.filter(F.length(F.trim(F.col("para"))) < min_chars)
-    long_ = paras.filter(F.length(F.trim(F.col("para"))) >= min_chars)
-    tagged = long_.withColumn("fp", fingerprint(F.col("para")))
-    first = (
-        tagged.groupBy("fp")
-        .agg(F.min(F.struct("id", "idx")).alias("_first"))
-        .select(
-            "fp",
-            F.col("_first.id").alias("_fid"),
-            F.col("_first.idx").alias("_fidx"),
-        )
+    firsts = paragraph_fingerprints(df, id_col, text_col, sep, min_chars).select(
+        "fingerprint", F.col("keep_id").alias("id"), F.col("keep_idx").alias("idx")
     )
-    kept = tagged.join(first, "fp").filter(
-        (F.col("id") == F.col("_fid")) & (F.col("idx") == F.col("_fidx"))
-    ).select("id", "idx", "para")
+    kept = (
+        paras.filter(F.length(F.trim(F.col("para"))) >= min_chars)
+        .withColumn("fingerprint", fingerprint(F.col("para")))
+        .join(firsts, ["fingerprint", "id", "idx"], "left_semi")
+        .select("id", "idx", "para")
+    )
     survivors = kept.unionByName(short.select("id", "idx", "para"))
     rebuilt = survivors.groupBy("id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("idx", "para"))),
-                lambda s: s["para"],
-            ),
-            join_sep,
-        ).alias(text_col)
+        F.array_join(ordered_values("para", "idx"), join_sep).alias(text_col)
     )
     # documents that lost every paragraph still appear, with empty text
     return (

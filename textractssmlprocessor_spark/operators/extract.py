@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .ordering import ordered_values
 from .udfs import clean_document_udf, extract_full_udf, split_ssml_udf
 
 DEFAULT_SALT_PARTITIONS = 256
@@ -144,12 +145,8 @@ def synchronized_texts(
     yields a NULL document, not '' — Spark's bare array_join would render
     "no content" and "empty content" identically, where every SQL engine's
     string_agg keeps them distinct."""
-    pair = F.struct(
-        F.col(order_col).alias("i"),
-        F.col(original_col).alias("o"),
-        F.col(translated_col).alias("t"),
-    )
-    ordered = F.array_sort(F.collect_list(pair))
+    pair = F.struct(F.col(original_col).alias("o"), F.col(translated_col).alias("t"))
+    ordered = ordered_values(pair, order_col)
 
     def _agg(field: str, src: str) -> Column:
         joined = F.array_join(F.transform(ordered, lambda s: s[field]), "\n\n")

@@ -1432,7 +1432,13 @@ def _jpeg_extend(v: int, s: int) -> int:
     return v if s == 0 or v >= (1 << (s - 1)) else v - (1 << s) + 1
 
 
-def _jpeg_huff_decode(reader, table: dict) -> int:
+class _JpegUndefinedTable(ValueError):
+    """An SOS named a Huffman table no DHT defined: corrupt input."""
+
+
+def _jpeg_huff_decode(reader, table: dict | None) -> int:
+    if table is None:
+        raise _JpegUndefinedTable("undefined JPEG Huffman table")
     code, length = 0, 0
     while length < 16:
         code = (code << 1) | reader.read_bit()
@@ -1590,10 +1596,11 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes] | None:
     frames (lossless, hierarchical, arithmetic-coded, 12-bit, a component
     count other than 1 or 3) and a frame with no scan.
     Truncated or corrupt sequential data raises (callers map it to NULL);
-    a truncated progressive stream keeps the scans decoded before the
-    cut. Correctness path like decode_png_pixels: per-symbol Python is
-    fine for the test tier; production swaps a C codec inside the same
-    image_pixels plumbing."""
+    a truncated or corrupt progressive stream keeps the scans decoded
+    before the fault, but a first scan naming a Huffman table no DHT
+    defined raises. Correctness path like decode_png_pixels: per-symbol
+    Python is fine for the test tier; production swaps a C codec inside
+    the same image_pixels plumbing."""
     import math
 
     import numpy as np
@@ -1674,8 +1681,10 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes] | None:
                     _JpegBitReader(b, e), scan, ss, se, ahal >> 4, ahal & 15,
                     not progressive, restart, mcus_x, mcus_y,
                 )
-            except (EOFError, ValueError):
-                if not progressive:
+            except (EOFError, ValueError) as exc:
+                if not progressive or (
+                    not scanned and isinstance(exc, _JpegUndefinedTable)
+                ):
                     raise
                 # every prefix of progressive scans is a coarse image
             scanned = True

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .ordering import ordered_values
 from .textstats import WS_CLASS, WS_ESC
 
 LINE_BAND = 0.02  # vertical quantization: blocks within 2% page height align
@@ -35,26 +36,9 @@ def blocks_to_lines(blocks: DataFrame, line_band: float = LINE_BAND) -> DataFram
     banded = blocks.withColumn(
         "line_key", F.floor(F.col("top") / F.lit(line_band)).cast("bigint")
     )
-    lines = (
-        banded.groupBy("url", "page_no", "line_key")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                F.col("left").alias("l"),
-                                F.col("block_id").alias("b"),
-                                F.col("text").alias("t"),
-                            )
-                        )
-                    ),
-                    lambda s: s["t"],
-                ),
-                " ",
-            ).alias("line_text"),
-            F.min("top").alias("top"),
-        )
+    lines = banded.groupBy("url", "page_no", "line_key").agg(
+        F.array_join(ordered_values("text", "left", "block_id"), " ").alias("line_text"),
+        F.min("top").alias("top"),
     )
     w = Window.partitionBy("url", "page_no").orderBy("line_key")
     return lines.select(
@@ -126,25 +110,8 @@ def strip_page_boilerplate(
 def linearize(lines: DataFrame) -> DataFrame:
     """(url, text): assemble cleaned lines back into one document string in
     (page_no, line_no) order."""
-    return (
-        lines.groupBy("url")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                F.col("page_no").alias("p"),
-                                F.col("line_no").alias("l"),
-                                F.col("line_text").alias("t"),
-                            )
-                        )
-                    ),
-                    lambda s: s["t"],
-                ),
-                "\n",
-            ).alias("text")
-        )
+    return lines.groupBy("url").agg(
+        F.array_join(ordered_values("line_text", "page_no", "line_no"), "\n").alias("text")
     )
 
 

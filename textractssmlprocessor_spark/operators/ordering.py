@@ -22,6 +22,10 @@ scan is over #blocks rows; with ``block_size`` 4096 a 10^12-row corpus has
 PARTITIONED scan within each super-block plus a single-task scan over the
 ~6*10^4 super-blocks). One extra level multiplies the tractable row count
 by ``block_size``; nothing realistic needs a third.
+
+Group-local orders go through here too: ``ordered_values`` is the one
+order-stable fold of a group's values (``collect_list`` alone has no
+post-shuffle order), and ``top_k_per`` the one per-key top-k.
 """
 
 from __future__ import annotations
@@ -34,6 +38,10 @@ DEFAULT_BLOCK_SIZE = 4096
 _G = "_ord_block"
 _G2 = "_ord_block_r"
 _SB = "_ord_sblock"
+
+
+def _as_col(c: Column | str) -> Column:
+    return F.col(c) if isinstance(c, str) else c
 
 
 def _join_blocks(blocked: DataFrame, per_block: DataFrame) -> DataFrame:
@@ -51,13 +59,11 @@ def _join_blocks(blocked: DataFrame, per_block: DataFrame) -> DataFrame:
 
 def block_of(order_col: Column | str, block_size: int = DEFAULT_BLOCK_SIZE) -> Column:
     """Monotone block key for a numeric global sort key."""
-    c = F.col(order_col) if isinstance(order_col, str) else order_col
-    return F.floor(c / F.lit(block_size)).cast("bigint")
+    return F.floor(_as_col(order_col) / F.lit(block_size)).cast("bigint")
 
 
 def _with_block(df: DataFrame, block: Column | str) -> DataFrame:
-    b = F.col(block) if isinstance(block, str) else block
-    return df.withColumn(_G, b)
+    return df.withColumn(_G, _as_col(block))
 
 
 def _block_offsets(
@@ -170,7 +176,7 @@ def blocked_lag_lead(
     (first, last) as the carried value) — for when #blocks itself
     outgrows one task; numeric block keys only at that level."""
     blocked = _with_block(df, block)
-    order_key = F.struct(*[F.col(c) if isinstance(c, str) else c for c in within])
+    order_key = F.struct(*[_as_col(c) for c in within])
     w = Window.partitionBy(_G).orderBy(*within)
     fl = blocked.groupBy(_G).agg(
         F.min_by(value_col, order_key).alias("_first"),
@@ -217,4 +223,37 @@ def blocked_lag_lead(
             ),
         )
         .drop(_G, "_lag_in", "_lead_in", "_rn", "_cnt", "_prev_last", "_next_first")
+    )
+
+
+def ordered_values(value: Column | str, *by: Column | str) -> Column:
+    """Aggregate: the group's ``value``s in ``by`` order, ties broken by
+    value (reference utils.py:226-234, timestamp.py:227-231 rebuild text in
+    chunk / subtitle order). One ``(by..., value)`` struct per row, one
+    ``array_sort(collect_list(...))``, then the value projected back out:
+    NULL keys sort first (Spark's ascending default) and a NULL value keeps
+    its slot, since the struct around it is never NULL. Callers
+    ``array_join`` or ``flatten`` the result."""
+    keys = [_as_col(c).alias(f"_k{i}") for i, c in enumerate(by)]
+    pairs = F.collect_list(F.struct(*keys, _as_col(value).alias("_v")))
+    return F.transform(F.array_sort(pairs), lambda s: s["_v"])
+
+
+def top_k_per(df: DataFrame, key: str, order: list, k: int) -> DataFrame:
+    """The first ``k`` rows of each ``key`` group in ``order``, in two
+    window phases: per (key, input partition) keep ``k``, then per key keep
+    ``k`` of the survivors. The first shuffle is keyed on (key, partition
+    id), so one key holding the whole corpus still spreads over every
+    partition's reducer, and the second moves at most P x k rows per key.
+    ``order`` must be total (end it with a unique column) for a
+    deterministic result."""
+    w_local = Window.partitionBy(key, "_pid").orderBy(*order)
+    w_final = Window.partitionBy(key).orderBy(*order)
+    return (
+        df.withColumn("_pid", F.spark_partition_id())
+        .withColumn("_rn", F.row_number().over(w_local))
+        .filter(F.col("_rn") <= k)
+        .withColumn("_rn", F.row_number().over(w_final))
+        .filter(F.col("_rn") <= k)
+        .drop("_pid", "_rn")
     )

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .ordering import blocked_row_number
+
 VOICE_ENGINE_MAP = {
     "Ruth": "generative",
     "Matthew": "generative",
@@ -46,37 +48,16 @@ def assign_voices(
     engine = F.create_map(
         *[F.lit(x) for kv in VOICE_ENGINE_MAP.items() for x in kv]
     )[voice]
-    # Global monotone part counter (reference ssml_processing.py:91-110)
-    # WITHOUT a global window (Window.orderBy with no partitionBy funnels
-    # the whole corpus through one task): per-book row_number (scalable,
-    # partitioned window) + per-book offsets from a cumulative count over
-    # the tiny books table, broadcast back. Identical numbering to
-    # row_number over (book, chunk_number).
-    per_book = Window.partitionBy(book_col).orderBy("chunk_number")
-    books = Window.orderBy(book_col).rowsBetween(
-        Window.unboundedPreceding, -1
-    )  # single-task, but over #books rows, not #chunks
-    offsets = (
-        chunks.groupBy(book_col)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .withColumn("_offset", F.coalesce(F.sum("_n").over(books), F.lit(0)))
-        .select(book_col, "_offset")
-    )
-    # no broadcast hint: AQE broadcasts the offsets table while it is small
-    # and falls back to a shuffle join if the book count ever outgrows it.
-    # Null-safe equality: a NULL book key forms its own group and must keep
-    # its rows (a plain equi-join would silently drop them).
-    offsets = offsets.withColumnRenamed(book_col, "_bk")
+    # Global monotone part counter (reference ssml_processing.py:91-110):
+    # row_number over (book, chunk_number), each book one block, so no
+    # global window funnels the corpus through one task (a NULL book is a
+    # block of its own and keeps its rows)
     out = (
-        chunks.join(offsets, F.col(book_col).eqNullSafe(F.col("_bk")), "left")
-        .drop("_bk")
+        blocked_row_number(chunks, F.col(book_col), ["chunk_number"], out="_part")
         .withColumn("voice_id", voice)
         .withColumn("engine", engine)
-        .withColumn(
-            "global_part_number",
-            (F.col("_offset") + F.row_number().over(per_book)).cast("int"),
-        )
-        .drop("_n", "_offset")
+        .withColumn("global_part_number", F.col("_part").cast("int"))
+        .drop("_part")
     )
     return out.withColumn(
         "output_file",

@@ -29,8 +29,8 @@ Scale shape (the part that matters at 10^12 docs):
   the distributed two-phase top-k (per-partition heap + driver merge
   of P*k rows).
 - ``bm25_knn_join`` (many queries) broadcasts the query-term table and
-  reuses knn_join's two-phase (q_id, partition) top-k so a single hot
-  query never lands on one reducer.
+  takes the two-phase (q_id, partition) top-k ``ordering.top_k_per``,
+  as knn_join does, so a single hot query never lands on one reducer.
 
 BM25 is the Lucene/Robertson variant:
 
@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from textractssmlprocessor_spark.operators.dedup import _spread
 from textractssmlprocessor_spark.operators.lm import tokens_column
+from textractssmlprocessor_spark.operators.ordering import top_k_per
 
 
 def _tokenize(query: str) -> list[str]:
@@ -212,11 +213,8 @@ def bm25_knn_join(
     The query table is assumed small (an eval set, a probe corpus) and
     BROADCASTS as exploded (q_id, term) rows — the corpus-side explode
     joins it map-side, so only matched (q_id, doc, term) survive to the
-    one aggregation. Top-k reuses knn_join's two-phase window on
-    (q_id, partition_id): no single hot reducer even for one query
-    matching everything (similarity.py:189 precedent)."""
-    from pyspark.sql import Window
-
+    one aggregation. Top-k is ordering.top_k_per (two phases, no hot
+    reducer even when one query matches everything)."""
     q_terms = (
         queries.select(
             F.col(q_id_col).alias("q_id"),
@@ -259,15 +257,5 @@ def bm25_knn_join(
         per_term.join(F.broadcast(q_terms), "term")
         .groupBy("q_id", "doc_id")
         .agg(F.round(F.sum("w"), 6).alias("score"))
-        .withColumn("_pid", F.spark_partition_id())
     )
-    order = [F.col("score").desc(), F.col("doc_id")]
-    w_local = Window.partitionBy("q_id", "_pid").orderBy(*order)
-    w_final = Window.partitionBy("q_id").orderBy(*order)
-    return (
-        scored.withColumn("_rn", F.row_number().over(w_local))
-        .filter(F.col("_rn") <= k)
-        .withColumn("_rn", F.row_number().over(w_final))
-        .filter(F.col("_rn") <= k)
-        .select("q_id", "doc_id", "score")
-    )
+    return top_k_per(scored, "q_id", [F.col("score").desc(), F.col("doc_id")], k)

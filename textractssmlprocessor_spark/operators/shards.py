@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..materialize import cut
-from .ordering import block_of, blocked_running_sum
+from .ordering import block_of, blocked_running_sum, ordered_values
 from .textstats import count_words
 
 _NUMERIC_TYPES = ("tinyint", "smallint", "int", "bigint", "float", "double")
@@ -202,16 +202,8 @@ def assemble_training_sequences(
     piece = F.slice(
         F.col("_toks"), (F.col("frag_start") + 1).cast("int"), F.col("frag_len").cast("int")
     )
-    return (
-        frags.select("seq_id", F.struct(F.col("seq_offset"), piece.alias("_p")).alias("_f"))
-        .groupBy("seq_id")
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list("_f")), lambda x: x["_p"]
-                )
-            ).alias("token_ids")
-        )
+    return frags.groupBy("seq_id").agg(
+        F.flatten(ordered_values(piece, "seq_offset")).alias("token_ids")
     )
 
 

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .ordering import ordered_values, top_k_per
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -277,15 +279,10 @@ def knn_join(
     and retrieval over a training corpus.
 
     Scale shape: the (small) query table broadcasts, scoring is one
-    map-side pass producing narrow (q_id, id, sim) rows; top-k is TWO
-    phases — per-(q_id, input partition) row_number keeps k rows per
-    partition (the one shuffle moves Q x P x k survivors... the shuffle key
-    (q_id, partition id) has Q x P cardinality, so no single hot reducer
-    even when Q is 1), then a final per-q_id top-k over the tiny survivor
-    set. For very large corpora, pre-prune candidates with the LSH bucket
+    map-side pass producing narrow (q_id, id, sim) rows, and top-k is
+    ordering.top_k_per (two phases, no hot reducer even when Q is 1).
+    For very large corpora, pre-prune candidates with the LSH bucket
     probe (ann_lsh_topk's pattern) before calling."""
-    from pyspark.sql import Window
-
     q = queries.select(
         F.col(q_id_col).alias("q_id"), _doubled(q_vec_col).alias("qv")
     )
@@ -296,18 +293,8 @@ def knn_join(
         "q_id",
         F.col(id_col),
         F.round(cosine(_doubled(vec_col), F.col("qv")), 6).alias("cosine_sim"),
-        F.spark_partition_id().alias("_pid"),
     )
-    order = [F.col("cosine_sim").desc(), F.col(id_col)]
-    w_local = Window.partitionBy("q_id", "_pid").orderBy(*order)
-    w_final = Window.partitionBy("q_id").orderBy(*order)
-    return (
-        scored.withColumn("_rn", F.row_number().over(w_local))
-        .filter(F.col("_rn") <= k)
-        .withColumn("_rn", F.row_number().over(w_final))
-        .filter(F.col("_rn") <= k)
-        .select("q_id", id_col, "cosine_sim")
-    )
+    return top_k_per(scored, "q_id", [F.col("cosine_sim").desc(), F.col(id_col)], k)
 
 
 def kmeans_centroids(
@@ -367,12 +354,7 @@ def kmeans_centroids_rows(
             .groupBy("cell", "i")
             .agg(F.round(F.avg("x"), 6).alias("m"))
             .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "m"))),
-                    lambda s: s["m"],
-                ).alias("cvec")
-            )
+            .agg(ordered_values("m", "i").alias("cvec"))
         )
         rows = _collect_centroids(cents)
     return rows

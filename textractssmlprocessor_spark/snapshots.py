@@ -244,8 +244,6 @@ def _publish(table: str, manifest: dict[str, Any]) -> int:
         # link = atomic claim WITH full content (a reader can never see a
         # half-written manifest; rename would silently clobber a winner)
         os.link(tmp, _manifest_path(table, version))
-    except FileExistsError:
-        raise
     finally:
         os.unlink(tmp)
     # fsync the directory so the publish survives power loss (the
